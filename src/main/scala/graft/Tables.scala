@@ -14,26 +14,20 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized base-table DataFrames, keyed by (session, dir, table,
-  // content signature). `spark.read.parquet` pays a driver-side file
-  // listing + parquet footer read (schema inference) on EVERY call, and
-  // the suite calls `t` ~900 times per sweep — measured as a visible
-  // slice of the per-query "construction" phase (PhaseTime, r17). This
-  // is METADATA caching only — exactly what a catalog/metastore table
-  // provides — never result caching: every execution still scans the
-  // parquet. The signature key (file size+mtime walk, the same seam the
-  // trained-model memos use) invalidates on any rewrite of the table;
-  // the session key isolates concurrent test sessions; DataFrames are
+  // Base-table DataFrames are a `Derived` entry per (session, dir,
+  // table). `spark.read.parquet` pays a driver-side file listing +
+  // parquet footer read (schema inference) on EVERY call, and the suite
+  // calls `t` ~900 times per sweep — measured as a visible slice of the
+  // per-query "construction" phase (PhaseTime, r17). This is METADATA
+  // caching only — exactly what a catalog/metastore table provides —
+  // never result caching: every execution still scans the parquet. A
+  // rewrite of the table changes its signature and re-reads it; the
+  // session in the key isolates concurrent test sessions; DataFrames are
   // immutable, so sharing one plan object across queries is safe (a
   // self-join of the same relation goes through Spark's standard
   // DeduplicateRelations, the `val df = ...; df.join(df)` shape).
-  private val tCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, Long), DataFrame]
-
-  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val sig = U.dirSignature(
-      java.nio.file.Paths.get(dir, s"$name.parquet"))
-    tCache.getOrElseUpdate((spark, dir, name, sig), {
+  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+    Derived.get(spark, "table", dir, name, spark) { _ =>
       val df = spark.read.parquet(s"$dir/$name.parquet")
       // `events.ts` is TIMESTAMP(NANOS) parquet, which Spark has no native
       // type for: sessions set spark.sql.legacy.parquet.nanosAsLong, and the
@@ -43,8 +37,7 @@ object Tables {
         case Some(_) => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
         case None => df
       }
-    })
-  }
+    }
 
   /** Register every table as a temp view (for spark.sql-based queries). */
   def registerViews(spark: SparkSession, dir: String): Unit =
@@ -139,25 +132,4 @@ object U {
     * is one redundant (row-count-bounded, narrow) exchange. */
   def fan(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
-
-  /** Cheap change-detection signature of a file tree: (name, size, mtime)
-    * folded in walk order. Shared by every derived-artifact memo
-    * (IVF centroids, partitioned layouts) so change-detection semantics
-    * can't drift between them. 0 for a missing path. */
-  def dirSignature(root: java.nio.file.Path): Long = {
-    if (!java.nio.file.Files.exists(root)) return 0L
-    val stream = java.nio.file.Files.walk(root)
-    try {
-      var acc = 17L
-      val it = stream.iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val sz = if (java.nio.file.Files.isRegularFile(p))
-          java.nio.file.Files.size(p) else 0L
-        val mt = java.nio.file.Files.getLastModifiedTime(p).toMillis
-        acc = ((acc * 31 + p.getFileName.toString.hashCode) * 31 + sz) * 31 + mt
-      }
-      acc
-    } finally stream.close()
-  }
 }

@@ -219,11 +219,6 @@ object Dedup {
     * truncates every 5th round. The result is an eager localCheckpoint:
     * GC-released, never a CacheManager entry.
     */
-  /** Fixpoint round count of the most recent [[canonicalResolve]] call —
-    * instrumentation for bench notes and the chain-depth scaling sweep
-    * (expected value: ceil(log2(max chain depth)) + 1). */
-  @volatile var lastResolveIters: Int = 0
-
   def canonicalResolve(pointers: DataFrame, maxIters: Int = 30,
       driverRowCap: Long = CcDriverEdgeCap): DataFrame = {
     // Same guarded driver fast path as [[connectedComponents]]: a
@@ -264,7 +259,6 @@ object Dedup {
           x
         }
         val resolved = rows.map(r => (r.getLong(0), chase(r.getLong(1))))
-        lastResolveIters = 0
         // bench attribution: which guarded path produced the number
         // (the r12 sf1 doubling was unattributable without this)
         graft.Attrib.note("resolve_path", "driver")
@@ -305,12 +299,20 @@ object Dedup {
       s"canonicalResolve did not converge in $n rounds " +
         "(cycle, forward pointer, or raise maxIters)"
     }
-    lastResolveIters = iters
     graft.Attrib.note("resolve_path", "distributed")
     graft.Attrib.note("resolve_rows", nRows)
     graft.Attrib.note("resolve_iters", iters.toLong)
     out
   }
+
+  /** Edge-count ceiling for the driver-side union-find fast path: 1M
+    * canonical edges ≈ tens of MB transient on the driver — far under
+    * the bench/verify heap, far over any test-SF edge set. Above it the
+    * distributed large-star/small-star path runs untouched (the 100 TB
+    * path); the choice is made by a DISTRIBUTED count first, the same
+    * count-before-materialize discipline as
+    * [[graft.operators.Joins.requireCandidatePairs]]. */
+  val CcDriverEdgeCap: Long = 1000000L
 
   /** Connected components over an arbitrary undirected edge set by
     * alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,
@@ -339,17 +341,6 @@ object Dedup {
     * node; callers left-join and coalesce for singletons. Throws past
     * maxIters — a partially-merged labeling must never masquerade as
     * components. */
-  @volatile var lastCcIters: Int = 0
-
-  /** Edge-count ceiling for the driver-side union-find fast path: 1M
-    * canonical edges ≈ tens of MB transient on the driver — far under
-    * the bench/verify heap, far over any test-SF edge set. Above it the
-    * distributed large-star/small-star path runs untouched (the 100 TB
-    * path); the choice is made by a DISTRIBUTED count first, the same
-    * count-before-materialize discipline as
-    * [[graft.operators.Joins.requireCandidatePairs]]. */
-  val CcDriverEdgeCap: Long = 1000000L
-
   def connectedComponents(edges: DataFrame, maxIters: Int = 25,
       driverEdgeCap: Long = CcDriverEdgeCap): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
@@ -418,7 +409,6 @@ object Dedup {
         import scala.jdk.CollectionConverters._
         val stars = nodes.asScala.iterator.map(n => (n.longValue, find(n)))
           .filter(p => p._1 != p._2).toSeq
-        lastCcIters = 0
         graft.Attrib.note("cc_path", "driver")
         graft.Attrib.note("cc_edges", initSig._1)
         import spark.implicits._
@@ -474,7 +464,6 @@ object Dedup {
     } { n =>
       s"connectedComponents did not converge in $n rounds"
     }
-    lastCcIters = iters
     graft.Attrib.note("cc_path", "distributed")
     graft.Attrib.note("cc_edges", initSig._1)
     graft.Attrib.note("cc_iters", iters.toLong)

@@ -48,26 +48,17 @@ object Bpe {
     * repeats. */
   val nMerges = 12
 
-  private val rulesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(Int, String, String, Long)]]()
-
-  def clearRulesCache(): Unit = rulesCache.clear()
-
   private def charSyms(word: org.apache.spark.sql.Column) =
     array_remove(split(word, ""), "")
 
   /** Learned merge rules (rank, left, right, pair_freq), rank 1-based
-    * in merge order. */
-  /** Last rules served, recorded for the apply oracle (graft.Verify
-    * dumps oracle SQL after running the queries, so by dump time this
-    * holds the rules of the dataset under verification). */
-  @volatile private var lastRules: Option[Seq[(Int, String, String, Long)]] = None
+    * in merge order; a [[graft.Derived]] entry of the documents table. */
+  def trainRules(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
+    graft.Derived.get(s, "bpe_rules", d, "documents")(_ => train(s, d))
 
-  def trainRules(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
-    val rs = trainRulesMemo(s, d)
-    lastRules = Some(rs)
-    rs
-  }
+  /** Rules last served — the apply oracle replays them as literals. */
+  private def lastRules: Option[Seq[(Int, String, String, Long)]] =
+    graft.Derived.latest("bpe_rules")
 
   /** Distinct-word ceiling for the driver-side training fast path: BPE
     * trains on the WORD VOCABULARY (distinct words × freq), which is
@@ -172,30 +163,26 @@ object Bpe {
     rules.toSeq
   }
 
-  private def trainRulesMemo(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
-    rulesCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => {
-        // U.fan: the explode + count partial otherwise runs at scan
-        // parallelism (2 row groups at sf1 — measured 3.0 s on 2 tasks)
-        val words = U.fan(Tables.t(s, d, "documents")
-            .select(col("text")))
-          .select(explode(split(lower(col("text")), " ")).as("word"))
-          .filter(length(col("word")) > 0)
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-        // cap+1 limit makes the size probe and the fast-path collect ONE
-        // job: ≤cap rows back means we hold the complete vocabulary
-        val capped = words.limit(DriverVocabCap + 1).collect()
-        if (capped.length <= DriverVocabCap) {
-          graft.Attrib.note("bpe_train_path", "driver")
-          graft.Attrib.note("bpe_vocab", capped.length.toLong)
-          trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
-        } else {
-          graft.Attrib.note("bpe_train_path", "distributed")
-          trainDistributed(words)
-        }
-      })
+  private def train(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
+    // U.fan: the explode + count partial otherwise runs at scan
+    // parallelism (2 row groups at sf1 — measured 3.0 s on 2 tasks)
+    val words = U.fan(Tables.t(s, d, "documents")
+        .select(col("text")))
+      .select(explode(split(lower(col("text")), " ")).as("word"))
+      .filter(length(col("word")) > 0)
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+    // cap+1 limit makes the size probe and the fast-path collect ONE
+    // job: ≤cap rows back means we hold the complete vocabulary
+    val capped = words.limit(DriverVocabCap + 1).collect()
+    if (capped.length <= DriverVocabCap) {
+      graft.Attrib.note("bpe_train_path", "driver")
+      graft.Attrib.note("bpe_vocab", capped.length.toLong)
+      trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
+    } else {
+      graft.Attrib.note("bpe_train_path", "distributed")
+      trainDistributed(words)
+    }
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned merge table itself — what a tokenizer ships as

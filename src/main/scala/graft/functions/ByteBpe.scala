@@ -47,11 +47,6 @@ object ByteBpe {
     * when no pair repeats. */
   val nMerges = 12
 
-  private val rulesCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(Int, String, String, Long)]]()
-
-  def clearRulesCache(): Unit = rulesCache.clear()
-
   /** Decimal byte-value spelling of a merged symbol pair. */
   private def join(a: String, b: String): String = a + "_" + b
 
@@ -86,15 +81,15 @@ object ByteBpe {
       split(array_join(toks, "_"), "_"),
       b => lpad(conv(b, 10, 16), 2, "0")), "")), "UTF-8")
 
-  @volatile private var lastRules
-      : Option[Seq[(Int, String, String, Long)]] = None
-
+  /** Learned merge rules, a [[graft.Derived]] entry of the documents
+    * table. */
   def trainRules(s: SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] = {
-    val rs = trainRulesMemo(s, d)
-    lastRules = Some(rs)
-    rs
-  }
+      : Seq[(Int, String, String, Long)] =
+    graft.Derived.get(s, "bytebpe_rules", d, "documents")(_ => train(s, d))
+
+  /** Rules last served — the apply oracle replays them as literals. */
+  private def lastRules: Option[Seq[(Int, String, String, Long)]] =
+    graft.Derived.latest("bytebpe_rules")
 
   /** Driver-side trainer — EXACT mirror of the distributed loop:
     * adjacent-pair counts weighted by word freq, repeat floor 2, argmax
@@ -188,29 +183,25 @@ object ByteBpe {
     rules.toSeq
   }
 
-  private def trainRulesMemo(s: SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] =
-    rulesCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => {
-        val words = U.fan(Tables.t(s, d, "documents")
-            .select(col("text")))
-          .select(explode(split(lower(col("text")), " ")).as("word"))
-          .filter(length(col("word")) > 0)
-          .groupBy("word").agg(count(lit(1)).as("freq"))
-        // cap+1 limit: the size probe and the fast-path collect are ONE
-        // job (the Bpe pattern)
-        val capped = words.limit(Bpe.DriverVocabCap + 1).collect()
-        if (capped.length <= Bpe.DriverVocabCap) {
-          graft.Attrib.note("bytebpe_train_path", "driver")
-          graft.Attrib.note("bytebpe_vocab", capped.length.toLong)
-          trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
-        } else {
-          graft.Attrib.note("bytebpe_train_path", "distributed")
-          trainDistributed(words)
-        }
-      })
+  private def train(s: SparkSession, d: String)
+      : Seq[(Int, String, String, Long)] = {
+    val words = U.fan(Tables.t(s, d, "documents")
+        .select(col("text")))
+      .select(explode(split(lower(col("text")), " ")).as("word"))
+      .filter(length(col("word")) > 0)
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+    // cap+1 limit: the size probe and the fast-path collect are ONE
+    // job (the Bpe pattern)
+    val capped = words.limit(Bpe.DriverVocabCap + 1).collect()
+    if (capped.length <= Bpe.DriverVocabCap) {
+      graft.Attrib.note("bytebpe_train_path", "driver")
+      graft.Attrib.note("bytebpe_vocab", capped.length.toLong)
+      trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
+    } else {
+      graft.Attrib.note("bytebpe_train_path", "distributed")
+      trainDistributed(words)
+    }
+  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned merge table — merges.txt of the byte-level family,

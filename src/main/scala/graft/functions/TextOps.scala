@@ -77,43 +77,28 @@ object TextOps {
           .as("chunk"))
   }
 
-  /** Per-JVM memo of the built vocabulary (the
-    * `Similarity.centroidCache` pattern): the vocabulary is a property
-    * of the DATASET, not of each tokenization query, so re-aggregating
-    * the corpus on every apply would dominate the tokenize cost. Keyed
-    * by (absolute path, listing signature) so regenerated data rebuilds
-    * instead of serving stale terms.
+  /** Cached (token_id, term, tf) vocabulary for dataset `d`, a
+    * [[graft.Derived]] entry: the vocabulary is a property of the
+    * DATASET, not of each tokenization query, so re-aggregating the
+    * corpus on every apply would dominate the tokenize cost; a rewritten
+    * corpus rebuilds it (and unpersists the old one).
     *
-    * The memo holds a CACHED DATAFRAME, never driver rows: the vocab
+    * The entry holds a CACHED DATAFRAME, never driver rows: the vocab
     * stays executor-resident (this is the persisted-vocab-table shape a
     * 100 TB pipeline uses) and the tokenizer broadcast-joins it — no
     * collect → literal round trip through the driver. The size guard is
     * a distributed count() against the broadcast-sanity cap, checked
     * BEFORE anything could materialize on the driver, so a copy-paste
     * onto a 10^8-term corpus fails loudly instead of OOMing. */
-  private val vocabCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), DataFrame]()
-
-  def clearVocabCache(): Unit = {
-    import scala.jdk.CollectionConverters._
-    vocabCache.values.asScala.foreach(_.unpersist())
-    vocabCache.clear()
-  }
-
-  /** Cached (token_id, term, tf) vocabulary for dataset `d` — see
-    * [[vocabCache]]. */
   private def vocabDf(s: SparkSession, d: String): DataFrame =
-    vocabCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => {
-        val df = queries("vocab_build")(s, d).persist()
-        val n = df.count() // distributed; also materializes the cache
-        require(n <= (1L << 20),
-          s"vocabulary has $n terms — beyond the broadcast-sanity cap; " +
-            "persist vocab_build output and shuffle-join the table instead")
-        df
-      })
+    graft.Derived.get(s, "vocab", d, "documents", s) { _ =>
+      val df = queries("vocab_build")(s, d).persist()
+      val n = df.count() // distributed; also materializes the cache
+      require(n <= (1L << 20),
+        s"vocabulary has $n terms — beyond the broadcast-sanity cap; " +
+          "persist vocab_build output and shuffle-join the table instead")
+      df
+    }
 
   /** Tiny stopword profiles per language — n-gram/stopword heuristic
     * language ID. Deterministic argmax (ties broken by profile order). */

@@ -57,13 +57,11 @@ object Unigram {
   /** Hard-EM rounds. */
   val EmIters = 2
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Seq[(String, Double)]]()
-
-  /** Last model served — the apply/segment oracles replay it as
-    * literals (graft.Verify dumps oracle SQL AFTER running queries, so
-    * by dump time this holds the verified dataset's model). */
-  @volatile private var lastModel: Option[Seq[(String, Double)]] = None
+  /** Model last served — the apply/segment oracles replay it as
+    * literals (graft.Verify reads oracle SQL AFTER running queries, so
+    * by then this is the verified dataset's model). */
+  private def lastModel: Option[Seq[(String, Double)]] =
+    graft.Derived.latest("unigram_model")
 
   /** Unicode CODE POINTS of `w` — the indexing unit of every position
     * in this object (ADVICE r14): Spark's `length()` filters and the
@@ -131,14 +129,8 @@ object Unigram {
       .filter(length(col("word")).between(1, MaxWordLen))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
-  def model(s: SparkSession, d: String): Seq[(String, Double)] = {
-    val m = modelCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => train(s, d))
-    lastModel = Some(m)
-    m
-  }
+  def model(s: SparkSession, d: String): Seq[(String, Double)] =
+    graft.Derived.get(s, "unigram_model", d, "documents")(_ => train(s, d))
 
   private def train(s: SparkSession, d: String): Seq[(String, Double)] = {
     val sess = s; import sess.implicits._

@@ -59,25 +59,17 @@ object WordPiece {
   /** (rank, left, right, merged, pair_freq, score). */
   type Rule = (Int, String, String, String, Long, Double)
 
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Seq[Rule], Set[String])]()
-
-  /** Last trained (rules, vocab) served — the oracles replay it
-    * (graft.Verify dumps oracle SQL AFTER running queries). */
-  @volatile private var lastModel: Option[(Seq[Rule], Set[String])] = None
+  /** (rules, vocab) last served — the oracles replay it (graft.Verify
+    * reads oracle SQL AFTER running queries). */
+  private def lastModel: Option[(Seq[Rule], Set[String])] =
+    graft.Derived.latest("wordpiece_model")
 
   /** Trained model for a dataset: (merge rules, final token vocabulary).
     * The vocabulary is the WordPiece alphabet — BOTH forms (initial and
     * `##`-continuation) of every character seen in the universe — plus
-    * every merge product. Memoized per (dataset, content signature). */
-  def model(s: SparkSession, d: String): (Seq[Rule], Set[String]) = {
-    val m = modelCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => train(s, d))
-    lastModel = Some(m)
-    m
-  }
+    * every merge product. A [[graft.Derived]] entry of the documents table. */
+  def model(s: SparkSession, d: String): (Seq[Rule], Set[String]) =
+    graft.Derived.get(s, "wordpiece_model", d, "documents")(_ => train(s, d))
 
   /** Qualifying distinct words with frequencies (see universe contract). */
   private def wordTable(s: SparkSession, d: String): DataFrame =

@@ -122,15 +122,9 @@ object Gmm {
     } finally f.unpersist()
   }
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Params]()
-  def clearCache(): Unit = cache.clear()
-
+  /** Fitted mixture, a [[graft.Derived]] entry of the orders table. */
   def params(s: SparkSession, d: String): Params =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "orders.parquet"))),
-      _ => train(s, d))
+    graft.Derived.get(s, "gmm_params", d, "orders")(_ => train(s, d))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the fitted mixture — one row (round6 for the driver compare; the

@@ -118,15 +118,9 @@ object Logreg {
     } finally f.unpersist()
   }
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[Double]]()
-  def clearCache(): Unit = cache.clear()
-
+  /** Trained weights, a [[graft.Derived]] entry of the documents table. */
   def weights(s: SparkSession, d: String): Array[Double] =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "documents.parquet"))),
-      _ => train(s, d))
+    graft.Derived.get(s, "logreg_weights", d, "documents")(_ => train(s, d))
 
   /** Bounded per-group top-k as a typed Aggregator — the scale shape
     * for grouped ranking: the buffer holds AT MOST k (score, id) pairs,

@@ -72,18 +72,12 @@ object Ridge {
   }
 
   /** Driver-side weights for the eval query (same algebra as the
-    * train query, memoized per data dir like [[Logreg.weights]]). */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), (Double, Double)]()
-
+    * train query), a [[graft.Derived]] entry like [[Logreg.weights]]. */
   def weights(s: SparkSession, d: String): (Double, Double) =
-    cache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        U.dirSignature(java.nio.file.Paths.get(d, "lineitem.parquet"))),
-      _ => {
-        val r = solved(stats(s, d)).head()
-        (r.getDouble(1), r.getDouble(2))
-      })
+    graft.Derived.get(s, "ridge_weights", d, "lineitem") { _ =>
+      val r = solved(stats(s, d)).head()
+      (r.getDouble(1), r.getDouble(2))
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // the trained model — one row: n + the two ridge weights

@@ -50,15 +50,15 @@ object MvRegistry {
     * unregistered and never offered to the rewrite (serving the old
     * summary after the source was regenerated in-session would be a
     * silent wrong-answer — correctness beats acceleration). The check
-    * is file-listing metadata only (names/sizes/mtimes), the same
-    * freshness token `ensure()` memoizes on — at warehouse scale this
-    * is one manifest read per planned aggregate, noise next to the
-    * scan it replaces. */
-  def forSource(path: String): Seq[MvDef] = {
+    * is file-listing metadata only ([[graft.Derived.signature]]), the
+    * same freshness token `ensure()` builds on — at warehouse scale
+    * this is one manifest read per planned aggregate, noise next to
+    * the scan it replaces. */
+  def forSource(spark: SparkSession, path: String): Seq[MvDef] = {
     import scala.jdk.CollectionConverters._
     defs.values.asScala.filter(_.sourcePath == path).toSeq.filter { d =>
-      val fresh = d.sourceSig == graft.U.dirSignature(
-        java.nio.file.Paths.get(d.sourcePath))
+      val fresh =
+        d.sourceSig == graft.Derived.signature(spark, d.sourcePath)
       if (!fresh) defs.remove(d.name)
       fresh
     }
@@ -129,7 +129,7 @@ class MvRewrite(session: SparkSession) extends Rule[LogicalPlan]
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     val (path, preds) = unwrap(agg.child, Nil).getOrElse(return None)
-    MvRegistry.forSource(path).view.flatMap(tryOne(agg, preds, _))
+    MvRegistry.forSource(session, path).view.flatMap(tryOne(agg, preds, _))
       .headOption
   }
 

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Tables, U}
+import graft.{Derived, Tables, U}
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -308,40 +308,20 @@ object Similarity {
       call_function("nearest_centroid", vec, typedlit(matrix)) + 1)
   }
 
-  /** Per-JVM memo of trained centroids. Training is deterministic for a
-    * given (dataset content, k, iters) — decimal-bridged means make the
-    * centroids partition-count invariant (see [[trainIvfCentroids]]) — so
-    * the quantizer is a property of the DATASET, not of the query:
+  /** Trained IVF centroids, a [[graft.Derived]] entry of the
+    * embeddings table. Training is deterministic for a given (dataset
+    * content, k, iters) — decimal-bridged means make the centroids
+    * partition-count invariant (see [[trainIvfCentroids]]) — so the
+    * quantizer is a property of the DATASET, not of the query:
     * retraining on every probe would dominate the probe cost (~6 Spark
-    * jobs before the scan starts). The key carries a listing signature
-    * (file names, sizes, mtimes) of the embeddings table, so regenerating
-    * the data at the same path retrains instead of serving stale
-    * centroids; [[clearIvfCache]] force-clears. At 100 TB the same memo
-    * is a persisted centroid table trained once on a sample. */
-  private val centroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int), Array[(Int, Array[Double])]]()
-
-  def clearIvfCache(): Unit = centroidCache.clear()
-
-  /** Change-detection signature of the embeddings table (shared
-    * [[graft.U.dirSignature]] semantics). */
-  private def tableSignature(d: String): Long =
-    U.dirSignature(java.nio.file.Paths.get(d, "embeddings.parquet"))
-
-  /** Last centroids served, recorded for [[ivfOracleEntry]] (the oracle
-    * dump runs after the queries in graft.Verify, so this always holds
-    * the quantizer of the dataset under verification by dump time). */
-  @volatile private var lastCentroids: Option[Array[(Int, Array[Double])]] = None
-
+    * jobs before the scan starts). Regenerating the data at the same
+    * path retrains instead of serving stale centroids. At 100 TB the
+    * same entry is a persisted centroid table trained once on a
+    * sample. */
   def ivfCentroids(s: SparkSession, d: String, k: Int,
-      iters: Int = 2): Array[(Int, Array[Double])] = {
-    val cs = centroidCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), k, iters),
-      _ => trainIvfCentroids(s, d, k, iters))
-    lastCentroids = Some(cs)
-    cs
-  }
+      iters: Int = 2): Array[(Int, Array[Double])] =
+    Derived.get(s, "ivf_centroids", d, "embeddings", k, iters)(_ =>
+      trainIvfCentroids(s, d, k, iters))
 
   /** IVF ANN: probe the `nProbe` nearest centroids, exact cosine inside. */
   def ivfTopK(s: SparkSession, d: String, queryId: Long, k: Int,
@@ -361,6 +341,26 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id"))
       .limit(k)
   }
+
+  /** Per-cluster keep budget of sample_cluster_cap. */
+  val CapK = 8
+
+  /** SemDeDup's similarity threshold (see [[semDedup]]). */
+  val SemTau = 0.3
+
+  /** The corpus-adaptive cluster quantizer shared by [[semDedup]] and
+    * sample_cluster_cap: k ∝ N (constant expected cluster size), Lloyd
+    * trained on a ≤20k deterministic id-stride sample; a
+    * [[graft.Derived]] entry of the embeddings table (k is a function of
+    * the table's row count, so the table's signature covers it). */
+  def semCentroids(s: SparkSession, d: String, nCentroids: Int = 0)
+      : Array[(Int, Array[Double])] =
+    Derived.get(s, "sem_centroids", d, "embeddings", nCentroids) { _ =>
+      val n = Tables.t(s, d, "embeddings").count()
+      val k = if (nCentroids > 0) nCentroids
+        else math.max(16, (n / 300L).toInt)
+      trainIvfCentroids(s, d, k, 2, math.max(1L, n / 20000L))
+    }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
     * web-scale through semantic deduplication" — public method):
@@ -382,36 +382,8 @@ object Similarity {
     * demonstration threshold sits at the corpus's own duplicate tail so
     * the drop rule actually exercises; on real embeddings the paper's
     * τ is ≈ 0.95+. */
-  private val semCentroidCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), Array[(Int, Array[Double])]]()
-  @volatile private var lastSemCentroids:
-    Option[(Array[(Int, Array[Double])], Double)] = None
-
-  /** Per-cluster keep budget of sample_cluster_cap. */
-  val CapK = 8
-  @volatile private var lastCapCentroids:
-    Option[Array[(Int, Array[Double])]] = None
-
-  def clearSemCache(): Unit = semCentroidCache.clear()
-
-  /** The corpus-adaptive cluster quantizer shared by [[semDedup]] and
-    * sample_cluster_cap: k ∝ N (constant expected cluster size), Lloyd
-    * trained on a ≤20k deterministic id-stride sample, memoized per
-    * (dataset, content signature, k). */
-  def semCentroids(s: SparkSession, d: String, nCentroids: Int = 0)
-      : Array[(Int, Array[Double])] = {
-    val n = Tables.t(s, d, "embeddings").count()
-    val k = if (nCentroids > 0) nCentroids
-      else math.max(16, (n / 300L).toInt)
-    val sampleEvery = math.max(1L, n / 20000L)
-    val sig = (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-      tableSignature(d) * 31 + k)
-    semCentroidCache.computeIfAbsent(sig,
-      _ => trainIvfCentroids(s, d, k, 2, sampleEvery))
-  }
-
   def semDedup(s: SparkSession, d: String, nCentroids: Int = 0,
-      tau: Double = 0.3): DataFrame = {
+      tau: Double = SemTau): DataFrame = {
     graft.plans.NearestCentroid.register(s)
     // Adaptive k: the within-cluster pair count is Σ(n_c choose 2) —
     // QUADRATIC in cluster size — so k must grow with the corpus to
@@ -438,7 +410,6 @@ object Similarity {
     // see more candidate pairs) against pair flops. Measured at sf1:
     // c=1250 → 125M pairs dominated the query; c=300 → 30M.
     val cents = semCentroids(s, d, nCentroids)
-    lastSemCentroids = Some((cents, tau))
     val cidCol = assignCol(col("vd"), cents).cast("long")
     // Norms precompute per VECTOR, not per pair — inside a cluster of c
     // vectors each norm would otherwise be folded c-1 times; the pair
@@ -537,26 +508,12 @@ object Similarity {
     books
   }
 
-  /** Per-JVM codebook memo — same dataset-signature keying and staleness
-    * rules as [[centroidCache]]. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int, Int), Array[Array[Array[Double]]]]()
-
-  def clearPqCache(): Unit = pqCache.clear()
-
-  /** Last codebooks served, recorded for [[pqOracleEntry]] (same
-    * run-order contract as [[lastCentroids]]). */
-  @volatile private var lastPqBooks: Option[Array[Array[Array[Double]]]] = None
-
+  /** Trained PQ codebooks, a [[graft.Derived]] entry like
+    * [[ivfCentroids]]. */
   def pqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      iters: Int = 2): Array[Array[Array[Double]]] = {
-    val books = pqCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), m, k, iters),
-      _ => trainPqCodebooks(s, d, m, k, iters))
-    lastPqBooks = Some(books)
-    books
-  }
+      iters: Int = 2): Array[Array[Array[Double]]] =
+    Derived.get(s, "pq_codebooks", d, "embeddings", m, k, iters)(_ =>
+      trainPqCodebooks(s, d, m, k, iters))
 
   /** RESIDUAL PQ codebooks (the Faiss IndexIVFPQ refinement the
     * round-7 verdict asked for): train the per-subspace quantizers on
@@ -587,26 +544,15 @@ object Similarity {
     finally resid.unpersist()
   }
 
-  private val residualPqCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Int, Int, Int, Int), Array[Array[Array[Double]]]]()
-
-  def clearResidualPqCache(): Unit = residualPqCache.clear()
-
-  /** Last residual codebooks served, with the coarse quantizer they were
-    * trained against — recorded for [[ivfPqResidualOracleEntry]]. */
-  @volatile private var lastResidualBooks:
-    Option[(Array[(Int, Array[Double])], Array[Array[Array[Double]]])] = None
-
+  /** Trained residual codebooks: a [[graft.Derived]] entry that stores
+    * them with the coarse quantizer they were trained against (the pair
+    * [[ivfPqResidualOracleEntry]] replays). */
   def residualPqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
-      nCoarse: Int, iters: Int = 2): Array[Array[Array[Double]]] = {
-    val coarse = ivfCentroids(s, d, nCoarse)
-    val books = residualPqCache.computeIfAbsent(
-      (java.nio.file.Paths.get(d).toAbsolutePath.toString,
-        tableSignature(d), m, k, nCoarse, iters),
-      _ => trainResidualPqCodebooks(s, d, m, k, coarse, iters))
-    lastResidualBooks = Some((coarse, books))
-    books
-  }
+      nCoarse: Int, iters: Int = 2): Array[Array[Array[Double]]] =
+    Derived.get(s, "residual_pq", d, "embeddings", m, k, nCoarse, iters) { _ =>
+      val coarse = ivfCentroids(s, d, nCoarse)
+      (coarse, trainResidualPqCodebooks(s, d, m, k, coarse, iters))
+    }._2
 
   /** IVF-PQ with RESIDUAL codes: coarse probe prune as in [[ivfPqTopK]],
     * then ADC over residual codebooks. The scoring identity that keeps
@@ -778,12 +724,6 @@ object Similarity {
       .orderBy("qid", "rn")
   }
 
-  /** Models graded by the most recent [[evalIndexPanel]] run, recorded
-    * for [[evalPanelOracleEntry]] (same run-order contract as
-    * [[lastCentroids]]: graft.Verify dumps oracle SQL after queries). */
-  @volatile private var lastEvalModels: Option[(Array[(Int, Array[Double])],
-    Array[Array[Array[Double]]], Array[Array[Array[Double]]])] = None
-
   /** One ANN evaluation harness for EVERY index variant (VERDICT r12
     * item 3): recall@10 + nDCG@10 of the LSH-bucketed, IVF, PQ, IVF-PQ,
     * and residual IVF-PQ indexes, all on the SAME fixed 10-query panel
@@ -868,7 +808,6 @@ object Similarity {
     val coarse = ivfCentroids(s, d, nCentroids)
     val rawBooks = pqCodebooks(s, d, m, kCent)
     val residBooks = residualPqCodebooks(s, d, m, kCent, nCentroids)
-    lastEvalModels = Some((coarse, rawBooks, residBooks))
     // the fixed panel, collected once (nPanel rows — same driver cost
     // class as the centroid literals themselves)
     val panel: Array[Array[Double]] = Tables.t(s, d, "embeddings")
@@ -1029,7 +968,6 @@ object Similarity {
       graft.plans.NearestCentroid.register(s)
       val sess = s; import sess.implicits._
       val cents = semCentroids(s, d)
-      lastCapCentroids = Some(cents)
       val centDf = broadcast(cents.sortBy(_._1).toSeq
         .map { case (id, v) =>
           (id.toLong, v.toSeq, v.map(x => x * x).sum) }
@@ -1912,6 +1850,18 @@ object Similarity {
         |FROM a ORDER BY label, dim""".stripMargin
   )
 
+  // The models the registered queries train (at their default
+  // parameters), as last served: oracle SQL embeds them as literals, so
+  // an entry exists once its query has run.
+  private def servedIvf =
+    Derived.latest[Array[(Int, Array[Double])]]("ivf_centroids", 16, 2)
+  private def servedPq =
+    Derived.latest[Array[Array[Array[Double]]]]("pq_codebooks", 8, 16, 2)
+  private def servedResidual = Derived.latest[(Array[(Int, Array[Double])],
+    Array[Array[Array[Double]]])]("residual_pq", 8, 16, 16, 2)
+  private def servedSem =
+    Derived.latest[Array[(Int, Array[Double])]]("sem_centroids", 0)
+
   /** IVF replay generated from the CONVERGED quantizer: graft.Verify
     * runs every query before dumping oracle SQL, so by dump time
     * [[ivfCentroids]] has recorded the trained centroids for the
@@ -1924,7 +1874,7 @@ object Similarity {
     * ran (training failed), the entry is omitted and the driver falls
     * back to the rows-only check instead of comparing against a stale
     * quantizer. */
-  private def ivfOracleEntry: Map[String, String] = lastCentroids match {
+  private def ivfOracleEntry: Map[String, String] = servedIvf match {
     case None => Map.empty
     case Some(cs) => Map(
       "sim_ivf_topk" -> ivfOracleSqlFor(cs),
@@ -1943,9 +1893,9 @@ object Similarity {
     * the ROUNDED similarity. Zero-norm vectors yield NULL cosine →
     * NULL comparison → the pair drops out, matching Spark's
     * null-guarded [[VectorOps.cosine]]. */
-  private def semDedupOracleEntry: Map[String, String] = lastSemCentroids match {
+  private def semDedupOracleEntry: Map[String, String] = servedSem match {
     case None => Map.empty
-    case Some((cs, tau)) => Map("sim_semdedup" -> semDedupOracleSqlFor(cs, tau))
+    case Some(cs) => Map("sim_semdedup" -> semDedupOracleSqlFor(cs, SemTau))
   }
 
   private def semDedupOracleSqlFor(cs: Array[(Int, Array[Double])],
@@ -1986,7 +1936,7 @@ object Similarity {
     * of TopKAgg's total order (dist asc, vec_id DESC on ties — the
     * aggregator's pinned tie rule). */
   private def clusterCapOracleEntry: Map[String, String] =
-    lastCapCentroids match {
+    servedSem match {
       case None => Map.empty
       case Some(cs) => Map("sample_cluster_cap" -> {
         val dim = cs.head._2.length
@@ -2063,7 +2013,7 @@ object Similarity {
     * and the ADC total is the same fixed left-assoc 8-term chain the
     * Spark query emits, so round(·,6) cannot disagree by re-association.
     */
-  private def pqOracleEntry: Map[String, String] = lastPqBooks match {
+  private def pqOracleEntry: Map[String, String] = servedPq match {
     case None => Map.empty
     case Some(books) => Map("sim_pq_topk" -> pqOracleSqlFor(books))
   }
@@ -2120,7 +2070,7 @@ object Similarity {
     * probe-filtered vector set instead of the full corpus. Emitted only
     * when BOTH quantizers were trained this run. */
   private def ivfPqOracleEntry: Map[String, String] =
-    (lastCentroids, lastPqBooks) match {
+    (servedIvf, servedPq) match {
       case (Some(cs), Some(books)) =>
         Map("sim_ivf_pq_topk" -> ivfPqOracleSqlFor(cs, books))
       case _ => Map.empty
@@ -2190,7 +2140,7 @@ object Similarity {
   }
 
   private def ivfPqResidualOracleEntry: Map[String, String] =
-    lastResidualBooks match {
+    servedResidual match {
       case Some((cs, books)) =>
         Map("sim_ivf_pq_residual" -> ivfPqResidualOracleSqlFor(cs, books))
       case None => Map.empty
@@ -2273,11 +2223,12 @@ object Similarity {
        |ORDER BY adc_ip DESC, vec_id LIMIT 10""".stripMargin
   }
 
-  private def evalPanelOracleEntry: Map[String, String] = lastEvalModels match {
-    case Some((cs, raw, resid)) =>
-      Map("sim_eval_index_panel" -> evalPanelOracleSqlFor(cs, raw, resid))
-    case None => Map.empty
-  }
+  private def evalPanelOracleEntry: Map[String, String] =
+    (servedIvf, servedPq, servedResidual) match {
+      case (Some(cs), Some(raw), Some((_, resid))) =>
+        Map("sim_eval_index_panel" -> evalPanelOracleSqlFor(cs, raw, resid))
+      case _ => Map.empty
+    }
 
   /** Index-panel replay: every trained model the panel graded embeds as
     * literals (the [[ivfOracleSqlFor]]/[[pqOracleSqlFor]] round-trip

@@ -3,61 +3,32 @@ package graft.sources
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Derived, Tables, U}
 import graft.plans.{MvDef, MvRegistry}
 
 /** Builder for the lineitem pricing summary the [[graft.plans.MvRewrite]]
   * optimizer rule serves: per (l_returnflag, l_linestatus) —
   * `count(*)`, exact-decimal sums of quantity and extended price, and
   * the shipdate min/max. Built once per (data dir, content signature)
-  * under `target/graft-derived/` (the same memo + stale-cleanup
-  * lifecycle as [[PartitionedData]]), registered into [[MvRegistry]]
-  * so ANY subsumed rollup in the session accelerates transparently.
+  * under `target/graft-derived/` through the same layout lifecycle as
+  * [[PartitionedData]] (tmp build, atomic publish, stale-generation
+  * sweep), registered into [[MvRegistry]] so ANY subsumed rollup in the
+  * session accelerates transparently.
   *
   * At 100 TB the build is one partial+final aggregation of the fact
   * (the scan you were going to do anyway, amortized over every
   * dashboard query after it); the summary is |groups| rows.
   */
 object MaterializedView {
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long), MvDef]()
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p)) {
-      val s = java.nio.file.Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) deleteRecursively(it.next())
-      } finally s.close()
-    }
-    java.nio.file.Files.deleteIfExists(p)
-  }
-
   /** Build (if stale/missing) + register the pricing summary for
     * `d`'s lineitem. Idempotent and cheap after the first call. */
-  def ensure(spark: SparkSession, d: String): MvDef = {
-    val src = java.nio.file.Paths.get(d, "lineitem.parquet")
-      .toAbsolutePath
-    val sig = U.dirSignature(src)
-    memo.computeIfAbsent((src.toString, sig), { _ =>
-      val base = java.nio.file.Paths.get("target", "graft-derived")
-        .toAbsolutePath
-      val dirTag = f"${src.toString.hashCode}%08x"
-      val prefix = s"mv_lineitem_pricing_${dirTag}_"
-      val name = f"$prefix$sig%016x"
-      val out = base.resolve(name)
-      if (!java.nio.file.Files.exists(out.resolve("_SUCCESS"))) {
-        if (java.nio.file.Files.isDirectory(base)) {
-          val s = java.nio.file.Files.list(base)
-          try {
-            val it = s.iterator()
-            while (it.hasNext) {
-              val p = it.next()
-              val n = p.getFileName.toString
-              if (n.startsWith(prefix) && n != name) deleteRecursively(p)
-            }
-          } finally s.close()
-        }
+  def ensure(spark: SparkSession, d: String): MvDef =
+    Derived.get(spark, "mv_lineitem_pricing", d, "lineitem") { sig =>
+      val src = java.nio.file.Paths.get(d, "lineitem.parquet")
+        .toAbsolutePath.toString
+      val out = PartitionedData.derivedLayout(d, "mv_lineitem_pricing", sig,
+        p => java.nio.file.Files.exists(p.resolve("_SUCCESS")),
+        inPlace = false) { tmp =>
         Tables.t(spark, d, "lineitem")
           .groupBy("l_returnflag", "l_linestatus")
           .agg(count(lit(1)).as("cnt"),
@@ -66,12 +37,12 @@ object MaterializedView {
               .as("sum_l_extendedprice"),
             min(col("l_shipdate")).as("min_l_shipdate"),
             max(col("l_shipdate")).as("max_l_shipdate"))
-          .write.mode(SaveMode.Overwrite).parquet(out.toString)
+          .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       }
       val mv = MvDef(
-        name = s"lineitem_pricing:${src.toString}",
-        sourcePath = src.toString,
-        mvPath = out.toString,
+        name = s"lineitem_pricing:$src",
+        sourcePath = src,
+        mvPath = out,
         groupCols = Set("l_returnflag", "l_linestatus"),
         dec4Sums = Map(
           "l_quantity" -> "sum_l_quantity",
@@ -82,6 +53,5 @@ object MaterializedView {
         sourceSig = sig)
       MvRegistry.register(mv)
       mv
-    })
-  }
+    }
 }

@@ -52,7 +52,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("trained merge rules match the independent reference implementation") {
-    functions.Bpe.clearRulesCache()
+    Derived.clear("bpe_rules")
     val engine = functions.Bpe.queries("vocab_bpe_train")(spark, sfDir)
       .as[(Int, String, String, Long)].collect().toSeq
     val wordFreqs = Tables.t(spark, sfDir, "documents")
@@ -122,7 +122,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("apply: tokens round-trip to the original words, compression holds") {
-    functions.Bpe.clearRulesCache()
+    Derived.clear("bpe_rules")
     plans.BpeMerge.register(spark)
     val rules = functions.Bpe.trainRules(spark, sfDir).map(r => s"${r._2} ${r._3}")
     val words = Tables.t(spark, sfDir, "documents").limit(200)

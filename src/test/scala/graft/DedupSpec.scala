@@ -197,15 +197,21 @@ class DedupSpec extends SparkSpec {
     def cc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
       // force the distributed path (the 100 TB shape stays covered even
       // though every test graph is under the driver-edge cap)
+      Attrib.drain()
       val stars = Dedup.connectedComponents(edges.toDF("a", "b"),
         driverEdgeCap = 0L)
       val m = stars.as[(Long, Long)].collect().toMap
-      distIters = Dedup.lastCcIters
+      val dist = Attrib.drain().toMap
+      assert(dist.get("cc_path") === Some("distributed"),
+        "cap 0 must run the iterative path")
+      distIters = dist("cc_iters").toInt
       assert(distIters > 0, "cap 0 must run the iterative path")
       // parity: the union-find fast path labels identically
       val fast = Dedup.connectedComponents(edges.toDF("a", "b"))
         .as[(Long, Long)].collect().toMap
-      assert(Dedup.lastCcIters === 0, "under the cap must run union-find")
+      val local = Attrib.drain().toMap
+      assert(local.get("cc_path") === Some("driver") &&
+        !local.contains("cc_iters"), "under the cap must run union-find")
       assert(fast === m, "union-find fast path diverged from the " +
         "distributed star alternation")
       m // non-root -> root
@@ -295,15 +301,20 @@ class DedupSpec extends SparkSpec {
     val pointers = (1L to 4096L).map(i => (i, i - 1)).toDF("id", "parent")
     // force the distributed doubling path — the 100 TB shape must stay
     // covered even though 4096 rows are under the driver-row cap
+    Attrib.drain()
     val resolved = Dedup.canonicalResolve(pointers, driverRowCap = 0L)
       .as[(Long, Long)].collect()
     assert(resolved.length === 4096)
     assert(resolved.forall(_._2 === 0L))
-    assert(Dedup.lastResolveIters === 13,
-      s"expected 13 rounds, got ${Dedup.lastResolveIters}")
+    val dist = Attrib.drain().toMap
+    assert(dist.get("resolve_path") === Some("distributed"))
+    assert(dist.get("resolve_iters") === Some("13"),
+      s"expected 13 rounds, got ${dist.get("resolve_iters")}")
     // parity: the driver-side chase resolves the same chain identically
     val fast = Dedup.canonicalResolve(pointers).as[(Long, Long)].collect()
-    assert(Dedup.lastResolveIters === 0, "under the cap must run the chase")
+    val local = Attrib.drain().toMap
+    assert(local.get("resolve_path") === Some("driver") &&
+      !local.contains("resolve_iters"), "under the cap must run the chase")
     assert(fast.sorted.toSeq === resolved.sorted.toSeq)
   }
 

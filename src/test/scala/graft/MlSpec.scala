@@ -107,7 +107,7 @@ class MlSpec extends SparkSpec {
 
   test("gmm: EM training is partition-count invariant (bit-identical " +
     "params through the quantized M-step sums)") {
-    ml.Gmm.clearCache()
+    Derived.clear("gmm_params")
     val p1 = ml.Gmm.train(spark, sfDir)
     val tmp = java.nio.file.Files.createTempDirectory("gmmpart").toString
     Tables.t(spark, sfDir, "orders").repartition(7, col("o_custkey"))
@@ -166,12 +166,12 @@ class MlSpec extends SparkSpec {
       (4L, "zz yy", "fr", "t", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    ml.Logreg.clearCache()
+    Derived.clear("logreg_weights")
     val r = ml.Logreg.queries("ml_logreg_auc")(spark, tmp).head()
     assert(r.getAs[Long]("n_pos") == 2L && r.getAs[Long]("n_neg") == 2L)
     val a = r.getAs[Double]("auc")
     assert(a >= 0.0 && a <= 1.0)
-    ml.Logreg.clearCache()
+    Derived.clear("logreg_weights")
   }
 
   test("decision stump: planted threshold is recovered with full gini " +
