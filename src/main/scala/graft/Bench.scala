@@ -1,11 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Path, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are forced through the `noop` sink so the
   * full plan executes (a bare `count()` would let Catalyst prune most of
-  * the work and overstate throughput).
+  * the work and overstate throughput). Each query's min pass is also its
+  * profile: phase/job/shuffle fields in the JSON `attrib` object, and its
+  * stage table and final adaptive plan in `target/profile/<query>.txt`.
   */
 object Bench {
   /** One timed execution: (seconds, succeeded). */
@@ -16,11 +21,17 @@ object Bench {
     * ms landing inside the timed window, and any [[Attrib]] notes the
     * operators recorded (e.g. which guarded fast path ran). The min
     * pass's attribution is what the JSON reports: it describes the
-    * number the gate actually reads. */
+    * number the gate actually reads. The profile part splits the wall
+    * into DataFrame construction, planning and execution, counts the
+    * jobs each step started, and carries the stage table and the final
+    * formatted plan. */
   final case class PassRec(sec: Double, ok: Boolean, gcMs: Long,
       taskMs: Long, cpuMs: Long, tasks: Long, boxNonSelfMs: Long,
       boxLoad1: Double, jitMs: Long, codeCacheMb: Long,
-      notes: Seq[(String, String)])
+      notes: Seq[(String, String)], constructMs: Long, planMs: Long,
+      execMs: Long, constructJobs: Long, execJobs: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+      stageRows: Seq[BenchMetrics.StageRow], plan: String)
 
   /** Final per-query record: the min successful pass plus `warmMs`, the
     * measured warm-up tax (first-pass seconds minus the min) — the
@@ -65,6 +76,155 @@ object Bench {
     if (passes.isEmpty || !passes.head._2) -1L
     else math.max(0L, math.round((passes.head._1 - minSec) * 1000))
 
+  /** Passes per query, run BACK-TO-BACK (round 15), min reported: the
+    * first pass absorbs per-query classload/codegen-compile cost AND the
+    * JIT tier warm-up of the query's generated classes, so the recorded
+    * numbers are steady-tier execution, which is what round-over-round
+    * comparison needs on a box with intermittent external load. The
+    * r14 codegen-cache fix removed recompilation between sweeps, but
+    * with sweep-ordered passes 359 other queries ran between a query's
+    * pass 1 and pass 2, so its generated classes' JIT profiles decayed
+    * (code-cache flushing + tiered deopt) and even the "warm" pass
+    * re-ran in interpreter/C1; the absorbed tax is REPORTED per query
+    * as `warm_ms` (first-pass minus min).
+    *
+    * Min across SUCCESSFUL passes: back-to-back identical full sweeps
+    * measured a median per-query ratio of 1.01 but INDIVIDUAL queries
+    * at 2.5-4.7x between runs with unchanged code (round-11 forensics).
+    * The noise is one-sided (a GC pause, a deletion burst, or ambient
+    * box load only adds time), so the min is the steady-state
+    * estimator; a failed pass's fail-fast duration must not masquerade
+    * as a speedup, and a query with ZERO successful passes is reported
+    * in a separate "failed" array, NOT as a timing. A query whose
+    * passes disagree ([[needsTieBreak]]) gets one extra pass. */
+  val Passes = 2
+
+  /** One timed pass of `fn` through the noop sink, with attribution.
+    * Counters are snapshotted around the timed window (the listener bus
+    * is drained so task-end events attribute to THIS query); Attrib
+    * notes are drained before AND after — before, so a previous
+    * non-bench code path can't bleed notes in; after, to collect them.
+    * The [[BenchMetrics.PhaseProp]] local property marks which step
+    * started each job; nothing here adds a job or a planning pass to
+    * the window. After the window, every cached block is dropped and
+    * the ContextCleaner nudged (shuffle-file GC): in one JVM, state
+    * queries leave behind (persisted fixpoint results, memoized tables,
+    * hundreds of MB of shuffle files) contaminated LATER queries'
+    * numbers by factors — sql_q18 41.7 s in-suite vs 5.7 s isolated at
+    * sf1, agg_approx_distinct 4.66 s vs 0.99 s at sf0.1 (round 9). */
+  def runOne(spark: SparkSession, sfDir: String, name: String,
+      fn: (SparkSession, String) => DataFrame, tag: String = ""): PassRec = {
+    val sc = spark.sparkContext
+    BenchMetrics.install(spark)
+    Attrib.drain()
+    val s0 = BenchMetrics.begin(spark)
+    val box0 = BenchMetrics.boxStat()
+    val (jit0, _) = BenchMetrics.jitStat()
+    val t0 = System.nanoTime()
+    var t1 = t0
+    var ok = true
+    try {
+      sc.setLocalProperty(BenchMetrics.PhaseProp, "construct")
+      val df = fn(spark, sfDir)
+      t1 = System.nanoTime()
+      // a query may return a DataFrame of a child session
+      BenchMetrics.install(df.sparkSession)
+      sc.setLocalProperty(BenchMetrics.PhaseProp, "exec")
+      df.write.format("noop").mode("overwrite").save()
+    } catch { case e: Throwable =>
+      ok = false
+      System.err.println(s"[bench] $name$tag failed: ${e.getMessage}")
+    } finally sc.setLocalProperty(BenchMetrics.PhaseProp, null)
+    val t2 = System.nanoTime()
+    val box1 = BenchMetrics.boxStat()
+    val (jit1, cc1) = BenchMetrics.jitStat()
+    val w = BenchMetrics.end(spark, s0)
+    val notes = Attrib.drain()
+    spark.catalog.clearCache()
+    System.gc() // lets the ContextCleaner reap dead shuffles
+    // Ambient (non-self) CPU ms that landed inside the timed window
+    // (VERDICT r13 item 1): busy-jiffies delta across ALL cores minus
+    // this JVM's own utime+stime delta, at USER_HZ = 100 → ×10 ms.
+    // -1 when /proc was unreadable (non-Linux) — a consumer must not
+    // read that as "zero ambient load".
+    val boxNonSelf =
+      if (box0.busyJiffies < 0 || box1.busyJiffies < 0 ||
+          box0.selfJiffies < 0 || box1.selfJiffies < 0) -1L
+      else math.max(0L, (box1.busyJiffies - box0.busyJiffies) -
+        (box1.selfJiffies - box0.selfJiffies)) * 10L
+    // jit_ms: JVM compiler thread time landing inside the window
+    // (recompilation churn when the code cache flushes); codecache_mb:
+    // CodeHeap bytes in use at window end (near the 1 GiB reserve ⇒
+    // flushing territory). Both -1 when the beans are unavailable.
+    val jitMs =
+      if (jit0 < 0 || jit1 < 0) -1L else math.max(0L, jit1 - jit0)
+    val d = w.d
+    PassRec((t2 - t0) / 1e9, ok, d.gcMs, d.taskMs, d.cpuMs, d.tasks,
+      boxNonSelf, math.max(box0.load1, box1.load1), jitMs,
+      if (cc1 < 0) -1L else cc1 >> 20, notes,
+      constructMs = (t1 - t0) / 1000000L, planMs = w.planMs,
+      execMs = math.max(0L, (t2 - t1) / 1000000L - w.planMs),
+      constructJobs = d.constructJobs, execJobs = d.execJobs,
+      shuffleReadBytes = d.shuffleReadBytes,
+      shuffleWriteBytes = d.shuffleWriteBytes, spillBytes = d.spillBytes,
+      stageRows = w.stages, plan = w.plan)
+  }
+
+  /** Locale.ROOT formatting: f"" uses the JVM default locale, and a
+    * comma decimal separator would silently break the JSON contract. */
+  def num(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  /** Attribution object, one entry per query: the min pass's counters
+    * and phase split, the measured warm-up tax (warm_ms, r15), plus
+    * operator Attrib notes (e.g. "resolve_path":"driver"). Numeric note
+    * values stay bare. */
+  def attribJson(entries: Seq[(String, QueryRec)]): String =
+    entries.map { case (k, q) =>
+      val r = q.min
+      val notes = r.notes.map { case (nk, nv) =>
+        Verify.jstr(nk) + ":" +
+          (if (nv.matches("""-?\d+(\.\d+)?""")) nv else Verify.jstr(nv))
+      }
+      val fields = Seq("gc_ms" -> r.gcMs, "task_ms" -> r.taskMs,
+        "cpu_ms" -> r.cpuMs, "tasks" -> r.tasks,
+        "box_nonself_ms" -> r.boxNonSelfMs, "box_load1" -> num(r.boxLoad1),
+        "jit_ms" -> r.jitMs, "codecache_mb" -> r.codeCacheMb,
+        "warm_ms" -> q.warmMs, "construct_ms" -> r.constructMs,
+        "plan_ms" -> r.planMs, "exec_ms" -> r.execMs,
+        "construct_jobs" -> r.constructJobs, "exec_jobs" -> r.execJobs,
+        "stages" -> r.stageRows.size,
+        "shuffle_read_bytes" -> r.shuffleReadBytes,
+        "shuffle_write_bytes" -> r.shuffleWriteBytes,
+        "spill_bytes" -> r.spillBytes)
+        .map { case (fk, v) => Verify.jstr(fk) + ":" + v }
+      Verify.jstr(k) + ":" + (fields ++ notes).mkString("{", ",", "}")
+    }.mkString("{", ",", "}")
+
+  /** The text profile of one pass: phase line, one row per completed
+    * stage (wall, tasks, shuffle MB, executor run/CPU ms) and the final
+    * formatted plan. */
+  def profileText(name: String, r: PassRec): String = {
+    def mb(b: Long) = String.format(java.util.Locale.ROOT, "%.1f",
+      Double.box(b / 1e6))
+    val head =
+      s"$name: ${num(r.sec)} s = construct ${r.constructMs} ms " +
+        s"(${r.constructJobs} jobs) + plan ${r.planMs} ms + exec " +
+        s"${r.execMs} ms (${r.execJobs} jobs)"
+    val table = (Seq("stage", "wall_ms", "tasks", "shW_MB", "shR_MB",
+        "run_ms", "cpu_ms", "name") +:
+      r.stageRows.map(s => Seq(s.id, s.wallMs, s.tasks,
+        mb(s.shuffleWriteBytes), mb(s.shuffleReadBytes), s.runMs, s.cpuMs,
+        s.name)))
+      .map(c => "%5s %8s %5s %8s %8s %8s %8s  %s".format(c: _*))
+    (head +: "" +: table :+ "" :+ r.plan).mkString("", "\n", "\n")
+  }
+
+  def writeProfile(dir: Path, name: String, r: PassRec): Unit = {
+    Files.createDirectories(dir)
+    Files.write(dir.resolve(s"$name.txt"), profileText(name, r).getBytes(UTF_8))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -106,145 +266,21 @@ object Bench {
       // noop sink registration
       r.write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
-    // Optional args restrict the run to named queries (dev loop); the
-    // driver passes no args and gets the full suite. SPARK_GRAFT_REPEAT=n
-    // (dev-only) times the n-th pass, isolating steady-state execution
-    // from first-run classload/codegen-compile cost.
+    // Optional args restrict the run to named queries (dev loop); no
+    // args runs the full suite.
     val only = args.toSet
-    // Default is 2 passes run BACK-TO-BACK PER QUERY with the min taken:
-    // the first pass absorbs per-query classload/codegen-compile cost AND
-    // the JIT tier warm-up of the query's generated classes (see the
-    // per-query loop below for why consecutive passes replaced the old
-    // sweep-ordered protocol in round 15), so the recorded numbers are
-    // steady-tier execution, which is what round-over-round comparison
-    // needs on a box with intermittent external load.
-    // SPARK_GRAFT_REPEAT overrides (1 = old cold-run behavior).
-    val passes = sys.env.get("SPARK_GRAFT_REPEAT") match {
-      case Some(v) => v.trim.toIntOption.filter(_ >= 1).getOrElse {
-        // loud fallback: a silently-cold pass would get recorded as a
-        // steady-state number
-        System.err.println(
-          s"[bench] invalid SPARK_GRAFT_REPEAT='$v', running 2 passes")
-        2
-      }
-      case None => 2
-    }
-    // SPARK_GRAFT_ORDER=reverse is the suite-position bisect knob (dev
-    // only; the driver never sets it): the round-10/11 driver-tail
-    // anomaly cluster (copurchase, rake, vocab_apply, tfidf, hits — all
-    // ~2x their isolated numbers ONLY in full-suite runs) correlates
-    // with alphabetical position; running the suite reversed swaps which
-    // queries sit late, separating "this query is slow" from "any query
-    // is slow after ~300 predecessors" (cumulative JVM state: code-cache
-    // flushing, codegen class accumulation, GC debt).
-    val order = sys.env.getOrElse("SPARK_GRAFT_ORDER", "asc")
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-    val selected = (if (order == "reverse") sorted.reverse else sorted)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    // Between-query cleanup (ON by default; SPARK_GRAFT_ISOLATE=0
-    // disables): drop every cached block and nudge the ContextCleaner
-    // (shuffle-file GC) BETWEEN queries, outside the timed window. In
-    // one JVM, state queries legitimately leave behind (persisted
-    // fixpoint results, memoized vocab/centroid tables, hundreds of MB
-    // of shuffle files from quadratic-output joins) contaminates LATER
-    // queries' numbers by factors — measured: sql_q18 41.7 s in-suite
-    // vs 5.7 s isolated at sf1, feat_winsorize swinging 6.9↔148 s
-    // between identical runs at sf1, and agg_approx_distinct 4.66 s
-    // in-suite vs 0.99 s isolated at sf0.1 once the suite reached 317
-    // queries (round 9). A per-query number should measure the query,
-    // not its predecessors' GC debt, so cleanup is the default; the
-    // full-suite A/B at sf0.1 (isolated 273.5 s vs contaminated
-    // 310.6 s) shows the cleanup also wins on total.
-    val isolate = !sys.env.get("SPARK_GRAFT_ISOLATE").contains("0")
-    // One timed execution with attribution: GC/task-time counters are
-    // snapshotted around the timed window (the listener bus is drained
-    // inside snapshot() so task-end events attribute to THIS query);
-    // Attrib notes are drained before AND after — before, so a previous
-    // non-bench code path can't bleed notes in; after, to collect them.
-    def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        tag: String): PassRec = {
-      Attrib.drain()
-      val (gc0, tm0, cp0, tc0) = BenchMetrics.snapshot(spark)
-      val box0 = BenchMetrics.boxStat()
-      val (jit0, _) = BenchMetrics.jitStat()
-      val t0 = System.nanoTime()
-      var ok = true
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        ok = false
-        System.err.println(s"[bench] $name$tag failed: ${e.getMessage}")
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val box1 = BenchMetrics.boxStat()
-      val (jit1, cc1) = BenchMetrics.jitStat()
-      val (gc1, tm1, cp1, tc1) = BenchMetrics.snapshot(spark)
-      val notes = Attrib.drain()
-      if (isolate) {
-        spark.catalog.clearCache()
-        System.gc() // lets the ContextCleaner reap dead shuffles
-      }
-      // Ambient (non-self) CPU ms that landed inside the timed window
-      // (VERDICT r13 item 1): busy-jiffies delta across ALL cores minus
-      // this JVM's own utime+stime delta, at USER_HZ = 100 → ×10 ms.
-      // -1 when /proc was unreadable (non-Linux) — a consumer must not
-      // read that as "zero ambient load".
-      val boxNonSelf =
-        if (box0.busyJiffies < 0 || box1.busyJiffies < 0 ||
-            box0.selfJiffies < 0 || box1.selfJiffies < 0) -1L
-        else math.max(0L, (box1.busyJiffies - box0.busyJiffies) -
-          (box1.selfJiffies - box0.selfJiffies)) * 10L
-      // jit_ms: JVM compiler thread time landing inside the window
-      // (recompilation churn when the code cache flushes); codecache_mb:
-      // CodeHeap bytes in use at window end (near the 1 GiB reserve ⇒
-      // flushing territory). Both -1 when the beans are unavailable.
-      val jitMs =
-        if (jit0 < 0 || jit1 < 0) -1L else math.max(0L, jit1 - jit0)
-      PassRec(dt, ok, gc1 - gc0, tm1 - tm0, cp1 - cp0, tc1 - tc0,
-        boxNonSelf, math.max(box0.load1, box1.load1), jitMs,
-        if (cc1 < 0) -1L else cc1 >> 20, notes)
-    }
-    // Passes run BACK-TO-BACK PER QUERY (round 15), not as full sweeps.
-    // The r14 codegen-cache fix removed recompilation between sweeps,
-    // but the residual copurchase in-suite divergence (support 1.74x /
-    // topk 1.85x vs record with GC, ambient load and concurrent JVMs
-    // all excluded, jit_ms covering only ~half) was low-TIER execution:
-    // with sweep-ordered passes, 359 other queries run between a
-    // query's pass 1 and pass 2, so its generated classes' JIT profiles
-    // decay (code-cache flushing + tiered deopt) and even the "warm"
-    // pass re-runs in interpreter/C1 while C2 re-warms — compiler-
-    // thread time (jit_ms) never sees the interpreted execution itself.
-    // Consecutive passes make pass 1 absorb codegen compile AND tier
-    // warm-up seconds before the timed min, so the min measures
-    // steady-tier execution by construction; the absorbed tax is
-    // REPORTED per query as `warm_ms` (first-pass minus min), the
-    // instrumentation half of the same fix.
-    //
-    // Per-query time = MIN across SUCCESSFUL passes (for passes >= 2):
-    // back-to-back identical full sweeps measured a median per-query
-    // ratio of 1.01 but INDIVIDUAL queries at 2.5-4.7x between runs
-    // with unchanged code (round-11 forensics). The noise is one-sided
-    // (a GC pause, a deletion burst, or ambient box load lands IN some
-    // query's timed window and only adds time), so the min is the
-    // steady-state estimator. A FAILED pass's (fail-fast) duration must
-    // not masquerade as a speedup, so the min ranges over successful
-    // passes only; a query with ZERO successful passes is reported in a
-    // separate "failed" array, NOT as a timing. With
-    // SPARK_GRAFT_REPEAT=1 this degrades to the single cold pass.
-    //
     // Tie-break pass for noise-hit queries: min-of-2 still lets a query
     // lose BOTH draws (the round-11 driver tail recorded copurchase at
-    // 6.58 s min-of-2 vs 2.9 s in four builder sweeps). When a query's
-    // successful passes DISAGREE by >1.5x AND >0.5 s (a stall only ever
-    // adds time, so a wide spread means at least one pass was hit), one
-    // extra pass runs immediately and the min ranges over all three.
-    // Disabled with SPARK_GRAFT_REPEAT=1 (no second opinion).
+    // 6.58 s min-of-2 vs 2.9 s in four other sweeps), so a wide
+    // spread earns one extra pass and the min ranges over all three.
     val perQuery: Seq[(String, (Seq[PassRec], Boolean))] =
       selected.map { case (name, fn) =>
-        val base = (1 to passes).map(i =>
-          runOne(name, fn, if (i == 1) "" else s" pass$i"))
-        val tied = passes >= 2 &&
-          needsTieBreak(base.map(r => (r.sec, r.ok)))
-        val all = if (tied) base :+ runOne(name, fn, " tie-break")
+        val base = (1 to Passes).map(i =>
+          runOne(spark, sfDir, name, fn, if (i == 1) "" else s" pass$i"))
+        val tied = needsTieBreak(base.map(r => (r.sec, r.ok)))
+        val all = if (tied) base :+ runOne(spark, sfDir, name, fn, " tie-break")
           else base
         name -> (all, tied)
       }
@@ -269,47 +305,26 @@ object Bench {
             warmUpMs(all.map(r => (r.sec, r.ok)), min.sec)))
         }
       }
-    // Locale.ROOT formatting: f"" uses the JVM default locale, and a
-    // comma decimal separator would silently break the JSON contract.
-    def num(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    val profileDir = Paths.get("target", "profile")
+    results.foreach { case (name, q) =>
+      try writeProfile(profileDir, name, q.min)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write the $name profile: ${e.getMessage}")
+      }
+    }
     def qsJson(entries: Seq[(String, QueryRec)]): String =
-      entries.map { case (k, v) => "\"" + k + "\":" + num(v.min.sec) }
+      entries.map { case (k, v) => Verify.jstr(k) + ":" + num(v.min.sec) }
         .mkString("{", ",", "}")
-    // Attribution object, one entry per query: GC ms + executor task-time
-    // ms inside the min pass's timed window, the measured warm-up tax
-    // (warm_ms, r15), plus operator Attrib notes (e.g.
-    // "resolve_path":"driver"). Numeric note values stay bare.
-    def attribJson(entries: Seq[(String, QueryRec)]): String =
-      entries.map { case (k, q) =>
-        val r = q.min
-        val notes = r.notes.map { case (nk, nv) =>
-          val v = if (nv.matches("""-?\d+(\.\d+)?""")) nv else jstr(nv)
-          "\"" + nk + "\":" + v
-        }
-        "\"" + k + "\":" + (Seq(
-          s""""gc_ms":${r.gcMs}""", s""""task_ms":${r.taskMs}""",
-          s""""cpu_ms":${r.cpuMs}""",
-          s""""tasks":${r.tasks}""",
-          s""""box_nonself_ms":${r.boxNonSelfMs}""",
-          s""""box_load1":${num(r.boxLoad1)}""",
-          s""""jit_ms":${r.jitMs}""",
-          s""""codecache_mb":${r.codeCacheMb}""",
-          s""""warm_ms":${q.warmMs}""") ++ notes)
-          .mkString("{", ",", "}")
-      }.mkString("{", ",", "}")
     val total = results.map(_._2.min.sec).sum
     // sf is numeric when the dir follows the .../sfN.N convention; quote
     // anything else so the output line stays valid JSON.
     val sfRaw = sfDir.replaceAll(".*sf", "")
     val sf = if (sfRaw.matches("""-?\d+(\.\d+)?""")) sfRaw
-      else "\"" + sfRaw.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      else Verify.jstr(sfRaw)
     // "failed" rides along in every output line (empty array when all
     // green) so gate/compare scripts can distinguish "not in this run"
     // from "ran and broke" — consumers must treat entries here as RED.
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.map(Verify.jstr).mkString("[", ",", "]")
     // Warm-up tax aggregates in the header (VERDICT r15 item 7): the
     // back-to-back protocol absorbs Σwarm_ms ≈ 80+ s per sweep OUTSIDE
     // the timed mins; promoting total + the top-5 payers to header
@@ -319,16 +334,16 @@ object Bench {
     val warmKnown = results.filter(_._2.warmMs >= 0)
     val warmTotalMs = warmKnown.map(_._2.warmMs).sum
     val warmTopJson = warmKnown.sortBy(-_._2.warmMs).take(5)
-      .map { case (k, q) => "\"" + k + "\":" + q.warmMs }
+      .map { case (k, q) => Verify.jstr(k) + ":" + q.warmMs }
       .mkString("{", ",", "}")
     // "tiebreak" (ADVICE r12): which queries received a third sample —
     // round-over-round compare scripts can now tell a 2-sample min from
     // a 3-sample one without parsing stderr.
     val tiebreakJson = tieBreak.sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
-    val sentinelJson = jvmSentinel.map(jstr).mkString("[", ",", "]")
+      .map(Verify.jstr).mkString("[", ",", "]")
+    val sentinelJson = jvmSentinel.map(Verify.jstr).mkString("[", ",", "]")
     def mkLine(entries: Seq[(String, QueryRec)], attrib: Boolean): String =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","passes":$passes,""" +
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","passes":$Passes,""" +
         s""""n_queries":${results.size},"failed":$failedJson,""" +
         s""""warm_total_ms":$warmTotalMs,"warm_top":$warmTopJson,""" +
         s""""tiebreak":$tiebreakJson,"concurrent_jvms":$sentinelJson,""" +
@@ -343,10 +358,9 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench.json")
     def writeLine(path: String): Unit =
       try {
-        val out = java.nio.file.Paths.get(path)
-        Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
-        java.nio.file.Files.write(out,
-          (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val out = Paths.get(path)
+        Option(out.getParent).foreach(Files.createDirectories(_))
+        Files.write(out, (fullLine + "\n").getBytes(UTF_8))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] could not write $path: ${e.getMessage}")
       }
@@ -384,8 +398,7 @@ object Bench {
     val budget = 1800
     // the pointer names the RESOLVED output file (SPARK_GRAFT_BENCH_OUT
     // may have redirected it), JSON-escaped
-    val fullPtr = ""","full":"""" +
-      outPath.replace("\\", "\\\\").replace("\"", "\\\"") + "\"}"
+    val fullPtr = ""","full":""" + Verify.jstr(outPath) + "}"
     val line =
       if (fullLine.length <= budget) fullLine
       else {

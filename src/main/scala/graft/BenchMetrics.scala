@@ -14,11 +14,15 @@ package org.apache.spark {
 package graft {
 
   import java.lang.management.ManagementFactory
-  import java.util.concurrent.atomic.AtomicLong
+  import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+  import scala.collection.mutable
   import scala.jdk.CollectionConverters._
 
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+    SparkListenerStageCompleted, SparkListenerTaskEnd}
   import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.QueryExecution
+  import org.apache.spark.sql.util.QueryExecutionListener
 
   /** Bench self-attribution (VERDICT r12 item 1): the per-query wall time
     * alone could not explain four rounds of driver-tail divergence
@@ -33,16 +37,63 @@ package graft {
     *    the window (listener-bus drained first, so the sum is the
     *    query's own tasks) — wall time far above task_ms/cores + gc means
     *    the stall was NOT Spark work (scheduler gap, external load);
+    *  - jobs split by the [[PhaseProp]] local property the bench sets
+    *    around DataFrame construction and execution, shuffle/spill
+    *    bytes, one row per completed stage of those jobs, and the noop
+    *    write's own QueryExecution (planning phases + final plan);
     *  - a bench-start sentinel listing concurrent graft/sbt/spark JVMs
     *    (the stray-duplicate-sweep failure mode that contaminated the
     *    round-12 close: a "dead" background ritual still timing queries).
     */
   object BenchMetrics {
+    /** Local property naming the step a job belongs to: `construct`
+      * (building the DataFrame) or `exec` (the timed noop write). */
+    val PhaseProp = "graft.bench.phase"
+
     private val taskMs = new AtomicLong(0L)
     private val taskCpuNs = new AtomicLong(0L)
     private val taskCount = new AtomicLong(0L)
+    private val constructJobs = new AtomicLong(0L)
+    private val execJobs = new AtomicLong(0L)
+    private val shuffleRead = new AtomicLong(0L)
+    private val shuffleWrite = new AtomicLong(0L)
+    private val spill = new AtomicLong(0L)
+
+    /** One completed stage: wall ms (submission to completion), tasks,
+      * shuffle write/read bytes, executor run and CPU ms. */
+    final case class StageRow(id: Int, name: String, wallMs: Long,
+        tasks: Int, shuffleWriteBytes: Long, shuffleReadBytes: Long,
+        runMs: Long, cpuMs: Long)
+
+    // stages of jobs started under PhaseProp, and their completed rows;
+    // both guarded by `rows`
+    private val tracked = mutable.Set.empty[Int]
+    private val rows = mutable.ArrayBuffer.empty[StageRow]
 
     private final class L extends SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(PhaseProp)))
+          .foreach { phase =>
+            (if (phase == "construct") constructJobs else execJobs)
+              .incrementAndGet()
+            rows.synchronized { tracked ++= e.stageIds }
+          }
+
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val si = e.stageInfo
+        rows.synchronized {
+          if (tracked.remove(si.stageId)) {
+            val m = si.taskMetrics
+            rows += StageRow(si.stageId, si.name.takeWhile(_ != '\n').take(60),
+              (for (s <- si.submissionTime; c <- si.completionTime)
+                yield c - s).getOrElse(-1L),
+              si.numTasks, m.shuffleWriteMetrics.bytesWritten,
+              m.shuffleReadMetrics.totalBytesRead, m.executorRunTime,
+              m.executorCpuTime / 1000000L)
+          }
+        }
+      }
+
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (m != null) {
@@ -56,20 +107,94 @@ package graft {
           // cpu_ms stays flat while task_ms inflates.
           taskCpuNs.addAndGet(m.executorCpuTime)
           taskCount.incrementAndGet()
+          shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+          shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
         }
       }
     }
 
-    def install(spark: SparkSession): Unit =
-      spark.sparkContext.addSparkListener(new L)
+    /** The last QueryExecution that finished in a watched session. The
+      * noop write is the last SQL execution of a bench window, and the
+      * bus delivers in order, so after a drain this is the write's. */
+    private val lastExecution = new AtomicReference[QueryExecution]()
 
-    /** (gcMs, taskMs, taskCpuMs, tasks) counters; diff two snapshots
-      * for a window. */
-    def snapshot(spark: SparkSession): (Long, Long, Long, Long) = {
+    private object Executions extends QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        lastExecution.set(qe)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = lastExecution.set(qe)
+    }
+
+    // contexts and sessions already watched (weak: a dropped child
+    // session must not be kept alive by the bench)
+    private val watched = java.util.Collections.synchronizedSet(
+      java.util.Collections.newSetFromMap(
+        new java.util.WeakHashMap[AnyRef, java.lang.Boolean]()))
+
+    /** Watch `spark`: one listener per SparkContext, one execution
+      * listener per session. Idempotent. */
+    def install(spark: SparkSession): Unit = {
+      if (watched.add(spark.sparkContext))
+        spark.sparkContext.addSparkListener(new L)
+      if (watched.add(spark)) spark.listenerManager.register(Executions)
+    }
+
+    /** Cumulative counters; diff two snapshots for a window. */
+    final case class Snap(gcMs: Long, taskMs: Long, cpuMs: Long,
+        tasks: Long, constructJobs: Long, execJobs: Long,
+        shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long) {
+      def -(o: Snap): Snap = Snap(gcMs - o.gcMs, taskMs - o.taskMs,
+        cpuMs - o.cpuMs, tasks - o.tasks, constructJobs - o.constructJobs,
+        execJobs - o.execJobs, shuffleReadBytes - o.shuffleReadBytes,
+        shuffleWriteBytes - o.shuffleWriteBytes, spillBytes - o.spillBytes)
+    }
+
+    private def snapshot(spark: SparkSession): Snap = {
       org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
       val gc = ManagementFactory.getGarbageCollectorMXBeans.asScala
         .map(b => math.max(0L, b.getCollectionTime)).sum
-      (gc, taskMs.get(), taskCpuNs.get() / 1000000L, taskCount.get())
+      Snap(gc, taskMs.get(), taskCpuNs.get() / 1000000L, taskCount.get(),
+        constructJobs.get(), execJobs.get(), shuffleRead.get(),
+        shuffleWrite.get(), spill.get())
+    }
+
+    /** What one timed window did: counter deltas, its stage rows, and
+      * the write's planning ms (optimization + physical planning on its
+      * own tracker; analysis ran during construction) and final plan. */
+    final case class Window(d: Snap, stages: Seq[StageRow], planMs: Long,
+        plan: String)
+
+    /** Open a window: drain the bus, forget earlier stages and
+      * executions, return the counters to diff against. */
+    def begin(spark: SparkSession): Snap = {
+      val s = snapshot(spark)
+      rows.synchronized { rows.clear(); tracked.clear() }
+      lastExecution.set(null)
+      s
+    }
+
+    /** Close a window opened by [[begin]]. The plan is formatted here,
+      * after the timed window, and the execution is then dropped so its
+      * shuffles can be cleaned. */
+    def end(spark: SparkSession, s0: Snap): Window = {
+      val d = snapshot(spark) - s0
+      val stages = rows.synchronized {
+        val out = rows.sortBy(_.id).toSeq
+        rows.clear(); tracked.clear(); out
+      }
+      Option(lastExecution.getAndSet(null)) match {
+        case Some(qe) =>
+          val planMs = qe.tracker.phases.collect {
+            case ("optimization" | "planning", p) => p.durationMs
+          }.sum
+          val plan =
+            try qe.explainString(
+              org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+            catch { case e: Throwable => s"(plan unavailable: ${e.getMessage})" }
+          Window(d, stages, planMs, plan)
+        case None => Window(d, stages, 0L, "(no execution recorded)")
+      }
     }
 
     /** JIT state sample: (cumulative JIT compilation ms, code-cache

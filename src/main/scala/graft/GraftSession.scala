@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine's session entry point: one place that encodes every
   * session-level semantic the library depends on, so applications,
-  * the CLI mains (Verify/Bench/PlanDump/StageTime), and tests all run
+  * the CLI mains (Verify/Bench/PlanDump), and tests all run
   * with identical behavior.
   *
   * Semantics pinned here:
@@ -48,8 +48,7 @@ object GraftSession {
     // — capacity is nowhere near the constraint; eviction was). Sized
     // at 4096 so a production session cycling thousands of distinct
     // plans stays eviction-free; see DESIGN_SCALE.md §codegen.
-    .config("spark.sql.codegen.cache.maxEntries",
-      sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+    .config("spark.sql.codegen.cache.maxEntries", "4096")
     // Untagged parquet timestamp[us] (isAdjustedToUTC=false) must read as
     // TIMESTAMP, not TIMESTAMP_NTZ: event-time arithmetic (unix_micros)
     // operates on instants, and the DuckDB oracle reads the same naive
@@ -72,19 +71,18 @@ object GraftSession {
     * → 0.97 s at 64 MB); and a zero bloom threshold taxes every
     * eligible join with a bloom-build aggregate (the capability query
     * scopes it to a cloned session instead — Pruning.bloomJoin).
-    * SPARK_GRAFT_* env knobs remain for dev A/B. */
+    *
+    * `uiEnabled = true` attaches the live UI and keeps Spark's own
+    * status-store retention and live-update defaults, so the UI shows
+    * the whole session as it runs. */
   def local(cpus: String, uiEnabled: Boolean = false): SparkSession = {
-    def knob(env: String, dflt: String): String =
-      sys.env.getOrElse(env, dflt)
-    val spark = configure(SparkSession.builder()
+    val b = configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        knob("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        knob("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
+      .config("spark.sql.files.maxPartitionBytes", "128m")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        knob("SPARK_GRAFT_BLOOM_THRESHOLD", "10GB"))
+        "10GB")
       // Harness-only (cluster path `configure` is untouched): shuffle
       // cleanup runs SYNCHRONOUSLY on the ContextCleaner thread instead
       // of fire-and-forget. The round-11 bench forensics pinned async
@@ -92,8 +90,12 @@ object GraftSession {
       // landing inside the NEXT query's timed window as one of the
       // heavy-tail noise sources; serializing the deletes keeps the
       // burst inside the untimed cleanup gap where it was triggered.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle",
-        knob("SPARK_GRAFT_BLOCKING_SHUFFLE_CLEANUP", "true"))
+      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
+      // codegen.cache.maxEntries moved INTO `configure` (VERDICT r14
+      // item 4): it is static and per-JVM, so the cluster path needs it
+      // on every executor, not just this harness.
+      .config("spark.ui.enabled", uiEnabled.toString))
+    val spark = (if (uiEnabled) b else b
       // Status-store retention, capped: even with the UI off, the
       // app/SQL status listeners process every task event and retain
       // the last 1000 executions/jobs/stages WITH task metrics. In a
@@ -101,27 +103,16 @@ object GraftSession {
       // position — measured on the 89-query bench prefix: the 90th
       // query ran 4.25 s under default retention vs 3.11 s capped, and
       // the prefix total dropped 87.8 → 71.2 s at the same heap (the
-      // round-12 position-dependence forensics, BASELINE.md). Capped
-      // low but nonzero so a dev attaching the UI to a live session
-      // still sees the current query.
-      .config("spark.sql.ui.retainedExecutions",
-        knob("SPARK_GRAFT_RETAINED_EXECUTIONS", "8"))
-      .config("spark.ui.retainedJobs",
-        knob("SPARK_GRAFT_RETAINED_JOBS", "32"))
-      .config("spark.ui.retainedStages",
-        knob("SPARK_GRAFT_RETAINED_STAGES", "64"))
-      .config("spark.ui.retainedTasks",
-        knob("SPARK_GRAFT_RETAINED_TASKS", "1000"))
+      // round-12 position-dependence forensics, BASELINE.md).
+      .config("spark.sql.ui.retainedExecutions", "8")
+      .config("spark.ui.retainedJobs", "32")
+      .config("spark.ui.retainedStages", "64")
+      .config("spark.ui.retainedTasks", "1000")
       // No UI attached → live entity updates are write-only work on
       // the listener thread; -1 defers store writes to completion
       // events (another -4 s on the 89-query prefix, copurchase
-      // 3.15 → 3.0 s). Set a positive period if attaching a live UI.
-      .config("spark.ui.liveUpdate.period",
-        knob("SPARK_GRAFT_UI_LIVE_UPDATE", "-1"))
-      // codegen.cache.maxEntries moved INTO `configure` (VERDICT r14
-      // item 4): it is static and per-JVM, so the cluster path needs it
-      // on every executor, not just this harness.
-      .config("spark.ui.enabled", uiEnabled.toString))
+      // 3.15 → 3.0 s).
+      .config("spark.ui.liveUpdate.period", "-1"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1064,12 +1064,14 @@ object Dedup {
       // word of the corpus to rows, left-anti-joined the interval
       // table, and re-assembled each doc with a sort_array+collect_list
       // aggregate — three data-scaled passes for what is a per-doc
-      // array transform. The merged islands are SPAN-cardinality
-      // (duplicated-run docs only, ≤ a handful of intervals each), so
-      // they collect to one tiny array per doc and BROADCAST-join to
-      // the corpus; the drop test and reassembly then run inside one
-      // codegen'd per-row expression — no explode, no anti-join, no
-      // collect_list, and the only corpus pass is the scan itself.
+      // array transform. The merged islands collect to one array per
+      // doc and join to the corpus; the drop test and reassembly then
+      // run inside one codegen'd per-row expression — no explode, no
+      // anti-join, no collect_list. The join carries no broadcast hint:
+      // the interval table is O(docs with duplicated runs), which on a
+      // heavily duplicated corpus is O(docs), so AQE picks broadcast or
+      // shuffle from its runtime size instead of a forced broadcast
+      // exhausting memory.
       // Word w at 0-based position p drops iff some [st, en) holds it —
       // exactly the old anti-join predicate; filter() preserves word
       // order, so clean_text is byte-identical.
@@ -1079,7 +1081,7 @@ object Dedup {
       val keptArr = filter(wArr, (wd, i) =>
         !coalesce(exists(col("ivs"), v =>
           i >= v.getField("st") && i < v.getField("en")), lit(false)))
-      docs.join(broadcast(ivAgg), Seq("doc_id"), "left")
+      docs.join(ivAgg, Seq("doc_id"), "left")
         .select(col("doc_id"),
           size(wArr).cast("long").as("n_words"),
           (size(wArr) - size(keptArr)).cast("long").as("n_dropped"),

@@ -58,10 +58,11 @@ object TokenizerCompare {
         .filter(length(col("word")) > 0)
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .localCheckpoint(true)
-      val uniWords = words
-        .filter(length(col("word")).between(1, Unigram.MaxWordLen))
+      val uniWords = words.filter(Unigram.qualifying(col("word")))
         .select("word")
-      val wpWords = uniWords.filter(!col("word").contains("#"))
+      val wpWords = words
+        .filter(Unigram.qualifying(col("word"), noHash = true))
+        .select("word")
       val vocab = words
         .crossJoin(broadcast(rules))
         .select(col("word"), col("cnt"),
@@ -79,11 +80,9 @@ object TokenizerCompare {
       // both BPEs see every non-empty word; unigram sees length
       // 1..MaxWordLen words its Viterbi segmented (scored-table hit);
       // WordPiece the same minus '#'-bearing words.
-      val uniOk = col("uni_np").isNotNull &&
-        length(col("word")).between(1, Unigram.MaxWordLen)
+      val uniOk = col("uni_np").isNotNull && Unigram.qualifying(col("word"))
       val wpOk = col("wp_np").isNotNull &&
-        length(col("word")).between(1, Unigram.MaxWordLen) &&
-        !col("word").contains("#")
+        Unigram.qualifying(col("word"), noHash = true)
       def csum(flag: org.apache.spark.sql.Column,
           v: org.apache.spark.sql.Column) = U.lng(sum(when(flag, v)))
       val a = vocab.agg(

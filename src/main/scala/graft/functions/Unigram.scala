@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Tables, U}
@@ -50,6 +50,17 @@ object Unigram {
     * (both at train and apply, both engines): they are URLs/garbage in
     * real corpora and the oracle DP unrolls one stage per character. */
   val MaxWordLen = 24
+  /** The qualifying-word predicate of the tokenizer contract: length
+    * 1..[[MaxWordLen]]; `noHash` also drops `#`-bearing words (the
+    * WordPiece universe — `#` is its continuation marker). Every filter
+    * of a word universe (this object's word table and apply,
+    * [[WordPiece]], [[TokenizerCompare]]) goes through here, so the
+    * compare totals cannot drift from the applies they replay. */
+  def qualifying(w: Column, noHash: Boolean = false): Column = {
+    val len = length(w).between(1, MaxWordLen)
+    if (noHash) len && !w.contains("#") else len
+  }
+
   /** Seed candidate pieces kept after substring counting. */
   val SeedTarget = 4096
   /** Final vocabulary size (plus any single chars beyond it). */
@@ -126,7 +137,7 @@ object Unigram {
   private def wordTable(s: SparkSession, d: String): DataFrame =
     U.fan(Tables.t(s, d, "documents").select(col("text")))
       .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(length(col("word")).between(1, MaxWordLen))
+      .filter(qualifying(col("word")))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
   def model(s: SparkSession, d: String): Seq[(String, Double)] =
@@ -198,7 +209,7 @@ object Unigram {
     * model — the seam [[TokenizerCompare]] uses to feed all tokenizers
     * from ONE shared corpus scan instead of re-deriving this object's
     * [[wordTable]] (r18). Callers must pass exactly the qualifying-word
-    * universe ([[wordTable]]'s filter) for apply-identical results. */
+    * universe ([[qualifying]]) for apply-identical results. */
   private[functions] def scoredOf(s: SparkSession, d: String,
       words: DataFrame): DataFrame = {
     val sess = s; import sess.implicits._
@@ -235,7 +246,7 @@ object Unigram {
           .select(col("doc_id"), col("text")))
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("word"))
-        .filter(length(col("word")).between(1, MaxWordLen))
+        .filter(qualifying(col("word")))
         .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
       wc.join(broadcast(scored), "word")
         .groupBy("doc_id")

@@ -75,8 +75,7 @@ object WordPiece {
   private def wordTable(s: SparkSession, d: String): DataFrame =
     U.fan(Tables.t(s, d, "documents").select(col("text")))
       .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(length(col("word")).between(1, Unigram.MaxWordLen) &&
-        !col("word").contains("#"))
+      .filter(Unigram.qualifying(col("word"), noHash = true))
       .groupBy("word").agg(count(lit(1)).as("freq"))
 
   /** Word → WordPiece symbol sequence: first code point plain, the rest
@@ -329,8 +328,7 @@ object WordPiece {
           .select(col("doc_id"), col("text")))
         .select(col("doc_id"),
           explode(split(lower(col("text")), " ")).as("word"))
-        .filter(length(col("word")).between(1, Unigram.MaxWordLen) &&
-          !col("word").contains("#"))
+        .filter(Unigram.qualifying(col("word"), noHash = true))
       inst.join(broadcast(scored), "word")
         .groupBy("doc_id")
         // sum(1L), not count(*): keeps n_words NULLABLE like the old

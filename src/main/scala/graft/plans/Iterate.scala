@@ -106,7 +106,6 @@ object Iterate {
     var iters = 0
     var done = false
     var child: Option[SparkSession] = None
-    val dbg = sys.env.contains("GRAFT_ITER_DEBUG")
     // Re-home the loop state into an isolated small-state session: the
     // child-session LogicalRDD reads the persisted blocks through the
     // wrapped RDD (no recompute); coalesce (no shuffle) folds the wide
@@ -124,7 +123,6 @@ object Iterate {
       if (rows < smallRows) enterSmall(rows)
     }
     while (!done && iters < maxIters) {
-      val t0 = System.nanoTime()
       // Small mode feeds the step a repartition of the state. With
       // np == 1 this is an `Exchange SinglePartition` — and
       // SinglePartition satisfies EVERY clustered distribution, so the
@@ -149,9 +147,6 @@ object Iterate {
       cur = narrow(next)
       done = verdict.done
       iters += 1
-      if (dbg) System.err.println(
-        f"[iterate] round $iters rows=${verdict.rows} done=$done " +
-          f"small=${child.nonEmpty} ${(System.nanoTime() - t0) / 1e9}%.3fs")
       if (!done && child.isEmpty && verdict.rows < smallRows)
         enterSmall(verdict.rows)
     }
@@ -165,10 +160,7 @@ object Iterate {
     // releases them when the caller drops the result, so long-lived
     // sessions can't accumulate fixpoint outputs (callers used to have to
     // remember to unpersist; now there is nothing to remember).
-    val t1 = System.nanoTime()
     val out = cur.localCheckpoint(true)
-    if (dbg) System.err.println(
-      f"[iterate] localCheckpoint ${(System.nanoTime() - t1) / 1e9}%.3fs")
     handle.unpersist()
     (out, iters)
   }

@@ -728,12 +728,19 @@ class PlanSpec extends SparkSpec {
     // apply replays (four scans, four per-doc aggregates). The 4-row
     // output comes from a Generate (explode of per-tokenizer structs)
     // over the single conditional aggregate, so the plan must have NO
-    // Union and exactly one parquet scan of the corpus.
+    // Union. The one corpus scan runs while the DataFrame is built: the
+    // distinct-word table is an eager localCheckpoint, so the compare
+    // plan itself holds ZERO parquet scans and reads the checkpointed
+    // word table through RDD scans instead.
     assert(!nodes.exists(_.nodeName.contains("Union")),
       s"compare should not union four apply replays anymore:\n$pstr")
     val parquetScans = nodes.count(_.nodeName.contains("Scan parquet"))
-    assert(parquetScans <= 1,
-      s"compare should scan the corpus once, found $parquetScans:\n$pstr")
+    assert(parquetScans === 0,
+      s"the corpus scan belongs to the word-table checkpoint, found " +
+        s"$parquetScans parquet scans in the compare plan:\n$pstr")
+    assert(nodes.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.RDDScanExec]),
+      s"the checkpointed word table must feed the compare plan:\n$pstr")
     assert(nodes.exists(_.nodeName.contains("Generate")),
       s"the 4-row reshape explode must be present:\n$pstr")
   }
