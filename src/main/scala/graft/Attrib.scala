@@ -10,8 +10,8 @@ import scala.collection.mutable
   * path ran?" — the round-12 verdict's canonical_resolve sf1 doubling
   * was unattributable precisely because nothing recorded whether the
   * driver fast path or the distributed fixpoint executed. Operators
-  * with guarded fast paths ([[dedup.Dedup.canonicalResolve]],
-  * [[operators.Graph]]) note their chosen path + iteration count here;
+  * with guarded fast paths note their chosen path here through
+  * [[Bounded.path]] (`<site>_path`), plus sizes and iteration counts;
   * the notes are advisory instrumentation, never part of any query's
   * result contract.
   *

@@ -4,8 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The engine's session entry point: one place that encodes every
   * session-level semantic the library depends on, so applications,
-  * the CLI mains (Verify/Bench/PlanDump), and tests all run
-  * with identical behavior.
+  * the CLI mains (Verify/Bench), and tests all run with identical
+  * behavior. To see the physical plan a query gets under these
+  * semantics, run `tools/run_bench.sh <query>` and read its final
+  * adaptive plan in `target/profile/<query>.txt`.
   *
   * Semantics pinned here:
   *  - `GraftExtensions` (native functions poly_hash64 / minhash_sig /

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -220,24 +220,26 @@ object Dedup {
     * GC-released, never a CacheManager entry.
     */
   def canonicalResolve(pointers: DataFrame, maxIters: Int = 30,
-      driverRowCap: Long = CcDriverEdgeCap): DataFrame = {
-    // Same guarded driver fast path as [[connectedComponents]]: a
-    // distributed count first (one job over the persisted pointer set —
-    // the job doubles as fixpoint's sizing pass when the distributed
-    // path runs), and under the cap the whole log-depth doubling loop
-    // collapses to one collect + memoized pointer chase (path-compressed,
-    // cycle-budgeted so a planted cycle still fails loudly). Identical
-    // output contract: one (id, root) row per input row, dangling
-    // parents are roots; parity pinned both-sides in DedupSpec.
+      driverRowCap: Long = Bounded.DriverEdgeCap): DataFrame = {
+    // Same guarded driver fast path as [[connectedComponents]]: one
+    // bounded probe of the persisted pointer set (the sizing count that
+    // fixpoint consumes runs only on the distributed path), and under
+    // the cap the whole log-depth doubling loop collapses to a memoized
+    // pointer chase (path-compressed, cycle-budgeted so a planted cycle
+    // still fails loudly). Identical output contract: one (id, root)
+    // row per input row, dangling parents are roots; parity pinned
+    // both-sides in DedupSpec.
     val spark = pointers.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val pts = pointers.select(col("id"), col("parent").as("root")).persist(lvl)
-    val nRows = pts.count()
-    if (nRows <= driverRowCap &&
-        graft.operators.Graph.integralIds(pts, "id", "root")) {
-      try {
-        val rows = pts.select(col("id").cast("long"), col("root").cast("long"))
-          .collect()
+    Bounded.path("resolve") {
+      if (!graft.operators.Graph.integralIds(pts, "id", "root")) None
+      else Bounded.rows(pts.select(col("id").cast("long"),
+        col("root").cast("long")), driverRowCap)
+    } match {
+      case Some(rows) =>
+        pts.unpersist()
+        val nRows = rows.length.toLong
         val parent = new java.util.HashMap[Long, Long](rows.length * 2)
         rows.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
         def chase(x0: Long): Long = {
@@ -259,17 +261,15 @@ object Dedup {
           x
         }
         val resolved = rows.map(r => (r.getLong(0), chase(r.getLong(1))))
-        // bench attribution: which guarded path produced the number
-        // (the r12 sf1 doubling was unattributable without this)
-        graft.Attrib.note("resolve_path", "driver")
         graft.Attrib.note("resolve_rows", nRows)
         import spark.implicits._
         val idT = pts.schema("id").dataType
         val rtT = pts.schema("root").dataType
         return spark.createDataset(resolved.toSeq)
           .select(col("_1").cast(idT).as("id"), col("_2").cast(rtT).as("root"))
-      } finally pts.unpersist()
+      case None =>
     }
+    val nRows = pts.count()
     val (out, iters) = graft.plans.Iterate.fixpoint(
       pts,
       fanout = 2, maxIters = maxIters,
@@ -299,20 +299,10 @@ object Dedup {
       s"canonicalResolve did not converge in $n rounds " +
         "(cycle, forward pointer, or raise maxIters)"
     }
-    graft.Attrib.note("resolve_path", "distributed")
     graft.Attrib.note("resolve_rows", nRows)
     graft.Attrib.note("resolve_iters", iters.toLong)
     out
   }
-
-  /** Edge-count ceiling for the driver-side union-find fast path: 1M
-    * canonical edges ≈ tens of MB transient on the driver — far under
-    * the bench/verify heap, far over any test-SF edge set. Above it the
-    * distributed large-star/small-star path runs untouched (the 100 TB
-    * path); the choice is made by a DISTRIBUTED count first, the same
-    * count-before-materialize discipline as
-    * [[graft.operators.Joins.requireCandidatePairs]]. */
-  val CcDriverEdgeCap: Long = 1000000L
 
   /** Connected components over an arbitrary undirected edge set by
     * alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,
@@ -342,7 +332,7 @@ object Dedup {
     * maxIters — a partially-merged labeling must never masquerade as
     * components. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 25,
-      driverEdgeCap: Long = CcDriverEdgeCap): DataFrame = {
+      driverEdgeCap: Long = Bounded.DriverEdgeCap): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
@@ -364,28 +354,29 @@ object Dedup {
       (r.getLong(0),
         if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1))
     }
-    // The initial edge set is persisted and fingerprinted HERE (one job,
-    // which both sizes the graph and materializes the cache) so the
-    // small-graph decision happens before any round runs. Under the cap
-    // the whole closure collapses to one collect + driver-side
-    // union-find: per-round cost in the iterative path is pure scheduler
-    // latency once the graph is tiny (measured: dedup_cc_incremental's
-    // 7.27 s driver-tail number was ~1 s of real work + rounds × stage
-    // barriers), and a bounded union-find is exact, deterministic, and
-    // one job. The path choice is invisible to callers: both emit the
-    // identical star forest (node → component-min), pinned both-sides
-    // by DedupSpec's planted arbitrary graphs.
+    // The initial edge set is persisted and probed HERE ([[Bounded]]:
+    // one job, which also materializes the cache the rounds read) so
+    // the small-graph decision happens before any round runs. Under the
+    // cap the whole closure collapses to driver-side union-find:
+    // per-round cost in the iterative path is pure scheduler latency
+    // once the graph is tiny (measured: dedup_cc_incremental's 7.27 s
+    // driver-tail number was ~1 s of real work + rounds × stage
+    // barriers), and a bounded union-find is exact and deterministic.
+    // The path choice is invisible to callers: both emit the identical
+    // star forest (node → component-min), pinned both-sides by
+    // DedupSpec's planted arbitrary graphs.
     val spark = edges.sparkSession
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val ce = canon(edges).persist(lvl)
-    val initSig = fingerprint(ce) // materializes every cached partition
     // integral-id guard: the fast path collects ids as longs; any other
     // key type falls through to the type-generic star alternation
-    if (initSig._1 <= driverEdgeCap &&
-        graft.operators.Graph.integralIds(ce, "a", "b")) {
-      try {
-        val rows = ce.select(col("a").cast("long"), col("b").cast("long"))
-          .collect()
+    Bounded.path("cc") {
+      if (!graft.operators.Graph.integralIds(ce, "a", "b")) None
+      else Bounded.rows(ce.select(col("a").cast("long"),
+        col("b").cast("long")), driverEdgeCap)
+    } match {
+      case Some(rows) =>
+        ce.unpersist()
         // Union-find, roots kept at the component MIN (attach the larger
         // root under the smaller) with iterative path compression — the
         // same labeling the large-star/small-star fixpoint converges to.
@@ -409,15 +400,15 @@ object Dedup {
         import scala.jdk.CollectionConverters._
         val stars = nodes.asScala.iterator.map(n => (n.longValue, find(n)))
           .filter(p => p._1 != p._2).toSeq
-        graft.Attrib.note("cc_path", "driver")
-        graft.Attrib.note("cc_edges", initSig._1)
+        graft.Attrib.note("cc_edges", rows.length.toLong)
         import spark.implicits._
         val aT = ce.schema("a").dataType
         val bT = ce.schema("b").dataType
         return spark.createDataset(stars)
           .select(col("_1").cast(aT).as("a"), col("_2").cast(bT).as("b"))
-      } finally ce.unpersist()
+      case None =>
     }
+    val initSig = fingerprint(ce) // materializes every cached partition
     var curSig: (Long, java.math.BigDecimal) = null
     val (out, iters) = graft.plans.Iterate.fixpoint(
       ce, fanout = 8, maxIters = maxIters,
@@ -464,7 +455,6 @@ object Dedup {
     } { n =>
       s"connectedComponents did not converge in $n rounds"
     }
-    graft.Attrib.note("cc_path", "distributed")
     graft.Attrib.note("cc_edges", initSig._1)
     graft.Attrib.note("cc_iters", iters.toLong)
     out

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 
 /** BPE subword tokenizer — training and apply (Sennrich et al. 2016,
   * the `tokenizers`/SentencePiece shape), built Spark-first.
@@ -60,19 +60,6 @@ object Bpe {
   private def lastRules: Option[Seq[(Int, String, String, Long)]] =
     graft.Derived.latest("bpe_rules")
 
-  /** Distinct-word ceiling for the driver-side training fast path: BPE
-    * trains on the WORD VOCABULARY (distinct words × freq), which is
-    * bounded by the language, not the corpus — 100k entries ≈ a few MB
-    * on the driver, far above any real tokenizer corpus's vocab and far
-    * below bench heap. Under it the nMerges sequential rounds (each
-    * 2-4 tiny Spark jobs — the r13 sf1 attribution showed
-    * vocab_bpe_apply at 9.9 s with 3% core utilization: pure scheduler
-    * round-trips over a 31-word table) collapse to one collect + a
-    * driver loop; above it the distributed loop runs untouched.
-    * Parity pinned three ways in BpeSpec (distributed twin, driver
-    * path, independent reference). */
-  val DriverVocabCap: Int = 100000
-
   /** Driver-side trainer — EXACT mirror of the distributed loop's
     * semantics: adjacent-pair counts weighted by word freq, repeat
     * floor 2, argmax with (count desc, left, right) tie-break, greedy
@@ -118,7 +105,7 @@ object Bpe {
   }
 
   /** The distributed training loop (the 100 TB path — runs when the
-    * vocabulary exceeds [[DriverVocabCap]]); same semantics as
+    * vocabulary exceeds [[Bounded.DriverVocabCap]]); same semantics as
     * [[trainLocal]], pinned by BpeSpec's planted-corpus twin test. */
   private[graft] def trainDistributed(words: org.apache.spark.sql.DataFrame)
       : Seq[(Int, String, String, Long)] = {
@@ -171,16 +158,13 @@ object Bpe {
       .select(explode(split(lower(col("text")), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    // cap+1 limit makes the size probe and the fast-path collect ONE
-    // job: ≤cap rows back means we hold the complete vocabulary
-    val capped = words.limit(DriverVocabCap + 1).collect()
-    if (capped.length <= DriverVocabCap) {
-      graft.Attrib.note("bpe_train_path", "driver")
-      graft.Attrib.note("bpe_vocab", capped.length.toLong)
-      trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
-    } else {
-      graft.Attrib.note("bpe_train_path", "distributed")
-      trainDistributed(words)
+    // one bounded probe: under the cap it holds the complete vocabulary
+    Bounded.path("bpe_train")(
+        Bounded.rows(words, Bounded.DriverVocabCap)) match {
+      case Some(vocab) =>
+        graft.Attrib.note("bpe_vocab", vocab.length.toLong)
+        trainLocal(vocab.toSeq.map(r => (r.getString(0), r.getLong(1))))
+      case None => trainDistributed(words)
     }
   }
 

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 
 /** Byte-level BPE tokenizer — the GPT-2/tiktoken family (Radford et al.
   * 2019; Sennrich et al. 2016 merges over a 256-symbol BYTE alphabet)
@@ -96,7 +96,7 @@ object ByteBpe {
     * with (count desc, left, right) bytewise-string tie-break, greedy
     * left-to-right non-overlapping merge. Same fast-path contract as
     * [[Bpe.trainLocal]] (the word vocabulary is language-bounded, so
-    * `Bpe.DriverVocabCap` applies unchanged). */
+    * `Bounded.DriverVocabCap` applies unchanged). */
   private[graft] def trainLocal(words: Seq[(String, Long)])
       : Seq[(Int, String, String, Long)] = {
     var vocab: Array[(Array[String], Long)] = words.iterator
@@ -190,16 +190,12 @@ object ByteBpe {
       .select(explode(split(lower(col("text")), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    // cap+1 limit: the size probe and the fast-path collect are ONE
-    // job (the Bpe pattern)
-    val capped = words.limit(Bpe.DriverVocabCap + 1).collect()
-    if (capped.length <= Bpe.DriverVocabCap) {
-      graft.Attrib.note("bytebpe_train_path", "driver")
-      graft.Attrib.note("bytebpe_vocab", capped.length.toLong)
-      trainLocal(capped.toSeq.map(r => (r.getString(0), r.getLong(1))))
-    } else {
-      graft.Attrib.note("bytebpe_train_path", "distributed")
-      trainDistributed(words)
+    Bounded.path("bytebpe_train")(
+        Bounded.rows(words, Bounded.DriverVocabCap)) match {
+      case Some(vocab) =>
+        graft.Attrib.note("bytebpe_vocab", vocab.length.toLong)
+        trainLocal(vocab.toSeq.map(r => (r.getString(0), r.getLong(1))))
+      case None => trainDistributed(words)
     }
   }
 

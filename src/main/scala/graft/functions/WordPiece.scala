@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 
 /** WordPiece subword tokenizer — the BERT-family third member next to
   * BPE ([[Bpe]], greedy merges) and unigram-LM ([[Unigram]], Viterbi):
@@ -18,7 +18,7 @@ import graft.{Tables, U}
   * profiles and stay apart:
   *
   *   - '''Training''' iterates on the WORD-FREQUENCY vocabulary: under
-  *     [[Bpe.DriverVocabCap]] the merge rounds collapse to one collect
+  *     [[Bounded.DriverVocabCap]] the merge rounds collapse to one collect
   *     + a driver loop (each distributed round is 2 tiny aggregates +
   *     a 1-row argmax over a vocabulary-bounded table — pure scheduler
   *     round-trips at any realistic vocab); above it the distributed
@@ -149,7 +149,7 @@ object WordPiece {
   }
 
   /** The distributed training twin (the 100 TB path, past
-    * [[Bpe.DriverVocabCap]]): per round one pair-count aggregate, one
+    * [[Bounded.DriverVocabCap]]): per round one pair-count aggregate, one
     * symbol-count aggregate, a 1-row argmax collect, and a map-side
     * merge over vocab rows (persist-new/unpersist-old, the [[Bpe]]
     * discipline). Same semantics as [[trainLocal]], pinned by
@@ -216,23 +216,20 @@ object WordPiece {
   private def train(s: SparkSession, d: String): (Seq[Rule], Set[String]) = {
     val sess = s; import sess.implicits._
     val words = wordTable(s, d)
-    // cap+1 limit: size probe and fast-path collect in ONE job (the
-    // Bpe pattern); ≤cap rows back means the complete vocabulary
-    val capped = words.limit(Bpe.DriverVocabCap + 1).collect()
     val (rules, wordSeq) =
-      if (capped.length <= Bpe.DriverVocabCap) {
-        graft.Attrib.note("wordpiece_train_path", "driver")
-        graft.Attrib.note("wordpiece_vocab", capped.length.toLong)
-        val ws = capped.toSeq.map(r => (r.getString(0), r.getLong(1)))
-        (trainLocal(ws), ws.map(_._1))
-      } else {
-        graft.Attrib.note("wordpiece_train_path", "distributed")
-        (trainDistributed(words),
-          // alphabet still needs the distinct code points — one tiny
-          // vocabulary-bounded aggregate, collected as chars not words
-          words.select(explode(split(col("word"), "")).as("c"))
-            .filter(length(col("c")) > 0).distinct()
-            .as[String].collect().toSeq)
+      Bounded.path("wordpiece_train")(
+          Bounded.rows(words, Bounded.DriverVocabCap)) match {
+        case Some(vocab) =>
+          graft.Attrib.note("wordpiece_vocab", vocab.length.toLong)
+          val ws = vocab.toSeq.map(r => (r.getString(0), r.getLong(1)))
+          (trainLocal(ws), ws.map(_._1))
+        case None =>
+          (trainDistributed(words),
+            // alphabet still needs the distinct code points — one tiny
+            // vocabulary-bounded aggregate, collected as chars not words
+            words.select(explode(split(col("word"), "")).as("c"))
+              .filter(length(col("c")) > 0).distinct()
+              .as[String].collect().toSeq)
       }
     // alphabet: both forms of every code point seen in the universe
     val alphabet = wordSeq.iterator.flatMap { w =>

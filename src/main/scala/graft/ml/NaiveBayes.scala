@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -81,15 +81,9 @@ object NaiveBayes {
       counts: DataFrame): Seq[(String, Long, Long)] = {
     val st = docs(s, d).groupBy("lang").agg(count(lit(1)).as("ndocs"))
       .join(counts.groupBy("lang").agg(sum(col("c")).as("tot")), "lang")
-    // Guard folded INTO the materializing action: collect at most 101
-    // rows (bounded by construction — a data-scaled label set cannot
-    // flood the driver) and fail if the cap is hit; one job instead of
-    // the previous count-then-collect pair.
-    val rows = st.limit(101).collect()
-    require(rows.length <= 100,
-      s"over 100 languages — beyond the driver-stats guard; " +
-        "a data-scaled label set must keep scoring fully distributed")
-    rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    // a data-scaled label set must keep scoring fully distributed
+    Bounded.collect(st, 100, "NaiveBayes per-language stats")
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .sortBy(_._1).toSeq
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 
 /** Graph analytics over the event stream — the contracted-graph pattern.
   *
@@ -56,6 +56,28 @@ object Graph {
     })
   }
 
+  /** The fast paths' edge probe ([[Bounded.rows]]): the (a, b) edge
+    * list as long pairs, or None when it has more than `cap` rows or
+    * its ids are not integral. Reads a fresh projection of the caller's
+    * frame and caches nothing, so the distributed path reads `edges`
+    * exactly as it would without the probe. */
+  private def longEdges(edges: DataFrame, cap: Long)
+      : Option[Array[(Long, Long)]] =
+    if (!integralIds(edges, "a", "b")) None
+    else Bounded.rows(edges.select(col("a").cast("long"),
+        col("b").cast("long")), cap)
+      .map(_.map(r => (r.getLong(0), r.getLong(1))))
+
+  /** [[longEdges]] plus the ids of `nodes` (its `node` column) as longs,
+    * both within `cap`. */
+  private def longGraph(edges: DataFrame, nodes: DataFrame, cap: Long)
+      : Option[(Array[(Long, Long)], Array[Long])] =
+    if (!integralIds(nodes, "node")) None
+    else for {
+      e <- longEdges(edges, cap)
+      n <- Bounded.rows(nodes.select(col("node").cast("long")), cap)
+    } yield (e, n.map(_.getLong(0)))
+
   /** Synchronous label propagation over an undirected edge set
     * (`a`/`b` columns): `rounds` fixed iterations of "adopt the most
     * frequent neighbor label, ties to the smallest label"; isolated
@@ -66,13 +88,12 @@ object Graph {
     * join + one (node, label) count + one per-node rank window, all
     * keyed shuffles linear in |E|. */
   def labelPropagate(edges: DataFrame, nodes: DataFrame, rounds: Int,
-      driverCap: Long = graft.dedup.Dedup.CcDriverEdgeCap): DataFrame = {
+      driverCap: Long = Bounded.DriverEdgeCap): DataFrame = {
     // Guarded driver fast path (see [[bfsLayers]]): the adopt-the-mode
     // step is integer counting with a deterministic (max count, min
-    // label) tie-break — no ordering sensitivity — so under the
-    // count-first cap the rounds run locally on the collected edge and
-    // node lists (persisted first, the count-then-collect discipline —
-    // one derivation, two cheap cache reads). Above the cap — or for
+    // label) tie-break — no ordering sensitivity — so when the
+    // [[Bounded]] probe brings back the whole edge and node lists the
+    // rounds run locally on them. Above the cap — or for
     // non-integral id types the long collect can't carry — the
     // keyed-shuffle rounds below run untouched; parity is pinned
     // both-sides in GraphSpec. The label UNIVERSE is confined to
@@ -80,46 +101,33 @@ object Graph {
     // "left") keeps the frame = nodes): an edge endpoint absent from
     // `nodes` never acquires a label and never votes one onward.
     val spark = edges.sparkSession
-    if (integralIds(edges, "a", "b") && integralIds(nodes, "node")) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // persist FRESH projections, never the caller's frames: the
-      // finally-unpersist would otherwise evict a cache the caller may
-      // hold on that exact plan (the connectedComponents discipline)
-      val eP = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .persist(lvl)
-      val nP = nodes.select(col("node").cast("long")).persist(lvl)
-      try {
-        if (eP.count() <= driverCap && nP.count() <= driverCap) {
-          graft.Attrib.note("lp_path", "driver")
-          val eArr = eP.collect().map(r => (r.getLong(0), r.getLong(1)))
-          val nArr = nP.collect().map(_.getLong(0))
-          val lbl = new java.util.HashMap[Long, Long]()
-          nArr.foreach(n => lbl.put(n, n))
-          for (_ <- 1 to rounds) {
-            // synchronous: counts read the previous round's labels
-            val cnt = new java.util.HashMap[(Long, Long), Long]()
-            def vote(u: Long, v: Long): Unit = if (lbl.containsKey(v))
-              cnt.merge((u, lbl.get(v)), 1L, _ + _)
-            eArr.foreach { case (a, b) => vote(a, b); vote(b, a) }
-            val best = new java.util.HashMap[Long, (Long, Long)]()
-            cnt.forEach { (k, c) =>
-              val (u, l) = k
-              val cur = best.get(u)
-              if (cur == null || c > cur._2 || (c == cur._2 && l < cur._1))
-                best.put(u, (l, c))
-            }
-            best.forEach((u, lc) =>
-              if (lbl.containsKey(u)) lbl.put(u, lc._1))
+    Bounded.path("lp")(longGraph(edges, nodes, driverCap)) match {
+      case Some((eArr, nArr)) =>
+        val lbl = new java.util.HashMap[Long, Long]()
+        nArr.foreach(n => lbl.put(n, n))
+        for (_ <- 1 to rounds) {
+          // synchronous: counts read the previous round's labels
+          val cnt = new java.util.HashMap[(Long, Long), Long]()
+          def vote(u: Long, v: Long): Unit = if (lbl.containsKey(v))
+            cnt.merge((u, lbl.get(v)), 1L, _ + _)
+          eArr.foreach { case (a, b) => vote(a, b); vote(b, a) }
+          val best = new java.util.HashMap[Long, (Long, Long)]()
+          cnt.forEach { (k, c) =>
+            val (u, l) = k
+            val cur = best.get(u)
+            if (cur == null || c > cur._2 || (c == cur._2 && l < cur._1))
+              best.put(u, (l, c))
           }
-          import spark.implicits._
-          val nT = nodes.schema("node").dataType
-          return spark.createDataset(nArr.toSeq.map(n => (n, lbl.get(n))))
-            .select(col("_1").cast(nT).as("node"),
-              col("_2").cast(nT).as("lbl"))
+          best.forEach((u, lc) =>
+            if (lbl.containsKey(u)) lbl.put(u, lc._1))
         }
-      } finally { eP.unpersist(); nP.unpersist() }
+        import spark.implicits._
+        val nT = nodes.schema("node").dataType
+        return spark.createDataset(nArr.toSeq.map(n => (n, lbl.get(n))))
+          .select(col("_1").cast(nT).as("node"),
+            col("_2").cast(nT).as("lbl"))
+      case None =>
     }
-    graft.Attrib.note("lp_path", "distributed")
     val W = Window
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
@@ -148,66 +156,60 @@ object Graph {
     * is one join + one per-node min aggregate + one elementwise min —
     * keyed shuffles linear in |E|. */
   def bfsLayers(edges: DataFrame, seeded: DataFrame, rounds: Int,
-      driverCap: Long = graft.dedup.Dedup.CcDriverEdgeCap): DataFrame = {
+      driverCap: Long = Bounded.DriverEdgeCap): DataFrame = {
     // Guarded driver fast path (the connectedComponents/canonicalResolve
     // pattern): the per-round cost of the distributed form is ~3 keyed
     // shuffles of a few thousand rows — pure stage-barrier latency at
     // test scale (the sf0.1 near-dup graph is 5k edges / 50k nodes) —
-    // so under a distributed count-first cap the synchronous rounds run
-    // as one collect + local Bellman-Ford, bit-identically (integer hop
+    // so under the probe cap the synchronous rounds run as one
+    // bounded collect + local Bellman-Ford, bit-identically (integer hop
     // math has no ordering sensitivity). Above the cap the DataFrame
     // rounds run untouched: that is the 100 TB path, and the parity is
     // pinned both-sides in MarketSpec.
     // Distance UNIVERSE confined to `seeded` exactly as in the
     // distributed path (dist.join(cand, "left") keeps the frame =
     // seeded): an edge endpoint absent from `seeded` never carries a
-    // distance and never relays one. Persist-count-collect discipline
-    // and the integral-id guard as in [[labelPropagate]].
+    // distance and never relays one. Probe and integral-id guard as in
+    // [[labelPropagate]].
     val spark = edges.sparkSession
-    if (integralIds(edges, "a", "b") && integralIds(seeded, "node")) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // fresh projections, not the caller's frames (see labelPropagate)
-      val eP = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .persist(lvl)
-      val sP = seeded
-        .select(col("node").cast("long"), col("dist").cast("int"))
-        .persist(lvl)
-      try {
-        if (eP.count() <= driverCap && sP.count() <= driverCap) {
-          graft.Attrib.note("bfs_path", "driver")
-          val eArr = eP.collect().map(r => (r.getLong(0), r.getLong(1)))
-          val seedRows = sP.collect()
-          val dist = new java.util.HashMap[Long, Int]()
-          val universe = new java.util.HashSet[Long]()
-          val order = new Array[Long](seedRows.length)
-          var i = 0
-          seedRows.foreach { r =>
-            order(i) = r.getLong(0); i += 1
-            universe.add(r.getLong(0))
-            if (!r.isNullAt(1)) dist.put(r.getLong(0), r.getInt(1))
-          }
-          for (_ <- 1 to rounds) {
-            // synchronous step: candidates read the PREVIOUS round's map
-            val cand = new java.util.HashMap[Long, Int]()
-            def relax(u: Long, v: Long): Unit = if (dist.containsKey(v)) {
-              val c = dist.get(v) + 1
-              if (!cand.containsKey(u) || c < cand.get(u)) cand.put(u, c)
-            }
-            eArr.foreach { case (a, b) => relax(a, b); relax(b, a) }
-            cand.forEach { (n, c) =>
-              if (universe.contains(n) &&
-                  (!dist.containsKey(n) || c < dist.get(n))) dist.put(n, c)
-            }
-          }
-          import spark.implicits._
-          val nT = seeded.schema("node").dataType
-          return spark.createDataset(order.toSeq.map(n =>
-              (n, if (dist.containsKey(n)) Some(dist.get(n)) else None)))
-            .select(col("_1").cast(nT).as("node"), col("_2").as("dist"))
+    Bounded.path("bfs") {
+      if (!integralIds(seeded, "node")) None
+      else for {
+        eArr <- longEdges(edges, driverCap)
+        seedRows <- Bounded.rows(seeded
+          .select(col("node").cast("long"), col("dist").cast("int")), driverCap)
+      } yield (eArr, seedRows)
+    } match {
+      case Some((eArr, seedRows)) =>
+        val dist = new java.util.HashMap[Long, Int]()
+        val universe = new java.util.HashSet[Long]()
+        val order = new Array[Long](seedRows.length)
+        var i = 0
+        seedRows.foreach { r =>
+          order(i) = r.getLong(0); i += 1
+          universe.add(r.getLong(0))
+          if (!r.isNullAt(1)) dist.put(r.getLong(0), r.getInt(1))
         }
-      } finally { eP.unpersist(); sP.unpersist() }
+        for (_ <- 1 to rounds) {
+          // synchronous step: candidates read the PREVIOUS round's map
+          val cand = new java.util.HashMap[Long, Int]()
+          def relax(u: Long, v: Long): Unit = if (dist.containsKey(v)) {
+            val c = dist.get(v) + 1
+            if (!cand.containsKey(u) || c < cand.get(u)) cand.put(u, c)
+          }
+          eArr.foreach { case (a, b) => relax(a, b); relax(b, a) }
+          cand.forEach { (n, c) =>
+            if (universe.contains(n) &&
+                (!dist.containsKey(n) || c < dist.get(n))) dist.put(n, c)
+          }
+        }
+        import spark.implicits._
+        val nT = seeded.schema("node").dataType
+        return spark.createDataset(order.toSeq.map(n =>
+            (n, if (dist.containsKey(n)) Some(dist.get(n)) else None)))
+          .select(col("_1").cast(nT).as("node"), col("_2").as("dist"))
+      case None =>
     }
-    graft.Attrib.note("bfs_path", "distributed")
     val sym = edges.select(col("a").as("u"), col("b").as("v"))
       .unionByName(edges.select(col("b").as("u"), col("a").as("v")))
     var dist = seeded.select(col("node"), col("dist").cast("int").as("dist"))
@@ -224,6 +226,31 @@ object Graph {
             col("dist"), col("cand")).as("dist"))
     }
     dist
+  }
+
+  /** The contracted event-type transition graph pagerank_types and
+    * hits_types iterate on the driver: (src, dst, w) per consecutive
+    * event-type pair in a user's journey, and the sorted node set. The
+    * contraction is distributed (window + aggregate); its ≤|types|²
+    * edge list is collected under a bound that fails loudly, since a
+    * data-scaled node set must keep the power iteration distributed. */
+  private def typeGraph(s: SparkSession, d: String)
+      : (Array[(String, String, Long)], Array[String]) = {
+    val perUser = Window.partitionBy("user_id")
+      .orderBy(U.tsUs(col("ts")), col("event_id"))
+    val contracted = t(s, d, "events")
+      .select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type").as("dst"))
+      .withColumn("src", lag(col("dst"), 1).over(perUser))
+      .filter(col("src").isNotNull)
+      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val edges = Bounded.collect(contracted, 100000,
+        "contracted transition graph (graph_*_types driver iteration)")
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val nodes = t(s, d, "events")
+      .select(col("event_type")).distinct()
+      .collect().map(_.getString(0)).sorted
+    (edges, nodes)
   }
 
   /** Damping factor and iteration count pinned by the query contract. */
@@ -340,8 +367,8 @@ object Graph {
     * every further round is a no-op). Returns surviving per-node
     * degrees. Runs on the [[graft.plans.Iterate]] harness. */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int,
-      driverCap: Long = graft.dedup.Dedup.CcDriverEdgeCap): DataFrame = {
-    // Guarded driver fast path (same count-first discipline as
+      driverCap: Long = Bounded.DriverEdgeCap): DataFrame = {
+    // Guarded driver fast path (the [[Bounded]] probe, as in
     // connectedComponents): each distributed peel round is one degree
     // aggregate + two semi-joins — ~4 stage barriers over a few
     // thousand edges at test scale. Under the cap the synchronous peel
@@ -351,43 +378,36 @@ object Graph {
     // Iterate-harness rounds below run untouched; parity is pinned
     // both-sides in GraphSpec.
     val spark = edges.sparkSession
-    if (integralIds(edges, "a", "b")) {
-      // fresh projection, not the caller's frame (see labelPropagate)
-      val eP = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        if (eP.count() <= driverCap) {
-          graft.Attrib.note("kcore_path", "driver")
-          var es = eP.collect().map(r => (r.getLong(0), r.getLong(1)))
-          var r = 0
-          var stable = false
-          while (!stable && r < rounds) {
-            val deg = new java.util.HashMap[Long, Long]()
-            es.foreach { case (a, b) =>
-              deg.merge(a, 1L, _ + _); deg.merge(b, 1L, _ + _)
-            }
-            val next = es.filter { case (a, b) =>
-              deg.get(a) >= k && deg.get(b) >= k }
-            stable = next.length == es.length
-            es = next
-            r += 1
-          }
-          val coreDeg = new java.util.LinkedHashMap[Long, Long]()
+    Bounded.path("kcore")(longEdges(edges, driverCap)) match {
+      case Some(eArr) =>
+        var es = eArr
+        var r = 0
+        var stable = false
+        while (!stable && r < rounds) {
+          val deg = new java.util.HashMap[Long, Long]()
           es.foreach { case (a, b) =>
-            coreDeg.merge(a, 1L, _ + _); coreDeg.merge(b, 1L, _ + _)
+            deg.merge(a, 1L, _ + _); deg.merge(b, 1L, _ + _)
           }
-          import scala.jdk.CollectionConverters._
-          import spark.implicits._
-          val vT = edges.schema("a").dataType
-          return spark.createDataset(
-              coreDeg.entrySet().asScala.toSeq
-                .map(e => (e.getKey.longValue, e.getValue.longValue)))
-            .select(col("_1").cast(vT).as("vec_id"),
-              col("_2").as("core_degree"))
+          val next = es.filter { case (a, b) =>
+            deg.get(a) >= k && deg.get(b) >= k }
+          stable = next.length == es.length
+          es = next
+          r += 1
         }
-      } finally eP.unpersist()
+        val coreDeg = new java.util.LinkedHashMap[Long, Long]()
+        es.foreach { case (a, b) =>
+          coreDeg.merge(a, 1L, _ + _); coreDeg.merge(b, 1L, _ + _)
+        }
+        import scala.jdk.CollectionConverters._
+        import spark.implicits._
+        val vT = edges.schema("a").dataType
+        return spark.createDataset(
+            coreDeg.entrySet().asScala.toSeq
+              .map(e => (e.getKey.longValue, e.getValue.longValue)))
+          .select(col("_1").cast(vT).as("vec_id"),
+            col("_2").as("core_degree"))
+      case None =>
     }
-    graft.Attrib.note("kcore_path", "distributed")
     var last = -1L
     var done = 0
     val (core, _) = graft.plans.Iterate.fixpoint(
@@ -429,7 +449,7 @@ object Graph {
     * fixed horizon; 3 rounds ≡ counting α-damped walks of length ≤ 3). */
   def katzCentrality(edges: DataFrame, nodes: DataFrame,
       rounds: Int, alpha: Double,
-      driverCap: Long = graft.dedup.Dedup.CcDriverEdgeCap): DataFrame = {
+      driverCap: Long = Bounded.DriverEdgeCap): DataFrame = {
     // Guarded driver fast path (see [[bfsLayers]]), with the decimal
     // discipline replicated EXACTLY: each edge contribution quantizes
     // via U.r6MicroLong (the proven local twin of round6 → DECIMAL(18,6)
@@ -441,38 +461,27 @@ object Graph {
     // below run untouched; GraphSpec pins both paths on the
     // hand-unrolled fixture.
     val spark = edges.sparkSession
-    if (integralIds(edges, "a", "b") && integralIds(nodes, "node")) {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      // fresh projections, not the caller's frames (see labelPropagate)
-      val eP = edges.select(col("a").cast("long"), col("b").cast("long"))
-        .persist(lvl)
-      val nP = nodes.select(col("node").cast("long")).persist(lvl)
-      try {
-        if (eP.count() <= driverCap && nP.count() <= driverCap) {
-          graft.Attrib.note("katz_path", "driver")
-          val eArr = eP.collect().map(r => (r.getLong(0), r.getLong(1)))
-          val nArr = nP.collect().map(_.getLong(0))
-          val x = new java.util.HashMap[Long, Double]()
-          nArr.foreach(n => x.put(n, 0.0))
-          for (_ <- 1 to rounds) {
-            val micro = new java.util.HashMap[Long, Long]()
-            def add(u: Long, v: Long): Unit = if (x.containsKey(v))
-              micro.merge(u, U.r6MicroLong(alpha * x.get(v)), _ + _)
-            eArr.foreach { case (a, b) => add(a, b); add(b, a) }
-            nArr.foreach { n =>
-              val s = java.math.BigDecimal.valueOf(
-                micro.getOrDefault(n, 0L), 6).doubleValue()
-              x.put(n, U.r6MicroLong(s + 1.0).toDouble / 1e6)
-            }
+    Bounded.path("katz")(longGraph(edges, nodes, driverCap)) match {
+      case Some((eArr, nArr)) =>
+        val x = new java.util.HashMap[Long, Double]()
+        nArr.foreach(n => x.put(n, 0.0))
+        for (_ <- 1 to rounds) {
+          val micro = new java.util.HashMap[Long, Long]()
+          def add(u: Long, v: Long): Unit = if (x.containsKey(v))
+            micro.merge(u, U.r6MicroLong(alpha * x.get(v)), _ + _)
+          eArr.foreach { case (a, b) => add(a, b); add(b, a) }
+          nArr.foreach { n =>
+            val s = java.math.BigDecimal.valueOf(
+              micro.getOrDefault(n, 0L), 6).doubleValue()
+            x.put(n, U.r6MicroLong(s + 1.0).toDouble / 1e6)
           }
-          import spark.implicits._
-          val nT = nodes.schema("node").dataType
-          return spark.createDataset(nArr.toSeq.map(n => (n, x.get(n))))
-            .select(col("_1").cast(nT).as("node"), col("_2").as("r"))
         }
-      } finally { eP.unpersist(); nP.unpersist() }
+        import spark.implicits._
+        val nT = nodes.schema("node").dataType
+        return spark.createDataset(nArr.toSeq.map(n => (n, x.get(n))))
+          .select(col("_1").cast(nT).as("node"), col("_2").as("r"))
+      case None =>
     }
-    graft.Attrib.note("katz_path", "distributed")
     val sym = symEdges(edges)
     var x = nodes.select(col("node"), lit(0.0).as("r"))
     for (_ <- 1 to rounds) {
@@ -610,32 +619,7 @@ object Graph {
     // distributed half (window + aggregate); the ≤|types|² contracted
     // edge list iterates on the driver under a guard.
     "graph_pagerank_types" -> ((s, d) => {
-      val perUser = Window.partitionBy("user_id")
-        .orderBy(U.tsUs(col("ts")), col("event_id"))
-      // cap+1 limit makes the guard probe and the collect ONE job (the
-      // Bpe.DriverVocabCap pattern, r18): the limit bounds what the
-      // driver materializes at cap+1 rows — the same OOM protection the
-      // old persist + distributed-count + collect + unpersist spelling
-      // bought with three extra scheduler round-trips — and ≤cap rows
-      // back proves the bound held.
-      val cap = 100000
-      val edgeRows = t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(perUser))
-        .filter(col("src").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .limit(cap + 1)
-        .collect()
-      require(edgeRows.length <= cap,
-        s"contracted transition graph has > $cap edges — beyond " +
-          "the driver-iteration guard; for data-scaled node sets keep the " +
-          "power iteration distributed (persist/unpersist per step)")
-      val edges = edgeRows
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val nodes = t(s, d, "events")
-        .select(col("event_type")).distinct()
-        .collect().map(_.getString(0)).sorted
+      val (edges, nodes) = typeGraph(s, d)
       val n = nodes.length
       val outW: Map[String, Long] =
         edges.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
@@ -677,30 +661,7 @@ object Graph {
     // half is the same window+aggregate contraction; the ≤|types|²
     // edge list iterates under the same driver guard.
     "graph_hits_types" -> ((s, d) => {
-      val perUser = Window.partitionBy("user_id")
-        .orderBy(U.tsUs(col("ts")), col("event_id"))
-      // cap+1 limit makes the size probe and the collect ONE job (the
-      // Bpe.DriverVocabCap pattern, r18 — replaces persist + count +
-      // collect + unpersist, three scheduler round-trips on a
-      // ≤|types|²-bounded table): ≤cap rows back proves the guard.
-      val cap = 100000
-      val edgeRows = t(s, d, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("dst"))
-        .withColumn("src", lag(col("dst"), 1).over(perUser))
-        .filter(col("src").isNotNull)
-        .groupBy("src", "dst").agg(count(lit(1)).as("w"))
-        .limit(cap + 1)
-        .collect()
-      require(edgeRows.length <= cap,
-        s"contracted transition graph has > $cap edges — beyond " +
-          "the driver-iteration guard (keep the iteration distributed " +
-          "for data-scaled node sets)")
-      val edges = edgeRows
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      val nodes = t(s, d, "events")
-        .select(col("event_type")).distinct()
-        .collect().map(_.getString(0)).sorted
+      val (edges, nodes) = typeGraph(s, d)
       val n = nodes.length
       var hub: Map[String, Long] =
         nodes.map(_ -> math.round(1e6 / n)).toMap

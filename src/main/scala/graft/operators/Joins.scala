@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, U}
+import graft.{Bounded, Tables, U}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,10 +28,10 @@ object Joins {
     * candidate pairs QUADRATICALLY — measured 1.0M pairs at sf0.1 →
     * 100M at sf1 (round-9 scaling sweep). The cap makes that failure
     * LOUD: Σ c·(c−1)/2 over blocks is counted distributedly BEFORE the
-    * self-join is launched (the Graph.scala:396 discipline — reject
-    * before materializing), so a copy-paste of this query onto a
-    * 100 TB corpus dies with a pointer to the n·w-bounded
-    * join_er_sorted_neighborhood instead of running 10¹² comparisons. */
+    * self-join is launched (reject before materializing), so a
+    * copy-paste of this query onto a 100 TB corpus dies with a pointer
+    * to the n·w-bounded join_er_sorted_neighborhood instead of running
+    * 10¹² comparisons. */
   private val ErPairCap = 20000000L
 
   /** Distributed count-before-join guard: fails when the blocked
@@ -630,14 +630,12 @@ object Joins {
     // case where a typedlit(Map) beats even a broadcast join — the lookup
     // compiles into the row pipeline as a codegen'd map probe.
     "join_lookup_code" -> ((s, d) => {
-      val rows = t(s, d, "region").collect()
       // The collect is the POINT here (a literal map needs driver values),
       // but only for genuinely tiny dims — fail loudly if this pattern is
       // ever copy-pasted onto a real dimension (use join_lookup_broadcast
       // for those).
-      require(rows.length <= 1000,
-        s"typedlit lookup is for tiny dims; got ${rows.length} rows — " +
-          "use a broadcast join instead")
+      val rows = Bounded.collect(t(s, d, "region"), 1000,
+        "join_lookup_code typedlit dim (use a broadcast join instead)")
       val regionMap: Map[Int, String] =
         rows.map(r => r.getInt(0) -> r.getString(1)).toMap
       t(s, d, "nation")

@@ -80,8 +80,10 @@ object H5ad {
     s"$group/$idx"
   }
 
-  /** Distributed ingest: one task per file (files must be reachable from
-    * executors — shared FS / object store). Returns the long-form fact
+  /** Distributed ingest: one task per file. Each file must be at a
+    * local or shared POSIX path that every executor can open: the reader
+    * memory-maps a `java.nio` path, so object-store URIs (`s3a://`) are
+    * not readable here. Returns the long-form fact
     * across all inputs, ready for [[graft.operators.ProductBuild]]. */
   def scan(spark: SparkSession, files: Seq[H5adInput]): DataFrame = {
     import spark.implicits._

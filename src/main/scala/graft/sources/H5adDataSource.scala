@@ -47,8 +47,9 @@ object H5adDataSource {
     StructField("value", DoubleType),
     StructField("modality", StringType)))
 
-  /** Expand `path`/`paths` options (files or directories of `*.h5ad`)
-    * into per-file inputs with derived (dataset, modality) identity. */
+  /** Expand `path`/`paths` options (files or directories of `*.h5ad`,
+    * walked with `java.nio`, so local or shared POSIX paths only) into
+    * per-file inputs with derived (dataset, modality) identity. */
   private[sources] def resolveInputs(
       options: CaseInsensitiveStringMap): Seq[H5ad.H5adInput] = {
     val raw: Seq[String] =

@@ -4,15 +4,37 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source lint: derived artifacts are cached in ONE place. A private
-  * memo map or a `@volatile var last…` oracle record anywhere in
-  * `src/main` outside [[Derived]] is a second copy of the caching
-  * policy (keying, invalidation, oracle exposure) — use `Derived.get` /
-  * `Derived.latest` instead. The allowed maps are not dataset-derived
-  * artifacts: RangeJoinRewrite's two plan-keyed stats caches and the
-  * MvRegistry catalog. */
+/** Source lint: each concern has ONE mechanism in `src/main`.
+  *
+  *  - Derived artifacts are cached in [[Derived]]. A private memo map or
+  *    a `@volatile var last…` oracle record anywhere else is a second
+  *    copy of the caching policy (keying, invalidation, oracle
+  *    exposure) — use `Derived.get` / `Derived.latest` instead. The
+  *    allowed maps are not dataset-derived artifacts: RangeJoinRewrite's
+  *    two plan-keyed stats caches and the MvRegistry catalog.
+  *  - Driver-collect bounds are checked in [[Bounded]]. A hand-spelled
+  *    `limit(cap + 1).collect()` probe or a `count() <=` guard anywhere
+  *    else is a second copy of the bound check — use `Bounded.rows` /
+  *    `Bounded.collect` instead. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
+
+  /** Every main source file → its text without comment lines. */
+  private lazy val sources: List[(java.nio.file.Path, String)] = {
+    val files = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
+    files.map { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f),
+        java.nio.charset.StandardCharsets.UTF_8)
+      f -> text.linesIterator
+        .filterNot(l => l.trim.startsWith("//") || l.trim.startsWith("*"))
+        .mkString("\n")
+    }
+  }
 
   /** file name → number of concurrent maps it may construct. */
   private val allowedMaps = Map(
@@ -27,18 +49,7 @@ class StoreLintSpec extends AnyFunSuite {
 
   test("no memo map or last-served var outside the derived-artifact " +
     "store") {
-    val files = {
-      val s = java.nio.file.Files.walk(root)
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
-    assert(files.nonEmpty, s"no sources under ${root.toAbsolutePath}")
-    val offenders = files.flatMap { f =>
-      val text = new String(java.nio.file.Files.readAllBytes(f),
-        java.nio.charset.StandardCharsets.UTF_8)
-      val code = text.linesIterator
-        .filterNot(l => l.trim.startsWith("//") || l.trim.startsWith("*"))
-        .mkString("\n")
+    val offenders = sources.flatMap { case (f, code) =>
       val name = f.getFileName.toString
       val maps = mapDecl.findAllIn(code).size
       val vars = lastVar.findAllIn(code).size
@@ -49,5 +60,20 @@ class StoreLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "cache derived artifacts through graft.Derived:\n", "\n", ""))
+  }
+
+  /** `.limit(<anything> + 1)` then `.collect()`, line breaks allowed. */
+  private val capPlusOneProbe =
+    """\.limit\([^()]*(\([^()]*\)[^()]*)*\+\s*1\s*\)\s*\.collect\(\)""".r
+  private val countGuard = """\.count(\(\))?\s*<=""".r
+
+  test("no hand-spelled driver-collect bound outside graft.Bounded") {
+    val offenders = sources.flatMap { case (f, code) =>
+      if (f.getFileName.toString == "Bounded.scala") Nil
+      else (capPlusOneProbe.findAllIn(code) ++ countGuard.findAllIn(code))
+        .map(m => s"$f: $m").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "check driver-collect bounds through graft.Bounded:\n", "\n", ""))
   }
 }

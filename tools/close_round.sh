@@ -14,7 +14,6 @@
 #      per-query ratio vs the previous round's sf1 headline file
 #      (VERDICT r10 item 4: per-op sf1 rows existed but no cross-round
 #      pinned set ran at sf1)
-#   5. PLANS.md regeneration (headline physical plans on record)
 #
 # Usage: GRAFT_ROUND=r11 tools/close_round.sh
 set -euo pipefail
@@ -29,10 +28,10 @@ if [ -z "${GRAFT_ROUND:-}" ]; then
 fi
 ROUND="$GRAFT_ROUND"
 
-echo "== 1/5 sbt test"
+echo "== 1/4 sbt test"
 sbt -batch test
 
-echo "== 2/5 Verify + selfcheck @ sf0.01"
+echo "== 2/4 Verify + selfcheck @ sf0.01"
 sbt -batch package
 bash tools/run_verify.sh /root/testdata/sf0.01 /tmp/close_round_verify
 python3 tools/selfcheck.py /root/testdata/sf0.01 /tmp/close_round_verify \
@@ -40,7 +39,7 @@ python3 tools/selfcheck.py /root/testdata/sf0.01 /tmp/close_round_verify \
 grep -q ", 0 fail" /tmp/close_round_selfcheck.txt \
   || { echo "SELFCHECK RED — do not commit"; exit 1; }
 
-echo "== 3/5 full bench sweep @ sf0.1 (record tagged ${ROUND}_record)"
+echo "== 3/4 full bench sweep @ sf0.1 (record tagged ${ROUND}_record)"
 SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} \
   SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32} \
   SPARK_GRAFT_BENCH_TAG="${ROUND}_record" \
@@ -62,7 +61,7 @@ print(f"record sweep: failed=[] concurrent_jvms=[] ok "
       f"({d['n_queries']} queries, {d['value']}s)")
 EOF
 
-echo "== 4/5 sf1 headline set (pinned cross-round gate)"
+echo "== 4/4 sf1 headline set (pinned cross-round gate)"
 if [ ! -d target/testdata/sf1 ]; then
   echo "generating sf1 testdata (one-time)"
   python3 tools/gen_sf.py 1 target/testdata/sf1
@@ -199,6 +198,4 @@ print("sf1 headline: failed=[] ok")
 EOF
 fi
 
-echo "== 5/5 PLANS.md"
-bash tools/run_plandump.sh >/dev/null
 echo "close_round: ALL GREEN"
