@@ -232,8 +232,8 @@ object Graph {
     * hits_types iterate on the driver: (src, dst, w) per consecutive
     * event-type pair in a user's journey, and the sorted node set. The
     * contraction is distributed (window + aggregate); its ≤|types|²
-    * edge list is collected under a bound that fails loudly, since a
-    * data-scaled node set must keep the power iteration distributed. */
+    * edge list and node set are collected under a bound that fails
+    * loudly: a data-scaled node set must iterate distributed. */
   private def typeGraph(s: SparkSession, d: String)
       : (Array[(String, String, Long)], Array[String]) = {
     val perUser = Window.partitionBy("user_id")
@@ -247,9 +247,9 @@ object Graph {
     val edges = Bounded.collect(contracted, 100000,
         "contracted transition graph (graph_*_types driver iteration)")
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val nodes = t(s, d, "events")
-      .select(col("event_type")).distinct()
-      .collect().map(_.getString(0)).sorted
+    val nodes = Bounded.collect(t(s, d, "events").select(col("event_type")).distinct(),
+        100000, "event-type node set (graph_*_types driver iteration)")
+      .map(_.getString(0)).sorted
     (edges, nodes)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.sources.ProductSink
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The reference's flagship flow (`pipeline.cwl` → `bin/concatenate.py:
@@ -18,10 +19,12 @@ import org.apache.spark.sql.functions._
   * schema; GoldenPipelineSpec drives THIS entry point end-to-end.
   *
   * Scale shape: modality tagging and union are map-only; the
-  * intersection aggregates the narrow key projection (map-side combine)
-  * and semi-joins the fact against it; the donor join broadcasts the
-  * dim; the write is hash-partitioned by (modality, dataset) for
-  * downstream partition pruning.
+  * intersection is one window over (dataset, cell_id), so each input is
+  * read once and the fact is shuffled and sorted once; the donor join
+  * broadcasts the dim; the write is partitioned by (modality, dataset)
+  * for downstream partition pruning. [[Pipeline.flagship]] intersects
+  * with a key-set semi-join instead: its key branch prunes parquet
+  * columns, which an h5ad scan cannot.
   */
 object ProductBuild {
 
@@ -40,26 +43,15 @@ object ProductBuild {
         .withColumn("modality", lit(name))
     }
     val fact = tagged.reduce(_ unionByName _)
-    // Partial-aggregated key set + left-semi join (same shape as
-    // Pipeline.flagship): the aggregation shuffles only the narrow key
-    // projection with map-side combine; AQE broadcasts the key set at
-    // small scale, sort-merge semi at 100 TB. A collect_set window here
-    // would shuffle AND sort the full fact.
-    //
-    // Null-SAFE join keys (<=>): groupBy buckets null keys together, and
-    // a plain equi-semi-join would then silently drop every null-keyed
-    // row — with <=> a null-keyed "cell" survives exactly when its group
-    // spans all modalities, the same semantics the window formulation
-    // had. Caller-supplied frames do contain such rows (unparseable
-    // barcodes); dropping them is a QC decision, not a join artifact.
-    val qualified = fact.select("dataset", "cell_id", "modality")
-      .groupBy("dataset", "cell_id")
-      .agg(countDistinct(col("modality")).as("__nmod"))
+    // One window, not a key-set semi-join: an h5ad scan cannot prune
+    // columns, so a key branch would decode every file twice. A window
+    // groups null keys together, so a null-keyed "cell" (unparseable
+    // barcode) survives when its group spans all modalities: dropping
+    // it is a QC decision, not an intersect artifact.
+    val cell = Window.partitionBy("dataset", "cell_id")
+    fact.withColumn("__nmod", size(collect_set(col("modality")).over(cell)))
       .filter(col("__nmod") === modalities.size)
-      .select(col("dataset").as("q_dataset"), col("cell_id").as("q_cell_id"))
-    fact.join(qualified,
-      fact("dataset") <=> col("q_dataset") &&
-        fact("cell_id") <=> col("q_cell_id"), "left_semi")
+      .drop("__nmod")
   }
 
   /** Attach donor metadata by dataset uuid (inner broadcast join — cells
@@ -71,18 +63,14 @@ object ProductBuild {
       .drop("uuid")
   }
 
-  /** Full build: returns the annotated fact and writes the partitioned
-    * product + metadata sidecar via [[graft.sources.ProductSink]]. The
-    * product is persisted (MEMORY_AND_DISK) because the sink consumes it
-    * twice (parquet write + metadata aggregation) and callers usually act
-    * on the returned frame too — without it the union + window + join DAG
-    * would re-execute for each consumer. Callers may `unpersist()` when
-    * done. */
+  /** Full build: writes the partitioned product + metadata sidecar via
+    * [[graft.sources.ProductSink]] and returns the product read back from
+    * `outDir` in its own schema and column order. Nothing is cached: the
+    * write is the build DAG's only consumer. */
   def build(modalities: Map[String, DataFrame], donors: DataFrame,
       outDir: String): DataFrame = {
     val product = annotateDonors(unionIntersect(modalities), donors)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     ProductSink.writeProduct(product, outDir)
-    product
+    ProductSink.readFact(product.sparkSession, outDir, product.schema)
   }
 }

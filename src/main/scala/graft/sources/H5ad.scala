@@ -98,8 +98,8 @@ object H5ad {
   }
 
   /** Ingest grouped by modality — the shape [[graft.operators
-    * .ProductBuild.build]] consumes. One Spark job per modality, each
-    * parallel over its files. */
+    * .ProductBuild.build]] consumes. Lazy: no job starts here; an action
+    * decodes each file in one task. */
   def scanModalities(spark: SparkSession,
       files: Seq[H5adInput]): Map[String, DataFrame] =
     files.groupBy(_.modality).map { case (m, fs) =>

@@ -62,7 +62,8 @@ object ProductSink {
     * `bin/concatenate.py:81-96,140-152`: product uuid, creation time,
     * dataset list, total cell count. The non-deterministic fields
     * (uuid(), current_timestamp()) live only here — never in
-    * oracle-checked query output (SURVEY §7.4.1).
+    * oracle-checked query output (SURVEY §7.4.1). The counts are read
+    * from the written files, so an uncached `fact` is computed once.
     */
   def writeProduct(fact: DataFrame, outDir: String): Unit = {
     fact.write.mode(SaveMode.Overwrite)
@@ -76,7 +77,7 @@ object ProductSink {
     val fs = factPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val byteSize = fs.getContentSummary(factPath).getLength
 
-    val meta = fact.agg(
+    val meta = readFact(spark, outDir, fact.select("cell_id", "dataset").schema).agg(
       count(lit(1)).as("n_rows"),
       countDistinct(col("cell_id")).as("total_cell_count"),
       sort_array(collect_set(col("dataset"))).as("datasets"))
@@ -90,7 +91,16 @@ object ProductSink {
   /** Read a written product back with partition pruning available on
     * modality/dataset. */
   def readProduct(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/fact")
+    readFact(spark, outDir, spark.read.parquet(s"$outDir/fact").schema)
+
+  /** The written fact in `schema`'s columns and order, with no inference
+    * job; partition columns stay the strings written (inference reads
+    * dataset "0123" as 123, and a session conf to stop it would race). */
+  private[graft] def readFact(spark: SparkSession, outDir: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(StructType(schema.map(f =>
+        if (Set("modality", "dataset")(f.name)) f.copy(dataType = StringType) else f)))
+      .parquet(s"$outDir/fact").select(schema.fieldNames.map(col).toIndexedSeq: _*)
 
   /** Incremental refresh of ONLY the partitions present in `delta`
     * (sink_partition_overwrite): dynamic partition-overwrite mode

@@ -364,9 +364,8 @@ class GoldenPipelineSpec extends SparkSpec {
   }
 
   test("ProductBuild intersect keeps null-keyed groups spanning all modalities") {
-    // Windows group null keys together; the semi-join formulation must
-    // use null-safe equality to preserve that — dropping unparseable
-    // barcodes is a QC decision, not a join artifact.
+    // The intersect window groups null keys together — dropping
+    // unparseable barcodes is a QC decision, not an intersect artifact.
     val cbb = Seq((null.asInstanceOf[String], "d1", "f1", 1.0),
       ("AAAC", "d1", "f2", 2.0))
       .toDF("cell_id", "dataset", "feature_id", "value")
@@ -410,6 +409,32 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(row.getSeq[String](2) === Seq("d1", "d2", "d3"))
     assert(row.getString(3).matches("[0-9a-f-]{36}"))
     assert(row.getString(4).matches("\\d{4}-\\d{2}-\\d{2} .*"))
+  }
+
+  test("product partition columns round-trip as strings (all-digit dataset ids)") {
+    val fact = Seq(
+      ("c1", "0123", "f1", 1.0, "7"),
+      ("c2", "0456", "f1", 2.0, "7"))
+      .toDF("cell_id", "dataset", "feature_id", "value", "modality")
+    ProductSink.writeProduct(fact, s"$tmp/digits")
+    val back = ProductSink.readProduct(spark, s"$tmp/digits")
+    assert(back.schema("dataset").dataType === StringType)
+    assert(back.schema("modality").dataType === StringType)
+    assert(back.select("dataset", "modality").as[(String, String)].collect()
+      .sorted.toSeq === Seq(("0123", "7"), ("0456", "7")))
+    // the sidecar lists the ids as written
+    val meta = spark.read.json(s"$tmp/digits/metadata")
+    assert(meta.select("datasets").head().getSeq[String](0) === Seq("0123", "0456"))
+
+    // and ProductBuild.build returns them as written too
+    val donors = Seq(("0123", "40", "Male"), ("0456", "55", "Female"))
+      .toDF("uuid", "age", "sex")
+    val built = operators.ProductBuild.build(
+      Map("7" -> fact.drop("modality"), "8" -> fact.drop("modality")),
+      donors, s"$tmp/digits_build")
+    assert(built.schema("dataset").dataType === StringType)
+    assert(built.select("dataset").distinct().as[String].collect().sorted.toSeq ===
+      Seq("0123", "0456"))
   }
 
   test("dynamic partition overwrite refreshes only the delta's partitions") {

@@ -72,8 +72,11 @@ class H5adSpec extends SparkSpec {
     assert(modalities.keySet === Set("cell_by_bin", "cell_by_gene"))
     val donors = Seq(("uuid-A", "40", "Male"), ("uuid-B", "55", "Female"))
       .toDF("uuid", "age", "sex")
+    // the build caches nothing: the returned product is the written one
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val product = operators.ProductBuild.build(modalities, donors,
       s"$tmp/product")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
     val rows = product
       .select("dataset", "cell_id", "modality", "feature_id", "value", "age")
       .collect()
@@ -89,7 +92,27 @@ class H5adSpec extends SparkSpec {
       ("uuid-A", "c3", "cell_by_gene", "g3", 7.0, 40.0),
       ("uuid-B", "c1", "cell_by_bin", "bin1", 9.0, 55.0),
       ("uuid-B", "c1", "cell_by_gene", "g1", 8.0, 55.0)))
-    product.unpersist()
+  }
+
+  test("intersect decodes each h5ad file once: one scan per modality, no join") {
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val modalities = H5ad.scanModalities(spark, files)
+    val out = operators.ProductBuild.unionIntersect(modalities)
+    // materialize so AQE's final plan exists; A/c2 is bin-only → dropped
+    assert(out.collect().length === 8)
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => q +: flatten(q.plan)
+      case other => other +: other.children.flatMap(flatten)
+    }
+    val nodes = flatten(out.queryExecution.executedPlan)
+    // the h5ad decode is the scan's flatMap (readTriplets)
+    assert(nodes.count(_.isInstanceOf[MapPartitionsExec]) === modalities.size,
+      out.queryExecution.executedPlan.toString)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
+      out.queryExecution.executedPlan.toString)
   }
 
   test("DataSource V2: spark.read.format(\"h5ad\") with layout-derived identity") {
