@@ -26,7 +26,10 @@ import java.nio.file.{Paths, StandardOpenOption}
   *    payloads raw zstd frames — the filters add no headers);
   *  - little-endian fixed-point ints (signed, and unsigned ≤ 32-bit),
   *    IEEE floats, fixed-size strings, variable-length strings (global
-  *    heap);
+  *    heap: each collection is indexed once per [[Reader]], on first
+  *    use, into an array of object offsets by 16-bit object id, so a
+  *    string decode is a lookup and a whole vlen dataset decodes in
+  *    linear time; a dataset may span several collections);
   *  - files up to 2 GiB (single memory-map; larger files need windowed
   *    maps — raise the documented limit if that day comes).
   *
@@ -580,20 +583,39 @@ object MiniHdf5 {
       }
     }
 
-    /** Locate object `idx` in the global heap collection at `col`. */
+    /** Object offsets of each global heap collection this reader has
+      * touched, indexed by object id (0 = absent). Built in one pass on
+      * first use, so decoding n strings is linear, not a rescan of the
+      * collection per string. */
+    private val gheapIndex = scala.collection.mutable.HashMap[Long, Array[Int]]()
+
+    private def gheapOffsets(col: Long): Array[Int] =
+      gheapIndex.getOrElseUpdate(col, {
+        require(sig4(col, "GCOL"), s"bad global heap collection at $col")
+        val end = col + i64(col + 8)
+        // object ids are 16-bit: at most 65,535 objects per collection
+        val at = new Array[Int](65536)
+        var maxId = 0
+        var pos = col + 16
+        while (pos + 16 <= end) {
+          val objIdx = u16(pos)
+          if (objIdx == 0) pos = end // free space runs to collection end
+          else {
+            if (at(objIdx) == 0) at(objIdx) = pos.toInt // first wins
+            maxId = math.max(maxId, objIdx)
+            pos += 16 + ((i64(pos + 8) + 7) / 8) * 8
+          }
+        }
+        java.util.Arrays.copyOf(at, maxId + 1)
+      })
+
+    /** Object `idx` of the global heap collection at `col`. */
     private def gheapObject(col: Long, idx: Long, len: Int): Array[Byte] = {
-      require(sig4(col, "GCOL"), s"bad global heap collection at $col")
-      val end = col + i64(col + 8)
-      var pos = col + 16
-      while (pos + 16 <= end) {
-        val objIdx = u16(pos)
-        val objSize = i64(pos + 8)
-        if (objIdx == idx) return raw(pos + 16, len)
-        if (objIdx == 0) pos = end // free space runs to collection end
-        else pos += 16 + ((objSize + 7) / 8) * 8
-      }
-      throw new IllegalArgumentException(
-        s"global heap object $idx not found in collection at $col")
+      val at = gheapOffsets(col)
+      if (idx >= at.length || at(idx.toInt) == 0)
+        throw new IllegalArgumentException(
+          s"global heap object $idx not found in collection at $col")
+      raw(at(idx.toInt) + 16L, len)
     }
 
     override def close(): Unit = ch.close()

@@ -5,7 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 
 /** HDF5 writer: emits the same spec subset [[MiniHdf5]] reads
   * (superblock v0, v1 object headers, symbol-table groups, contiguous
-  * or chunked datasets, vlen strings via one global heap collection),
+  * or chunked datasets, vlen strings via global heap collections of at
+  * most 65,535 strings each),
   * byte-by-byte per the PUBLIC HDF5 format spec — no h5py/libhdf5
   * exists in this environment. Layout mirrors what h5py's
   * earliest-libver writer produces for the same content.
@@ -312,24 +313,29 @@ object MiniHdf5Writer {
   }
 
   /** Vlen-string dataset content: the (len, collectionAddr, index)
-    * elements plus one global heap collection holding the bytes. */
+    * elements plus the global heap collections holding the bytes. Object
+    * ids are 16-bit and id 0 marks free space, so the strings go into
+    * consecutive collections of at most 65,535 objects each. */
   private def vlenContent(b: Buf, strings: Seq[String]): Dset = {
-    val blobs = strings.map(_.getBytes("UTF-8"))
-    b.pad8()
-    val colAddr = b.pos
     def padded(n: Int) = ((n + 7) / 8) * 8
-    val colSize = 16L + blobs.map(x => 16 + padded(x.length)).sum + 16
-    b.ascii("GCOL"); b.u8(1); b.u8(0); b.u8(0); b.u8(0)
-    b.u64(colSize)
-    blobs.zipWithIndex.foreach { case (blob, i) =>
-      b.u16(i + 1); b.u16(1); b.u32(0)
-      b.u64(blob.length)
-      b.bytes(blob); b.pad8()
-    }
-    b.u16(0); b.u16(0); b.u32(0); b.u64(16) // free-space terminator
     val elems = new Buf
-    blobs.zipWithIndex.foreach { case (blob, i) =>
-      elems.u32(blob.length); elems.u64(colAddr); elems.u32(i + 1)
+    val all = strings.map(_.getBytes("UTF-8"))
+    // an empty dataset still gets its (empty) collection
+    (if (all.isEmpty) Iterator(all) else all.grouped(65535)).foreach { blobs =>
+      b.pad8()
+      val colAddr = b.pos
+      val colSize = 16L + blobs.map(x => 16 + padded(x.length)).sum + 16
+      b.ascii("GCOL"); b.u8(1); b.u8(0); b.u8(0); b.u8(0)
+      b.u64(colSize)
+      blobs.zipWithIndex.foreach { case (blob, i) =>
+        b.u16(i + 1); b.u16(1); b.u32(0)
+        b.u64(blob.length)
+        b.bytes(blob); b.pad8()
+      }
+      b.u16(0); b.u16(0); b.u32(0); b.u64(16) // free-space terminator
+      blobs.zipWithIndex.foreach { case (blob, i) =>
+        elems.u32(blob.length); elems.u64(colAddr); elems.u32(i + 1)
+      }
     }
     Dset(dtVlenStr, strings.size, elems.out.toByteArray)
   }

@@ -1,8 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Sources & sinks — SURVEY.md §2 A.1.
   *
@@ -12,13 +15,16 @@ import org.apache.spark.sql.types._
   *    100 TB, so the engine requires a `StructType` at every text source);
   *  - multiLine JSON documents (`bin/upload.py:26-28`);
   *  - the data product sink (`bin/concatenate.py:150-152` .h5mu + metadata
-  *    JSON): modality/dataset-partitioned parquet + a one-row JSON sidecar
-  *    carrying uuid/creation-time/counts — partition columns give
+  *    JSON): modality/dataset-partitioned parquet + a one-line JSON
+  *    sidecar carrying uuid/creation-time/counts/schema — partition columns give
   *    partition pruning on every downstream read, and the sidecar is the
   *    `uns` dict analog (SURVEY §1.4). Writing to `s3a://` URIs is the
   *    same call — no separate upload step (`bin/upload.py:14-22`).
   */
 object ProductSink {
+
+  private val PartitionCols = Seq("modality", "dataset")
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Explicit-schema TSV source (scan_tsv_typed). */
   def readTsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
@@ -58,40 +64,87 @@ object ProductSink {
     spark.read.orc(path)
 
   /** Write a multimodal data product: fact rows partitioned by
-    * (modality, dataset) + metadata JSON sidecar. Mirrors
-    * `bin/concatenate.py:81-96,140-152`: product uuid, creation time,
-    * dataset list, total cell count. The non-deterministic fields
-    * (uuid(), current_timestamp()) live only here — never in
-    * oracle-checked query output (SURVEY §7.4.1). The counts are read
-    * from the written files, so an uncached `fact` is computed once.
+    * (modality, dataset) under `$outDir/fact`, plus a one-line JSON
+    * sidecar at `$outDir/metadata/part-00000.json` (readable with
+    * `spark.read.json(s"$outDir/metadata")`). Mirrors
+    * `bin/concatenate.py:81-96,140-152`. The sidecar fields:
+    *  - `n_rows`, `total_cell_count` (`countDistinct(cell_id)`): one
+    *    hash aggregate over the written `cell_id` column, so an uncached
+    *    `fact` is computed once;
+    *  - `datasets`: the sorted, unescaped ids of the written `dataset=`
+    *    directories, without the default (null) partition;
+    *  - `raw_file_size_bytes`: the written fact's size on the FileSystem;
+    *  - `product_uuid`, `creation_time`: made on the driver — the only
+    *    non-deterministic fields, never in oracle-checked query output
+    *    (SURVEY §7.4.1);
+    *  - `schema`: the product schema as Spark JSON, in the order
+    *    [[readProduct]] returns it (data columns, then `modality` and
+    *    `dataset` as strings).
+    * The sidecar is written through the Hadoop FileSystem: no Spark job.
     */
   def writeProduct(fact: DataFrame, outDir: String): Unit = {
     fact.write.mode(SaveMode.Overwrite)
-      .partitionBy("modality", "dataset")
+      .partitionBy(PartitionCols: _*)
       .parquet(s"$outDir/fact")
 
     // fs_file_size (bin/concatenate.py:151): product size via the Hadoop
     // FileSystem API — works identically against s3a:// at scale.
     val spark = fact.sparkSession
-    val factPath = new org.apache.hadoop.fs.Path(s"$outDir/fact")
+    val factPath = new Path(s"$outDir/fact")
     val fs = factPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val byteSize = fs.getContentSummary(factPath).getLength
 
-    val meta = readFact(spark, outDir, fact.select("cell_id", "dataset").schema).agg(
-      count(lit(1)).as("n_rows"),
-      countDistinct(col("cell_id")).as("total_cell_count"),
-      sort_array(collect_set(col("dataset"))).as("datasets"))
-      .withColumn("raw_file_size_bytes", lit(byteSize))
-      .withColumn("product_uuid", expr("uuid()"))
-      .withColumn("creation_time", date_format(current_timestamp(),
-        "yyyy-MM-dd HH:mm:ss"))
-    meta.coalesce(1).write.mode(SaveMode.Overwrite).json(s"$outDir/metadata")
+    val counts = readFact(spark, outDir, StructType(Seq(fact.schema("cell_id"))))
+      .agg(count(lit(1)), countDistinct(col("cell_id"))).head()
+    // collect_set skipped null datasets: so does skipping the default
+    // partition; UTF8String order is sort_array's
+    val datasets = fs.listStatus(factPath)
+      .filter(m => m.isDirectory && m.getPath.getName.startsWith("modality="))
+      .flatMap(m => fs.listStatus(m.getPath))
+      .map(_.getPath.getName)
+      .filter(_.startsWith("dataset="))
+      .map(d => ExternalCatalogUtils.unescapePathName(d.stripPrefix("dataset=")))
+      .filter(_ != ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+      .distinct.sortBy(UTF8String.fromString)
+    val schema = StructType(
+      fact.schema.filterNot(f => PartitionCols.contains(f.name)).map(_.copy(nullable = true)) ++
+        PartitionCols.map(StructField(_, StringType)))
+    val tz = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+
+    val meta = Json.createObjectNode()
+    meta.put("n_rows", counts.getLong(0))
+    meta.put("total_cell_count", counts.getLong(1))
+    val ds = meta.putArray("datasets")
+    datasets.foreach(d => ds.add(d))
+    meta.put("raw_file_size_bytes", byteSize)
+    meta.put("product_uuid", java.util.UUID.randomUUID().toString)
+    meta.put("creation_time", java.time.LocalDateTime.now(tz)
+      .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")))
+    meta.put("schema", schema.json)
+    val metaDir = new Path(s"$outDir/metadata")
+    fs.delete(metaDir, true)
+    val out = fs.create(new Path(metaDir, "part-00000.json"), true)
+    try out.write((Json.writeValueAsString(meta) + "\n").getBytes("UTF-8"))
+    finally out.close()
   }
 
-  /** Read a written product back with partition pruning available on
-    * modality/dataset. */
-  def readProduct(spark: SparkSession, outDir: String): DataFrame =
-    readFact(spark, outDir, spark.read.parquet(s"$outDir/fact").schema)
+  /** Read a written product back, with partition pruning available on
+    * modality/dataset. The schema comes from the sidecar's `schema`
+    * field, so no Spark job starts; a sidecar without it (a product
+    * written before the field existed) fails, naming the field. */
+  def readProduct(spark: SparkSession, outDir: String): DataFrame = {
+    val metaDir = new Path(s"$outDir/metadata")
+    val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sidecar = Option(fs.globStatus(new Path(metaDir, "*.json")))
+      .flatMap(_.headOption).map(_.getPath).getOrElse(
+        throw new java.io.FileNotFoundException(s"no product sidecar in $metaDir"))
+    val in = fs.open(sidecar)
+    val meta = try Json.readTree(in) finally in.close()
+    val schema = Option(meta.get("schema")).getOrElse(
+      throw new IllegalArgumentException(s"product sidecar $sidecar has no " +
+        "`schema` field; rewrite the product with writeProduct"))
+    readFact(spark, outDir, DataType.fromJson(schema.asText).asInstanceOf[StructType])
+  }
 
   /** The written fact in `schema`'s columns and order, with no inference
     * job; partition columns stay the strings written (inference reads
@@ -99,7 +152,7 @@ object ProductSink {
   private[graft] def readFact(spark: SparkSession, outDir: String,
       schema: StructType): DataFrame =
     spark.read.schema(StructType(schema.map(f =>
-        if (Set("modality", "dataset")(f.name)) f.copy(dataType = StringType) else f)))
+        if (PartitionCols.contains(f.name)) f.copy(dataType = StringType) else f)))
       .parquet(s"$outDir/fact").select(schema.fieldNames.map(col).toIndexedSeq: _*)
 
   /** Incremental refresh of ONLY the partitions present in `delta`

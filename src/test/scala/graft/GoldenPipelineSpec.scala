@@ -1,9 +1,14 @@
 package graft
 
 import graft.sources.{EsResponse, ProductSink}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Golden end-to-end tests (SURVEY.md §5.2 item 3): the reference's three
   * entry points exercised through the engine's source→transform→sink path
@@ -435,6 +440,97 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(built.schema("dataset").dataType === StringType)
     assert(built.select("dataset").distinct().as[String].collect().sorted.toSeq ===
       Seq("0123", "0456"))
+  }
+
+  test("product readback starts no job; the sidecar runs one hash aggregate and no write") {
+    val fact = Seq(
+      ("d1-c1", "d1", "f1", 1.0, "cell_by_bin"),
+      ("d1-c1", "d1", "g1", 5.0, "cell_by_gene"),
+      ("d2-c1", "d2", "f1", 3.0, "cell_by_bin"))
+      .toDF("cell_id", "dataset", "feature_id", "value", "modality")
+    val out = s"$tmp/jobless"
+    val sc = spark.sparkContext
+
+    // every query writeProduct executes: no object or sort-based
+    // aggregate, and the only write is the fact
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val ql = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = executed.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = executed.add(qe)
+    }
+    spark.listenerManager.register(ql)
+    try {
+      ProductSink.writeProduct(fact, out)
+      org.apache.spark.GraftBusDrain.drain(sc)
+    } finally spark.listenerManager.unregister(ql)
+    val qes = executed.asScala.toSeq
+    assert(qes.exists(_.executedPlan.toString.contains("HashAggregate")))
+    qes.foreach { qe =>
+      val plan = qe.executedPlan.toString
+      assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"), plan)
+    }
+    val written = qes.flatMap(_.logical.collect {
+      case w: InsertIntoHadoopFsRelationCommand => w.outputPath.getName })
+    assert(written.nonEmpty && written.forall(_ == "fact"), written)
+
+    // the readback takes its schema from the sidecar: zero jobs
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(jl)
+    val (jobsToRead, back, jobsToCount) = try {
+      val back = ProductSink.readProduct(spark, out)
+      org.apache.spark.GraftBusDrain.drain(sc)
+      val read = jobs.get()
+      assert(back.count() === 3)
+      org.apache.spark.GraftBusDrain.drain(sc)
+      (read, back, jobs.get() - read)
+    } finally sc.removeSparkListener(jl)
+    assert(jobsToRead === 0)
+    assert(jobsToCount > 0) // the listener sees this session's jobs
+    // same columns, order and types as an inferred read of the fact
+    assert(back.schema ===
+      ProductSink.readFact(spark, out, spark.read.parquet(s"$out/fact").schema).schema)
+
+    // a sidecar without `schema` fails, naming the field
+    val sidecar = Paths.get(s"$out/metadata/part-00000.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val meta = mapper.readTree(Files.readAllBytes(sidecar))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(meta.has("schema"))
+    meta.remove("schema")
+    Files.write(sidecar, (mapper.writeValueAsString(meta) + "\n").getBytes("UTF-8"))
+    Files.deleteIfExists(sidecar.resolveSibling(".part-00000.json.crc"))
+    val e = intercept[IllegalArgumentException](ProductSink.readProduct(spark, out))
+    assert(e.getMessage.contains("`schema`"), e.getMessage)
+  }
+
+  test("sidecar datasets: [] for an empty product, the non-null ids otherwise") {
+    val cols = Seq("cell_id", "dataset", "feature_id", "value", "modality")
+    val empty = Seq.empty[(String, String, String, Double, String)].toDF(cols: _*)
+    ProductSink.writeProduct(empty, s"$tmp/empty")
+    val e = spark.read.json(s"$tmp/empty/metadata")
+      .select("n_rows", "total_cell_count", "datasets").head()
+    assert(e.getLong(0) === 0L && e.getLong(1) === 0L)
+    assert(e.getSeq[String](2) === Seq.empty)
+    assert(ProductSink.readProduct(spark, s"$tmp/empty").count() === 0)
+
+    // a null dataset lands in the default partition and is not listed;
+    // an escaped directory name lists as the id written
+    val fact = Seq(
+      ("c1", "d2", "f1", 1.0, "m1"),
+      ("c2", null, "f1", 2.0, "m1"),
+      ("c3", "d:1", "f1", 3.0, "m2"),
+      ("c1", "d2", "g1", 4.0, "m2"))
+      .toDF(cols: _*)
+    ProductSink.writeProduct(fact, s"$tmp/nulls")
+    val m = spark.read.json(s"$tmp/nulls/metadata")
+      .select("n_rows", "total_cell_count", "datasets").head()
+    assert(m.getLong(0) === 4L && m.getLong(1) === 3L)
+    assert(m.getSeq[String](2) === Seq("d2", "d:1")) // sort_array order
+    assert(ProductSink.readProduct(spark, s"$tmp/nulls")
+      .filter($"dataset".isNull).count() === 1)
   }
 
   test("dynamic partition overwrite refreshes only the delta's partitions") {

@@ -58,6 +58,45 @@ class H5adSpec extends SparkSpec {
     } finally n.close()
   }
 
+  test("vlen strings past 65,535 span several heap collections and read back") {
+    // object ids are 16-bit: one collection holds at most 65,535 strings
+    val d = java.nio.file.Files.createTempDirectory("graft-h5-vlen").toString
+    val names = (0 until 70000).map(i => f"cell-$i%06d")
+    MiniHdf5Writer.writeH5ad(s"$d/many.h5ad", obsNames = names,
+      varNames = Seq("f1"), data = Array.empty[Double],
+      indices = Array.empty[Long], indptr = new Array[Long](names.size + 1))
+    val r = new MiniHdf5.Reader(s"$d/many.h5ad")
+    try assert(r.readStrings("obs/_index").toSeq === names)
+    finally r.close()
+
+    // an element naming an object id its collection lacks fails by name;
+    // so does one pointing at something that is not a collection
+    MiniHdf5Writer.writeH5ad(s"$d/ids.h5ad", obsNames = Seq("a", "bb", "ccc"),
+      varNames = Seq("f1"), data = Array.empty[Double],
+      indices = Array.empty[Long], indptr = new Array[Long](4))
+    val orig = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$d/ids.h5ad"))
+    // "bb": length 2, collection at 96 (right after the superblock), id 2
+    val elem = java.nio.ByteBuffer.allocate(16).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      .putInt(2).putLong(96L).putInt(2).array()
+    val at = orig.indexOfSlice(elem)
+    assert(at > 0 && orig.lastIndexOfSlice(elem) == at)
+    def patched(name: String)(edit: java.nio.ByteBuffer => Unit): String = {
+      val b = orig.clone()
+      edit(java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$d/$name"), b)
+      s"$d/$name"
+    }
+    def decodeError(path: String): String = {
+      val r = new MiniHdf5.Reader(path)
+      try intercept[IllegalArgumentException](r.readStrings("obs/_index")).getMessage
+      finally r.close()
+    }
+    val missing = decodeError(patched("missing.h5ad")(_.putInt(at + 12, 9)))
+    assert(missing.contains("global heap object 9 not found in collection at 96"), missing)
+    val notCol = decodeError(patched("notcol.h5ad")(_.putLong(at + 4, 0L)))
+    assert(notCol.contains("bad global heap collection at 0"), notCol)
+  }
+
   test("readTriplets expands CSR to long form with AnnData sparse semantics") {
     val t = H5ad.readTriplets(files.head).toSeq
     assert(t.map(x => (x.cell_id, x.feature_id, x.value)) === Seq(
