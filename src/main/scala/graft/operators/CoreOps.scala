@@ -68,21 +68,20 @@ object CoreOps {
     // dataset) round-tripped under the oracle — a user×event_type
     // value matrix derived DECIMAL-exactly from `events`, written as
     // chunked+deflate HDF5 (graft.sources.MiniHdf5Writer), read back
-    // by the pure-JVM MiniHdf5/H5ad.scan path, and aggregated. The
-    // DuckDB oracle replays the matrix derivation from the parquet
-    // original, so a single corrupted f64 bit, dropped nonzero, or
-    // mis-ordered indptr in EITHER the writer or the reader fails the
-    // hash. One task per file by format; at scale ingest parallelism
-    // is across dataset files (H5ad.scan), then parquet forever.
-    "scan_h5ad_roundtrip" -> ((s, d) => {
-      val path = graft.sources.PartitionedData.eventsH5adLanding(s, d)
-      graft.sources.H5ad.scan(s,
-        Seq(graft.sources.H5ad.H5adInput(path, "events", "rna")))
+    // through `format("h5ad")` (the one h5ad reader, H5adRelation),
+    // and aggregated. The DuckDB oracle replays the matrix derivation
+    // from the parquet original, so a single corrupted f64 bit, dropped
+    // nonzero, or mis-ordered indptr in EITHER the writer or the reader
+    // fails the hash. One task per file by format; at scale ingest
+    // parallelism is across dataset files, then parquet forever.
+    "scan_h5ad_roundtrip" -> ((s, d) =>
+      s.read.format("h5ad").option("dataset", "events")
+        .option("modality", "rna")
+        .load(graft.sources.PartitionedData.eventsH5adLanding(s, d))
         .groupBy("feature_id")
         .agg(count(lit(1)).as("n_cells"),
           U.dsum(col("value")).as("sum_value"))
-        .orderBy("feature_id")
-    }),
+        .orderBy("feature_id")),
 
     // Permissive CSV ingest (scan_csv_permissive): the landing-zone
     // read real feeds need — a garbage line must quarantine into the

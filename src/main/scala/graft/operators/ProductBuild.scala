@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * broadcasts the dim; the write is partitioned by (modality, dataset)
   * for downstream partition pruning. [[Pipeline.flagship]] intersects
   * with a key-set semi-join instead: its key branch prunes parquet
-  * columns, which an h5ad scan cannot.
+  * columns, while an h5ad scan decodes every array of its file.
   */
 object ProductBuild {
 
@@ -43,11 +43,11 @@ object ProductBuild {
         .withColumn("modality", lit(name))
     }
     val fact = tagged.reduce(_ unionByName _)
-    // One window, not a key-set semi-join: an h5ad scan cannot prune
-    // columns, so a key branch would decode every file twice. A window
-    // groups null keys together, so a null-keyed "cell" (unparseable
-    // barcode) survives when its group spans all modalities: dropping
-    // it is a QC decision, not an intersect artifact.
+    // One window, not a key-set semi-join: an h5ad scan decodes every
+    // array whatever its projection, so a key branch would decode every
+    // file twice. A window groups null keys together, so a null-keyed
+    // "cell" (unparseable barcode) survives when its group spans all
+    // modalities: dropping it is a QC decision, not an intersect artifact.
     val cell = Window.partitionBy("dataset", "cell_id")
     fact.withColumn("__nmod", size(collect_set(col("modality")).over(cell)))
       .filter(col("__nmod") === modalities.size)

@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** h5ad (AnnData-on-HDF5) ingestion — the reference's actual input format
   * (`/root/reference/bin/concatenate.py:62` `anndata.read_h5ad`,
@@ -11,11 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * barcodes), `var/_index` (feature names) — via [[MiniHdf5]] (pure JVM,
   * no native HDF5) — and emits the engine's long form (SURVEY.md §1.4:
   * one row per nonzero, absent entry = 0, exactly AnnData sparse
-  * semantics): (cell_id, dataset, feature_id, value).
+  * semantics): (cell_id, dataset, feature_id, value, modality).
+  *
+  * [[H5adRelation]] is the one reader: `spark.read.format("h5ad")`
+  * ([[H5adDataSource]]) and [[scanModalities]] both scan through it.
   *
   * Scale shape: an HDF5 file is not splittable, so parallelism is one
-  * task PER FILE ([[scan]]), which matches the reference's per-dataset
-  * file layout — 10k datasets = 10k-way parallel ingest. Convert once to
+  * task PER FILE, which matches the reference's per-dataset file
+  * layout — 10k datasets = 10k-way parallel ingest. Convert once to
   * parquet ([[ProductSink]]), query forever; the h5ad path is the ingest
   * boundary, not the query path.
   */
@@ -25,14 +34,22 @@ object H5ad {
     * which modality its matrix carries. */
   final case class H5adInput(path: String, dataset: String, modality: String)
 
-  /** One nonzero of the cell×feature matrix, engine long form. */
-  final case class CellFeature(cell_id: String, dataset: String,
-      feature_id: String, value: Double, modality: String)
+  /** The long form, one row per nonzero of the cell×feature matrix; a
+    * stored value is never null. */
+  val Schema: StructType = StructType(Seq(
+    StructField("cell_id", StringType),
+    StructField("dataset", StringType),
+    StructField("feature_id", StringType),
+    StructField("value", DoubleType, nullable = false),
+    StructField("modality", StringType)))
 
-  /** Pure-JVM triplet read of one CSR h5ad — runs wherever the file is
-    * readable (driver or executor task). Arrays materialize in memory
-    * (the per-file cost the format imposes); rows stream out lazily. */
-  def readTriplets(file: H5adInput): Iterator[CellFeature] = {
+  /** Pure-JVM read of one CSR h5ad into long-form rows of `columns` (a
+    * subset of [[Schema]], in any order) — runs wherever the file is
+    * readable (driver or executor task). Every array materializes in
+    * memory whatever the projection (the per-file cost the format
+    * imposes); names become `UTF8String`s once per file and rows stream
+    * out lazily. */
+  def rows(file: H5adInput, columns: Seq[String]): Iterator[InternalRow] = {
     val r = new MiniHdf5.Reader(file.path)
     try {
       val obs = r.readStrings(indexPath(r, "obs"))
@@ -60,10 +77,20 @@ object H5ad {
       }
       require(indices.forall(i => i >= 0 && i < vars.length),
         s"${file.path}: column index out of range [0, ${vars.length})")
-      obs.indices.iterator.flatMap { row =>
-        (indptr(row) until indptr(row + 1)).iterator.map { k =>
-          CellFeature(obs(row), file.dataset,
-            vars(indices(k.toInt).toInt), data(k.toInt), file.modality)
+      val cells = obs.map(UTF8String.fromString)
+      val features = vars.map(UTF8String.fromString)
+      val dataset = UTF8String.fromString(file.dataset)
+      val modality = UTF8String.fromString(file.modality)
+      val fields = columns.map(Schema.fieldIndex).toArray
+      Iterator.range(0, cells.length).flatMap { row =>
+        Iterator.range(indptr(row).toInt, indptr(row + 1).toInt).map { k =>
+          new GenericInternalRow(fields.map[Any] { // positions in Schema
+            case 0 => cells(row)
+            case 1 => dataset
+            case 2 => features(indices(k).toInt)
+            case 3 => data(k)
+            case _ => modality
+          }): InternalRow
         }
       }
     } finally r.close() // data already materialized into arrays
@@ -80,29 +107,39 @@ object H5ad {
     s"$group/$idx"
   }
 
-  /** Distributed ingest: one task per file. Each file must be at a
-    * local or shared POSIX path that every executor can open: the reader
-    * memory-maps a `java.nio` path, so object-store URIs (`s3a://`) are
-    * not readable here. Returns the long-form fact
-    * across all inputs, ready for [[graft.operators.ProductBuild]]. */
-  def scan(spark: SparkSession, files: Seq[H5adInput]): DataFrame = {
-    import spark.implicits._
-    require(files.nonEmpty, "no h5ad inputs")
-    // parallelize with numSlices = nFiles gives EXACTLY one file per
-    // partition (contiguous slicing); a round-robin repartition can land
-    // two files in one task and zero in another, doubling stage wall.
-    spark.createDataset(
-      spark.sparkContext.parallelize(files, files.size))
-      .flatMap(readTriplets _)
-      .toDF()
+  /** Ingest grouped by modality — the shape [[graft.operators
+    * .ProductBuild.build]] consumes, without the `modality` column. Lazy:
+    * no job starts here; an action decodes each file in one task. */
+  def scanModalities(spark: SparkSession,
+      files: Seq[H5adInput]): Map[String, DataFrame] = {
+    val schema = StructType(Schema.filterNot(_.name == "modality"))
+    files.groupBy(_.modality).map { case (m, fs) =>
+      m -> spark.baseRelationToDataFrame(H5adRelation(spark.sqlContext, fs, schema))
+    }
+  }
+}
+
+/** The one h5ad scan: one task per file, decoding it straight to rows
+  * of `schema` (a subset of [[H5ad.Schema]]). Each file must be at a
+  * local or shared POSIX path that every executor can open: the reader
+  * memory-maps a `java.nio` path, so `s3a://` URIs are not readable. */
+case class H5adRelation(sqlContext: SQLContext, inputs: Seq[H5ad.H5adInput],
+    schema: StructType) extends BaseRelation with TableScan {
+  require(inputs.nonEmpty, "no h5ad inputs")
+
+  override def needConversion: Boolean = false
+
+  // numSlices = nFiles gives EXACTLY one file per partition (contiguous
+  // slicing); a round-robin repartition can land two files in one task
+  // and zero in another, doubling stage wall.
+  override def buildScan(): RDD[Row] = {
+    val columns = schema.fieldNames.toSeq
+    sqlContext.sparkContext.parallelize(inputs, inputs.size)
+      .flatMap(H5ad.rows(_, columns))
+      .asInstanceOf[RDD[Row]] // InternalRows, as needConversion = false says
   }
 
-  /** Ingest grouped by modality — the shape [[graft.operators
-    * .ProductBuild.build]] consumes. Lazy: no job starts here; an action
-    * decodes each file in one task. */
-  def scanModalities(spark: SparkSession,
-      files: Seq[H5adInput]): Map[String, DataFrame] =
-    files.groupBy(_.modality).map { case (m, fs) =>
-      m -> scan(spark, fs).drop("modality")
-    }
+  // the scan node's name in plans
+  override def toString: String =
+    s"h5ad ${inputs.size} files, columns [${schema.fieldNames.mkString(", ")}]"
 }

@@ -1,20 +1,21 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
 import java.util
-import org.apache.spark.sql.catalyst.InternalRow
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SQLContext
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 front door for h5ad ingestion — the SURVEY §4.3 stretch
-  * goal: `spark.read.format("h5ad").load(paths...)` yields the engine
-  * long form directly, one input partition per file (HDF5 is not
-  * splittable; the per-dataset file layout IS the parallelism, exactly
-  * as in [[H5ad.scan]]).
+/** `spark.read.format("h5ad").load(paths...)`: the engine long form
+  * ([[H5ad.Schema]]) read through [[H5adRelation]], one task per file
+  * (HDF5 is not splittable; the per-dataset file layout IS the
+  * parallelism).
   *
   * Per-file identity follows the reference layout
   * (`<dataset-uuid>/cell_by_bin.h5ad`, `bin/concatenate.py:62`):
@@ -23,15 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * one (dataset, modality) at a time.
   *
   * Column pruning is pushed into the reader ([[SupportsPushDownRequiredColumns]]):
-  * a metadata-only projection (e.g. `dataset`, `modality` counts) never
-  * materializes the value triplets' strings. Filters are left to Spark —
-  * an HDF5 file offers no sub-file pushdown anyway.
+  * the scan emits only the requested columns, though it still decodes
+  * every array of every file (the CSR checks need them all). Filters are
+  * left to Spark — an HDF5 file offers no sub-file pushdown anyway.
   */
 class H5adDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "h5ad"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    H5adDataSource.Schema
+    H5ad.Schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table =
@@ -40,13 +41,6 @@ class H5adDataSource extends TableProvider with DataSourceRegister {
 }
 
 object H5adDataSource {
-  val Schema: StructType = StructType(Seq(
-    StructField("cell_id", StringType),
-    StructField("dataset", StringType),
-    StructField("feature_id", StringType),
-    StructField("value", DoubleType),
-    StructField("modality", StringType)))
-
   /** Expand `path`/`paths` options (files or directories of `*.h5ad`,
     * walked with `java.nio`, so local or shared POSIX paths only) into
     * per-file inputs with derived (dataset, modality) identity. */
@@ -65,24 +59,17 @@ object H5adDataSource {
       }.getOrElse(Option(options.get("path")).toSeq)
     require(raw.nonEmpty, "h5ad source needs load(path, ...)")
     val files = raw.flatMap { p =>
-      val path = java.nio.file.Paths.get(p)
-      if (java.nio.file.Files.isDirectory(path)) {
-        val s = java.nio.file.Files.walk(path)
-        try {
-          val it = s.iterator()
-          val out = scala.collection.mutable.ArrayBuffer[String]()
-          while (it.hasNext) {
-            val f = it.next()
-            if (java.nio.file.Files.isRegularFile(f) &&
-              f.toString.endsWith(".h5ad")) out += f.toString
-          }
-          out.toSeq
-        } finally s.close()
+      val path = Paths.get(p)
+      if (Files.isDirectory(path)) {
+        val s = Files.walk(path)
+        try s.iterator().asScala.filter(f => Files.isRegularFile(f) &&
+          f.toString.endsWith(".h5ad")).map(_.toString).toList
+        finally s.close()
       } else Seq(p)
     }.sorted
     require(files.nonEmpty, s"no .h5ad files under ${raw.mkString(", ")}")
     files.map { f =>
-      val path = java.nio.file.Paths.get(f)
+      val path = Paths.get(f)
       val stem = path.getFileName.toString.stripSuffix(".h5ad")
       val parent = Option(path.getParent).map(_.getFileName.toString)
         .getOrElse("")
@@ -95,7 +82,7 @@ object H5adDataSource {
 
 class H5adTable(inputs: Seq[H5ad.H5adInput]) extends Table with SupportsRead {
   override def name(): String = s"h5ad(${inputs.size} files)"
-  override def schema(): StructType = H5adDataSource.Schema
+  override def schema(): StructType = H5ad.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
@@ -104,43 +91,18 @@ class H5adTable(inputs: Seq[H5ad.H5adInput]) extends Table with SupportsRead {
 
 class H5adScanBuilder(inputs: Seq[H5ad.H5adInput])
     extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = H5adDataSource.Schema
+  private var required: StructType = H5ad.Schema
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
   override def build(): Scan = new H5adScan(inputs, required)
 }
 
-case class H5adFilePartition(input: H5ad.H5adInput) extends InputPartition
-
+/** Plans as [[H5adRelation]], so the decode RDD is created by the one
+  * reader, not by Spark's DSv2 scan at the action's call site. */
 class H5adScan(inputs: Seq[H5ad.H5adInput], required: StructType)
-    extends Scan with Batch {
+    extends V1Scan {
   override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"h5ad ${inputs.size} files, columns [${required.fieldNames.mkString(", ")}]"
-  override def planInputPartitions(): Array[InputPartition] =
-    inputs.map(H5adFilePartition(_): InputPartition).toArray
-  override def createReaderFactory(): PartitionReaderFactory =
-    new H5adReaderFactory(required.fieldNames)
-}
-
-class H5adReaderFactory(columns: Array[String])
-    extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val input = p.asInstanceOf[H5adFilePartition].input
-    new PartitionReader[InternalRow] {
-      private val it = H5ad.readTriplets(input)
-      private var cur: H5ad.CellFeature = _
-      override def next(): Boolean = { val h = it.hasNext; if (h) cur = it.next(); h }
-      override def get(): InternalRow =
-        InternalRow.fromSeq(columns.toIndexedSeq.map {
-          case "cell_id" => UTF8String.fromString(cur.cell_id)
-          case "dataset" => UTF8String.fromString(cur.dataset)
-          case "feature_id" => UTF8String.fromString(cur.feature_id)
-          case "value" => cur.value
-          case "modality" => UTF8String.fromString(cur.modality)
-        })
-      override def close(): Unit = ()
-    }
-  }
+  override def toV1TableScan[T <: BaseRelation with TableScan](
+      context: SQLContext): T =
+    H5adRelation(context, inputs, required).asInstanceOf[T]
 }

@@ -41,8 +41,8 @@ import java.nio.file.{Paths, StandardOpenOption}
   * `libver='earliest'` — or extend exactly one branch per feature below.
   *
   * Scale shape: HDF5 is not splittable — parallelism comes from MANY
-  * files, one task each (see [[H5ad.scan]]), which matches the
-  * reference's per-dataset file layout.
+  * files, one task each (see [[H5adRelation]], the one caller), which
+  * matches the reference's per-dataset file layout.
   */
 object MiniHdf5 {
 
@@ -165,11 +165,16 @@ object MiniHdf5 {
 
   final class Reader(path: String) extends AutoCloseable {
     private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)
-    require(ch.size() <= Int.MaxValue,
-      s"$path is ${ch.size()} bytes; this subset reader memory-maps once " +
-        "(2 GiB limit) — split the file or extend to windowed maps")
-    private val buf = ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
-    buf.order(ByteOrder.LITTLE_ENDIAN)
+    // a file rejected while constructing never reaches the caller's close()
+    private def orClose[T](step: => T): T =
+      try step catch { case e: Throwable => ch.close(); throw e }
+    private val buf = orClose {
+      require(ch.size() <= Int.MaxValue,
+        s"$path is ${ch.size()} bytes; this subset reader memory-maps once " +
+          "(2 GiB limit) — split the file or extend to windowed maps")
+      ch.map(FileChannel.MapMode.READ_ONLY, 0, ch.size())
+        .order(ByteOrder.LITTLE_ENDIAN)
+    }
 
     private def u8(pos: Long): Int = buf.get(pos.toInt) & 0xff
     private def u16(pos: Long): Int = buf.getShort(pos.toInt) & 0xffff
@@ -183,17 +188,19 @@ object MiniHdf5 {
       raw(pos, 4).sameElements(s.getBytes("US-ASCII"))
 
     // ---- superblock (v0) ----
-    require(raw(0, 8).sameElements(
-      Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)),
-      s"$path is not an HDF5 file")
-    require(u8(8) == 0,
-      s"superblock v${u8(8)} unsupported (subset reader covers v0; " +
-        "re-write with libver='earliest')")
-    require(u8(13) == 8 && u8(14) == 8,
-      "only 8-byte offsets/lengths supported")
     // v0 tail: base(8)@24 free(8)@32 eof(8)@40 driver(8)@48, then the
     // root symbol-table entry: name-offset(8)@56, object header addr @64
-    private val rootAddr = i64(64)
+    private val rootAddr = orClose {
+      require(raw(0, 8).sameElements(
+        Array(0x89, 'H', 'D', 'F', '\r', '\n', 0x1a, '\n').map(_.toByte)),
+        s"$path is not an HDF5 file")
+      require(u8(8) == 0,
+        s"superblock v${u8(8)} unsupported (subset reader covers v0; " +
+          "re-write with libver='earliest')")
+      require(u8(13) == 8 && u8(14) == 8,
+        "only 8-byte offsets/lengths supported")
+      i64(64)
+    }
 
     // ---- object headers (v1) ----
     private case class Msg(typ: Int, bodyPos: Long, size: Int)

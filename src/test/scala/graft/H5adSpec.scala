@@ -1,12 +1,12 @@
 package graft
 
-import graft.sources.{H5ad, MiniHdf5, MiniHdf5Writer}
+import graft.sources.{H5ad, H5adRelation, MiniHdf5, MiniHdf5Writer}
 import graft.sources.H5ad.H5adInput
 
 /** End-to-end h5ad ingestion: miniature CSR h5ad files written per the
   * public HDF5 spec (MiniHdf5Writer) → [[MiniHdf5]] reader →
-  * [[H5ad.scan]] long form → `ProductBuild.build` — closing the loop the
-  * reference's users start from (`bin/concatenate.py:62` reads a
+  * [[H5adRelation]] long form → `ProductBuild.build` — closing the loop
+  * the reference's users start from (`bin/concatenate.py:62` reads a
   * cell_by_bin/cell_by_gene h5ad pair per dataset).
   */
 class H5adSpec extends SparkSpec {
@@ -37,6 +37,13 @@ class H5adSpec extends SparkSpec {
       H5adInput(s"$dir/B_bin.h5ad", "uuid-B", "cell_by_bin"),
       H5adInput(s"$dir/B_gene.h5ad", "uuid-B", "cell_by_gene"))
   }
+
+  /** One file's full long form, as plain tuples in file order. */
+  private def longForm(f: H5adInput): Seq[(String, String, String, Double, String)] =
+    H5ad.rows(f, H5ad.Schema.fieldNames.toSeq).map(r =>
+      (r.getUTF8String(0).toString, r.getUTF8String(1).toString,
+        r.getUTF8String(2).toString, r.getDouble(3), r.getUTF8String(4).toString))
+      .toSeq
 
   test("MiniHdf5 reads back groups, numeric widths and vlen strings") {
     files // force fixture write
@@ -97,12 +104,16 @@ class H5adSpec extends SparkSpec {
     assert(notCol.contains("bad global heap collection at 0"), notCol)
   }
 
-  test("readTriplets expands CSR to long form with AnnData sparse semantics") {
-    val t = H5ad.readTriplets(files.head).toSeq
-    assert(t.map(x => (x.cell_id, x.feature_id, x.value)) === Seq(
+  test("H5ad.rows expands CSR to long form with AnnData sparse semantics") {
+    val t = longForm(files.head)
+    assert(t.map(x => (x._1, x._3, x._4)) === Seq(
       ("c1", "bin1", 1.0), ("c1", "bin2", 2.0),
       ("c2", "bin1", 3.0), ("c3", "bin2", 4.0)))
-    assert(t.forall(x => x.dataset == "uuid-A" && x.modality == "cell_by_bin"))
+    assert(t.forall(x => x._2 == "uuid-A" && x._5 == "cell_by_bin"))
+    // a projection emits only the requested columns, in request order
+    val p = H5ad.rows(files.head, Seq("value", "cell_id")).toSeq
+    assert(p.map(r => (r.numFields, r.getDouble(0), r.getUTF8String(1).toString)) ===
+      Seq((2, 1.0, "c1"), (2, 2.0, "c1"), (2, 3.0, "c2"), (2, 4.0, "c3")))
   }
 
   test("distributed scan + ProductBuild: h5ad pair to data product, end to end") {
@@ -134,7 +145,7 @@ class H5adSpec extends SparkSpec {
   }
 
   test("intersect decodes each h5ad file once: one scan per modality, no join") {
-    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.{RowDataSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val modalities = H5ad.scanModalities(spark, files)
@@ -147,9 +158,11 @@ class H5adSpec extends SparkSpec {
       case other => other +: other.children.flatMap(flatten)
     }
     val nodes = flatten(out.queryExecution.executedPlan)
-    // the h5ad decode is the scan's flatMap (readTriplets)
-    assert(nodes.count(_.isInstanceOf[MapPartitionsExec]) === modalities.size,
-      out.queryExecution.executedPlan.toString)
+    // the h5ad decode is the relation's scan
+    assert(nodes.count {
+      case s: RowDataSourceScanExec => s.relation.isInstanceOf[H5adRelation]
+      case _ => false
+    } === modalities.size, out.queryExecution.executedPlan.toString)
     assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
       out.queryExecution.executedPlan.toString)
   }
@@ -194,6 +207,86 @@ class H5adSpec extends SparkSpec {
     assert(flat.count() === 4)
   }
 
+  test("format(\"h5ad\") and scanModalities read through one relation: " +
+    "same rows, one decode task per file") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.lit
+    // the fixture in the reference layout, from which format("h5ad")
+    // derives the same (dataset, modality) identities
+    val root = java.nio.file.Files.createTempDirectory("h5ad-doors")
+    val laidOut = files.map { f =>
+      val to = root.resolve(f.dataset).resolve(s"${f.modality}.h5ad")
+      java.nio.file.Files.createDirectories(to.getParent)
+      java.nio.file.Files.copy(java.nio.file.Paths.get(f.path), to)
+      f.copy(path = to.toString)
+    }
+    // (has an RDD created in H5ad.scala, task count) per stage
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Boolean, Int)]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.add((e.stageInfo.rddInfos.exists(_.callSite.contains("H5ad.scala")),
+          e.stageInfo.numTasks))
+    }
+    val sc = spark.sparkContext
+    def read(df: DataFrame): (Set[(String, String, String, Double, String)], Seq[(Boolean, Int)]) = {
+      stages.clear()
+      sc.addSparkListener(listener)
+      val rows = try {
+        val r = df.select("cell_id", "dataset", "feature_id", "value", "modality").collect()
+        org.apache.spark.GraftBusDrain.drain(sc)
+        r
+      } finally sc.removeSparkListener(listener)
+      (rows.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3),
+        r.getString(4))).toSet, stages.asScala.toSeq)
+    }
+    val (viaFormat, formatStages) = read(spark.read.format("h5ad").load(root.toString))
+    val (viaModalities, modalityStages) = read(H5ad.scanModalities(spark, laidOut)
+      .map { case (m, df) => df.withColumn("modality", lit(m)) }
+      .reduce(_ unionByName _))
+    assert(viaFormat === files.flatMap(longForm).toSet)
+    assert(viaModalities === viaFormat)
+    // both doors decode in stages whose RDDs the reader created, one
+    // task per file
+    for (st <- Seq(formatStages, modalityStages)) {
+      assert(st.exists(_._1), st)
+      assert(st.filter(_._1).map(_._2).sum === files.size, st)
+    }
+  }
+
+  test("a file the reader rejects leaves no open descriptor") {
+    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]
+    val d = java.nio.file.Files.createTempDirectory("graft-h5-reject")
+    val valid = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(files.head.path))
+    def patched(name: String, at: Int, v: Int): String = {
+      val b = valid.clone(); b(at) = v.toByte
+      java.nio.file.Files.write(d.resolve(name), b).toString
+    }
+    val notHdf5 = java.nio.file.Files.write(d.resolve("text.h5ad"),
+      "definitely not hdf5".getBytes).toString
+    // a sparse file past the one-map limit: no block is written
+    val huge = d.resolve("huge.h5ad").toString
+    val raf = new java.io.RandomAccessFile(huge, "rw")
+    try raf.setLength(Int.MaxValue.toLong + 1) finally raf.close()
+    val rejects = Seq(
+      notHdf5 -> "not an HDF5 file",
+      patched("v1.h5ad", 8, 1) -> "superblock v1 unsupported",
+      patched("off4.h5ad", 13, 4) -> "only 8-byte offsets",
+      huge -> "2 GiB limit")
+    try {
+      val before = os.getOpenFileDescriptorCount
+      for (_ <- 0 until 50; (path, why) <- rejects) {
+        val e = intercept[IllegalArgumentException](new MiniHdf5.Reader(path))
+        assert(e.getMessage.contains(why), e.getMessage)
+      }
+      // 200 rejected opens; a leak would hold 200 more descriptors
+      val grown = os.getOpenFileDescriptorCount - before
+      assert(grown < 50, s"$grown descriptors still open")
+    } finally java.nio.file.Files.delete(java.nio.file.Paths.get(huge))
+  }
+
   test("chunked + deflate datasets (compression='gzip' layout) read back exactly") {
     // 10 cells × 4 features, 23 nonzeros, 8-element chunks → multi-chunk
     // with a padded tail chunk, plus a single-chunk indptr
@@ -215,8 +308,8 @@ class H5adSpec extends SparkSpec {
     } finally gz.close()
     // and the gzip file is actually smaller-or-different on disk while
     // yielding identical triplets
-    val a = H5ad.readTriplets(H5adInput(s"$dir/gz.h5ad", "d", "m")).toSeq
-    val b = H5ad.readTriplets(H5adInput(s"$dir/plain.h5ad", "d", "m")).toSeq
+    val a = longForm(H5adInput(s"$dir/gz.h5ad", "d", "m"))
+    val b = longForm(H5adInput(s"$dir/plain.h5ad", "d", "m"))
     assert(a === b && a.size === nnz)
     // narrow chunked (f32/i32) too
     MiniHdf5Writer.writeH5ad(s"$dir/gz32.h5ad", obs, vars, data, indices, indptr,
@@ -396,7 +489,7 @@ class H5adSpec extends SparkSpec {
       data = Array(1.0, 2.0, 3.0), indices = Array(0L, 1L, 0L),
       indptr = Array(0L, 3L, 1L))
     val e = intercept[IllegalArgumentException](
-      H5ad.readTriplets(H5adInput(s"$dir/bad.h5ad", "d", "m")).toSeq)
+      longForm(H5adInput(s"$dir/bad.h5ad", "d", "m")))
     assert(e.getMessage.contains("indptr"))
     // truncating indptr (end != nnz) also refuses
     MiniHdf5Writer.writeH5ad(s"$dir/bad2.h5ad",
@@ -404,7 +497,7 @@ class H5adSpec extends SparkSpec {
       data = Array(1.0, 2.0, 3.0, 4.0), indices = Array(0L, 1L, 0L, 1L),
       indptr = Array(0L, 2L, 2L))
     val e2 = intercept[IllegalArgumentException](
-      H5ad.readTriplets(H5adInput(s"$dir/bad2.h5ad", "d", "m")).toSeq)
+      longForm(H5adInput(s"$dir/bad2.h5ad", "d", "m")))
     assert(e2.getMessage.contains("nnz"))
   }
 

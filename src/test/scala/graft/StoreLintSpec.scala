@@ -15,7 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - Driver-collect bounds are checked in [[Bounded]]. A hand-spelled
   *    `limit(cap + 1).collect()` probe or a `count() <=` guard anywhere
   *    else is a second copy of the bound check — use `Bounded.rows` /
-  *    `Bounded.collect` instead. */
+  *    `Bounded.collect` instead.
+  *  - h5ad files are decoded in [[graft.sources.H5ad]]. A
+  *    `new MiniHdf5.Reader` anywhere else is a second h5ad reader (CSR
+  *    checks, identity columns, one task per file) — read through
+  *    `format("h5ad")` or `H5ad.scanModalities` instead. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
 
@@ -75,5 +79,17 @@ class StoreLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "check driver-collect bounds through graft.Bounded:\n", "\n", ""))
+  }
+
+  /** `new MiniHdf5.Reader`, however qualified (or imported bare). */
+  private val hdf5Reader = """\bnew\s+([\w.]*\.)?Reader\b""".r
+
+  test("h5ad files are decoded in one place") {
+    val offenders = sources.flatMap { case (f, code) =>
+      if (f.getFileName.toString == "H5ad.scala") Nil
+      else hdf5Reader.findAllIn(code).map(m => s"$f: $m").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "decode h5ad files through graft.sources.H5ad:\n", "\n", ""))
   }
 }
