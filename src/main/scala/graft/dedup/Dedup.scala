@@ -1021,7 +1021,7 @@ object Dedup {
     // every detected span; the earlier keeps it — same lowest-id
     // survivor convention as dedup_exact). Per document: union the
     // [start_b, start_b+len) word intervals from every span where it is
-    // the later side, merge overlaps/touches by the windowed
+    // the later side, merge overlaps/touches by Market.mergeIntervals'
     // gaps-and-islands pass (deterministic: DISTINCT intervals ordered
     // (st, en) — equal-start intervals always merge since en > st), and
     // rebuild the text from the surviving word positions. Scale shape:
@@ -1033,21 +1033,13 @@ object Dedup {
     // engines (the split('')-vs-string_split('') divergence pinned by
     // text_char_entropy).
     "dedup_substring_strip" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
       val iv = substringSpans(s, d)
         .select(col("db").as("doc_id"), col("sb").cast("long").as("st"),
           (col("sb") + col("len")).cast("long").as("en"))
         .distinct()
-      val w = W.partitionBy("doc_id").orderBy("st", "en")
-      val merged = iv
-        .withColumn("pmax", max(col("en")).over(
-          w.rowsBetween(W.unboundedPreceding, -1)))
-        .withColumn("nw", when(col("pmax").isNull
-          || col("st") > col("pmax"), 1).otherwise(0))
-        .withColumn("isl", sum(col("nw")).over(
-          w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-        .groupBy("doc_id", "isl")
-        .agg(min(col("st")).as("st"), max(col("en")).as("en"))
+      val merged = graft.operators.Market.mergeIntervals(iv, "doc_id")
+        .select(col("doc_id"), col("start_us").as("st"),
+          col("end_us").as("en"))
       val docs = t(s, d, "documents").select("doc_id", "text")
         .filter(length(col("text")) > 0)
       // Map-only strip apply (r18): the old shape posexploded EVERY

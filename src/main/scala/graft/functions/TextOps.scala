@@ -490,8 +490,8 @@ object TextOps {
     // corpus, dealt round-robin into 8 shards so every shard sees the
     // same difficulty ramp (the data-ordering step curriculum-training
     // pipelines run after filtering): global rank by (n_chars, doc_id)
-    // via the block-stitched numbering helper (per-block windows + a
-    // broadcast offset table — NEVER a global single-partition window),
+    // via the block-stitched numbering helper (Windows.stitchedRowNumber
+    // — NEVER a global single-partition window),
     // then shard = (rank-1) mod 8, position = (rank-1) div 8. All
     // integer arithmetic; scales as one keyed window + one broadcast.
     "order_curriculum_shards" -> ((s, d) => {

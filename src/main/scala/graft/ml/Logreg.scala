@@ -259,15 +259,6 @@ object Logreg {
         .orderBy("decile")
     }),
 
-    // ROC AUC of the scored corpus — threshold-free ranking quality,
-    // the metric that actually orders candidate gates. AUC is the
-    // Mann-Whitney U statistic normalized: P(score⁺ > score⁻) + ½
-    // P(=), computed from cumulative NEGATIVE counts below each
-    // distinct score. Scale shape (the stats-family discipline):
-    // ONE data-scaled stage (groupBy distinct score, map-side
-    // combined), then block-stitched cumulatives — per-block
-    // partitioned windows plus a ≤101-row offset table — so no
-    // unpartitioned window ever sees the data-scaled distinct-score
     // Preference-pair construction for DPO/RLHF-style training data:
     // within each source, the k best-scoring documents (by the trained
     // quality gate) pair 1-1 with the k worst — rank i best vs rank i
@@ -307,10 +298,18 @@ object Logreg {
         .orderBy("source", "pair_rank")
     }),
 
-    // set. Per-group contributions quantize through U.dec6r (the
-    // computed-double cast bridge) before the final exact sum.
+    // ROC AUC of the scored corpus — threshold-free ranking quality,
+    // the metric that actually orders candidate gates. AUC is the
+    // Mann-Whitney U statistic normalized: P(score⁺ > score⁻) + ½
+    // P(=), computed from cumulative NEGATIVE counts below each
+    // distinct score. Scale shape (the stats-family discipline):
+    // ONE data-scaled stage (groupBy distinct score, map-side
+    // combined), then block-stitched cumulatives (Windows.stitchedSums)
+    // — so no unpartitioned window ever sees the data-scaled
+    // distinct-score set. Per-group contributions quantize through
+    // U.dec6r (the computed-double cast bridge) before the final exact
+    // sum.
     "ml_logreg_auc" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val w = weights(s, d)
       val sc = features(s, d).select(
         U.round6(sigma12(margin(w))).as("sc"), col("y"))
@@ -319,17 +318,10 @@ object Logreg {
         sum(when(col("y") =!= 1.0, 1L).otherwise(0L)).as("nn"))
       // scores live in [0,1]: floor(sc*100) splits the distinct-score
       // mass into ≤101 range blocks, monotone along the score order
-      val blk = g.withColumn("b", floor(col("sc") * 100).cast("int"))
-      val wIn = Window.partitionBy("b").orderBy("sc")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = blk.withColumn("cn_in", sum(col("nn")).over(wIn))
-      val boff = blk.groupBy("b").agg(sum(col("nn")).as("bn"))
-        .withColumn("off", coalesce(sum(col("bn")).over(
-          Window.orderBy("b")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("b"), col("off"))
-      val cum = local.join(broadcast(boff), "b")
-        .withColumn("cb", col("off") + col("cn_in") - col("nn"))
+      val cum = graft.operators.Windows.stitchedSums(g, Nil,
+          floor(col("sc") * 100).cast("int"), Seq(col("sc")),
+          Seq(("nn", "cn", "nn_tot")))
+        .withColumn("cb", col("cn") - col("nn"))
       val t = cum.agg(
         sum(col("np")).as("n_pos"), sum(col("nn")).as("n_neg"),
         sum(U.dec6r(col("np").cast("double")

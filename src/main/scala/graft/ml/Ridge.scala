@@ -1,8 +1,8 @@
 package graft.ml
 
 import graft.{Tables, U}
+import graft.operators.Windows
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Closed-form ridge regression (2 features, L2 λ = 1): the normal
@@ -151,14 +151,12 @@ object Ridge {
       // (the sanctioned scalar-broadcast shape, whitelisted in
       // PlanSpec), and coverage is one final aggregate over the counts
       // joined to both scalars.
-      // The cumulative count BLOCK-STITCHES (the abcClassify /
-      // exactQuantiles discipline): per-distinct-residual rows are NOT
-      // bounded — residuals are near-continuous, so distinct a4 grows
-      // with the data, and the r13 sf1 attribution caught the old
-      // single `Window.orderBy(a4)` materializing a 64 MB checkpoint
-      // through ONE task (6.2 s of an 8.9 s query). Local running sums
-      // per (a4 div 2^16) block in parallel; the only unpartitioned
-      // window consumes the block-total summary, whose cardinality is
+      // The cumulative count BLOCK-STITCHES (Windows.stitchedSums):
+      // per-distinct-residual rows are NOT bounded — residuals are
+      // near-continuous, so distinct a4 grows with the data, and the
+      // r13 sf1 attribution caught the old single `Window.orderBy(a4)`
+      // materializing a 64 MB checkpoint through ONE task (6.2 s of an
+      // 8.9 s query). Blocks are a4 div 2^16, so the block summary is
       // bounded by the residual DOMAIN. cum over all rows (not the
       // cc>0 view) is identity-preserving — cum only increases at
       // cc>0 rows, so "min a4 with cum ≥ k" lands on the same row.
@@ -169,19 +167,9 @@ object Ridge {
       val cnts0 = base.groupBy("a4").agg(
         sum(when(col("is_cal"), 1L).otherwise(0L)).as("cc"),
         sum(when(!col("is_cal"), 1L).otherwise(0L)).as("tc"))
-        .withColumn("blk", expr("a4 div 65536"))
         .localCheckpoint(true)
-      val wLoc = Window.partitionBy("blk").orderBy("a4")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wBlk = Window.orderBy("blk")
-      val offs = cnts0.groupBy("blk").agg(sum(col("cc")).as("bs"))
-        .withColumn("off", coalesce(sum(col("bs")).over(
-          wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select(col("blk"), col("off"))
-      val counts = cnts0
-        .withColumn("lc", sum(col("cc")).over(wLoc))
-        .join(broadcast(offs), Seq("blk"))
-        .withColumn("cum", col("off") + col("lc"))
+      val counts = Windows.stitchedSums(cnts0, Nil, expr("a4 div 65536"),
+          Seq(col("a4")), Seq(("cc", "cum", "cc_tot")))
         .select(col("a4"), col("cc"), col("tc"), col("cum"))
         .localCheckpoint(true)
       val tot = counts.agg(sum(col("cc")).as("n_cal"),

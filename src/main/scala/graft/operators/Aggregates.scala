@@ -35,12 +35,10 @@ object Aggregates {
     *     guarded per row — see the contract below), then ONE hash
     *     aggregate (flag, cents) → count: the only data-scaled
     *     shuffle, map-side-combining;
-    *  2. cumulative counts by the block-stitch discipline
-    *     ([[Market.abcClassify]], `Windows.stitchedRowNumber`): per
-    *     (flag, cents div 2^16) partitioned running sums in parallel,
-    *     one summary window over the block totals (cardinality bounded
-    *     by the value DOMAIN / 2^16, not the data), offsets broadcast
-    *     back — no single-partition pass over data-scaled rows;
+    *  2. cumulative counts per flag by [[Windows.stitchedSums]]
+    *     (DESIGN_SCALE.md §Block-stitched running totals) over
+    *     `cents div 2^16` blocks, so the block summary is bounded by
+    *     the value DOMAIN / 2^16, not the data;
     *  3. rank targets from Spark's own percentile arithmetic
     *     (pos = p·(N−1), lower/upper index, linear interpolation with
     *     the same operation order, so results are bit-identical) as a
@@ -88,7 +86,6 @@ object Aggregates {
       .repartition(col("fl"), col("cv"))
       .groupBy(col("fl"), col("cv"))
       .agg(count(lit(1)).as("c"))
-      .withColumn("blk", expr("cv div 65536"))
       // eager localCheckpoint (the Ridge/Iterate discipline): the
       // offsets branch and the local-window branch both consume this
       // aggregate, and column pruning specializes the two subtrees so
@@ -96,18 +93,8 @@ object Aggregates {
       // scan+fan+aggregate lineage runs once per branch. Blocks are
       // GC-released; the checkpoint is distinct-value-sized.
       .localCheckpoint(true)
-    val wLoc = Window.partitionBy("fl", "blk").orderBy("cv")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBlk = Window.partitionBy("fl").orderBy("blk")
-    val offs = cnts.groupBy("fl", "blk").agg(sum(col("c")).as("bs"))
-      .withColumn("off", coalesce(sum(col("bs")).over(
-        wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("bs")).over(wBlk.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("fl"), col("blk"), col("off"), col("n"))
-    val cum = cnts.withColumn("lc", sum(col("c")).over(wLoc))
-      .join(broadcast(offs), Seq("fl", "blk"))
-      .withColumn("cum", col("off") + col("lc"))
+    val cum = Windows.stitchedSums(cnts, Seq("fl"), expr("cv div 65536"),
+      Seq(col("cv")), Seq(("c", "cum", "n")))
     // rank targets, one row per (group, percentile) — same arithmetic
     // as Percentile.getPercentile: pos = p(N−1), floor/ceil indices.
     // Derived INLINE from the n the offset join already carries (a
@@ -412,37 +399,20 @@ object Aggregates {
     // so the cumulative compare is exact long arithmetic (2·cum ≥
     // total — no division, no float boundary).
     "agg_weighted_median" -> ((s, d) => {
-      val W = org.apache.spark.sql.expressions.Window
-      // The cumulative weight is BLOCK-STITCHED, not a single per-group
-      // running window: with 3 return flags a plain
-      // partitionBy(l_returnflag) window has parallelism 3 for the
-      // whole fact (measured 11.9 s at sf1 — 6M rows on 3 tasks).
-      // Blocks are price ranges (monotone in the cum order, ties stay
-      // inside a block because the block is a pure function of the
-      // leading sort key): local running sums parallelize over
-      // (group × block), the per-group block prefix runs over a tiny
-      // summary, and cum = prefix + local — the stitchedRowNumber
-      // discipline applied to SUM. 11.9 → ~2 s at sf1.
-      val wq = col("l_quantity").cast("long")
+      // The cumulative weight is BLOCK-STITCHED (Windows.stitchedSums),
+      // not a single per-group running window: with 3 return flags a
+      // plain partitionBy(l_returnflag) window has parallelism 3 for the
+      // whole fact (measured 11.9 s at sf1 — 6M rows on 3 tasks; ~2 s
+      // stitched). Blocks are price ranges, a pure monotone function of
+      // the leading sort key.
       val rows = t(s, d, "lineitem")
         .select(col("l_returnflag"), col("l_extendedprice"),
-          col("l_orderkey"), col("l_linenumber"), wq.as("q"))
-        .withColumn("blk", floor(col("l_extendedprice") / 2000.0).cast("long"))
-      val wLoc = W.partitionBy("l_returnflag", "blk")
-        .orderBy("l_extendedprice", "l_orderkey", "l_linenumber")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-      val offsets = rows.groupBy("l_returnflag", "blk")
-        .agg(sum(col("q")).as("bq"))
-        .withColumn("off", coalesce(
-          sum(col("bq")).over(W.partitionBy("l_returnflag").orderBy("blk")
-            .rowsBetween(W.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("totq", sum(col("bq")).over(
-          W.partitionBy("l_returnflag")))
-        .select(col("l_returnflag"), col("blk"), col("off"), col("totq"))
-      rows
-        .withColumn("lcum", sum(col("q")).over(wLoc))
-        .join(broadcast(offsets), Seq("l_returnflag", "blk"))
-        .withColumn("cumq", col("off") + col("lcum"))
+          col("l_orderkey"), col("l_linenumber"),
+          col("l_quantity").cast("long").as("q"))
+      Windows.stitchedSums(rows, Seq("l_returnflag"),
+          floor(col("l_extendedprice") / 2000.0).cast("long"),
+          Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
+          Seq(("q", "cumq", "totq")))
         .filter(col("cumq") * 2 >= col("totq"))
         .groupBy("l_returnflag")
         .agg(min(col("l_extendedprice")).as("weighted_median"),

@@ -21,8 +21,7 @@ import graft.{Tables, U}
   *  - concentration (ABC) runs its global cumulative window over the
   *    per-part AGGREGATE (|parts| rows, not |lineitem|); at a scale
   *    where even the part dimension is huge the cumulative sum
-  *    block-stitches by revenue decade exactly like
-  *    [[Windows.stitchedRowNumber]] stitches numbering.
+  *    block-stitches by revenue octave ([[Windows.stitchedSums]]).
   *
   * Reference ancestry: none — the reference pipeline has no basket
   * analytics; this is beyond-reference engine surface (training-data
@@ -244,19 +243,20 @@ object Market {
     }
   }
 
-  /** Merge overlapping intervals (`user_id`, `st`, `en` — µs longs)
-    * into maximal islands per user: boundary = start strictly after the
-    * running max of every previous end. One partitioned window pass +
-    * one aggregate; exact integer arithmetic throughout. */
-  def mergeIntervals(iv: DataFrame): DataFrame = {
-    val w = Window.partitionBy("user_id").orderBy("st")
+  /** Merge overlapping intervals (`st`, `en` — µs longs) into maximal
+    * islands per `key`: boundary = start strictly after the running max
+    * of every previous end, in (st, en) order. One partitioned window
+    * pass + one aggregate → (`key`, island, start_us, end_us,
+    * n_events); exact integer arithmetic throughout. */
+  def mergeIntervals(iv: DataFrame, key: String): DataFrame = {
+    val w = Window.partitionBy(key).orderBy("st", "en")
     iv.withColumn("pmax", max(col("en")).over(
         w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("nw", when(col("pmax").isNull
         || col("st") > col("pmax"), 1).otherwise(0))
       .withColumn("island", sum(col("nw")).over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "island")
+      .groupBy(key, "island")
       .agg(min(col("st")).as("start_us"), max(col("en")).as("end_us"),
         count(lit(1)).as("n_events"))
   }
@@ -266,43 +266,24 @@ object Market {
     * decimal cross-multiplication (c·5 ≤ t·4 ⇔ share ≤ 0.8), shares
     * displayed as rounded doubles.
     *
-    * Round-12 rewrite: the cumulative revenue BLOCK-STITCHES
-    * ([[Windows.stitchedRowNumber]] discipline, SUM-shaped like
-    * `Stats.twoSampleCum`) instead of running one global
-    * `Window.orderBy` — part cardinality grows with the data (~10⁹
-    * parts at 100 TB), so the single-task cumulative sort was the
-    * suite's last silent scale-killer (r11 verdict item 1). Block key
-    * = revenue octave eighth, `-floor(log2(r)·8)`: a pure monotone
-    * non-increasing function of `r`, so ties (equal `r`) can never
-    * straddle blocks and ascending block order IS descending revenue
-    * order. Per-block cumulative sums run in partitioned parallel
-    * windows; the only unpartitioned window consumes the per-block
-    * total summary, whose cardinality is bounded by the revenue
-    * DOMAIN (≲8 blocks per power of two — a few hundred rows even
-    * when per-part revenue spans 1e-2..1e12), not by the data. The
-    * stitch is pure exact-decimal re-association, so `c`, `t`, and
-    * every class boundary are bit-identical to the single-window
-    * form. */
+    * The cumulative revenue runs through [[Windows.stitchedSums]], not
+    * one global `Window.orderBy` — part cardinality grows with the
+    * data (~10⁹ parts at 100 TB), so a single-task cumulative sort
+    * would not scale. Block key = revenue octave eighth,
+    * `-floor(log2(r)·8)`: a pure monotone non-increasing function of
+    * `r`, so ties (equal `r`) can never straddle blocks and ascending
+    * block order IS descending revenue order; the block summary is
+    * bounded by the revenue DOMAIN (≲8 blocks per power of two — a few
+    * hundred rows even when per-part revenue spans 1e-2..1e12), not by
+    * the data. The stitch is exact-decimal re-association, so `c`,
+    * `t`, and every class boundary are bit-identical to the
+    * single-window form. */
   def abcClassify(rev: DataFrame): DataFrame = {
     val blk = when(col("r") > 0,
       (-floor(log2(U.dbl(col("r"))) * 8.0)).cast("long"))
       .otherwise(lit(Long.MaxValue)) // non-positive revenue sorts last
-    val b = rev.withColumn("blk", blk)
-    val wLoc = Window.partitionBy("blk")
-      .orderBy(col("r").desc, col("l_partkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wBlk = Window.orderBy("blk")
-    val offs = b.groupBy("blk").agg(sum(col("r")).as("bs"))
-      .withColumn("off", coalesce(
-        sum(col("bs")).over(
-          wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0)))
-      .withColumn("t", sum(col("bs")).over(
-        wBlk.rowsBetween(Window.unboundedPreceding,
-          Window.unboundedFollowing)))
-      .select(col("blk"), col("off"), col("t"))
-    b.withColumn("lc", sum(col("r")).over(wLoc))
-      .join(broadcast(offs), Seq("blk"))
-      .withColumn("c", col("off") + col("lc"))
+    Windows.stitchedSums(rev, Nil, blk,
+        Seq(col("r").desc, col("l_partkey")), Seq(("r", "c", "t")))
       .select(col("l_partkey"), U.dbl(col("r")).as("revenue"),
         U.round6(U.dbl(col("c")) / U.dbl(col("t"))).as("cum_share"),
         when(col("c") * 5 <= col("t") * 4, "A")
@@ -357,7 +338,7 @@ object Market {
       val span = 1800L * 1000000L // 30 min in µs
       mergeIntervals(t(s, d, "events")
         .select(col("user_id"), U.tsUs(col("ts")).as("st"))
-        .withColumn("en", col("st") + lit(span)))
+        .withColumn("en", col("st") + lit(span)), "user_id")
         .orderBy("user_id", "island")
     }),
 

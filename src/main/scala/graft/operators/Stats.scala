@@ -19,12 +19,10 @@ import graft.{Tables, U}
   * engine-deterministic:
   *   - counts/ranks accumulate as longs or DECIMAL — partition-order
   *     invariant;
-  *   - global ECDF / rank positions use the block-stitched cumulative
-  *     pattern ([[Windows.stitchedRowNumber]] discipline) — per-value
-  *     aggregation first (shuffle carries one row per DISTINCT value),
-  *     then local running sums within value-range blocks stitched by a
-  *     broadcast offset table. No unpartitioned window ever sees a
-  *     data-scaled row count;
+  *   - global ECDF / rank positions aggregate per value first (the
+  *     shuffle carries one row per DISTINCT value), then accumulate
+  *     through [[Windows.stitchedSums]] over value-range blocks. No
+  *     unpartitioned window ever sees a data-scaled row count;
   *   - closed-form statistics are per-row double math over those exact
   *     sums, spelled token-for-token like the DuckDB oracle, rounded
   *     with the engine-stable `round(x*1e6)/1e6`.
@@ -87,14 +85,10 @@ object Stats {
   }
 
   /** Per-distinct-value cumulative counts of `l_extendedprice` for the
-    * two-sample (returnflag R vs A) tests, block-stitched:
-    *
-    *   1. groupBy(value) — the only data-scaled shuffle, map-side
-    *      combined, one output row per distinct price;
-    *   2. running sums WITHIN price-range blocks (partitioned window —
-    *      parallel, bounded state);
-    *   3. per-block totals (≤ ~60 rows) take the only global-order
-    *      window; offsets broadcast back.
+    * two-sample (returnflag R vs A) tests: groupBy(value) — the only
+    * data-scaled shuffle, map-side combined, one output row per
+    * distinct price — then [[Windows.stitchedSums]] over price-range
+    * blocks (≤ ~60 of them).
     *
     * Output: one row per distinct value with cumr/cuma (cumulative
     * group counts through that value) and the constant totals n_r/n_a.
@@ -107,8 +101,8 @@ object Stats {
     // sort-before-repartition, no second exchange. (A round-robin
     // U.fan was measured WORSE here in r13 — 2.2 → 3.6 s — precisely
     // because it paid the RR sort plus a second full exchange into the
-    // groupBy; the keyed spelling pays neither.) The three consumers
-    // (block offsets, totals, the windowed main path) still re-execute
+    // groupBy; the keyed spelling pays neither.) The two consumers
+    // (the block summary and the windowed main path) still re-execute
     // this subtree — an eager-checkpoint dedup would save ~0.8 s but
     // hide the per-value aggregate from PlanSpec's
     // windows-sit-above-aggregates proof, which this helper exists to
@@ -121,36 +115,10 @@ object Stats {
       .groupBy("v")
       .agg(sum(when(col("g") === "R", 1L).otherwise(0L)).as("cr"),
         sum(when(col("g") === "A", 1L).otherwise(0L)).as("ca"))
-      .withColumn("blk", floor(col("v") / 2000.0).cast("long"))
-    val wLoc = Window.partitionBy("blk").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Totals ride the SAME block-summary window pass as the offsets
-    // (r17; the exactQuantiles `n` shape): n_r/n_a are the whole-frame
-    // sums over the ≤~60-row block table, so the separate groupBy().agg
-    // consumer — a third full execution of the per-value aggregate —
-    // and its scalar crossJoin both disappear; identical values land on
-    // every row through the one block-keyed broadcast join.
-    val wBlk = Window.orderBy("blk")
-    val offs = pv.groupBy("blk")
-      .agg(sum(col("cr")).as("bcr"), sum(col("ca")).as("bca"))
-      .withColumn("offr", coalesce(
-        sum(col("bcr")).over(
-          wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("offa", coalesce(
-        sum(col("bca")).over(
-          wBlk.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n_r", sum(col("bcr")).over(wBlk.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)))
-      .withColumn("n_a", sum(col("bca")).over(wBlk.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("blk"), col("offr"), col("offa"),
-        col("n_r"), col("n_a"))
-    pv
-      .withColumn("lcr", sum(col("cr")).over(wLoc))
-      .withColumn("lca", sum(col("ca")).over(wLoc))
-      .join(broadcast(offs), Seq("blk"))
-      .withColumn("cumr", col("offr") + col("lcr"))
-      .withColumn("cuma", col("offa") + col("lca"))
+    // n_r/n_a are the stitch's group totals: no separate groupBy().agg
+    // re-executing the per-value aggregate, no scalar crossJoin.
+    Windows.stitchedSums(pv, Nil, floor(col("v") / 2000.0).cast("long"),
+        Seq(col("v")), Seq(("cr", "cumr", "n_r"), ("ca", "cuma", "n_a")))
       .select(col("v"), col("cr"), col("ca"), col("cumr"), col("cuma"),
         col("n_r"), col("n_a"))
   }

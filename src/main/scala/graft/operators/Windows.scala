@@ -857,41 +857,75 @@ object Windows {
         .limit(10))
   )
 
-  /** Global `row_number` WITHOUT the single-partition window: the
-    * two-level stitch of `Dedup.keeperPointers`, shaped for numbering.
-    * `Window.orderBy(key)` with no partition spec moves the ENTIRE input
-    * through one task — fine on a dim, fatal on a fact. Contract on
-    * `block`: a pure function of the leading `order` column (so ties
-    * never straddle blocks) that is monotone non-decreasing along
-    * `order`. Then:
-    *
-    *   1. number rows WITHIN each block — one hash exchange, parallel
-    *      windows, bounded per-task state;
-    *   2. running block offsets over the per-block COUNT summary — the
-    *      only global-order window, consuming ~distinct(block) rows
-    *      (recurse the stitch if that summary ever gets big);
-    *   3. broadcast the offsets back: rn = block offset + local rank.
-    *
-    * `order` must be a total order — the same precondition ANY
-    * positional numbering has (nondeterministic ties would make the
-    * assignment engine-unstable). Output column `out` is LONG.
+  /** Global `row_number` WITHOUT the single-partition window:
+    * `row_number()` within each block plus the running block COUNT
+    * offset — the block stitch shaped for numbering (contract and
+    * shape: DESIGN_SCALE.md §Block-stitched running totals). `order`
+    * must be a total order — the same precondition ANY positional
+    * numbering has (nondeterministic ties would make the assignment
+    * engine-unstable). Output column `out` is LONG.
     */
   def stitchedRowNumber(df: DataFrame, block: Column,
       order: Seq[Column], out: String = "rn"): DataFrame = {
-    val local = df
-      .withColumn("_blk", block)
-      .withColumn("_lrn", row_number().over(
-        Window.partitionBy("_blk").orderBy(order: _*)).cast("long"))
-    // Map-side-combined COUNT per block, then the tiny-table running sum.
-    val offsets = df.select(block.as("_blk"))
-      .groupBy("_blk").agg(count(lit(1)).as("_cnt"))
-      .withColumn("_off", coalesce(
-        sum(col("_cnt")).over(Window.orderBy("_blk")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_blk"), col("_off"))
-    local.join(broadcast(offsets), "_blk")
-      .withColumn(out, col("_off") + col("_lrn"))
-      .drop("_blk", "_lrn", "_off")
+    val b = withBlock(df, block)
+    b.withColumn("_lrn", row_number().over(
+        Window.partitionBy("blk").orderBy(order: _*)).cast("long"))
+      .join(broadcast(blockOffsets(b, Nil, Seq(count(lit(1))))), "blk")
+      .withColumn(out, col("_off0") + col("_lrn"))
+      .drop("blk", "_lrn", "_off0", "_tot0")
+  }
+
+  /** Running sums over a global order WITHOUT the single-partition
+    * window (DESIGN_SCALE.md §Block-stitched running totals). For each
+    * `(value, running, total)` in `sums`, adds `running` — the inclusive
+    * running sum of `value` over `order` within `groups` — and `total`,
+    * the group total, both typed as `sum(value)` is. Contract: `block`
+    * is a pure, non-decreasing function of the leading `order` key;
+    * `order` is a total order within each group; values are non-null.
+    */
+  def stitchedSums(df: DataFrame, groups: Seq[String], block: Column,
+      order: Seq[Column], sums: Seq[(String, String, String)]): DataFrame = {
+    val b = withBlock(df, block)
+    val keys = groups :+ "blk"
+    val wLoc = Window.partitionBy(keys.map(col): _*).orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val idx = sums.indices
+    val local = b.select(col("*") +: idx.map(i =>
+      sum(col(sums(i)._1)).over(wLoc).as(s"_lc$i")): _*)
+    val offsets = blockOffsets(b, groups, sums.map(s => sum(col(s._1))))
+    idx.foldLeft(local.join(broadcast(offsets), keys)) { (acc, i) =>
+      val (_, run, tot) = sums(i)
+      val t = local.schema(s"_lc$i").dataType
+      acc.withColumn(run, (col(s"_off$i") + col(s"_lc$i")).cast(t))
+        .withColumn(tot, col(s"_tot$i").cast(t))
+    }.drop("blk" +: idx.flatMap(i => Seq(s"_lc$i", s"_off$i", s"_tot$i")): _*)
+  }
+
+  /** `df` tagged with its block key; `blk` belongs to the stitch. */
+  private def withBlock(df: DataFrame, block: Column): DataFrame = {
+    require(!df.columns.contains("blk"),
+      "block stitch: input already has a `blk` column (the stitch's block key)")
+    df.withColumn("blk", block)
+  }
+
+  /** The stitch's one offsets builder: `aggs` summarized per (`groups`,
+    * blk), then ONE window over that summary — the only global-order
+    * window of the stitch, over ~distinct(blk) rows per group — gives
+    * each aggregate its exclusive block offset `_off<i>` and its group
+    * total `_tot<i>` (Catalyst drops a total no caller reads). */
+  private def blockOffsets(b: DataFrame, groups: Seq[String],
+      aggs: Seq[Column]): DataFrame = {
+    val keys = (groups :+ "blk").map(col)
+    val w = Window.partitionBy(groups.map(col): _*).orderBy("blk")
+    val named = aggs.zipWithIndex.map { case (a, i) => a.as(s"_s$i") }
+    b.groupBy(keys: _*).agg(named.head, named.tail: _*)
+      .select(keys ++ aggs.indices.flatMap { i =>
+        val s = sum(col(s"_s$i"))
+        Seq(coalesce(s.over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0)).as(s"_off$i"),
+          s.over(w.rowsBetween(Window.unboundedPreceding,
+            Window.unboundedFollowing)).as(s"_tot$i"))
+      }: _*)
   }
 
   val oracles: Map[String, String] = Map(

@@ -102,6 +102,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       GopherRep.info, GopherRep.builder))
     ext.injectFunction((FunctionIdentifier("char_entropy_stats"),
       CharEntropyStats.info, CharEntropyStats.builder))
+    ext.injectFunction((FunctionIdentifier("jaro_winkler"),
+      JaroWinkler.info, JaroWinkler.builder))
+    ext.injectFunction((FunctionIdentifier("bpe_merge"),
+      BpeMerge.info, BpeMerge.builder))
     VectorExprs.entries.foreach { case (n, c, b) =>
       ext.injectFunction((FunctionIdentifier(n),
         new ExpressionInfo(c.getName, n), b))

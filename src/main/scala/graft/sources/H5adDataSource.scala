@@ -42,8 +42,9 @@ class H5adDataSource extends TableProvider with DataSourceRegister {
 
 object H5adDataSource {
   /** Expand `path`/`paths` options (files or directories of `*.h5ad`,
-    * walked with `java.nio`, so local or shared POSIX paths only) into
-    * per-file inputs with derived (dataset, modality) identity. */
+    * walked with `java.nio`, so local or shared POSIX paths only — see
+    * [[localPath]]) into per-file inputs with derived (dataset,
+    * modality) identity. */
   private[sources] def resolveInputs(
       options: CaseInsensitiveStringMap): Seq[H5ad.H5adInput] = {
     val raw: Seq[String] =
@@ -58,7 +59,7 @@ object H5adDataSource {
           .filter(_.nonEmpty)
       }.getOrElse(Option(options.get("path")).toSeq)
     require(raw.nonEmpty, "h5ad source needs load(path, ...)")
-    val files = raw.flatMap { p =>
+    val files = raw.map(localPath).flatMap { p =>
       val path = Paths.get(p)
       if (Files.isDirectory(path)) {
         val s = Files.walk(path)
@@ -78,6 +79,21 @@ object H5adDataSource {
         modality = Option(options.get("modality")).getOrElse(stem))
     }
   }
+
+  private val UriScheme = "^([a-zA-Z][a-zA-Z0-9+.-]*):".r
+
+  /** A load() path as a local path: plain paths as given, `file:` URIs
+    * as their path. Any other scheme fails here, at load, rather than
+    * as a missing file inside a task. */
+  private def localPath(p: String): String =
+    UriScheme.findFirstMatchIn(p).map(_.group(1)) match {
+      case None => p
+      case Some(s) if s.equalsIgnoreCase("file") =>
+        new org.apache.hadoop.fs.Path(p).toUri.getPath
+      case Some(s) => throw new IllegalArgumentException(
+        s"h5ad source reads local or shared POSIX paths only (a plain " +
+          s"path or a file: URI), not scheme '$s': $p")
+    }
 }
 
 class H5adTable(inputs: Seq[H5ad.H5adInput]) extends Table with SupportsRead {

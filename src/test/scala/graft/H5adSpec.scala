@@ -255,6 +255,27 @@ class H5adSpec extends SparkSpec {
     }
   }
 
+  test("load paths: a file: URI reads as its local path; any other " +
+    "scheme fails at load, by name") {
+    val root = java.nio.file.Files.createTempDirectory("h5ad-uri")
+    java.nio.file.Files.createDirectories(root.resolve("uuid-U"))
+    MiniHdf5Writer.writeH5ad(s"$root/uuid-U/cell_by_bin.h5ad",
+      Seq("c1", "c2"), Seq("b1"), Array(1.0, 2.0), Array(0L, 0L),
+      Array(0L, 1L, 2L))
+    def rows(path: String) = spark.read.format("h5ad").load(path).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2),
+        r.getDouble(3), r.getString(4))).toSet
+    val want = Set(("c1", "uuid-U", "b1", 1.0, "cell_by_bin"),
+      ("c2", "uuid-U", "b1", 2.0, "cell_by_bin"))
+    assert(rows(root.toString) === want)
+    assert(rows(root.toUri.toString) === want) // file:///…/ directory
+    assert(rows(s"file:$root/uuid-U/cell_by_bin.h5ad") === want)
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("h5ad").load("s3a://bucket/x.h5ad"))
+    assert(e.getMessage.contains("'s3a'") && e.getMessage.contains("POSIX"),
+      e.getMessage)
+  }
+
   test("a file the reader rejects leaves no open descriptor") {
     val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.UnixOperatingSystemMXBean]

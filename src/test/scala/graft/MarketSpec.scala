@@ -67,7 +67,7 @@ class MarketSpec extends SparkSpec {
       (1L, 20L, 30L), (1L, 30L, 40L), // touch at 30 → [20,40]
       (1L, 50L, 60L), // strict gap → own island
       (2L, 100L, 110L)).toDF("user_id", "st", "en")
-    val got = Market.mergeIntervals(iv)
+    val got = Market.mergeIntervals(iv, "user_id")
       .orderBy("user_id", "island")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))

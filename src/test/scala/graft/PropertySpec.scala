@@ -275,6 +275,50 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("stitched sums and numbering equal the one-window forms on random " +
+    "groups, blocks and a descending order") {
+    import org.apache.spark.sql.expressions.Window
+    // group "a" spans many blocks; group "b" keeps every key inside one
+    // block; keys collide across groups, values are non-null longs and
+    // 2-decimal amounts of both signs
+    val gen = for {
+      bs <- Gen.oneOf(3L, 7L, 64L)
+      a <- Gen.listOfN(40, Gen.choose(0L, 400L)).map(_.distinct)
+      b <- Gen.listOfN(6, Gen.choose(0L, bs - 1)).map(_.distinct)
+      vs <- Gen.listOfN(a.size + b.size, Gen.choose(-100000L, 100000L))
+    } yield (bs, a.map("a" -> _) ++ b.map("b" -> _), vs)
+    check(gen, n = 6) { case (bs, keys, vs) =>
+      val df = keys.zip(vs).map { case ((g, k), v) => (g, k, v) }
+        .toDF("g", "k", "lv")
+        .withColumn("dv", (col("lv") / 100.0).cast("decimal(12,2)"))
+      val block = expr(s"-(k div $bs)")
+      val desc = Seq(col("k").desc)
+      val got = operators.Windows.stitchedSums(df, Seq("g"), block, desc,
+        Seq(("lv", "lv_run", "lv_tot"), ("dv", "dv_run", "dv_tot")))
+      val byG = Window.partitionBy("g")
+      val want = df
+        .withColumn("lv_run", sum(col("lv")).over(byG.orderBy(desc: _*)))
+        .withColumn("lv_tot", sum(col("lv")).over(byG))
+        .withColumn("dv_run", sum(col("dv")).over(byG.orderBy(desc: _*)))
+        .withColumn("dv_tot", sum(col("dv")).over(byG))
+      val outs = Seq("g", "k", "lv_run", "lv_tot", "dv_run", "dv_tot")
+      assert(outs.map(got.schema(_).dataType) ===
+        outs.map(want.schema(_).dataType))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select(outs.map(col): _*).collect().map(_.toSeq).toSeq
+          .sortBy(r => (r(0).toString, r(1).asInstanceOf[Long]))
+      assert(rows(got) === rows(want))
+
+      val order = Seq(col("k").desc, col("g"))
+      val rn = operators.Windows.stitchedRowNumber(df, block, order)
+        .select("g", "k", "rn")
+      val wantRn = df.select(col("g"), col("k"),
+        row_number().over(Window.orderBy(order: _*)).cast("long").as("rn"))
+      assert(rn.schema("rn").dataType === wantRn.schema("rn").dataType)
+      assert(rn.exceptAll(wantRn).isEmpty && wantRn.exceptAll(rn).isEmpty)
+    }
+  }
+
   test("bpe_merge kernel == reference greedy fold on random symbol/rule sets") {
     plans.BpeMerge.register(spark)
     def refMerge(syms: List[String], rules: List[String]): List[String] =

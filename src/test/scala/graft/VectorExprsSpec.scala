@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import graft.plans.VectorExprs
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -163,6 +165,27 @@ class VectorExprsSpec extends SparkSpec {
     assert(plan.linesIterator.exists(l =>
       l.contains("*(") && l.contains("vec_l2norm")), plan)
     df.write.format("noop").mode("overwrite").save() // codegen actually compiles
+  }
+
+  test("extension: a new session resolves every native function before " +
+    "any query registers one") {
+    // every name a register() helper installs, read from the sources so
+    // a function added without its injectFunction line fails here
+    val plans = java.nio.file.Paths.get("src", "main", "scala", "graft", "plans")
+    val text = {
+      val s = java.nio.file.Files.list(plans)
+      try s.iterator().asScala.map(f => new String(
+        java.nio.file.Files.readAllBytes(f), "UTF-8")).mkString("\n")
+      finally s.close()
+    }
+    val names = ("""FunctionIdentifier\("([a-z0-9_]+)"\)""".r
+      .findAllMatchIn(text).map(_.group(1)) ++
+      """\("(vec_[a-z0-9_]+)", classOf""".r.findAllMatchIn(text)
+        .map(_.group(1))).toSet
+    assert(names.contains("jaro_winkler") && names.size >= 20, names)
+    val fresh = spark.newSession()
+    val missing = names.filterNot(n => fresh.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
   }
 
   test("sql surface: kernels callable through the extension-injected names") {
