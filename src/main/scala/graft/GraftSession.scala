@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSession
   * adaptive plan in `target/profile/<query>.txt`.
   *
   * Semantics pinned here:
-  *  - `GraftExtensions` (native functions poly_hash64 / minhash_sig /
-  *    simhash64 + the RangeJoinRewrite optimizer rule);
+  *  - `GraftExtensions`: every native function plus the
+  *    RangeJoinRewrite and MvRewrite rules. It is the only way the
+  *    functions reach a session, so a session built without
+  *    `configure` has neither them nor the semantics below;
   *  - ANSI off: cast-failure-to-null, matching the reference's
   *    pandas.to_numeric coercion (`bin/concatenate.py:110`) and DuckDB
   *    TRY_CAST (Spark 4 defaults ANSI on);

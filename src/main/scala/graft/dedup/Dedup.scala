@@ -111,7 +111,6 @@ object Dedup {
     * [[graft.plans.MinHashSig]]). Values identical to both other paths. */
   def minhashSignaturesFused(s: SparkSession, docs: DataFrame,
       textCol: String, k: Int): DataFrame = {
-    graft.plans.MinHashSig.register(s)
     docs.repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         call_function("minhash_sig", wordSet(col(textCol)), lit(k)).as("sig"))
@@ -121,7 +120,6 @@ object Dedup {
     * scan itself — the map-only analog of [[simhashTable]] (identical
     * values, asserted in DedupSpec). */
   def simhashFused(s: SparkSession, docs: DataFrame, textCol: String): DataFrame = {
-    graft.plans.SimHash64.register(s)
     docs.repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"),
         call_function("simhash64", split(lower(col(textCol)), " ")).as("simhash"))
@@ -535,7 +533,6 @@ object Dedup {
     */
   def embeddingLshPairs(embeddings: DataFrame, nBits: Int = 8,
       maxBucket: Int = 256): DataFrame = {
-    graft.plans.VectorExprs.register(embeddings.sparkSession)
     val e = embeddings
       .withColumn("vd", VectorOps.toDouble(col("embedding")))
       .withColumn("bucket",
@@ -798,8 +795,6 @@ object Dedup {
     // Oracled: signature + digest fold replayed in DuckDB
     // (plans.XxhSqlOracle.minhashKshingleSql).
     "dedup_minhash_kshingle" -> ((s, d) => {
-      graft.plans.MinHashSig.register(s)
-      graft.plans.WordKGrams.register(s)
       t(s, d, "documents")
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
@@ -1176,7 +1171,6 @@ object Dedup {
     // gets cleaned at corpus scale: the boilerplate table stays
     // dims-sized and the rewrite never shuffles the fact.
     "boilerplate_strip" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val docs = t(s, d, "documents")
       val top = docs.select(
         explode(wordKShingles(col("text"), 5)).as("gram"))
@@ -1200,7 +1194,6 @@ object Dedup {
     // shingles across many documents mark templated text). One explode +
     // one partial+final count; top-k via TakeOrderedAndProject.
     "dedup_repeated_ngrams" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val docs = t(s, d, "documents")
       docs.select(col("doc_id"),
         // wordKShingles lowercases internally
@@ -1230,7 +1223,6 @@ object Dedup {
 
     // Embedding cosine on adjacent-id pairs (oracle-checked numeric path).
     "dedup_embed_cosine_pairs" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val e = t(s, d, "embeddings")
       val a = e.select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("va"))
       val b = e.select((col("vec_id") - 1).as("vec_id"),
@@ -1268,7 +1260,6 @@ object Dedup {
     // 8-13-grams; 3 here because this corpus is word-permutation text
     // (longer shared grams are vanishingly rare by construction).
     "dedup_contamination" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val docs = t(s, d, "documents")
       contamination(docs.filter(col("doc_id") % 97 =!= 0),
         docs.filter(col("doc_id") % 97 === 0), k = 3)
@@ -1283,7 +1274,6 @@ object Dedup {
     // broadcast-benchmark one-scan shape; every train doc gets a row
     // (zero-overlap docs score 0 — the decision needs them too).
     "dedup_containment_score" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val docs = t(s, d, "documents")
       val trainGrams = docs.filter(col("doc_id") % 97 =!= 0)
         .select(col("doc_id"),

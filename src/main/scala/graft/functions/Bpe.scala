@@ -109,8 +109,6 @@ object Bpe {
     * [[trainLocal]], pinned by BpeSpec's planted-corpus twin test. */
   private[graft] def trainDistributed(words: org.apache.spark.sql.DataFrame)
       : Seq[(Int, String, String, Long)] = {
-    val s = words.sparkSession
-    graft.plans.BpeMerge.register(s)
     var cur = words
       .select(charSyms(col("word")).as("syms"), col("freq"))
       .persist()
@@ -189,7 +187,6 @@ object Bpe {
     // the broadcast ships it once per executor. PlanSpec whitelists
     // this 1-row BNLJ (the scalar-broadcast pattern).
     "vocab_bpe_apply" -> ((s, d) => {
-      graft.plans.BpeMerge.register(s)
       val sess = s; import sess.implicits._
       val rules = Seq(Tuple1(trainRules(s, d).map(r => s"${r._2} ${r._3}")))
         .toDF("rules")

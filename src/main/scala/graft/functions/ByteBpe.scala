@@ -143,8 +143,6 @@ object ByteBpe {
     * discipline as [[Bpe.trainDistributed]]. */
   private[graft] def trainDistributed(words: DataFrame)
       : Seq[(Int, String, String, Long)] = {
-    val s = words.sparkSession
-    graft.plans.BpeMerge.register(s)
     var cur = words
       .select(byteSyms(col("word")).as("syms"), col("freq"))
       .persist()
@@ -216,7 +214,6 @@ object ByteBpe {
     // per task is the thing that breaks first). No UNK column: byte
     // level makes every word encodable by construction.
     "vocab_bytebpe_apply" -> ((s, d) => {
-      graft.plans.BpeMerge.register(s)
       val sess = s; import sess.implicits._
       val rules = Seq(Tuple1(
         trainRules(s, d).map(r => s"${r._2} ${r._3} ${join(r._2, r._3)}")))
@@ -249,7 +246,6 @@ object ByteBpe {
     // rules map-only shape as apply: no shuffle before the final
     // per-doc aggregate.
     "vocab_bytebpe_decode" -> ((s, d) => {
-      graft.plans.BpeMerge.register(s)
       val sess = s; import sess.implicits._
       val rules = Seq(Tuple1(
         trainRules(s, d).map(r => s"${r._2} ${r._3} ${join(r._2, r._3)}")))

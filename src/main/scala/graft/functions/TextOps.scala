@@ -1,7 +1,6 @@
 package graft.functions
 
 import graft.{Tables, U}
-import graft.plans.PolyHash64
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -199,7 +198,6 @@ object TextOps {
     // aggregation; the shingle set reuses the fused word_kgrams
     // codegen kernel (distinct per doc by construction).
     "text_gram_novelty" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val grams = Tables.t(s, d, "documents")
         .select(col("doc_id"),
           explode(graft.dedup.Dedup.wordKShingles(col("text"), 3))
@@ -670,7 +668,6 @@ object TextOps {
     // the 64-bit wraparound polynomial is replayed in DuckDB with
     // HUGEINT mod-2^64 arithmetic over the same UTF-8 bytes.
     "text_fingerprint" -> ((s, d) => {
-      PolyHash64.register(s)
       t(s, d, "documents")
         .select(col("doc_id"), expr("poly_hash64(text)").as("fingerprint"))
         .orderBy("doc_id")
@@ -723,7 +720,6 @@ object TextOps {
     // shuffled every gram of the corpus just to count within doc_id).
     // Small-integer ratios → the engine-stable round6 spelling both sides.
     "text_repetition_stats" -> ((s, d) => {
-      graft.plans.GramStats.register(s) // no-op under GraftExtensions
       val words = split(lower(col("text")), " ")
       t(s, d, "documents")
         .select(col("doc_id"),
@@ -1475,7 +1471,6 @@ object TextOps {
     }),
 
     "text_pmi_bigrams" -> ((s, d) => {
-      graft.plans.WordKGrams.register(s)
       val words = split(lower(col("text")), " ")
       val docs = t(s, d, "documents")
       val uni = docs.select(explode(array_distinct(words)).as("w"))

@@ -43,7 +43,6 @@ object TokenizerCompare {
     // bit-identical to the composed-replay totals (each tokenizer still
     // reports over ITS OWN qualifying-word universe — see the scaladoc).
     "vocab_compare_tokenizers" -> ((s, d) => {
-      graft.plans.BpeMerge.register(s)
       val sess = s; import sess.implicits._
       val rules = Seq((
         Bpe.trainRules(s, d).map(r => s"${r._2} ${r._3}"),

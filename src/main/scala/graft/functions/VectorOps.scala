@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * pins value-and-null parity between the two forms, so swapping was a
   * pure speedup.
   *
-  * Sessions built via [[graft.GraftSession]] get the functions from the
-  * injected `GraftExtensions`; bare sessions must call
-  * `graft.plans.VectorExprs.register(spark)` once.
+  * The functions come from `GraftExtensions`, which
+  * [[graft.GraftSession]] injects into every session.
   *
   * All kernels fold left-to-right in DOUBLE (cast arrays first via
   * [[toDouble]]) so results are bit-reproducible and engine-comparable.

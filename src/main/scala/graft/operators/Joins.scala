@@ -261,7 +261,6 @@ object Joins {
     // failing fast; test-SF data always stays on the blocked path, so
     // the oracle replays exactly.
     "join_blocked_jaro" -> ((s, d) => {
-      graft.plans.JaroWinkler.register(s)
       val p = t(s, d, "part")
         .select(col("p_partkey"), lower(col("p_name")).as("nm"),
           col("p_brand"))
@@ -290,7 +289,6 @@ object Joins {
     // sorted-neighborhood (n·w) instead of an exception; scoring
     // itself is map-only over whichever pair table it gets.
     "join_er_fellegi_sunter" -> ((s, d) => {
-      graft.plans.JaroWinkler.register(s)
       val p = t(s, d, "part")
         .select(col("p_partkey"), lower(col("p_name")).as("nm"),
           col("p_brand"), col("p_type"), col("p_size"),
@@ -343,7 +341,6 @@ object Joins {
     // is the identical literal-pinned log₂(m/u) stack. Output keeps
     // every candidate with its evidence flags, canonical (lo, hi) ids.
     "join_er_sorted_neighborhood" -> ((s, d) => {
-      graft.plans.JaroWinkler.register(s)
       // the ONE width shared with the above-cap ER auto-route
       // (erCandidatePairs) — widening the window must move both paths
       val w = SnWidth

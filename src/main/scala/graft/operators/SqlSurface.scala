@@ -487,15 +487,10 @@ object SqlSurface {
         |ORDER BY o_orderpriority""".stripMargin)),
 
     // Native extension functions from SQL (poly_hash64 / simhash64 /
-    // minhash_sig are injected by GraftExtensions — no registration call
-    // needed in a GraftSession; the explicit registrations below only
-    // cover bare test sessions). Oracled: all three hash functions
-    // replay in DuckDB (plans.XxhSqlOracle.nativeFnsSql); parity is
-    // additionally asserted in DedupSpec/TextOpsSpec.
+    // minhash_sig, injected by GraftExtensions). Oracled: all three hash
+    // functions replay in DuckDB (plans.XxhSqlOracle.nativeFnsSql);
+    // parity is additionally asserted in DedupSpec/TextOpsSpec.
     "sql_native_fns" -> ((s, d) => {
-      graft.plans.PolyHash64.register(s)
-      graft.plans.MinHashSig.register(s)
-      graft.plans.SimHash64.register(s)
       withViews(s, d)(
       """SELECT doc_id,
         |  poly_hash64(text) AS fp,

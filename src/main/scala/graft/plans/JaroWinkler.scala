@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Jaro-Winkler string similarity as a native codegen Expression —
@@ -118,9 +116,4 @@ object JaroWinkler {
     require(exprs.length == 2, "jaro_winkler(string, string)")
     JaroWinkler(exprs(0), exprs(1))
   }
-
-  /** Register `jaro_winkler(a, b)` on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("jaro_winkler"), info, builder)
 }

@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
 
 /** Fused MinHash signature — the custom-Expression slot called out in
   * SURVEY.md §4.3: K minhashes of a shingle array computed in ONE pass
@@ -91,10 +89,10 @@ object MinHashSig {
   private[plans] val info =
     new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig")
 
-  /** Validated builder shared by [[register]] and
-    * [[GraftExtensions]]: checks arity and that `k` is a foldable integer
-    * literal before eval, so misuse fails with a clear message instead of
-    * an opaque IndexOutOfBounds/ClassCast at analysis time. */
+  /** Validated builder for [[GraftExtensions]]: checks arity and that
+    * `k` is a foldable integer literal before eval, so misuse fails with
+    * a clear message instead of an opaque IndexOutOfBounds/ClassCast at
+    * analysis time. */
   private[plans] val builder: Seq[Expression] => Expression = exprs => {
     require(exprs.length == 2, "minhash_sig(array<string>, k)")
     require(exprs(1).foldable,
@@ -107,10 +105,4 @@ object MinHashSig {
     }
     MinHashSig(exprs.head, k)
   }
-
-  /** Register `minhash_sig(arr, k)` on an existing session (k must be a
-    * foldable integer literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"), info, builder)
 }

@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
-import org.apache.spark.sql.SparkSession
 
 /** Nearest-centroid assignment (IVF coarse quantization) as a native
   * codegen'd expression: argmin over squared L2 distance to a broadcast
@@ -106,8 +104,4 @@ object NearestCentroid {
     }
     NearestCentroid(exprs.head, rows)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nearest_centroid"), info, builder)
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: 64-bit polynomial rolling hash of a string
@@ -66,53 +64,8 @@ object PolyHash64 {
   def hashString(s: String): Long =
     hashBytes(UTF8String.fromString(s).getBytes)
 
-  private val info = new ExpressionInfo(classOf[PolyHash64].getName, "poly_hash64")
-  private val builder = (exprs: Seq[Expression]) => PolyHash64(exprs.head)
-
-  /** Runtime registration (works on any existing session). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("poly_hash64"), info, builder)
-}
-
-/** SparkSessionExtensions entry point: enable with
-  * `spark.sql.extensions=graft.plans.GraftExtensions` to get the native
-  * functions in every session without touching the registry by hand.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("poly_hash64"),
-      new ExpressionInfo(classOf[PolyHash64].getName, "poly_hash64"),
-      (exprs: Seq[Expression]) => PolyHash64(exprs.head)))
-    // Same validated builder as MinHashSig.register (arity + foldable-
-    // literal check) so misuse fails with a descriptive error.
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      MinHashSig.info, MinHashSig.builder))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      SimHash64.info, SimHash64.builder))
-    ext.injectFunction((FunctionIdentifier("nearest_centroid"),
-      NearestCentroid.info, NearestCentroid.builder))
-    ext.injectFunction((FunctionIdentifier("zorder64"),
-      ZOrder64.info, ZOrder64.builder))
-    ext.injectFunction((FunctionIdentifier("gram_stats"),
-      GramStats.info, GramStats.builder))
-    ext.injectFunction((FunctionIdentifier("word_kgrams"),
-      WordKGrams.info, WordKGrams.builder))
-    ext.injectFunction((FunctionIdentifier("gopher_rep"),
-      GopherRep.info, GopherRep.builder))
-    ext.injectFunction((FunctionIdentifier("char_entropy_stats"),
-      CharEntropyStats.info, CharEntropyStats.builder))
-    ext.injectFunction((FunctionIdentifier("jaro_winkler"),
-      JaroWinkler.info, JaroWinkler.builder))
-    ext.injectFunction((FunctionIdentifier("bpe_merge"),
-      BpeMerge.info, BpeMerge.builder))
-    VectorExprs.entries.foreach { case (n, c, b) =>
-      ext.injectFunction((FunctionIdentifier(n),
-        new ExpressionInfo(c.getName, n), b))
-    }
-    // Interval-overlap theta joins → bucketed equi-joins (no BNLJ).
-    ext.injectOptimizerRule(_ => RangeJoinRewrite)
-    // Transparent materialized-view rewrite for subsumed aggregates.
-    ext.injectOptimizerRule(s => new MvRewrite(s))
-  }
+  private[plans] val info =
+    new ExpressionInfo(classOf[PolyHash64].getName, "poly_hash64")
+  private[plans] val builder: Seq[Expression] => Expression =
+    exprs => PolyHash64(exprs.head)
 }

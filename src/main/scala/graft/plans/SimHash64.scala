@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
-import org.apache.spark.sql.SparkSession
 
 /** Fused 64-bit SimHash of a token array — the second custom-Expression
   * slot (SURVEY.md §4.3): the whole signature materializes in ONE
@@ -97,9 +95,4 @@ object SimHash64 {
     require(exprs.length == 1, "simhash64(array<string>)")
     SimHash64(exprs.head)
   }
-
-  /** Register `simhash64(tokens)` on an existing session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash64"), info, builder)
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSession
 
 /** Fused vector kernels over `ARRAY<DOUBLE>` embedding columns — the
   * codegen'd replacements for the higher-order-function forms in
@@ -383,37 +381,36 @@ case class VecLongDot(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object VectorExprs {
-  private def info(name: String, cls: Class[_]) = new ExpressionInfo(cls.getName, name)
+  private type Entry = (ExpressionInfo, Seq[Expression] => Expression)
 
-  private def unary(name: String, f: Expression => Expression)
-      : Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 1, s"$name(array)")
-    f(exprs.head)
-  }
-  private def binary(name: String, f: (Expression, Expression) => Expression)
-      : Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 2, s"$name(array, scalar)")
-    f(exprs(0), exprs(1))
-  }
+  private def unary(info: ExpressionInfo)(f: Expression => Expression): Entry =
+    info -> (exprs => {
+      require(exprs.length == 1, s"${info.getName}(array)")
+      f(exprs.head)
+    })
+  private def binary(info: ExpressionInfo)(
+      f: (Expression, Expression) => Expression): Entry =
+    info -> (exprs => {
+      require(exprs.length == 2, s"${info.getName}(array, scalar)")
+      f(exprs(0), exprs(1))
+    })
 
-  private[plans] val entries: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("vec_dot", classOf[VecDot], binary("vec_dot", VecDot.apply)),
-    ("vec_l2norm", classOf[VecL2Norm], unary("vec_l2norm", VecL2Norm.apply)),
-    ("vec_absmax", classOf[VecAbsMax], unary("vec_absmax", VecAbsMax.apply)),
-    ("vec_scale", classOf[VecScale],
-      binary("vec_scale", VecScale(_, _, divide = false))),
-    ("vec_divide", classOf[VecScale],
-      binary("vec_divide", VecScale(_, _, divide = true))),
-    ("vec_int8", classOf[VecInt8], binary("vec_int8", VecInt8.apply)),
-    ("vec_lsum", classOf[VecLongSum],
-      unary("vec_lsum", VecLongSum(_, absValues = false))),
-    ("vec_l1sum", classOf[VecLongSum],
-      unary("vec_l1sum", VecLongSum(_, absValues = true))),
-    ("vec_ldot", classOf[VecLongDot], binary("vec_ldot", VecLongDot.apply)))
-
-  /** Runtime registration (works on any existing session). */
-  def register(spark: SparkSession): Unit = entries.foreach { case (n, c, b) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(n), info(n, c), b)
-  }
+  private[plans] val entries: Seq[Entry] = Seq(
+    binary(new ExpressionInfo(classOf[VecDot].getName, "vec_dot"))(VecDot.apply),
+    unary(new ExpressionInfo(classOf[VecL2Norm].getName, "vec_l2norm"))(
+      VecL2Norm.apply),
+    unary(new ExpressionInfo(classOf[VecAbsMax].getName, "vec_absmax"))(
+      VecAbsMax.apply),
+    binary(new ExpressionInfo(classOf[VecScale].getName, "vec_scale"))(
+      VecScale(_, _, divide = false)),
+    binary(new ExpressionInfo(classOf[VecScale].getName, "vec_divide"))(
+      VecScale(_, _, divide = true)),
+    binary(new ExpressionInfo(classOf[VecInt8].getName, "vec_int8"))(
+      VecInt8.apply),
+    unary(new ExpressionInfo(classOf[VecLongSum].getName, "vec_lsum"))(
+      VecLongSum(_, absValues = false)),
+    unary(new ExpressionInfo(classOf[VecLongSum].getName, "vec_l1sum"))(
+      VecLongSum(_, absValues = true)),
+    binary(new ExpressionInfo(classOf[VecLongDot].getName, "vec_ldot"))(
+      VecLongDot.apply))
 }

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
-import org.apache.spark.sql.SparkSession
 
 /** 64-bit Z-order (Morton) interleave of two integral columns — the
   * multi-dimensional clustering key for storage layout: writing files
@@ -97,8 +95,4 @@ object ZOrder64 {
     require(exprs.length == 2, "zorder64(x, y)")
     ZOrder64(exprs.head, exprs(1))
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("zorder64"), info, builder)
 }

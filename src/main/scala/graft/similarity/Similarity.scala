@@ -146,7 +146,6 @@ object Similarity {
         .select(col("vec_id")), col("doc_id") === col("vec_id"))
 
   def bruteForceTopK(s: SparkSession, d: String, queryId: Long, k: Int): DataFrame = {
-    graft.plans.VectorExprs.register(s) // no-op under GraftExtensions
     val q = typedlit(queryVector(s, d, queryId).toSeq)
     Tables.t(s, d, "embeddings")
       .select(col("vec_id"),
@@ -162,7 +161,6 @@ object Similarity {
     * degenerates to overlap = k (the SimilaritySpec contract). */
   def matryoshkaOverlap(s: SparkSession, d: String, truncDims: Int,
       k: Int): DataFrame = {
-    graft.plans.VectorExprs.register(s)
     val qv = queryVector(s, d, 0L)
     val qFull = typedlit(qv.toSeq)
     val qTrunc = typedlit(qv.take(truncDims).toSeq)
@@ -188,7 +186,6 @@ object Similarity {
     * -2 (below every real cosine) instead of null. */
   def maxsimTopK(s: SparkSession, d: String, queryId: Long, k: Int,
       parts: Int = 4): DataFrame = {
-    graft.plans.VectorExprs.register(s)
     val qv = queryVector(s, d, queryId)
     require(qv.length % parts == 0, s"dim ${qv.length} not divisible by $parts")
     val sub = qv.length / parts
@@ -208,7 +205,6 @@ object Similarity {
   }
 
   def annTopK(s: SparkSession, d: String, queryId: Long, k: Int): DataFrame = {
-    graft.plans.VectorExprs.register(s)
     val qv = queryVector(s, d, queryId)
     val qSig = signatureOf(qv)
     // Multi-probe: own bucket + every 1-bit and 2-bit flip (37 of 256
@@ -239,7 +235,6 @@ object Similarity {
     */
   def trainIvfCentroids(s: SparkSession, d: String, k: Int,
       iters: Int = 2, sampleEvery: Long = 1L): Array[(Int, Array[Double])] = {
-    graft.plans.NearestCentroid.register(s)
     // sampleEvery > 1 trains on the deterministic id-stride sample —
     // the 100 TB rule (quantizer quality needs a sample, not the
     // corpus); the TRAINED LITERALS are what downstream assignment and
@@ -326,7 +321,6 @@ object Similarity {
   /** IVF ANN: probe the `nProbe` nearest centroids, exact cosine inside. */
   def ivfTopK(s: SparkSession, d: String, queryId: Long, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     val centroids = ivfCentroids(s, d, nCentroids)
     val qv = queryVector(s, d, queryId)
     def sq(c: Array[Double]): Double =
@@ -384,7 +378,6 @@ object Similarity {
     * τ is ≈ 0.95+. */
   def semDedup(s: SparkSession, d: String, nCentroids: Int = 0,
       tau: Double = SemTau): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     // Adaptive k: the within-cluster pair count is Σ(n_c choose 2) —
     // QUADRATIC in cluster size — so k must grow with the corpus to
     // keep clusters ~constant (~1250 vectors → ~N·625 comparisons
@@ -472,7 +465,6 @@ object Similarity {
     * (which feeds coarse-quantizer residuals instead). */
   private def trainPqOn(s: SparkSession, vecs: DataFrame, m: Int, k: Int,
       iters: Int): Array[Array[Array[Double]]] = {
-    graft.plans.NearestCentroid.register(s)
     val sub = Dim / m
     require(m * sub == Dim, s"PQ subspaces must tile Dim=$Dim, got m=$m")
     // init: subspace slices of the first k vectors by id (IVF convention)
@@ -530,7 +522,6 @@ object Similarity {
   def trainResidualPqCodebooks(s: SparkSession, d: String, m: Int, k: Int,
       coarse: Array[(Int, Array[Double])], iters: Int = 2)
       : Array[Array[Array[Double]]] = {
-    graft.plans.NearestCentroid.register(s)
     val centArr = coarse.sortBy(_._1).map(_._2.toSeq).toSeq
     val resid = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("vd"))
@@ -571,7 +562,6 @@ object Similarity {
   def ivfPqResidualTopK(s: SparkSession, d: String, queryId: Long, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4,
       m: Int = 8, kCent: Int = 16): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     val coarse = ivfCentroids(s, d, nCentroids)
     val books = residualPqCodebooks(s, d, m, kCent, nCentroids)
     val sub = Dim / m
@@ -633,7 +623,6 @@ object Similarity {
     */
   def pqTopK(s: SparkSession, d: String, queryId: Long, k: Int,
       m: Int = 8, kCent: Int = 16): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     val books = pqCodebooks(s, d, m, kCent)
     val sub = Dim / m
     val qv = queryVector(s, d, queryId)
@@ -673,7 +662,6 @@ object Similarity {
   def ivfPqTopK(s: SparkSession, d: String, queryId: Long, k: Int,
       nCentroids: Int = 16, nProbe: Int = 4,
       m: Int = 8, kCent: Int = 16): DataFrame = {
-    graft.plans.NearestCentroid.register(s)
     val coarse = ivfCentroids(s, d, nCentroids)
     val books = pqCodebooks(s, d, m, kCent)
     val sub = Dim / m
@@ -707,7 +695,6 @@ object Similarity {
     * top-k via a rank window over the narrow (qid, vec_id, sim) stream.
     */
   def batchTopK(s: SparkSession, d: String, nQueries: Int, k: Int): DataFrame = {
-    graft.plans.VectorExprs.register(s)
     val W = org.apache.spark.sql.expressions.Window
     val emb = Tables.t(s, d, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("vd"))
@@ -801,8 +788,6 @@ object Similarity {
   def evalIndexPanel(s: SparkSession, d: String, nPanel: Int = 10,
       k: Int = 10, nCentroids: Int = 16, nProbe: Int = 4,
       m: Int = 8, kCent: Int = 16): DataFrame = {
-    graft.plans.VectorExprs.register(s)
-    graft.plans.NearestCentroid.register(s)
     val W = org.apache.spark.sql.expressions.Window
     val sub = Dim / m
     val coarse = ivfCentroids(s, d, nCentroids)
@@ -907,7 +892,6 @@ object Similarity {
     // runs through the fused codegen kernels (graft.plans.VectorExprs):
     // the HOF spelling of the same query ran interpreted at ~7 s/sf0.1.
     "sim_normalize" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val vd = toDouble(col("embedding"))
       val nrm = call_function("vec_l2norm", vd)
       val unit = call_function("vec_divide", vd, nrm)
@@ -928,7 +912,6 @@ object Similarity {
     // kernels as above — vec_int8 materializes the quantized vector in
     // one codegen'd pass, the checksums fold it without HOFs.
     "sim_quantize_int8" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val vd = toDouble(col("embedding"))
       val maxAbs = call_function("vec_absmax", vd)
       val scale = lit(127.0) / maxAbs
@@ -965,7 +948,6 @@ object Similarity {
     // Output is |clusters|×CapK bounded. Oracled via centroid literals
     // (clusterCapOracleEntry).
     "sample_cluster_cap" -> ((s, d) => {
-      graft.plans.NearestCentroid.register(s)
       val sess = s; import sess.implicits._
       val cents = semCentroids(s, d)
       val centDf = broadcast(cents.sortBy(_._1).toSeq
@@ -1057,7 +1039,6 @@ object Similarity {
     // what the panel's aggregate rows cannot show: WHICH query a
     // recall regression hits.
     "sim_eval_recall_ndcg" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val W = org.apache.spark.sql.expressions.Window
       val k = 10
       val b = Tables.t(s, d, "embeddings")
@@ -1095,7 +1076,6 @@ object Similarity {
     // on vec_id; the Hamming distance is exact integer arithmetic, so
     // the top-k cut is engine-identical with no rounding bridge at all.
     "sim_hamming_topk" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val qv = queryVector(s, d, 0L)
       val qSigns = typedlit(qv.map(_ >= 0.0).toSeq)
       val ham = size(filter(
@@ -1197,7 +1177,6 @@ object Similarity {
     // filter applies to the ROUNDED similarity (survivor set
     // bit-identical across engines) and there is no limit.
     "sim_range_search" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val q = typedlit(queryVector(s, d, 0L).toSeq)
       Tables.t(s, d, "embeddings")
         .select(col("vec_id"),
@@ -1256,7 +1235,6 @@ object Similarity {
     // reproduces the scores bit-for-bit; recall vs the float path is
     // additionally asserted in SimilaritySpec.
     "sim_topk_int8" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val qv = queryVector(s, d, 0L)
       val qAbs = qv.map(math.abs).max
       val qScale = 127.0 / qAbs
@@ -1305,8 +1283,6 @@ object Similarity {
     // — the shared oracle proves the layout changes the access path,
     // never the answer.
     "sim_ivf_partitioned_probe" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
-      graft.plans.NearestCentroid.register(s)
       val dir = graft.sources.PartitionedData.embeddingsByCell(s, d)
       val centroids = ivfCentroids(s, d, 16)
       val qv = queryVector(s, d, 0L)
@@ -1384,7 +1360,6 @@ object Similarity {
     // sim_batch_topk with the label-disequality in the join condition,
     // so the filter prunes before scoring.
     "pair_hard_negatives" -> ((s, d) => {
-      graft.plans.VectorExprs.register(s)
       val W = org.apache.spark.sql.expressions.Window
       val emb = Tables.t(s, d, "embeddings")
         .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("vd"))

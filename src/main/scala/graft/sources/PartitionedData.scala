@@ -456,7 +456,6 @@ object PartitionedData {
     layout(spark, d, "orders", "orders_zorder",
       p => ManifestTable.versions(p.toString).nonEmpty,
       inPlace = true) { tmp =>
-      graft.plans.ZOrder64.register(spark)
       val orders = Tables.t(spark, d, "orders")
       val maxCust = orders.agg(max(col("o_custkey"))).head().getLong(0)
       val cDiv = math.max(1L, (maxCust + 1) / 256)
@@ -482,7 +481,6 @@ object PartitionedData {
     * on cell ids. */
   def embeddingsByCell(spark: SparkSession, d: String): String =
     layout(spark, d, "embeddings", "embeddings_by_cell") { tmp =>
-      graft.plans.NearestCentroid.register(spark)
       val cents = graft.similarity.Similarity.ivfCentroids(spark, d, 16)
       Tables.t(spark, d, "embeddings")
         .withColumn("cid", graft.similarity.Similarity.assignCol(

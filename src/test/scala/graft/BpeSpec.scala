@@ -66,7 +66,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpe_merge kernel: greedy non-overlap, rule order, null passthrough") {
-    plans.BpeMerge.register(spark)
     def run(syms: Seq[String], rules: Seq[String]): Seq[String] =
       spark.range(1)
         .select(call_function("bpe_merge",
@@ -86,7 +85,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("bpe_merge: codegen and interpreted agree") {
-    plans.BpeMerge.register(spark)
     val df = Tables.t(spark, sfDir, "documents").limit(100)
       .select(array_remove(split(lower($"text"), ""), " ").as("syms"))
     val expr = call_function("bpe_merge", $"syms",
@@ -123,7 +121,6 @@ class BpeSpec extends SparkSpec {
 
   test("apply: tokens round-trip to the original words, compression holds") {
     Derived.clear("bpe_rules")
-    plans.BpeMerge.register(spark)
     val rules = functions.Bpe.trainRules(spark, sfDir).map(r => s"${r._2} ${r._3}")
     val words = Tables.t(spark, sfDir, "documents").limit(200)
       .select(explode(split(lower($"text"), " ")).as("word"))

@@ -42,7 +42,6 @@ class ByteBpeSpec extends SparkSpec {
 
   test("bpe_merge 3-field rule uses the explicit merged spelling; " +
     "2-field form keeps plain concatenation") {
-    graft.plans.BpeMerge.register(spark)
     val df = Seq(Tuple1(Seq("97", "98", "97", "98", "99")))
       .toDF("syms")
     val merged3 = df.select(call_function("bpe_merge", col("syms"),
@@ -124,7 +123,6 @@ class ByteBpeSpec extends SparkSpec {
 
   test("decode(encode(s)) == s for every string: multibyte, emoji, " +
     "ZWJ sequences, combining marks — with and without merges firing") {
-    graft.plans.BpeMerge.register(spark)
     val emoji = new String(Character.toChars(0x1F600))
     val zwj = "👩‍💻" // woman technologist
     val words = Seq("a", "the", "café", "€uro", s"${emoji}grin", zwj,

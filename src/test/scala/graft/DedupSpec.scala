@@ -354,7 +354,6 @@ class DedupSpec extends SparkSpec {
   test("fused SimHash64 matches the HOF path on arrays with null tokens") {
     // xxhash64(null) = the seed (42), so null tokens VOTE in the HOF
     // path; the fused expression must vote identically.
-    graft.plans.SimHash64.register(spark)
     val df = Seq(1L, 2L).toDF("id").select($"id",
       when($"id" === 1L, typedlit(Seq[Option[String]](Some("a"), None, Some("b"))))
         .otherwise(typedlit(Seq[Option[String]](Some("a"), Some("b")))).as("toks"))
@@ -386,7 +385,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fused MinHashSig: codegen and interpreted eval agree, nulls pass through") {
-    graft.plans.MinHashSig.register(spark)
     val df = Seq(Some(Seq("a", "b")), Some(Seq.empty[String]), None).toDF("arr")
     val out = df.select(expr("minhash_sig(arr, 4)")).collect()
     // non-empty: real mins; empty: MaxValue sentinels; null: null

@@ -394,7 +394,6 @@ class OperatorSemanticsSpec extends SparkSpec {
 
   test("boilerplate strip: planted shared 5-gram removed exactly where " +
     "it occurs, splice seams re-stripped, clean docs untouched") {
-    graft.plans.WordKGrams.register(spark)
     val boiler = "click here to subscribe now"
     val docs = Seq(
       (1L, s"alpha beta $boiler gamma delta"),

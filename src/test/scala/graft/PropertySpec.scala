@@ -320,7 +320,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("bpe_merge kernel == reference greedy fold on random symbol/rule sets") {
-    plans.BpeMerge.register(spark)
     def refMerge(syms: List[String], rules: List[String]): List[String] =
       rules.foldLeft(syms) { (cur, rule) =>
         rule.split(" ", 2) match {

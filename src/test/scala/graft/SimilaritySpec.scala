@@ -187,7 +187,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("fused NearestCentroid matches the HOF argmin, incl. tie-break and gaps") {
-    graft.plans.NearestCentroid.register(spark)
     val centroids: Array[(Int, Array[Double])] = Array(
       0 -> Array(0.0, 0.0),
       // non-contiguous id (cluster 1 "emptied"): index→id mapping must hold
@@ -251,7 +250,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("vec_ldot matches the HOF integer dot, incl. null/mismatch edges") {
-    graft.plans.VectorExprs.register(spark)
     val df = Seq(
       (1L, Some(Seq(1L, -2L, 3L)), Some(Seq(4L, 5L, -6L))),   // -24
       (2L, Some(Seq(127L, 127L)), Some(Seq(127L, 127L))),     // 32258

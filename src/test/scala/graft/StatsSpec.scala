@@ -53,7 +53,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("jaro-winkler codegen path equals the interpreted kernel") {
-    plans.JaroWinkler.register(spark)
     val pairs = Seq(("MARTHA", "MARHTA"), ("CRATE", "TRACE"),
       ("azure lace", "azure lace navy"), ("", "x"), ("same", "same"))
     val got = pairs.toDF("a", "b")

@@ -19,7 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - h5ad files are decoded in [[graft.sources.H5ad]]. A
   *    `new MiniHdf5.Reader` anywhere else is a second h5ad reader (CSR
   *    checks, identity columns, one task per file) — read through
-  *    `format("h5ad")` or `H5ad.scanModalities` instead. */
+  *    `format("h5ad")` or `H5ad.scanModalities` instead.
+  *  - Native functions reach a session through
+  *    [[graft.plans.GraftExtensions]]. A `registerFunction` call or a
+  *    `FunctionIdentifier(` anywhere else writes the shared session's
+  *    function registry at runtime — add the function's
+  *    `(info, builder)` to `GraftExtensions.functions` instead. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
 
@@ -91,5 +96,17 @@ class StoreLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "decode h5ad files through graft.sources.H5ad:\n", "\n", ""))
+  }
+
+  private val functionRegistration = """\bregisterFunction\b|\bFunctionIdentifier\(""".r
+
+  test("native functions are injected in one place") {
+    val offenders = sources.flatMap { case (f, code) =>
+      if (f.getFileName.toString == "GraftExtensions.scala") Nil
+      else functionRegistration.findAllIn(code).map(m => s"$f: $m").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "inject native functions through graft.plans.GraftExtensions:\n",
+      "\n", ""))
   }
 }

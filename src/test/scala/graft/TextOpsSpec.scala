@@ -23,7 +23,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("poly_hash64 matches reference implementation and handles null/empty") {
-    PolyHash64.register(spark)
     val df = Seq(Some("hello world"), Some(""), None).toDF("text")
     val out = df.select(expr("poly_hash64(text)")).collect()
       .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
@@ -33,7 +32,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("poly_hash64 codegen path agrees with interpreted eval") {
-    PolyHash64.register(spark)
     // Force both paths over real data: codegen (projection) vs eval via
     // the reference impl on collected strings.
     val docs = Tables.t(spark, sfDir, "documents").limit(100)

@@ -2,7 +2,8 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.plans.VectorExprs
+import graft.plans.GraftExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
@@ -13,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 class VectorExprsSpec extends SparkSpec {
   import spark.implicits._
-
-  VectorExprs.register(spark)
 
   private val vecs = Seq(
     (1L, Seq[java.lang.Double](3.0, 4.0)),
@@ -169,8 +168,8 @@ class VectorExprsSpec extends SparkSpec {
 
   test("extension: a new session resolves every native function before " +
     "any query registers one") {
-    // every name a register() helper installs, read from the sources so
-    // a function added without its injectFunction line fails here
+    // every name an ExpressionInfo is built with, read from the sources
+    // so a function left out of GraftExtensions.functions fails here
     val plans = java.nio.file.Paths.get("src", "main", "scala", "graft", "plans")
     val text = {
       val s = java.nio.file.Files.list(plans)
@@ -178,19 +177,33 @@ class VectorExprsSpec extends SparkSpec {
         java.nio.file.Files.readAllBytes(f), "UTF-8")).mkString("\n")
       finally s.close()
     }
-    val names = ("""FunctionIdentifier\("([a-z0-9_]+)"\)""".r
-      .findAllMatchIn(text).map(_.group(1)) ++
-      """\("(vec_[a-z0-9_]+)", classOf""".r.findAllMatchIn(text)
-        .map(_.group(1))).toSet
+    val spelled = """new ExpressionInfo\(\s*classOf\[\w+\]\.getName,\s*"([a-z0-9_]+)"\)"""
+      .r.findAllMatchIn(text).map(_.group(1)).toList
+    val names = spelled.toSet
     assert(names.contains("jaro_winkler") && names.size >= 20, names)
+    assert(spelled.size === names.size,
+      s"a name is spelled twice: ${spelled.diff(names.toList)}")
     val fresh = spark.newSession()
     val missing = names.filterNot(n => fresh.catalog.functionExists(n))
     assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
   }
 
+  test("building queries leaves every native function's registry entry " +
+    "unchanged") {
+    val registry = spark.sessionState.functionRegistry
+    val names = GraftExtensions.functions.map(_._1.getName)
+    def entries = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    val before = entries
+    assert(names.size >= 20 && before.forall(_.isDefined), names.zip(before))
+    Seq("sql_native_fns", "sim_maxsim_topk", "join_blocked_jaro")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir))
+    val replaced = names.zip(before.zip(entries)).collect {
+      case (n, (Some(a), Some(b))) if !(a eq b) => n
+    }
+    assert(replaced.isEmpty, s"registry entries replaced: $replaced")
+  }
+
   test("sql surface: kernels callable through the extension-injected names") {
-    // GraftSession injects via GraftExtensions; bare test session uses
-    // register() above — both paths resolve the same builders.
     vecs.createOrReplaceTempView("vx")
     val out = spark.sql(
       "SELECT id, vec_l2norm(v) AS n FROM vx WHERE id = 1").collect()

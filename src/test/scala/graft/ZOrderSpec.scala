@@ -17,7 +17,6 @@ class ZOrderSpec extends SparkSpec {
     assert(morton(1, 1) === 3L)
     assert(morton(5, 3) === (1L | (1L << 4) | (1L << 1) | (1L << 3)))
     // codegen path through a real plan matches the driver-side reference
-    ZOrder64.register(spark)
     val rows = Seq((0L, 0L), (1L, 0L), (5L, 3L), (12345L, 67890L),
       (0xffffffffL, 0xffffffffL))
       .toDF("x", "y")
@@ -40,7 +39,6 @@ class ZOrderSpec extends SparkSpec {
     // 64x64 grid written 4 ways; per-file (max-min) spread of x and y
     // under z-order sort must beat the single-column sort on the OTHER
     // column — the data-skipping win for two-dimensional predicates.
-    ZOrder64.register(spark)
     val grid = spark.range(0, 64L * 64).select(
       (col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
     val nFiles = 16

@@ -11,6 +11,8 @@ if [ "$1" = "--headline" ]; then
   shift
   set -- $(cat "$(dirname "$0")/../bench/headline.txt") "$@"
 fi
+# the jar built in this script's own checkout, wherever it lives
+JAR="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/atacdataproductsspark_2.13-0.1.0.jar"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -18,5 +20,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $ADD_OPENS -Xmx${BENCH_MEM:-16g} -XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing -Dspark.ui.enabled=false \
-  -cp "/root/repo/target/scala-2.13/atacdataproductsspark_2.13-0.1.0.jar:/opt/spark/jars/*" \
+  -cp "$JAR:/opt/spark/jars/*" \
   graft.Bench "$@"
