@@ -375,13 +375,10 @@ object Bench {
     if (only.isEmpty) {
       writeLine("bench/bench_latest.json")
       // Snapshot path: bench_latest.json is overwritten by EVERY
-      // full-suite run — including the driver's per-round sweep, which
-      // round-10 showed destroying the builder's record run. A run
-      // tagged with SPARK_GRAFT_BENCH_TAG=<tag> ALSO lands at
-      // bench/bench_<tag>.json, a per-round artifact no later sweep
-      // touches (tools/close_round.sh tags its record run with the
-      // round id). Full-suite runs only — a query-restricted dev run
-      // with a stale tag still exported must not overwrite the round
+      // full-suite run. A run tagged with SPARK_GRAFT_BENCH_TAG=<tag>
+      // ALSO lands at bench/bench_<tag>.json, which no untagged run
+      // overwrites. Full-suite runs only — a query-restricted dev run
+      // with a stale tag still exported must not overwrite the tagged
       // record (same guard as bench_latest.json).
       sys.env.get("SPARK_GRAFT_BENCH_TAG").map(_.trim).filter(_.nonEmpty)
         .foreach { tag =>

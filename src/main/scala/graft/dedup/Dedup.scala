@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{Bounded, Tables, U}
+import graft.{Bounded, Cut, Tables, U}
 import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -214,8 +214,7 @@ object Dedup {
     * Lifecycle, lineage truncation (the self-join doubles the logical
     * plan per round), and the adaptive small-table fast path all live in
     * [[graft.plans.Iterate.fixpoint]] — fanout 2, so the harness
-    * truncates every 5th round. The result is an eager localCheckpoint:
-    * GC-released, never a CacheManager entry.
+    * truncates every 5th round. The result is a [[graft.Cut.eager]] cut.
     */
   def canonicalResolve(pointers: DataFrame, maxIters: Int = 30,
       driverRowCap: Long = Bounded.DriverEdgeCap): DataFrame = {
@@ -228,78 +227,77 @@ object Dedup {
     // row per input row, dangling parents are roots; parity pinned
     // both-sides in DedupSpec.
     val spark = pointers.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pts = pointers.select(col("id"), col("parent").as("root")).persist(lvl)
-    Bounded.path("resolve") {
-      if (!graft.operators.Graph.integralIds(pts, "id", "root")) None
-      else Bounded.rows(pts.select(col("id").cast("long"),
-        col("root").cast("long")), driverRowCap)
-    } match {
-      case Some(rows) =>
-        pts.unpersist()
-        val nRows = rows.length.toLong
-        val parent = new java.util.HashMap[Long, Long](rows.length * 2)
-        rows.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
-        def chase(x0: Long): Long = {
-          var x = x0
-          var steps = 0L
-          while (parent.getOrDefault(x, x) != x) {
-            x = parent.get(x)
-            steps += 1
-            if (steps > nRows)
-              throw new IllegalStateException(
-                s"canonicalResolve did not converge in $steps steps " +
-                  "(cycle, forward pointer, or raise maxIters)")
+    Cut.scoped(pointers.select(col("id"), col("parent").as("root"))) { pts =>
+      Bounded.path("resolve") {
+        if (!graft.operators.Graph.integralIds(pts, "id", "root")) None
+        else Bounded.rows(pts.select(col("id").cast("long"),
+          col("root").cast("long")), driverRowCap)
+      } match {
+        case Some(rows) =>
+          val nRows = rows.length.toLong
+          val parent = new java.util.HashMap[Long, Long](rows.length * 2)
+          rows.foreach(r => parent.put(r.getLong(0), r.getLong(1)))
+          def chase(x0: Long): Long = {
+            var x = x0
+            var steps = 0L
+            while (parent.getOrDefault(x, x) != x) {
+              x = parent.get(x)
+              steps += 1
+              if (steps > nRows)
+                throw new IllegalStateException(
+                  s"canonicalResolve did not converge in $steps steps " +
+                    "(cycle, forward pointer, or raise maxIters)")
+            }
+            // path compression: re-walk and point every hop at the root
+            var c = x0
+            while (parent.getOrDefault(c, c) != c) {
+              val nxt = parent.get(c); parent.put(c, x); c = nxt
+            }
+            x
           }
-          // path compression: re-walk and point every hop at the root
-          var c = x0
-          while (parent.getOrDefault(c, c) != c) {
-            val nxt = parent.get(c); parent.put(c, x); c = nxt
+          val resolved = rows.map(r => (r.getLong(0), chase(r.getLong(1))))
+          graft.Attrib.note("resolve_rows", nRows)
+          import spark.implicits._
+          val idT = pts.schema("id").dataType
+          val rtT = pts.schema("root").dataType
+          spark.createDataset(resolved.toSeq)
+            .select(col("_1").cast(idT).as("id"), col("_2").cast(rtT).as("root"))
+        case None =>
+          val nRows = pts.count()
+          val (out, iters) = graft.plans.Iterate.fixpoint(
+            pts,
+            fanout = 2, maxIters = maxIters,
+            // the sizing count already materialized the persisted pointer set
+            init = Some(_ => nRows),
+            // the round output carries old_root for the convergence check;
+            // the loop state (and result) is the narrow (id, root) projection
+            narrow = _.select(col("id"), col("root"))) { cur =>
+            val targets = cur.select(col("id").as("t_id"), col("root").as("t_root"))
+            // One join serves both the doubling step and the stability check.
+            cur.join(targets, cur("root") === col("t_id"), "left")
+              .select(col("id"), col("root").as("old_root"),
+                coalesce(col("t_root"), col("root")).as("root"))
+          } { (step, _) =>
+            // ONE job per round: the (total, changed) aggregation both
+            // materializes every partition of the persisted step (a full pass
+            // over all cached blocks — isEmpty alone would cache only the
+            // partitions it touched, and the next round would recompute the
+            // rest through unpersisted lineage) and decides convergence. At
+            // log-depth round counts the per-round job overhead IS the cost
+            // model at bench scale, so rounds must not pay two scheduler
+            // round-trips for one pass of work.
+            val cnts = step.agg(count(lit(1)),
+              count(when(col("root") =!= col("old_root"), lit(1)))).head()
+            graft.plans.RoundEval(cnts.getLong(0), cnts.getLong(1) == 0L)
+          } { n =>
+            s"canonicalResolve did not converge in $n rounds " +
+              "(cycle, forward pointer, or raise maxIters)"
           }
-          x
-        }
-        val resolved = rows.map(r => (r.getLong(0), chase(r.getLong(1))))
-        graft.Attrib.note("resolve_rows", nRows)
-        import spark.implicits._
-        val idT = pts.schema("id").dataType
-        val rtT = pts.schema("root").dataType
-        return spark.createDataset(resolved.toSeq)
-          .select(col("_1").cast(idT).as("id"), col("_2").cast(rtT).as("root"))
-      case None =>
+          graft.Attrib.note("resolve_rows", nRows)
+          graft.Attrib.note("resolve_iters", iters.toLong)
+          out
+      }
     }
-    val nRows = pts.count()
-    val (out, iters) = graft.plans.Iterate.fixpoint(
-      pts,
-      fanout = 2, maxIters = maxIters,
-      // the sizing count already materialized the persisted pointer set
-      init = Some(_ => nRows),
-      // the round output carries old_root for the convergence check;
-      // the loop state (and result) is the narrow (id, root) projection
-      narrow = _.select(col("id"), col("root"))) { cur =>
-      val targets = cur.select(col("id").as("t_id"), col("root").as("t_root"))
-      // One join serves both the doubling step and the stability check.
-      cur.join(targets, cur("root") === col("t_id"), "left")
-        .select(col("id"), col("root").as("old_root"),
-          coalesce(col("t_root"), col("root")).as("root"))
-    } { (step, _) =>
-      // ONE job per round: the (total, changed) aggregation both
-      // materializes every partition of the persisted step (a full pass
-      // over all cached blocks — isEmpty alone would cache only the
-      // partitions it touched, and the next round would recompute the
-      // rest through unpersisted lineage) and decides convergence. At
-      // log-depth round counts the per-round job overhead IS the cost
-      // model at bench scale, so rounds must not pay two scheduler
-      // round-trips for one pass of work.
-      val cnts = step.agg(count(lit(1)),
-        count(when(col("root") =!= col("old_root"), lit(1)))).head()
-      graft.plans.RoundEval(cnts.getLong(0), cnts.getLong(1) == 0L)
-    } { n =>
-      s"canonicalResolve did not converge in $n rounds " +
-        "(cycle, forward pointer, or raise maxIters)"
-    }
-    graft.Attrib.note("resolve_rows", nRows)
-    graft.Attrib.note("resolve_iters", iters.toLong)
-    out
   }
 
   /** Connected components over an arbitrary undirected edge set by
@@ -364,98 +362,97 @@ object Dedup {
     // star forest (node → component-min), pinned both-sides by
     // DedupSpec's planted arbitrary graphs.
     val spark = edges.sparkSession
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val ce = canon(edges).persist(lvl)
-    // integral-id guard: the fast path collects ids as longs; any other
-    // key type falls through to the type-generic star alternation
-    Bounded.path("cc") {
-      if (!graft.operators.Graph.integralIds(ce, "a", "b")) None
-      else Bounded.rows(ce.select(col("a").cast("long"),
-        col("b").cast("long")), driverEdgeCap)
-    } match {
-      case Some(rows) =>
-        ce.unpersist()
-        // Union-find, roots kept at the component MIN (attach the larger
-        // root under the smaller) with iterative path compression — the
-        // same labeling the large-star/small-star fixpoint converges to.
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-          var c = x
-          while (parent.getOrDefault(c, c) != c) {
-            val nxt = parent.get(c); parent.put(c, r); c = nxt
+    Cut.scoped(canon(edges)) { ce =>
+      // integral-id guard: the fast path collects ids as longs; any other
+      // key type falls through to the type-generic star alternation
+      Bounded.path("cc") {
+        if (!graft.operators.Graph.integralIds(ce, "a", "b")) None
+        else Bounded.rows(ce.select(col("a").cast("long"),
+          col("b").cast("long")), driverEdgeCap)
+      } match {
+        case Some(rows) =>
+          // Union-find, roots kept at the component MIN (attach the larger
+          // root under the smaller) with iterative path compression — the
+          // same labeling the large-star/small-star fixpoint converges to.
+          val parent = new java.util.HashMap[Long, Long]()
+          def find(x: Long): Long = {
+            var r = x
+            while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+            var c = x
+            while (parent.getOrDefault(c, c) != c) {
+              val nxt = parent.get(c); parent.put(c, r); c = nxt
+            }
+            r
           }
-          r
-        }
-        val nodes = new java.util.TreeSet[java.lang.Long]()
-        rows.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          nodes.add(a); nodes.add(b)
-          val ra = find(a); val rb = find(b)
-          if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-        }
-        import scala.jdk.CollectionConverters._
-        val stars = nodes.asScala.iterator.map(n => (n.longValue, find(n)))
-          .filter(p => p._1 != p._2).toSeq
-        graft.Attrib.note("cc_edges", rows.length.toLong)
-        import spark.implicits._
-        val aT = ce.schema("a").dataType
-        val bT = ce.schema("b").dataType
-        return spark.createDataset(stars)
-          .select(col("_1").cast(aT).as("a"), col("_2").cast(bT).as("b"))
-      case None =>
+          val nodes = new java.util.TreeSet[java.lang.Long]()
+          rows.foreach { r =>
+            val a = r.getLong(0); val b = r.getLong(1)
+            nodes.add(a); nodes.add(b)
+            val ra = find(a); val rb = find(b)
+            if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+          }
+          import scala.jdk.CollectionConverters._
+          val stars = nodes.asScala.iterator.map(n => (n.longValue, find(n)))
+            .filter(p => p._1 != p._2).toSeq
+          graft.Attrib.note("cc_edges", rows.length.toLong)
+          import spark.implicits._
+          val aT = ce.schema("a").dataType
+          val bT = ce.schema("b").dataType
+          spark.createDataset(stars)
+            .select(col("_1").cast(aT).as("a"), col("_2").cast(bT).as("b"))
+        case None =>
+          val initSig = fingerprint(ce) // materializes every cached partition
+          var curSig: (Long, java.math.BigDecimal) = null
+          val (out, iters) = graft.plans.Iterate.fixpoint(
+            ce, fanout = 8, maxIters = maxIters,
+            // the sizing/convergence fingerprint already ran on the persisted
+            // initial state above — reuse it; the fixpoint's first
+            // generation is the already-persisted `ce` (no second cache
+            // entry), released as round 1 lands
+            init = Some { _ => curSig = initSig; curSig._1 }) { cur =>
+            // one alternation: large-star over the symmetric view, then
+            // small-star over the (hi=a → lo=b) orientation canon provides.
+            // Exactly ONE alternation per materialization: batching two to
+            // halve scheduler passes was MEASURED WORSE (2.3 → 8.1 s warm) —
+            // the outer round references the inner result ~8× and nothing is
+            // persisted between them, so the inner alternation recomputes
+            // under every reference; DataFrames share no common-subplan
+            // reuse below an exchange, and the duplicated-subtree plan also
+            // bloats Catalyst. The persist-per-round discipline is not
+            // overhead to amortize away; it IS what makes each round linear.
+            // The batch re-measured in SMALL MODE too (where the
+            // recompute is only a few thousand rows): still worse — rounds
+            // went 0.5-2 s → 2-3.7 s each (dedup_cc_incremental 6.4 → 17 s)
+            // because analyzing + codegen-compiling the 8×-duplicated plan
+            // costs more driver time than the saved materializations. The
+            // one-alternation-per-persist shape is optimal at BOTH widths.
+            val sym = cur.select(col("a").as("u"), col("b").as("n"))
+              .unionByName(cur.select(col("b").as("u"), col("a").as("n")))
+            val mins = sym.groupBy("u").agg(min(col("n")).as("mn"))
+              .select(col("u"), least(col("mn"), col("u")).as("m"))
+            val ls = canon(sym.join(mins, "u").filter(col("n") > col("u"))
+              .select(col("n").as("a"), col("m").as("b")))
+            val mins2 = ls.groupBy("a").agg(min(col("b")).as("m"))
+            val ss = ls.join(mins2, "a")
+              .select(col("b").as("x"), col("m").as("y"))
+              .unionByName(mins2.select(col("a").as("x"), col("m").as("y")))
+            canon(ss.select(col("x").as("a"), col("y").as("b")))
+          } { (next, prev) =>
+            if (curSig == null) curSig = fingerprint(prev)
+            val nextSig = fingerprint(next)
+            // candidate (hash match) → confirm exactly: same cardinality and
+            // no row of next outside prev (both sides are post-distinct)
+            val done = nextSig == curSig && next.exceptAll(prev).isEmpty
+            curSig = nextSig
+            graft.plans.RoundEval(nextSig._1, done)
+          } { n =>
+            s"connectedComponents did not converge in $n rounds"
+          }
+          graft.Attrib.note("cc_edges", initSig._1)
+          graft.Attrib.note("cc_iters", iters.toLong)
+          out
+      }
     }
-    val initSig = fingerprint(ce) // materializes every cached partition
-    var curSig: (Long, java.math.BigDecimal) = null
-    val (out, iters) = graft.plans.Iterate.fixpoint(
-      ce, fanout = 8, maxIters = maxIters,
-      // the sizing/convergence fingerprint already ran on the persisted
-      // initial state above — reuse it; fixpoint's persist() on the
-      // already-persisted `ce` is idempotent and its lifecycle (handle
-      // unpersisted as round 1 lands) releases the same blocks
-      init = Some { _ => curSig = initSig; curSig._1 }) { cur =>
-      // one alternation: large-star over the symmetric view, then
-      // small-star over the (hi=a → lo=b) orientation canon provides.
-      // Exactly ONE alternation per materialization: batching two to
-      // halve scheduler passes was MEASURED WORSE (2.3 → 8.1 s warm) —
-      // the outer round references the inner result ~8× and nothing is
-      // persisted between them, so the inner alternation recomputes
-      // under every reference; DataFrames share no common-subplan
-      // reuse below an exchange, and the duplicated-subtree plan also
-      // bloats Catalyst. The persist-per-round discipline is not
-      // overhead to amortize away; it IS what makes each round linear.
-      // Round-10 re-measured the batch in SMALL MODE too (where the
-      // recompute is only a few thousand rows): still worse — rounds
-      // went 0.5-2 s → 2-3.7 s each (dedup_cc_incremental 6.4 → 17 s)
-      // because analyzing + codegen-compiling the 8×-duplicated plan
-      // costs more driver time than the saved materializations. The
-      // one-alternation-per-persist shape is optimal at BOTH widths.
-      val sym = cur.select(col("a").as("u"), col("b").as("n"))
-        .unionByName(cur.select(col("b").as("u"), col("a").as("n")))
-      val mins = sym.groupBy("u").agg(min(col("n")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = canon(sym.join(mins, "u").filter(col("n") > col("u"))
-        .select(col("n").as("a"), col("m").as("b")))
-      val mins2 = ls.groupBy("a").agg(min(col("b")).as("m"))
-      val ss = ls.join(mins2, "a")
-        .select(col("b").as("x"), col("m").as("y"))
-        .unionByName(mins2.select(col("a").as("x"), col("m").as("y")))
-      canon(ss.select(col("x").as("a"), col("y").as("b")))
-    } { (next, prev) =>
-      if (curSig == null) curSig = fingerprint(prev)
-      val nextSig = fingerprint(next)
-      // candidate (hash match) → confirm exactly: same cardinality and
-      // no row of next outside prev (both sides are post-distinct)
-      val done = nextSig == curSig && next.exceptAll(prev).isEmpty
-      curSig = nextSig
-      graft.plans.RoundEval(nextSig._1, done)
-    } { n =>
-      s"connectedComponents did not converge in $n rounds"
-    }
-    graft.Attrib.note("cc_edges", initSig._1)
-    graft.Attrib.note("cc_iters", iters.toLong)
-    out
   }
 
   /** Shared detector for the substring-span family (dedup_substring_span
@@ -487,20 +484,16 @@ object Dedup {
     // self-join needs, so no additional shuffle on either side.
     // Measured 2.28 → 1.26 s at sf0.1. Same occ semantics: total
     // occurrence count per gram across the corpus.
-    // EAGER localCheckpoint (r17): the self-join's two inputs are the
-    // same capped-hit table, and each side re-ran the tokenize + K-gram
-    // build + occurrence window without the cut (the "two computations"
-    // the window form had accepted). The checkpoint materializes the
-    // occurrence-capped hits ONCE — output-bounded (occ ∈ [2, 50]
-    // grams only) — and both join sides read it; its partitioning from
-    // the window's hash(gram) exchange is exactly the join's
-    // distribution requirement, so no re-shuffle either.
-    val hits = grams
+    // cut: the self-join's two inputs are the same capped-hit table, and
+    // each side would re-run the tokenize + K-gram build + occurrence
+    // window. The cut is output-bounded (occ ∈ [2, 50] grams only), and
+    // its partitioning from the window's hash(gram) exchange is exactly
+    // the join's distribution requirement, so no re-shuffle either.
+    val hits = Cut.eager(grams
       .withColumn("occ", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("gram")))
       .filter(col("occ") >= 2 && col("occ") <= 50)
-      .select("doc_id", "p", "gram")
-      .localCheckpoint(true)
+      .select("doc_id", "p", "gram"))
     val pairs = hits
       .select(col("gram"), col("doc_id").as("da"), col("p").as("pa"))
       .join(hits.select(col("gram"), col("doc_id").as("db"),
@@ -885,13 +878,10 @@ object Dedup {
     // the bounded embeddings table. At corpus scale the same vote runs
     // over ANN candidates (ml_knn_classify_ann) — the pair is the
     // recall experiment: exact answer vs bucketed candidates.
-    // Bench posture (VERDICT r15 item 4): like join_blocked_jaro, this
-    // key is quadratic by contract and its sf1 wall time swings 1.8x
-    // run-to-run (25-50 s of all-pairs task time on a shared box); it
-    // stays in the sf1 headline set for the record, but the close
-    // gate's median EXCLUDES it (QUADRATIC_BY_CONTRACT in
-    // tools/close_round.sh) — ml_knn_classify_ann is the scale path
-    // the gate watches.
+    // Bench posture: like join_blocked_jaro, this key is quadratic by
+    // contract and its sf1 wall time swings 1.8x run-to-run (25-50 s of
+    // all-pairs task time on a shared box); read its headline timing
+    // with that in mind — ml_knn_classify_ann is the scale path.
     "ml_knn_classify" -> ((s, d) => {
       val W = org.apache.spark.sql.expressions.Window
       val e0 = t(s, d, "embeddings")
@@ -952,16 +942,15 @@ object Dedup {
       // U.fan before the chunk explode: split+slice+concat of every
       // document ran on the 1-task single-row-group scan (1.9 s at
       // sf0.1); the narrow corpus shuffle buys 32-way chunking.
-      // EAGER localCheckpoint (r17): the chunk table has two consumers
-      // (keeper election + the join back), and the split+slice+concat
-      // chunk build re-ran once per consumer without the cut.
-      val chunks = graft.U.fan(t(s, d, "documents")
+      // cut: the chunk table (about len/10 rows per document) has two
+      // consumers, keeper election and the join back, and each would
+      // re-run the split+slice+concat chunk build
+      val chunks = Cut.eager(graft.U.fan(t(s, d, "documents")
           .select("doc_id", "text")).select(col("doc_id"),
           posexplode(transform(sequence(lit(0), nChunks - 1),
             i => concat_ws(" ", slice(toks, i * P + 1, lit(P))))))
         .withColumnRenamed("pos", "chunk_idx")
-        .withColumnRenamed("col", "chunk")
-        .localCheckpoint(true)
+        .withColumnRenamed("col", "chunk"))
       val keeper = chunks.groupBy("chunk")
         .agg(min(struct(col("doc_id"), col("chunk_idx"))).as("k"))
       chunks.join(keeper, "chunk")
@@ -1089,32 +1078,31 @@ object Dedup {
       // ReusedExchange), so without the persist the fused simhash scan
       // — the expensive pass over the corpus — would run twice inside
       // the edge materialization (measured ~1.3 s/pass at sf0.1).
-      val sh = simhashFused(s, docs, "text").withColumnRenamed("simhash", "sh")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val lhs = sh.select(col("doc_id"), col("sh").as("sha"))
-      val rhs = sh.select((col("doc_id") - 1).as("doc_id"),
-        col("doc_id").as("nxt"), col("sh").as("shb"))
-      // ONE edge pass feeds both closures: without the persist the
-      // history and batch filters would each recompute the join
-      val allEdges = lhs.join(rhs, Seq("doc_id"))
-        .filter(bit_count(col("sha").bitwiseXOR(col("shb"))) <= 16)
-        .select(col("doc_id").as("a"), col("nxt").as("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // history closure (what a previous run would have persisted)
-        val historyStars = connectedComponents(
-          allEdges.filter(col("b") < cut))
-        // new-batch edges: any pair touching a doc past the cut
-        val newEdges = allEdges.filter(col("b") >= cut)
-        val stars = connectedComponents(historyStars.unionByName(newEdges))
-        // historyStars is an eager localCheckpoint — its blocks release
-        // via the ContextCleaner once this closure drops the reference
-        docs.select(col("doc_id"))
-          .join(stars.withColumnRenamed("a", "doc_id"), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("b"), col("doc_id")).as("component_id"))
-          .orderBy("doc_id")
-      } finally { allEdges.unpersist(); sh.unpersist() }
+      Cut.scoped(simhashFused(s, docs, "text")
+          .withColumnRenamed("simhash", "sh")) { sh =>
+        val lhs = sh.select(col("doc_id"), col("sh").as("sha"))
+        val rhs = sh.select((col("doc_id") - 1).as("doc_id"),
+          col("doc_id").as("nxt"), col("sh").as("shb"))
+        // ONE edge pass feeds both closures: without the persist the
+        // history and batch filters would each recompute the join
+        Cut.scoped(lhs.join(rhs, Seq("doc_id"))
+            .filter(bit_count(col("sha").bitwiseXOR(col("shb"))) <= 16)
+            .select(col("doc_id").as("a"), col("nxt").as("b"))) { allEdges =>
+          // history closure (what a previous run would have persisted)
+          val historyStars = connectedComponents(
+            allEdges.filter(col("b") < cut))
+          // new-batch edges: any pair touching a doc past the cut
+          val newEdges = allEdges.filter(col("b") >= cut)
+          val stars = connectedComponents(historyStars.unionByName(newEdges))
+          // the returned plan reads only the closures' eager cuts, never
+          // `sh` or `allEdges`, so both release when their scopes end
+          docs.select(col("doc_id"))
+            .join(stars.withColumnRenamed("a", "doc_id"), Seq("doc_id"), "left")
+            .select(col("doc_id"),
+              coalesce(col("b"), col("doc_id")).as("component_id"))
+            .orderBy("doc_id")
+        }
+      }
     }),
 
     // Near-dup cluster closure via GENERAL connected components: the
@@ -1134,20 +1122,17 @@ object Dedup {
       // persist the signature table: the self-join's two projections
       // would otherwise each recompute the fused simhash corpus scan
       // (same rationale as dedup_cc_incremental above); the closure is
-      // EAGER inside connectedComponents (fingerprint + collect or
-      // fixpoint + localCheckpoint), so the release is safe right after
-      val sh = simhashFused(s, t(s, d, "documents"), "text")
-        .withColumnRenamed("simhash", "sh")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val l = sh.select(col("doc_id"), col("sh").as("sha"))
-      val r = sh.select((col("doc_id") - 1).as("doc_id"),
-        col("doc_id").as("nxt"), col("sh").as("shb"))
-      val edges = l.join(r, Seq("doc_id"))
-        .filter(bit_count(col("sha").bitwiseXOR(col("shb"))) <= 16)
-        .select(col("doc_id").as("a"), col("nxt").as("b"))
-      val stars =
-        try connectedComponents(edges)
-        finally sh.unpersist()
+      // EAGER inside connectedComponents (collect or eager cut), so the
+      // release is safe right after
+      val stars = Cut.scoped(simhashFused(s, t(s, d, "documents"), "text")
+          .withColumnRenamed("simhash", "sh")) { sh =>
+        val l = sh.select(col("doc_id"), col("sh").as("sha"))
+        val r = sh.select((col("doc_id") - 1).as("doc_id"),
+          col("doc_id").as("nxt"), col("sh").as("shb"))
+        connectedComponents(l.join(r, Seq("doc_id"))
+          .filter(bit_count(col("sha").bitwiseXOR(col("shb"))) <= 16)
+          .select(col("doc_id").as("a"), col("nxt").as("b")))
+      }
       t(s, d, "documents").select(col("doc_id"))
         .join(stars.withColumnRenamed("a", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"),

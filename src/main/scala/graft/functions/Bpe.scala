@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Bounded, Tables, U}
+import graft.{Bounded, Cut, Tables, U}
 
 /** BPE subword tokenizer — training and apply (Sennrich et al. 2016,
   * the `tokenizers`/SentencePiece shape), built Spark-first.
@@ -14,8 +14,7 @@ import graft.{Bounded, Tables, U}
   *   - '''Training''' iterates on the WORD-FREQUENCY vocabulary, not
   *     the corpus: one corpus scan builds (word, freq); every merge
   *     iteration is a pair-count aggregate + 1-row argmax collect +
-  *     map-side `bpe_merge` over vocab rows (persist-new/unpersist-old
-  *     per step, the canonical-resolve discipline). Corpus size only
+  *     map-side `bpe_merge` over vocab rows ([[BpeTrainer]]). Corpus size only
   *     ever affects the first scan; iterations cost O(|vocab|), the
   *     same contraction argument as `graph_pagerank_types`. The
   *     deterministic argmax tiebreak (count desc, then pair lexical)
@@ -42,129 +41,15 @@ import graft.{Bounded, Tables, U}
   * and each rule pass is one left-to-right non-overlapping `replace()`
   * over a double-delimited token string (see [[applyOracleSqlFor]]).
   */
-object Bpe {
-  /** Number of merge rules to learn — small because the synthetic
-    * corpus vocabulary is small; the loop exits early if no pair
-    * repeats. */
-  val nMerges = 12
+object Bpe extends BpeTrainer {
+  protected def name = "bpe"
 
-  private def charSyms(word: org.apache.spark.sql.Column) =
-    array_remove(split(word, ""), "")
+  protected def seed(word: Column): Column = array_remove(split(word, ""), "")
 
-  /** Learned merge rules (rank, left, right, pair_freq), rank 1-based
-    * in merge order; a [[graft.Derived]] entry of the documents table. */
-  def trainRules(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
-    graft.Derived.get(s, "bpe_rules", d, "documents")(_ => train(s, d))
+  protected def seedLocal(word: String): Array[String] =
+    word.split("").filter(_.nonEmpty)
 
-  /** Rules last served — the apply oracle replays them as literals. */
-  private def lastRules: Option[Seq[(Int, String, String, Long)]] =
-    graft.Derived.latest("bpe_rules")
-
-  /** Driver-side trainer — EXACT mirror of the distributed loop's
-    * semantics: adjacent-pair counts weighted by word freq, repeat
-    * floor 2, argmax with (count desc, left, right) tie-break, greedy
-    * left-to-right non-overlapping merge (skip 2 on match). */
-  private[graft] def trainLocal(words: Seq[(String, Long)])
-      : Seq[(Int, String, String, Long)] = {
-    var vocab: Array[(Array[String], Long)] = words.iterator
-      .map { case (w, f) => (w.split("").filter(_.nonEmpty), f) }.toArray
-    val rules = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val counts = scala.collection.mutable.HashMap
-        .empty[(String, String), Long].withDefaultValue(0L)
-      vocab.foreach { case (syms, f) =>
-        var i = 0
-        while (i < syms.length - 1) {
-          val k = (syms(i), syms(i + 1))
-          counts(k) = counts(k) + f
-          i += 1
-        }
-      }
-      val eligible = counts.filter(_._2 >= 2L)
-      if (eligible.isEmpty) exhausted = true
-      else {
-        val ((a, b), cnt) = eligible.minBy { case ((x, y), c) => (-c, x, y) }
-        rules += ((rank, a, b, cnt))
-        vocab = vocab.map { case (syms, f) =>
-          val merged = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
-              merged += (a + b); i += 2
-            } else { merged += syms(i); i += 1 }
-          }
-          (merged.toArray, f)
-        }
-        rank += 1
-      }
-    }
-    rules.toSeq
-  }
-
-  /** The distributed training loop (the 100 TB path — runs when the
-    * vocabulary exceeds [[Bounded.DriverVocabCap]]); same semantics as
-    * [[trainLocal]], pinned by BpeSpec's planted-corpus twin test. */
-  private[graft] def trainDistributed(words: org.apache.spark.sql.DataFrame)
-      : Seq[(Int, String, String, Long)] = {
-    var cur = words
-      .select(charSyms(col("word")).as("syms"), col("freq"))
-      .persist()
-        val rules = scala.collection.mutable.ArrayBuffer
-          .empty[(Int, String, String, Long)]
-        var rank = 1
-        var exhausted = false
-        while (rank <= nMerges && !exhausted) {
-          val top = cur
-            .select(explode(arrays_zip(
-              slice(col("syms"), lit(1), size(col("syms")) - 1),
-              slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"),
-              col("freq"))
-            .select(col("p").getField("0").as("a"),
-              col("p").getField("1").as("b"), col("freq"))
-            .groupBy("a", "b").agg(sum(col("freq")).as("cnt"))
-            // repeat floor 2: a pair seen once total can't compress
-            .filter(col("cnt") >= 2)
-            .orderBy(col("cnt").desc, col("a"), col("b"))
-            .limit(1).collect()
-          if (top.isEmpty) exhausted = true
-          else {
-            val (a, b, cnt) =
-              (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-            rules += ((rank, a, b, cnt))
-            val next = cur
-              .withColumn("syms", call_function("bpe_merge",
-                col("syms"), array(lit(s"$a $b"))))
-              .persist()
-            next.count() // materialize before dropping the parent level
-            cur.unpersist()
-            cur = next
-            rank += 1
-          }
-        }
-    cur.unpersist()
-    rules.toSeq
-  }
-
-  private def train(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
-    // U.fan: the explode + count partial otherwise runs at scan
-    // parallelism (2 row groups at sf1 — measured 3.0 s on 2 tasks)
-    val words = U.fan(Tables.t(s, d, "documents")
-        .select(col("text")))
-      .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    // one bounded probe: under the cap it holds the complete vocabulary
-    Bounded.path("bpe_train")(
-        Bounded.rows(words, Bounded.DriverVocabCap)) match {
-      case Some(vocab) =>
-        graft.Attrib.note("bpe_vocab", vocab.length.toLong)
-        trainLocal(vocab.toSeq.map(r => (r.getString(0), r.getLong(1))))
-      case None => trainDistributed(words)
-    }
-  }
+  protected def merged(a: String, b: String): String = a + b
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned merge table itself — what a tokenizer ships as
@@ -202,7 +87,7 @@ object Bpe {
         .filter(length(col("word")) > 0)
         .crossJoin(broadcast(rules))
         .select(col("doc_id"),
-          call_function("bpe_merge", charSyms(col("word")),
+          call_function("bpe_merge", seed(col("word")),
             col("rules")).as("toks"),
           length(col("word")).as("n_chars"))
       toks.groupBy("doc_id")
@@ -315,4 +200,151 @@ object Bpe {
       case None => Map.empty
       case Some(rs) => Map("vocab_bpe_apply" -> applyOracleSqlFor(rs))
     })
+}
+
+/** The greedy most-frequent-pair merge trainer of [[Bpe]] (characters,
+  * merged by concatenation) and [[ByteBpe]] (UTF-8 bytes, merged with
+  * `_`). Each round counts adjacent pairs weighted by word frequency,
+  * keeps pairs seen at least twice, takes the (count desc, left, right)
+  * argmax and merges it greedily left to right without overlap; the loop
+  * stops after [[nMerges]] rules or when no pair repeats.
+  *
+  * Training reads the (word, freq) vocabulary, which the language
+  * bounds, not the corpus: one [[Bounded]] probe, then [[trainLocal]] on
+  * the driver under [[Bounded.DriverVocabCap]], else [[trainDistributed]]
+  * (the 100 TB path). The two are pinned rule for rule by the BpeSpec and
+  * ByteBpeSpec twin tests. Rules are a [[graft.Derived]] entry of the
+  * documents table: training is a property of the dataset, not of each
+  * apply call.
+  */
+abstract class BpeTrainer {
+  /** Merge-rule budget; small because the synthetic corpus vocabulary
+    * is small. */
+  val nMerges = 12
+
+  /** Derived kind `<name>_rules`, path note `<name>_train_path` and
+    * vocabulary note `<name>_vocab`. */
+  protected def name: String
+
+  /** A word column's initial symbols. */
+  protected def seed(word: Column): Column
+
+  /** The driver twin of [[seed]]. */
+  protected def seedLocal(word: String): Array[String]
+
+  /** The spelling of a merged pair. */
+  protected def merged(a: String, b: String): String
+
+  /** Learned merge rules (rank, left, right, pair_freq), rank 1-based in
+    * merge order. */
+  def trainRules(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
+    graft.Derived.get(s, s"${name}_rules", d, "documents")(_ => train(s, d))
+
+  /** Rules last served — the apply oracle replays them as literals. */
+  protected def lastRules: Option[Seq[(Int, String, String, Long)]] =
+    graft.Derived.latest(s"${name}_rules")
+
+  /** A merge as a `bpe_merge` rule: the kernel's `"a b"` form merges by
+    * concatenation, any other spelling ships as `"a b m"`. */
+  private def rule(a: String, b: String): String = {
+    val m = merged(a, b)
+    if (m == a + b) s"$a $b" else s"$a $b $m"
+  }
+
+  /** The driver trainer. */
+  private[graft] def trainLocal(words: Seq[(String, Long)])
+      : Seq[(Int, String, String, Long)] = {
+    var vocab: Array[(Array[String], Long)] = words.iterator
+      .map { case (w, f) => (seedLocal(w), f) }.toArray
+    val rules = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, Long)]
+    var rank = 1
+    var exhausted = false
+    while (rank <= nMerges && !exhausted) {
+      val counts = scala.collection.mutable.HashMap
+        .empty[(String, String), Long].withDefaultValue(0L)
+      vocab.foreach { case (syms, f) =>
+        var i = 0
+        while (i < syms.length - 1) {
+          val k = (syms(i), syms(i + 1))
+          counts(k) = counts(k) + f
+          i += 1
+        }
+      }
+      val eligible = counts.filter(_._2 >= 2L)
+      if (eligible.isEmpty) exhausted = true
+      else {
+        val ((a, b), cnt) = eligible.minBy { case ((x, y), c) => (-c, x, y) }
+        rules += ((rank, a, b, cnt))
+        val m = merged(a, b)
+        vocab = vocab.map { case (syms, f) =>
+          val out = scala.collection.mutable.ArrayBuffer.empty[String]
+          var i = 0
+          while (i < syms.length) {
+            if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
+              out += m; i += 2
+            } else { out += syms(i); i += 1 }
+          }
+          (out.toArray, f)
+        }
+        rank += 1
+      }
+    }
+    rules.toSeq
+  }
+
+  /** The distributed trainer: per round one pair-count aggregate, a
+    * 1-row argmax collect and a map-side `bpe_merge` over the vocabulary
+    * rows, each round's rows a [[graft.Cut.rounds]] generation. */
+  private[graft] def trainDistributed(words: DataFrame)
+      : Seq[(Int, String, String, Long)] = {
+    val rules = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, Long)]
+    Cut.rounds(words.select(seed(col("word")).as("syms"), col("freq"))) {
+      vocab =>
+        var exhausted = false
+        while (rules.size < nMerges && !exhausted) {
+          val top = vocab.current
+            .select(explode(arrays_zip(
+              slice(col("syms"), lit(1), size(col("syms")) - 1),
+              slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"),
+              col("freq"))
+            .select(col("p").getField("0").as("a"),
+              col("p").getField("1").as("b"), col("freq"))
+            .groupBy("a", "b").agg(sum(col("freq")).as("cnt"))
+            // repeat floor 2: a pair seen once total can't compress
+            .filter(col("cnt") >= 2)
+            .orderBy(col("cnt").desc, col("a"), col("b"))
+            .limit(1).collect()
+          if (top.isEmpty) exhausted = true
+          else {
+            val (a, b, cnt) =
+              (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+            rules += ((rules.size + 1, a, b, cnt))
+            vocab.advance(vocab.current.withColumn("syms",
+              call_function("bpe_merge", col("syms"), array(lit(rule(a, b))))))(
+              _.count())
+          }
+        }
+    }
+    rules.toSeq
+  }
+
+  private def train(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
+    // U.fan: the explode + count partial otherwise runs at scan
+    // parallelism (2 row groups at sf1 — measured 3.0 s on 2 tasks)
+    val words = U.fan(Tables.t(s, d, "documents")
+        .select(col("text")))
+      .select(explode(split(lower(col("text")), " ")).as("word"))
+      .filter(length(col("word")) > 0)
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+    // one bounded probe: under the cap it holds the complete vocabulary
+    Bounded.path(s"${name}_train")(
+        Bounded.rows(words, Bounded.DriverVocabCap)) match {
+      case Some(vocab) =>
+        graft.Attrib.note(s"${name}_vocab", vocab.length.toLong)
+        trainLocal(vocab.toSeq.map(r => (r.getString(0), r.getLong(1))))
+      case None => trainDistributed(words)
+    }
+  }
 }

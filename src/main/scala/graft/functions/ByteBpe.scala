@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Bounded, Tables, U}
+import graft.{Tables, U}
 
 /** Byte-level BPE tokenizer — the GPT-2/tiktoken family (Radford et al.
   * 2019; Sennrich et al. 2016 merges over a 256-symbol BYTE alphabet)
@@ -27,11 +27,9 @@ import graft.{Bounded, Tables, U}
   *     vocabulary — corpus size only affects the first scan, the same
   *     contraction as [[Bpe]].
   *
-  * Training is [[Bpe]]'s greedy most-frequent-pair loop (cnt DESC, then
-  * (a, b) lexical tie-break — byte spellings compare bytewise
-  * identically in Java and DuckDB), with the same driver-cap fast path
-  * (the vocabulary is language-bounded) and the distributed twin for
-  * corpora past the cap, parity-pinned in ByteBpeSpec. Apply reuses the
+  * Training is the [[BpeTrainer]] loop shared with [[Bpe]] (byte
+  * spellings compare bytewise identically in Java and DuckDB, so the
+  * (a, b) tie-break replays exactly). Apply reuses the
   * [[graft.plans.BpeMerge]] codegen kernel via its 3-field `"a b m"`
   * rule form.
   *
@@ -42,13 +40,15 @@ import graft.{Bounded, Tables, U}
   * echoing the engine's bytes); apply replays the trained rules as a
   * replace() chain over the distinct-word vocabulary.
   */
-object ByteBpe {
-  /** Merge-rule budget — matches [[Bpe.nMerges]]; the loop exits early
-    * when no pair repeats. */
-  val nMerges = 12
+object ByteBpe extends BpeTrainer {
+  protected def name = "bytebpe"
+
+  protected def seed(word: Column): Column = byteSyms(word)
+
+  protected def seedLocal(word: String): Array[String] = byteSymsLocal(word)
 
   /** Decimal byte-value spelling of a merged symbol pair. */
-  private def join(a: String, b: String): String = a + "_" + b
+  protected def merged(a: String, b: String): String = a + "_" + b
 
   /** UTF-8 byte symbols of a word as decimal strings — the engine-side
     * seeding. Codegen end to end: one binary `encode`, then per byte
@@ -81,129 +81,13 @@ object ByteBpe {
       split(array_join(toks, "_"), "_"),
       b => lpad(conv(b, 10, 16), 2, "0")), "")), "UTF-8")
 
-  /** Learned merge rules, a [[graft.Derived]] entry of the documents
-    * table. */
-  def trainRules(s: SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] =
-    graft.Derived.get(s, "bytebpe_rules", d, "documents")(_ => train(s, d))
-
-  /** Rules last served — the apply oracle replays them as literals. */
-  private def lastRules: Option[Seq[(Int, String, String, Long)]] =
-    graft.Derived.latest("bytebpe_rules")
-
-  /** Driver-side trainer — EXACT mirror of the distributed loop:
-    * adjacent-pair counts weighted by word freq, repeat floor 2, argmax
-    * with (count desc, left, right) bytewise-string tie-break, greedy
-    * left-to-right non-overlapping merge. Same fast-path contract as
-    * [[Bpe.trainLocal]] (the word vocabulary is language-bounded, so
-    * `Bounded.DriverVocabCap` applies unchanged). */
-  private[graft] def trainLocal(words: Seq[(String, Long)])
-      : Seq[(Int, String, String, Long)] = {
-    var vocab: Array[(Array[String], Long)] = words.iterator
-      .map { case (w, f) => (byteSymsLocal(w), f) }.toArray
-    val rules = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val counts = scala.collection.mutable.HashMap
-        .empty[(String, String), Long].withDefaultValue(0L)
-      vocab.foreach { case (syms, f) =>
-        var i = 0
-        while (i < syms.length - 1) {
-          val k = (syms(i), syms(i + 1))
-          counts(k) = counts(k) + f
-          i += 1
-        }
-      }
-      val eligible = counts.filter(_._2 >= 2L)
-      if (eligible.isEmpty) exhausted = true
-      else {
-        val ((a, b), cnt) = eligible.minBy { case ((x, y), c) => (-c, x, y) }
-        rules += ((rank, a, b, cnt))
-        vocab = vocab.map { case (syms, f) =>
-          val merged = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
-              merged += join(a, b); i += 2
-            } else { merged += syms(i); i += 1 }
-          }
-          (merged.toArray, f)
-        }
-        rank += 1
-      }
-    }
-    rules.toSeq
-  }
-
-  /** The distributed training loop (the 100 TB path past the driver
-    * cap); same semantics as [[trainLocal]], pinned by ByteBpeSpec's
-    * planted-corpus twin test. Same persist-new/unpersist-old
-    * discipline as [[Bpe.trainDistributed]]. */
-  private[graft] def trainDistributed(words: DataFrame)
-      : Seq[(Int, String, String, Long)] = {
-    var cur = words
-      .select(byteSyms(col("word")).as("syms"), col("freq"))
-      .persist()
-    val rules = scala.collection.mutable.ArrayBuffer
-      .empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val top = cur
-        .select(explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"),
-          col("freq"))
-        .select(col("p").getField("0").as("a"),
-          col("p").getField("1").as("b"), col("freq"))
-        .groupBy("a", "b").agg(sum(col("freq")).as("cnt"))
-        .filter(col("cnt") >= 2)
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        rules += ((rank, a, b, cnt))
-        val next = cur
-          .withColumn("syms", call_function("bpe_merge",
-            col("syms"), array(lit(s"$a $b ${join(a, b)}"))))
-          .persist()
-        next.count()
-        cur.unpersist()
-        cur = next
-        rank += 1
-      }
-    }
-    cur.unpersist()
-    rules.toSeq
-  }
-
-  private def train(s: SparkSession, d: String)
-      : Seq[(Int, String, String, Long)] = {
-    val words = U.fan(Tables.t(s, d, "documents")
-        .select(col("text")))
-      .select(explode(split(lower(col("text")), " ")).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-    Bounded.path("bytebpe_train")(
-        Bounded.rows(words, Bounded.DriverVocabCap)) match {
-      case Some(vocab) =>
-        graft.Attrib.note("bytebpe_vocab", vocab.length.toLong)
-        trainLocal(vocab.toSeq.map(r => (r.getString(0), r.getLong(1))))
-      case None => trainDistributed(words)
-    }
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The learned merge table — merges.txt of the byte-level family,
     // with the explicit merged spelling the 3-field kernel rule ships.
     "vocab_bytebpe_train" -> ((s, d) => {
       val sess = s; import sess.implicits._
       trainRules(s, d)
-        .map(r => (r._1, r._2, r._3, join(r._2, r._3), r._4))
+        .map(r => (r._1, r._2, r._3, merged(r._2, r._3), r._4))
         .toDF("rank", "left_sym", "right_sym", "merged", "pair_freq")
         .orderBy("rank")
     }),
@@ -216,7 +100,7 @@ object ByteBpe {
     "vocab_bytebpe_apply" -> ((s, d) => {
       val sess = s; import sess.implicits._
       val rules = Seq(Tuple1(
-        trainRules(s, d).map(r => s"${r._2} ${r._3} ${join(r._2, r._3)}")))
+        trainRules(s, d).map(r => s"${r._2} ${r._3} ${merged(r._2, r._3)}")))
         .toDF("rules")
       val toks = U.fan(Tables.t(s, d, "documents")
           .select(col("doc_id"), col("text")))
@@ -248,7 +132,7 @@ object ByteBpe {
     "vocab_bytebpe_decode" -> ((s, d) => {
       val sess = s; import sess.implicits._
       val rules = Seq(Tuple1(
-        trainRules(s, d).map(r => s"${r._2} ${r._3} ${join(r._2, r._3)}")))
+        trainRules(s, d).map(r => s"${r._2} ${r._3} ${merged(r._2, r._3)}")))
         .toDF("rules")
       val toks = U.fan(Tables.t(s, d, "documents")
           .select(col("doc_id"), col("text")))
@@ -319,7 +203,7 @@ object ByteBpe {
       case ((_, a, b, _), i) =>
         val src = if (i == 0) "v0" else s"v$i"
         s"v${i + 1} AS (SELECT word, replace(s, '|$a||$b|'," +
-          s" '|${join(a, b)}|') AS s FROM $src)"
+          s" '|${merged(a, b)}|') AS s FROM $src)"
     }
     val last = s"v${rules.size}"
     s"""WITH words AS (
@@ -356,7 +240,7 @@ object ByteBpe {
       case ((_, a, b, _), i) =>
         val src = if (i == 0) "v0" else s"v$i"
         s"v${i + 1} AS (SELECT word, replace(s, '|$a||$b|'," +
-          s" '|${join(a, b)}|') AS s FROM $src)"
+          s" '|${merged(a, b)}|') AS s FROM $src)"
     }
     val last = s"v${rules.size}"
     s"""WITH words AS (

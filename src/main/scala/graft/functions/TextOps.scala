@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -91,7 +91,7 @@ object TextOps {
     * onto a 10^8-term corpus fails loudly instead of OOMing. */
   private def vocabDf(s: SparkSession, d: String): DataFrame =
     graft.Derived.get(s, "vocab", d, "documents", s) { _ =>
-      val df = queries("vocab_build")(s, d).persist()
+      val df = Cut.retained(queries("vocab_build")(s, d))
       val n = df.count() // distributed; also materializes the cache
       require(n <= (1L << 20),
         s"vocabulary has $n terms — beyond the broadcast-sanity cap; " +
@@ -876,12 +876,12 @@ object TextOps {
     // window, output-bounded chunk Generate, block-stitched rank — no
     // stage shuffles more than the operators' own.
     "pipeline_corpus_prep_v3" -> ((s, d) => {
-      // EAGER localCheckpoint (r17): the scrubbed corpus has two
-      // consumers (the entropy gate and the kept-join), and the
-      // 3-pattern regexp scrub re-ran once per consumer without the cut.
-      val scrubbed = U.fan(t(s, d, "documents").select("doc_id", "text"))
-        .select(col("doc_id"), piiScrubbed(col("text")).as("st"))
-        .localCheckpoint(true)
+      // cut: the scrubbed corpus (one row per document) has two
+      // consumers, the entropy gate and the kept-join, and each would
+      // re-run the 3-pattern regexp scrub
+      val scrubbed = Cut.eager(
+        U.fan(t(s, d, "documents").select("doc_id", "text"))
+          .select(col("doc_id"), piiScrubbed(col("text")).as("st")))
       val gate = charEntropyOf(scrubbed, col("st"))
         .filter(col("entropy") >= 2.0).select("doc_id")
       val kept = scrubbed
@@ -1168,20 +1168,18 @@ object TextOps {
       val docs = corpus
         .filter(instr(col("text"), " ") >= 1)
         .select(col("doc_id"), words.as("w"))
-      // Instance table cut with an EAGER localCheckpoint (r17): it has
-      // two consumers (the bigram-count aggregate and the scoring join)
-      // whose exchanges differ in shape (partial-agg rows vs raw rows),
-      // so AQE reuse cannot dedup them — without the cut the whole
-      // tokenize+explode subtree ran once per consumer. Executor-disk
-      // materialization, same storage class as the shuffle it feeds.
-      val inst = docs.select(col("doc_id"),
+      // cut: the instance table (one row per bigram occurrence) has two
+      // consumers, the bigram-count aggregate and the scoring join, whose
+      // exchanges differ in shape (partial-agg rows vs raw rows), so AQE
+      // reuse cannot dedup them and the tokenize+explode subtree would
+      // run once per consumer
+      val inst = Cut.eager(docs.select(col("doc_id"),
         explode(arrays_zip(
           slice(col("w"), lit(1), size(col("w")) - 1),
           slice(col("w"), lit(2), size(col("w")) - 1))).as("g"))
         .select(col("doc_id"),
           concat_ws(" ", col("g").getField("0"), col("g").getField("1"))
-            .as("gram"))
-        .localCheckpoint(true)
+            .as("gram")))
       val bc = inst.groupBy("gram").agg(count(lit(1)).as("c_xy"))
       val uc = corpus // unigrams count ALL docs (no ≥2-word filter)
         .select(explode(split(lower(col("text")), " ")).as("wd"))
@@ -1329,14 +1327,11 @@ object TextOps {
       // the dimension bound (VERDICT r13 item 4)
       graft.operators.Aggregates.pctBoundGuard(s, d, "documents",
         "filter_perplexity_gate")
-      // EAGER localCheckpoint (r17): the scored table has two consumers
-      // (the threshold aggregate and the gate filter), and the entire
-      // composed LM-scoring pipeline re-ran once per consumer — the cut
-      // materializes one row per document (executor disk) and both
-      // consumers read that.
-      val scores = queries("text_bigram_logprob")(s, d)
-        .select(col("doc_id"), col("mean_surprisal"))
-        .localCheckpoint(true)
+      // cut: the scored table (one row per document) has two consumers,
+      // the threshold aggregate and the gate filter, and each would
+      // re-run the whole composed LM-scoring pipeline
+      val scores = Cut.eager(queries("text_bigram_logprob")(s, d)
+        .select(col("doc_id"), col("mean_surprisal")))
       val thr = scores.agg(
         round(expr("percentile(mean_surprisal, 0.9)"), 4).as("thr"))
       scores.crossJoin(broadcast(thr))

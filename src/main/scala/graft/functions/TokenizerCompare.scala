@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 
 /** Tokenizer selection eval — the corpus-level readout a pipeline runs
   * before committing to a vocabulary: BPE ([[Bpe]]) vs byte-level BPE
@@ -49,14 +49,13 @@ object TokenizerCompare {
         ByteBpe.trainRules(s, d).map(r => s"${r._2} ${r._3} ${r._2}_${r._3}")))
         .toDF("bpe_rules", "bb_rules")
       val charSyms = array_remove(split(col("word"), ""), "")
-      // ONE corpus scan, cut with an eager localCheckpoint (Zipf-bounded
-      // vocab rows): the two scored-table broadcast builds below would
-      // otherwise each re-run the scan+split+distinct lineage.
-      val words = U.fan(Tables.t(s, d, "documents").select(col("text")))
+      // ONE corpus scan, cut (Zipf-bounded vocab rows): the two
+      // scored-table broadcast builds below would otherwise each re-run
+      // the scan+split+distinct lineage.
+      val words = Cut.eager(U.fan(Tables.t(s, d, "documents").select(col("text")))
         .select(explode(split(lower(col("text")), " ")).as("word"))
         .filter(length(col("word")) > 0)
-        .groupBy("word").agg(count(lit(1)).as("cnt"))
-        .localCheckpoint(true)
+        .groupBy("word").agg(count(lit(1)).as("cnt")))
       val uniWords = words.filter(Unigram.qualifying(col("word")))
         .select("word")
       val wpWords = words

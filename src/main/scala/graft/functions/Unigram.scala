@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 
 /** Unigram-LM subword tokenizer (the SentencePiece family) — the other
   * mainstream tokenizer next to BPE ([[Bpe]]): pieces carry log
@@ -145,58 +145,58 @@ object Unigram {
 
   private def train(s: SparkSession, d: String): Seq[(String, Double)] = {
     val sess = s; import sess.implicits._
-    val words = wordTable(s, d).as[(String, Long)].persist()
-    // 1. seed: distributed substring counting (vocab × ≤len·MaxPiece
-    // emissions), top SeedTarget by count·length with a total (piece)
-    // tie order, plus every character with its true count
-    val subs = words.flatMap { case (w, f) =>
-      val c = codePoints(w) // code-point units, like the DP (ADVICE r14)
-      for {
-        st <- 0 until c.length
-        en <- (st + 1) to math.min(st + MaxPiece, c.length)
-      } yield (cpSub(c, st, en), f)
-    }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("cnt"))
-      .persist()
-    val top = subs
-      .orderBy((col("cnt") * length(col("piece"))).desc, col("piece"))
-      .limit(SeedTarget)
-      .as[(String, Long)].collect()
-    val chars = subs.filter(length(col("piece")) === 1)
-      .as[(String, Long)].collect()
-    subs.unpersist()
-    var pieces: Map[String, Long] = (chars ++ top).toMap
-    def logprobs(cs: Map[String, Long]): Map[String, Double] = {
-      val total = cs.valuesIterator.sum.toDouble
-      cs.map { case (p, c) => p -> math.log(c / total) }
+    Cut.scoped(wordTable(s, d).as[(String, Long)]) { words =>
+      // 1. seed: distributed substring counting (vocab × ≤len·MaxPiece
+      // emissions), top SeedTarget by count·length with a total (piece)
+      // tie order, plus every character with its true count
+      val (top, chars) = Cut.scoped(words.flatMap { case (w, f) =>
+        val c = codePoints(w) // code-point units, like the DP (ADVICE r14)
+        for {
+          st <- 0 until c.length
+          en <- (st + 1) to math.min(st + MaxPiece, c.length)
+        } yield (cpSub(c, st, en), f)
+      }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("cnt"))) {
+        subs =>
+          (subs
+            .orderBy((col("cnt") * length(col("piece"))).desc, col("piece"))
+            .limit(SeedTarget)
+            .as[(String, Long)].collect(),
+           subs.filter(length(col("piece")) === 1)
+            .as[(String, Long)].collect())
+      }
+      var pieces: Map[String, Long] = (chars ++ top).toMap
+      def logprobs(cs: Map[String, Long]): Map[String, Double] = {
+        val total = cs.valuesIterator.sum.toDouble
+        cs.map { case (p, c) => p -> math.log(c / total) }
+      }
+      var probs = logprobs(pieces)
+      // 2-3. hard-EM rounds: distributed E (Viterbi paths, keyed sum),
+      // driver M over the piece-bounded count table
+      for (_ <- 1 to EmIters) {
+        val bc = s.sparkContext.broadcast(probs)
+        val counts = words.flatMap { case (w, f) =>
+          viterbi(w, bc.value).toList.flatMap(_._3.map(p => (p, f)))
+        }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("cnt"))
+          .as[(String, Long)].collect().toMap
+        bc.destroy()
+        // chars stay segmentation-complete at a floor count of 1 (a
+        // "char" is one CODE POINT — String.length would miss astral
+        // single-char pieces, ADVICE r14)
+        def isChar(p: String) = p.codePointCount(0, p.length) == 1
+        pieces = pieces.map { case (p, _) =>
+          p -> math.max(counts.getOrElse(p, 0L), if (isChar(p)) 1L else 0L)
+        }.filter(_._2 > 0L)
+        probs = logprobs(pieces)
+      }
+      // 4. prune to the target vocabulary (chars always kept), renormalize
+      val kept = pieces.toSeq
+        .sortBy { case (p, c) => (-c, p) }
+        .take(VocabTarget)
+        .map(_._1).toSet ++
+        pieces.keysIterator.filter(p => p.codePointCount(0, p.length) == 1)
+      val finalCounts = pieces.filter { case (p, _) => kept(p) }
+      logprobs(finalCounts).toSeq.sortBy(_._1)
     }
-    var probs = logprobs(pieces)
-    // 2-3. hard-EM rounds: distributed E (Viterbi paths, keyed sum),
-    // driver M over the piece-bounded count table
-    for (_ <- 1 to EmIters) {
-      val bc = s.sparkContext.broadcast(probs)
-      val counts = words.flatMap { case (w, f) =>
-        viterbi(w, bc.value).toList.flatMap(_._3.map(p => (p, f)))
-      }.toDF("piece", "f").groupBy("piece").agg(sum(col("f")).as("cnt"))
-        .as[(String, Long)].collect().toMap
-      bc.destroy()
-      // chars stay segmentation-complete at a floor count of 1 (a
-      // "char" is one CODE POINT — String.length would miss astral
-      // single-char pieces, ADVICE r14)
-      def isChar(p: String) = p.codePointCount(0, p.length) == 1
-      pieces = pieces.map { case (p, _) =>
-        p -> math.max(counts.getOrElse(p, 0L), if (isChar(p)) 1L else 0L)
-      }.filter(_._2 > 0L)
-      probs = logprobs(pieces)
-    }
-    // 4. prune to the target vocabulary (chars always kept), renormalize
-    val kept = pieces.toSeq
-      .sortBy { case (p, c) => (-c, p) }
-      .take(VocabTarget)
-      .map(_._1).toSet ++
-      pieces.keysIterator.filter(p => p.codePointCount(0, p.length) == 1)
-    words.unpersist()
-    val finalCounts = pieces.filter { case (p, _) => kept(p) }
-    logprobs(finalCounts).toSeq.sortBy(_._1)
   }
 
   /** (word, wlp, wnp) for every distinct qualifying corpus word under

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Bounded, Tables, U}
+import graft.{Bounded, Cut, Tables, U}
 
 /** WordPiece subword tokenizer — the BERT-family third member next to
   * BPE ([[Bpe]], greedy merges) and unigram-LM ([[Unigram]], Viterbi):
@@ -151,65 +151,60 @@ object WordPiece {
   /** The distributed training twin (the 100 TB path, past
     * [[Bounded.DriverVocabCap]]): per round one pair-count aggregate, one
     * symbol-count aggregate, a 1-row argmax collect, and a map-side
-    * merge over vocab rows (persist-new/unpersist-old, the [[Bpe]]
-    * discipline). Same semantics as [[trainLocal]], pinned by
+    * merge over vocab rows, each round's rows a [[Cut.rounds]]
+    * generation. Same semantics as [[trainLocal]], pinned by
     * WordPieceSpec's planted-corpus twin test. */
   private[graft] def trainDistributed(words: DataFrame): Seq[Rule] = {
     val s = words.sparkSession
     val sess = s; import sess.implicits._
-    var cur = words.as[(String, Long)]
-      .map { case (w, f) => (encode(w).toSeq, f) }
-      .toDF("syms", "freq").persist()
     val rules = scala.collection.mutable.ArrayBuffer.empty[Rule]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val symCnt = cur
-        .select(explode(col("syms")).as("tok"), col("freq"))
-        .groupBy("tok").agg(sum(col("freq")).as("cnt"))
-      val pairCnt = cur
-        .select(explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"),
-          col("freq"))
-        .select(col("p.0").as("a"), col("p.1").as("b"), col("freq"))
-        .groupBy("a", "b").agg(sum(col("freq")).as("pc"))
-        .filter(col("pc") >= 2)
-      val top = pairCnt
-        .join(symCnt.withColumnRenamed("tok", "a")
-          .withColumnRenamed("cnt", "ca"), "a")
-        .join(symCnt.withColumnRenamed("tok", "b")
-          .withColumnRenamed("cnt", "cb"), "b")
-        .select(col("a"), col("b"), col("pc"),
-          (col("pc").cast("double") /
-            (col("ca").cast("double") * col("cb").cast("double")))
-            .as("score"))
-        .orderBy(col("score").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, pc, score) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2), top(0).getDouble(3))
-        val merged = a + stripCont(b)
-        rules += ((rank, a, b, merged, pc, score))
-        val (la, lb, lm) = (a, b, merged)
-        val next = cur.as[(Seq[String], Long)].map { case (syms, f) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[String]
-          var i = 0
-          while (i < syms.length) {
-            if (i < syms.length - 1 && syms(i) == la && syms(i + 1) == lb) {
-              out += lm; i += 2
-            } else { out += syms(i); i += 1 }
-          }
-          (out.toSeq, f)
-        }.toDF("syms", "freq").persist()
-        next.count() // materialize before dropping the parent level
-        cur.unpersist()
-        cur = next
-        rank += 1
+    Cut.rounds(words.as[(String, Long)]
+        .map { case (w, f) => (encode(w).toSeq, f) }
+        .toDF("syms", "freq")) { vocab =>
+      var exhausted = false
+      while (rules.size < nMerges && !exhausted) {
+        val cur = vocab.current
+        val symCnt = cur
+          .select(explode(col("syms")).as("tok"), col("freq"))
+          .groupBy("tok").agg(sum(col("freq")).as("cnt"))
+        val pairCnt = cur
+          .select(explode(arrays_zip(
+            slice(col("syms"), lit(1), size(col("syms")) - 1),
+            slice(col("syms"), lit(2), size(col("syms")) - 1))).as("p"),
+            col("freq"))
+          .select(col("p.0").as("a"), col("p.1").as("b"), col("freq"))
+          .groupBy("a", "b").agg(sum(col("freq")).as("pc"))
+          .filter(col("pc") >= 2)
+        val top = pairCnt
+          .join(symCnt.withColumnRenamed("tok", "a")
+            .withColumnRenamed("cnt", "ca"), "a")
+          .join(symCnt.withColumnRenamed("tok", "b")
+            .withColumnRenamed("cnt", "cb"), "b")
+          .select(col("a"), col("b"), col("pc"),
+            (col("pc").cast("double") /
+              (col("ca").cast("double") * col("cb").cast("double")))
+              .as("score"))
+          .orderBy(col("score").desc, col("a"), col("b"))
+          .limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (a, b, pc, score) = (top(0).getString(0), top(0).getString(1),
+            top(0).getLong(2), top(0).getDouble(3))
+          val merged = a + stripCont(b)
+          rules += ((rules.size + 1, a, b, merged, pc, score))
+          vocab.advance(cur.as[(Seq[String], Long)].map { case (syms, f) =>
+            val out = scala.collection.mutable.ArrayBuffer.empty[String]
+            var i = 0
+            while (i < syms.length) {
+              if (i < syms.length - 1 && syms(i) == a && syms(i + 1) == b) {
+                out += merged; i += 2
+              } else { out += syms(i); i += 1 }
+            }
+            (out.toSeq, f)
+          }.toDF("syms", "freq"))(_.count())
+        }
       }
     }
-    cur.unpersist()
     rules.toSeq
   }
 

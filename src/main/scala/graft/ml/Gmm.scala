@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,10 +77,8 @@ object Gmm {
 
   /** Deterministic EM: closed-form moment init, `Iters` M-step
     * aggregations over the persisted per-customer frame. */
-  def train(s: SparkSession, d: String): Params = {
-    val f = base(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def train(s: SparkSession, d: String): Params =
+    Cut.scoped(base(s, d)) { f =>
       val m0 = f.agg(
         count(lit(1)).as("n"),
         (sum(U.dec6(col("x"))).cast("double") / count(lit(1))).as("m"),
@@ -119,8 +117,7 @@ object Gmm {
           math.max((qx - q1) / (nd - n1) - mu2 * mu2, VarFloor))
       }
       p
-    } finally f.unpersist()
-  }
+    }
 
   /** Fitted mixture, a [[graft.Derived]] entry of the orders table. */
   def params(s: SparkSession, d: String): Params =

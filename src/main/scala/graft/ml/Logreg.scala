@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -99,10 +99,8 @@ object Logreg {
   /** Deterministic full-batch GD. Returns (w0..w4). One aggregation per
     * iteration; the feature frame is persisted across iterations so the
     * corpus is scanned from cache, not re-derived. */
-  def train(s: SparkSession, d: String): Array[Double] = {
-    val f = features(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def train(s: SparkSession, d: String): Array[Double] =
+    Cut.scoped(features(s, d)) { f =>
       val n = f.count().toDouble
       val w = Array.fill(NFeatures + 1)(0.0)
       for (_ <- 0 until Iters) {
@@ -115,8 +113,7 @@ object Logreg {
           w(j) = w(j) + Lr * (grads.getDouble(j) / n)
       }
       w
-    } finally f.unpersist()
-  }
+    }
 
   /** Trained weights, a [[graft.Derived]] entry of the documents table. */
   def weights(s: SparkSession, d: String): Array[Double] =

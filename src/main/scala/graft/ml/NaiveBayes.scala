@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Bounded, Tables, U}
+import graft.{Bounded, Cut, Tables, U}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -48,11 +48,8 @@ object NaiveBayes {
       .select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("word"))
 
-  /** The (lang, word, c) count table, materialized ONCE as an eager
-    * localCheckpoint (the Iterate-harness persistence shape: blocks
-    * live outside the CacheManager and the ContextCleaner frees them
-    * when the result is dropped — immune to the bench's between-query
-    * clearCache). Everything the model needs — vocabulary size,
+  /** The (lang, word, c) count table, materialized ONCE as a
+    * [[Cut.eager]] cut. Everything the model needs — vocabulary size,
     * per-language token totals, smoothed likelihoods — derives from
     * this VOCABULARY-SIZED table, so the corpus-wide tokenize+explode
     * pass runs once here (plus once in apply's scoring join) instead of
@@ -60,8 +57,7 @@ object NaiveBayes {
     * plans (measured: the repeated tokenize was the dominant cost of
     * ml_nb_apply's 4.5 s at sf0.1). */
   private def countsTable(s: SparkSession, d: String): DataFrame =
-    tok(s, d).groupBy("lang", "word").agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    Cut.eager(tok(s, d).groupBy("lang", "word").agg(count(lit(1)).as("c")))
 
   /** (lang, word, c, loglik) — rounded smoothed log-likelihoods over a
     * materialized counts table. `v` = corpus vocabulary size. */

@@ -1,6 +1,6 @@
 package graft.ml
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 import graft.operators.Windows
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -141,37 +141,34 @@ object Ridge {
         (substring(md5(concat(col("l_orderkey").cast("string"),
           lit("_"), col("l_linenumber").cast("string"))), 1, 1) < "8")
           .as("is_cal"))
-      // ONE scan, ZERO head() round-trips (round-10 rewrite): per-value
-      // counts in a single keyed aggregate, MATERIALIZED ONCE as an
-      // eager localCheckpoint (self-join re-aliasing defeats AQE
+      // ONE scan, ZERO head() round-trips: per-value counts in a single
+      // keyed aggregate, cut ONCE (self-join re-aliasing defeats AQE
       // exchange reuse here — measured 3× recompute of the fan+md5+
-      // aggregate, 1-1.8 s each, without it; checkpoint blocks are
-      // GC-released, the Iterate discipline). The calibration total and
+      // aggregate, 1-1.8 s each, without it). The calibration total and
       // the ⌈0.9·(n+1)⌉-rank threshold then reduce to 1-row broadcasts
       // (the sanctioned scalar-broadcast shape, whitelisted in
       // PlanSpec), and coverage is one final aggregate over the counts
       // joined to both scalars.
       // The cumulative count BLOCK-STITCHES (Windows.stitchedSums):
       // per-distinct-residual rows are NOT bounded — residuals are
-      // near-continuous, so distinct a4 grows with the data, and the
-      // r13 sf1 attribution caught the old single `Window.orderBy(a4)`
-      // materializing a 64 MB checkpoint through ONE task (6.2 s of an
-      // 8.9 s query). Blocks are a4 div 2^16, so the block summary is
-      // bounded by the residual DOMAIN. cum over all rows (not the
+      // near-continuous, so distinct a4 grows with the data, and a
+      // single `Window.orderBy(a4)` would materialize the whole count
+      // table through ONE task. Blocks are a4 div 2^16, so the block
+      // summary is bounded by the residual DOMAIN. cum over all rows (not the
       // cc>0 view) is identity-preserving — cum only increases at
       // cc>0 rows, so "min a4 with cum ≥ k" lands on the same row.
-      // checkpointed BEFORE the stitch: the block-offset branch and the
+      // cut BEFORE the stitch: the block-offset branch and the
       // local-window branch both consume this aggregate, and without
       // the cut the whole fan+md5+aggregate lineage runs once per
-      // branch (measured: task-time doubled at sf1)
-      val cnts0 = base.groupBy("a4").agg(
+      // branch (measured: task-time doubled at sf1). The stitched counts
+      // are cut too: the total, the threshold and the coverage
+      // aggregate all read them.
+      val cnts0 = Cut.eager(base.groupBy("a4").agg(
         sum(when(col("is_cal"), 1L).otherwise(0L)).as("cc"),
-        sum(when(!col("is_cal"), 1L).otherwise(0L)).as("tc"))
-        .localCheckpoint(true)
-      val counts = Windows.stitchedSums(cnts0, Nil, expr("a4 div 65536"),
-          Seq(col("a4")), Seq(("cc", "cum", "cc_tot")))
-        .select(col("a4"), col("cc"), col("tc"), col("cum"))
-        .localCheckpoint(true)
+        sum(when(!col("is_cal"), 1L).otherwise(0L)).as("tc")))
+      val counts = Cut.eager(Windows.stitchedSums(cnts0, Nil,
+          expr("a4 div 65536"), Seq(col("a4")), Seq(("cc", "cum", "cc_tot")))
+        .select(col("a4"), col("cc"), col("tc"), col("cum")))
       val tot = counts.agg(sum(col("cc")).as("n_cal"),
         sum(col("tc")).as("n_test"))
       // same ceil spelling as the SQL oracle (exact integer-valued

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
@@ -81,18 +81,16 @@ object Aggregates {
     // compresses (cents are near-distinct), and a SECOND full exchange
     // into the groupBy. (fl, cv) is near-unique, so the hash spreads
     // evenly — no skew concern at any scale.
-    val cnts = rows.filter(col(valCol).isNotNull)
+    // cut: the offsets branch and the local-window branch both consume
+    // this distinct-value-sized aggregate, and column pruning
+    // specializes the two subtrees so exchange reuse cannot dedup them —
+    // without the cut the whole scan+fan+aggregate lineage runs once per
+    // branch
+    val cnts = Cut.eager(rows.filter(col(valCol).isNotNull)
       .select(col(flagCol).as("fl"), cvGuarded.as("cv"))
       .repartition(col("fl"), col("cv"))
       .groupBy(col("fl"), col("cv"))
-      .agg(count(lit(1)).as("c"))
-      // eager localCheckpoint (the Ridge/Iterate discipline): the
-      // offsets branch and the local-window branch both consume this
-      // aggregate, and column pruning specializes the two subtrees so
-      // exchange reuse cannot dedup them — without the cut the whole
-      // scan+fan+aggregate lineage runs once per branch. Blocks are
-      // GC-released; the checkpoint is distinct-value-sized.
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("c")))
     val cum = Windows.stitchedSums(cnts, Seq("fl"), expr("cv div 65536"),
       Seq(col("cv")), Seq(("c", "cum", "n")))
     // rank targets, one row per (group, percentile) — same arithmetic

@@ -27,8 +27,8 @@ import graft.{Bounded, Tables, U}
   *      with a named error rather than OOMing the driver. (For graphs
   *      whose NODE set scales with the data — user×user — the loop
   *      would instead stay distributed: iterate rank-join-aggregate
-  *      with persist/unpersist per step, the
-  *      [[graft.dedup.Dedup]] pointer-doubling discipline.)
+  *      with one persisted generation per step, as
+  *      [[graft.plans.Iterate.fixpoint]] does for pointer doubling.)
   *
   * Determinism: every per-edge contribution rounds to 1e-6 BEFORE the
   * exact micro-unit (decimal) sum, and each new rank rounds to 1e-6 —

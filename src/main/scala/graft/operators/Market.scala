@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Tables, U}
+import graft.{Cut, Tables, U}
 
 /** Market-basket / portfolio analytics over the order fact — the
   * co-occurrence and concentration primitives every commerce-flavored
@@ -165,21 +165,15 @@ object Market {
       .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, MaxBasket)
         .as("basket"))
       .select(col("basket"))
-    // Part frequencies come off the EXPLODED capped basket (r17
-    // rewrite): explode(basket) is by construction exactly the capped
-    // universe ("first MaxBasket sorted distinct parts per order"), so
-    // a count per exploded element equals the old row_number-window
-    // replay — minus the window's full 600k-row sort AND minus the
-    // second dedup aggregate the old two-branch shape paid (the r16
-    // stage profile charged 5.7 s CPU of the query's 39 s to that
-    // branch). The basket aggregate feeding both the pair Generate and
-    // the frequency explode is cut with an EAGER localCheckpoint
-    // (the exactQuantiles/Ridge discipline): an aggregate is not an
+    // Part frequencies come off the EXPLODED capped basket:
+    // explode(basket) is by construction exactly the capped universe
+    // ("first MaxBasket sorted distinct parts per order"), so a count
+    // per exploded element needs no row_number window and no second
+    // dedup aggregate. The basket aggregate feeding both the pair
+    // Generate and the frequency explode is cut: an aggregate is not an
     // exchange, so AQE reuse cannot dedup its two consumers — without
-    // the cut the dedup+collect lineage runs once per branch. The
-    // checkpoint is order-cardinality (spills to executor disk, never
-    // the driver) — the same storage class as the shuffle files the
-    // exchange it replaces would have written.
+    // the cut the dedup+collect lineage runs once per branch. The cut
+    // is order-cardinality (executor storage, never the driver).
     def freqOf(baskets: DataFrame): DataFrame = baskets
       .select(explode(col("basket")).as("pk"))
       .groupBy("pk").agg(count(lit(1)).as("fc"))
@@ -200,18 +194,15 @@ object Market {
     //    2× SLOWER than not pruning; this shape prunes with no extra
     //    pass at all.
     if (maxSupport == Long.MaxValue) {
-      val baskets = collectBaskets(dpr).localCheckpoint(true)
+      val baskets = Cut.eager(collectBaskets(dpr))
       (baskets, freqOf(baskets))
     } else {
-      // r18 reshape (VERDICT r17 item 1): the r17 spelling cut the
-      // lineage at the DEDUPED FACT ROWS (`dpr.localCheckpoint(true)`)
-      // and re-ran the full basket collect once per consumer — a
-      // fact-cardinality deserialized materialization that the driver
-      // measured anti-scaling at 32 cores (25.0 s @32c vs 2.41 s @8c,
-      // vs 3.1 s in isolated runs). The cut now lands on the FULL
-      // sorted-basket aggregate instead: ONE dedup+collect pass,
-      // order-cardinality blocks (~4× fewer rows, same part ids), and
-      // the collect aggregate itself runs once instead of twice.
+      // The cut lands on the FULL sorted-basket aggregate: ONE
+      // dedup+collect pass, order-cardinality blocks, read by both the
+      // frequency count and the hub-free re-collect. (A cut at the
+      // deduped fact rows is fact-cardinality and re-runs the basket
+      // collect once per consumer; it measured anti-scaling at 32
+      // cores.)
       //  - frequencies come from the capped slice of the full basket
       //    (by construction exactly the "first MaxBasket sorted
       //    distinct parts per order" universe — same as before);
@@ -224,9 +215,8 @@ object Market {
       //    tried in r13 and is the trap: array_contains is a linear
       //    scan, ~2.5k hubs × every basket element ≈ 10¹¹ comparisons
       //    at sf4.)
-      val fullB = dpr.groupBy("l_orderkey")
-        .agg(sort_array(collect_set(col("l_partkey"))).as("fb"))
-        .localCheckpoint(true)
+      val fullB = Cut.eager(dpr.groupBy("l_orderkey")
+        .agg(sort_array(collect_set(col("l_partkey"))).as("fb")))
       val f = fullB
         .select(explode(slice(col("fb"), 1, MaxBasket)).as("pk"))
         .groupBy("pk").agg(count(lit(1)).as("fc"))

@@ -1,7 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
+
+import graft.Cut
 
 /** One round's verdict, produced by the caller's `eval` callback: `rows`
   * is the materialized cardinality of the round output (drives the
@@ -13,14 +14,11 @@ final case class RoundEval(rows: Long, done: Boolean)
   * engine needs (pointer doubling, large-star/small-star connected
   * components, and any future label-propagation/PageRank-shaped op):
   *
-  *  1. **Persist lifecycle.** Each round's output is persisted
-  *     (MEMORY_AND_DISK) and the previous round's blocks are released as
-  *     soon as the new round is evaluated — at most two generations of
-  *     cache live at any time, and the FINAL result leaves the loop as an
-  *     eager `localCheckpoint`, whose blocks the ContextCleaner frees
-  *     when the result is garbage-collected. Nothing this helper returns
-  *     ever sits in the CacheManager, so repeated verify/bench runs can't
-  *     accumulate unreleasable blocks (the round-8 leak).
+  *  1. **Persist lifecycle.** The loop state lives in [[graft.Cut.rounds]]:
+  *     at most two generations are persisted at once, and the last one
+  *     is released when the loop ends, converged or not. The result
+  *     leaves the loop as a [[graft.Cut.eager]] cut, so nothing this
+  *     helper returns is a CacheManager entry.
   *
   *  2. **Lineage-truncation cadence derived from the loop's plan
   *     fanout.** A step that references its input f times multiplies the
@@ -45,13 +43,11 @@ final case class RoundEval(rows: Long, done: Boolean)
   *     off and `ceil(rows/100k)` shuffle partitions (measured 3.05 →
   *     1.60 s per CC query at sf0.1). The parent session's conf is never
   *     touched, so concurrent queries on the shared session can't observe
-  *     the loop's scheduling overrides (the round-8 reentrancy hazard of
-  *     set/restore). Above the threshold nothing changes: full
+  *     the loop's scheduling overrides, as a set/restore on the shared
+  *     conf would let them. Above the threshold nothing changes: full
   *     parallelism, AQE skew/coalesce — the 100 TB path is untouched.
   */
 object Iterate {
-
-  private val lvl = StorageLevel.MEMORY_AND_DISK
 
   /** Run `step` to a fixpoint.
     *
@@ -83,8 +79,7 @@ object Iterate {
     *                  (it MUST run an action that touches every partition
     *                  — that action is what populates the round's cache);
     *                  receives (persisted round output, previous state).
-    * @return (result as an eager localCheckpoint — GC-released, never a
-    *         CacheManager entry — and the round count)
+    * @return (result as a [[graft.Cut.eager]] cut, and the round count)
     */
   def fixpoint(
       initial: DataFrame,
@@ -99,69 +94,55 @@ object Iterate {
     require(fanout >= 2, s"fanout must be >= 2, got $fanout")
     val truncateEvery =
       math.max(1, (math.log(32.0) / math.log(fanout.toDouble)).toInt)
-    // `handle` is always the exact DataFrame persist() was called on —
-    // unpersist must hit that plan, not a projection of it.
-    var handle = initial.persist(lvl)
-    var cur = handle
-    var iters = 0
-    var done = false
-    var child: Option[SparkSession] = None
-    // Re-home the loop state into an isolated small-state session: the
-    // child-session LogicalRDD reads the persisted blocks through the
-    // wrapped RDD (no recompute); coalesce (no shuffle) folds the wide
-    // layout down to np so the next round already runs at small width.
-    def enterSmall(rows: Long): Unit = {
-      val np = math.max(1L, math.min(32L, rows / 100000L)).toInt
-      val s = cur.sparkSession.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      s.conf.set("spark.sql.shuffle.partitions", np.toString)
-      child = Some(s)
-      cur = s.createDataFrame(cur.rdd.coalesce(np), cur.schema)
+    Cut.rounds(initial) { state =>
+      var cur = state.current
+      var iters = 0
+      var done = false
+      var child: Option[SparkSession] = None
+      // Re-home the loop state into an isolated small-state session: the
+      // child-session LogicalRDD reads the persisted blocks through the
+      // wrapped RDD (no recompute); coalesce (no shuffle) folds the wide
+      // layout down to np so the next round already runs at small width.
+      def enterSmall(rows: Long): Unit = {
+        val np = math.max(1L, math.min(32L, rows / 100000L)).toInt
+        val s = cur.sparkSession.newSession()
+        s.conf.set("spark.sql.adaptive.enabled", "false")
+        s.conf.set("spark.sql.shuffle.partitions", np.toString)
+        child = Some(s)
+        cur = s.createDataFrame(cur.rdd.coalesce(np), cur.schema)
+      }
+      init.foreach { sizing =>
+        val rows = sizing(state.current)
+        if (rows < smallRows) enterSmall(rows)
+      }
+      while (!done && iters < maxIters) {
+        // Small mode feeds the step a repartition of the state. With
+        // np == 1 this is an `Exchange SinglePartition` — and
+        // SinglePartition satisfies EVERY clustered distribution, so the
+        // whole round's aggregates and joins plan with ZERO hash
+        // exchanges (one codegen stage chain + broadcasts). A LogicalRDD
+        // input reports UnknownPartitioning even with one partition, so
+        // without the explicit exchange every aggregate/join inserts its
+        // own hashpartitioning(…, 1) shuffle — 5 extra stage barriers per
+        // round of pure scheduler latency.
+        val in = child.map(s => cur.repartition(
+          s.conf.get("spark.sql.shuffle.partitions").toInt)).getOrElse(cur)
+        val plan = step(in)
+        val wrapped =
+          if ((iters + 1) % truncateEvery == 0)
+            plan.sparkSession.createDataFrame(plan.rdd, plan.schema)
+          else plan
+        val verdict = state.advance(wrapped)(eval(_, cur))
+        cur = narrow(state.current)
+        done = verdict.done
+        iters += 1
+        if (!done && child.isEmpty && verdict.rows < smallRows)
+          enterSmall(verdict.rows)
+      }
+      if (!done) throw new IllegalStateException(onFail(iters))
+      // cut the narrow projection from the final round's cache while
+      // that generation is still persisted
+      (Cut.eager(cur), iters)
     }
-    init.foreach { sizing =>
-      val rows = sizing(handle)
-      if (rows < smallRows) enterSmall(rows)
-    }
-    while (!done && iters < maxIters) {
-      // Small mode feeds the step a repartition of the state. With
-      // np == 1 this is an `Exchange SinglePartition` — and
-      // SinglePartition satisfies EVERY clustered distribution, so the
-      // whole round's aggregates and joins plan with ZERO hash
-      // exchanges (one codegen stage chain + broadcasts; verified in
-      // the r3 plan dump: 5 hashpartitioning exchanges without it, 0
-      // with). A LogicalRDD input reports UnknownPartitioning even
-      // with one partition, so without the explicit exchange every
-      // aggregate/join inserts its own hashpartitioning(…, 1) shuffle
-      // — 5 extra stage barriers per round of pure scheduler latency.
-      val in = child.map(s => cur.repartition(
-        s.conf.get("spark.sql.shuffle.partitions").toInt)).getOrElse(cur)
-      val plan = step(in)
-      val wrapped =
-        if ((iters + 1) % truncateEvery == 0)
-          plan.sparkSession.createDataFrame(plan.rdd, plan.schema)
-        else plan
-      val next = wrapped.persist(lvl)
-      val verdict = eval(next, cur)
-      handle.unpersist()
-      handle = next
-      cur = narrow(next)
-      done = verdict.done
-      iters += 1
-      if (!done && child.isEmpty && verdict.rows < smallRows)
-        enterSmall(verdict.rows)
-    }
-    if (!done) {
-      handle.unpersist()
-      throw new IllegalStateException(onFail(iters))
-    }
-    // Eager localCheckpoint: materializes the narrow projection from the
-    // final round's cache, truncates lineage, and stores the blocks as
-    // RDD-level persistence OUTSIDE the CacheManager — the ContextCleaner
-    // releases them when the caller drops the result, so long-lived
-    // sessions can't accumulate fixpoint outputs (callers used to have to
-    // remember to unpersist; now there is nothing to remember).
-    val out = cur.localCheckpoint(true)
-    handle.unpersist()
-    (out, iters)
   }
 }

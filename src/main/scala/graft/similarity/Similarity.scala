@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.{Derived, Tables, U}
+import graft.{Cut, Derived, Tables, U}
 import graft.functions.VectorOps._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -523,16 +523,13 @@ object Similarity {
       coarse: Array[(Int, Array[Double])], iters: Int = 2)
       : Array[Array[Array[Double]]] = {
     val centArr = coarse.sortBy(_._1).map(_._2.toSeq).toSeq
-    val resid = Tables.t(s, d, "embeddings")
+    Cut.scoped(Tables.t(s, d, "embeddings")
       .select(col("vec_id"), toDouble(col("embedding")).as("vd"))
       .withColumn("cid", assignCol(col("vd"), coarse))
       .withColumn("vd", zip_with(col("vd"),
         element_at(typedlit(centArr), col("cid") + 1),
         (a, b) => a - b))
-      .select(col("vec_id"), col("vd"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try trainPqOn(s, resid, m, k, iters)
-    finally resid.unpersist()
+      .select(col("vec_id"), col("vd")))(trainPqOn(s, _, m, k, iters))
   }
 
   /** Trained residual codebooks: a [[graft.Derived]] entry that stores

@@ -106,12 +106,11 @@ object EsResponse {
     * datasets), not fact-table scans. */
   def pagedDatasets(spark: SparkSession, pagePaths: Seq[String]): DataFrame = {
     require(pagePaths.nonEmpty, "no page snapshots")
-    // cache the parsed snapshot: three actions read it (totals check,
+    // persist the parsed snapshot: three actions read it (totals check,
     // completeness count, final pivot) and multiLine JSON parse is the
-    // dominant cost — uncached, validation would double ingest time
-    val raw = spark.read.schema(schema).option("multiLine", "true")
-      .json(pagePaths: _*).cache()
-    try {
+    // dominant cost — unpersisted, validation would double ingest time
+    graft.Cut.scoped(spark.read.schema(schema).option("multiLine", "true")
+        .json(pagePaths: _*)) { raw =>
       val totals = raw.select(col("hits.total.value").as("t"))
         .na.drop().distinct().collect().map(_.getLong(0)).sorted
       require(totals.length == 1,
@@ -129,6 +128,6 @@ object EsResponse {
       val out = pivotDonorConcepts(hits)
       spark.createDataFrame(
         java.util.Arrays.asList(out.collect(): _*), out.schema)
-    } finally raw.unpersist()
+    }
   }
 }

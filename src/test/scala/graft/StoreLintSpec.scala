@@ -24,7 +24,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    [[graft.plans.GraftExtensions]]. A `registerFunction` call or a
   *    `FunctionIdentifier(` anywhere else writes the shared session's
   *    function registry at runtime — add the function's
-  *    `(info, builder)` to `GraftExtensions.functions` instead. */
+  *    `(info, builder)` to `GraftExtensions.functions` instead.
+  *  - Intermediates are materialized through [[Cut]]. A raw
+  *    `localCheckpoint(`, `.persist(`, `.cache()`, `.unpersist(` or
+  *    `StorageLevel.` anywhere else is a second storage policy and a
+  *    hand-spelled release that a throw can skip — use `Cut.eager`,
+  *    `Cut.scoped`, `Cut.rounds` or `Cut.retained` instead. The one
+  *    exception is [[Derived]]'s release of an entry it replaces. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
 
@@ -108,5 +114,23 @@ class StoreLintSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString(
       "inject native functions through graft.plans.GraftExtensions:\n",
       "\n", ""))
+  }
+
+  private val materialization =
+    """\blocalCheckpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(|\bStorageLevel\.""".r
+
+  test("materialization in one place") {
+    val offenders = sources.flatMap { case (f, code) =>
+      f.getFileName.toString match {
+        case "Cut.scala" => Nil
+        case name =>
+          val found = materialization.findAllIn(code).toList
+          // Derived's release of an entry it replaces: one unpersist
+          (if (name == "Derived.scala") found.diff(List(".unpersist("))
+           else found).map(m => s"$f: $m")
+      }
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "materialize and release intermediates through graft.Cut:\n", "\n", ""))
   }
 }
