@@ -60,9 +60,12 @@ object Cut {
   }
 
   /** `body` over iterative state that starts at `init`; the generation
-    * alive when `body` ends is released. */
+    * alive when `body` ends is released. An `init` that is already
+    * persisted (a [[scoped]] frame) is adopted as the first generation
+    * rather than persisted again, and is released like any other. */
   def rounds[T, R](init: Dataset[T])(body: Generations[T] => R): R = {
-    val g = new Generations(init.persist(Level))
+    val g = new Generations(
+      if (init.storageLevel != StorageLevel.NONE) init else init.persist(Level))
     try body(g) finally g.current.unpersist()
   }
 }

@@ -45,36 +45,20 @@ object Dedup {
     call_function("word_kgrams", split(lower(text), " "), lit(k))
 
   /** K minhashes of a shingle-set column: h_j = min over shingles of
-    * xxhash64(shingle, j). Compact HOF form — correct everywhere, but
-    * higher-order functions evaluate interpreted (outside codegen), so for
-    * large corpora use [[minhashSignatures]] below. */
+    * xxhash64(shingle, j). Compact HOF form — the reference the fused
+    * [[minhashSignaturesFused]] is pinned against in DedupSpec;
+    * higher-order functions evaluate interpreted (outside codegen), so
+    * queries run the fused expression. */
   def minhashSignature(shingles: Column, k: Int): Column =
     transform(sequence(lit(0), lit(k - 1)),
       j => array_min(transform(shingles, sh => xxhash64(sh, j))))
 
-  /** Scale path for minhash: explode shingles, compute the K seed-hashes
-    * as K plain codegen'd columns, partial+final min-aggregate per doc.
-    * Same signature values as [[minhashSignature]] (asserted in DedupSpec)
-    * but every operator stays inside WholeStageCodegen and the map-side
-    * partial aggregation collapses each doc's shingles before the shuffle.
-    */
-  def minhashSignatures(docs: DataFrame, textCol: String, k: Int): DataFrame = {
-    // Testdata tables are single small parquet files → one input split;
-    // hashing is compute-bound, so fan out explicitly. On production
-    // multi-file data the scan is already parallel and this coalesces
-    // nothing away (cost: one narrow round-robin exchange of raw docs).
-    val fanned = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    val exploded = fanned.select(col("doc_id"),
-      explode(wordSet(col(textCol))).as("w"))
-    val mins = (0 until k).map(j => min(xxhash64(col("w"), lit(j))).as(s"h$j"))
-    exploded.groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until k).map(j => col(s"h$j")): _*).as("sig"))
-  }
-
   /** 64-bit SimHash of a token multiset: per bit, sum +1/-1 weighted by
     * token-hash bit, take the sign. Order-insensitive by construction.
-    * HOF form for small/literal inputs; use [[simhashTable]] at scale. */
+    * HOF form — the reference the fused [[simhashFused]] is pinned
+    * against in DedupSpec; it evaluates interpreted and re-hashes every
+    * token for each of the 64 bits, so queries run the fused
+    * expression. */
   def simhash64(tokens: Column): Column = {
     val bits = transform(sequence(lit(0), lit(63)), b =>
       when(aggregate(tokens, lit(0L),
@@ -85,45 +69,21 @@ object Dedup {
       (acc, i) => acc.bitwiseOR(call_function("shiftleft", element_at(bits, i + 1), i)))
   }
 
-  /** Scale path for SimHash: one xxhash64 per token (not per token×bit),
-    * then 64 conditional-sum aggregates (all codegen'd, map-side partial)
-    * and a constant-shift bit pack. Identical values to [[simhash64]]
-    * (asserted in DedupSpec). The HOF form evaluates interpreted and
-    * re-hashes every token for each of the 64 bits — ~100× more work.
-    */
-  def simhashTable(docs: DataFrame, textCol: String): DataFrame = {
-    val fanned = docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    val words = fanned.select(col("doc_id"),
-      explode(split(lower(col(textCol)), " ")).as("w"))
-      .withColumn("h", xxhash64(col("w")))
-    val bitSums = (0 until 64).map(b =>
-      sum(when(shiftright(col("h"), b).bitwiseAND(1L) === 1L, 1L)
-        .otherwise(-1L)).as(s"b$b"))
-    val packed = (0 until 64).foldLeft(lit(0L)) { (acc, b) =>
-      acc.bitwiseOR(when(col(s"b$b") > 0L, lit(1L << b)).otherwise(0L))
-    }
-    words.groupBy("doc_id").agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), packed.as("simhash"))
-  }
+  /** MinHash signatures through the fused native expression: one
+    * codegen'd pass in the scan — no explode, no shuffle; see
+    * [[graft.plans.MinHashSig]]. Values identical to
+    * [[minhashSignature]]. */
+  def minhashSignaturesFused(docs: DataFrame, textCol: String,
+      k: Int): DataFrame =
+    U.fan(docs).select(col("doc_id"),
+      call_function("minhash_sig", wordSet(col(textCol)), lit(k)).as("sig"))
 
-  /** Fastest signature path: the fused native expression (one codegen'd
-    * pass in the scan — no explode, no shuffle; see
-    * [[graft.plans.MinHashSig]]). Values identical to both other paths. */
-  def minhashSignaturesFused(s: SparkSession, docs: DataFrame,
-      textCol: String, k: Int): DataFrame = {
-    docs.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        call_function("minhash_sig", wordSet(col(textCol)), lit(k)).as("sig"))
-  }
-
-  /** Fused SimHash path ([[graft.plans.SimHash64]]): signature in the
-    * scan itself — the map-only analog of [[simhashTable]] (identical
-    * values, asserted in DedupSpec). */
-  def simhashFused(s: SparkSession, docs: DataFrame, textCol: String): DataFrame = {
-    docs.repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"),
-        call_function("simhash64", split(lower(col(textCol)), " ")).as("simhash"))
-  }
+  /** SimHash signatures through the fused native expression
+    * ([[graft.plans.SimHash64]]): computed in the scan itself, values
+    * identical to [[simhash64]]. */
+  def simhashFused(docs: DataFrame, textCol: String): DataFrame =
+    U.fan(docs).select(col("doc_id"),
+      call_function("simhash64", split(lower(col(textCol)), " ")).as("simhash"))
 
   private def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b))
@@ -576,7 +536,7 @@ object Dedup {
     val rows = numHashes / bands
     val docs = t(s, d, "documents")
       .select(col("doc_id"), wordSet(col("text")).as("words"))
-    val sig = minhashSignaturesFused(s, t(s, d, "documents"), "text", numHashes)
+    val sig = minhashSignaturesFused(t(s, d, "documents"), "text", numHashes)
     val banded = sig.select(col("doc_id"),
       explode(transform(sequence(lit(0), lit(bands - 1)),
         b => struct(b.as("band"),
@@ -712,7 +672,7 @@ object Dedup {
       val maxBucket = 64; val threshold = 0.8
       val docs = t(s, d, "documents")
       def banded(df: DataFrame): DataFrame = {
-        val sig = minhashSignaturesFused(s, df, "text", numHashes)
+        val sig = minhashSignaturesFused(df, "text", numHashes)
         sig.select(col("doc_id"), explode(transform(
           sequence(lit(0), lit(bands - 1)),
           b => struct(b.as("band"),
@@ -788,8 +748,7 @@ object Dedup {
     // Oracled: signature + digest fold replayed in DuckDB
     // (plans.XxhSqlOracle.minhashKshingleSql).
     "dedup_minhash_kshingle" -> ((s, d) => {
-      t(s, d, "documents")
-        .repartition(s.sparkContext.defaultParallelism)
+      U.fan(t(s, d, "documents"))
         .select(col("doc_id"),
           call_function("minhash_sig", wordKShingles(col("text"), 3), lit(16))
             .as("sig"))
@@ -801,20 +760,20 @@ object Dedup {
     }),
 
     // Per-doc 64-bit SimHash signatures via the fused native expression
-    // (one codegen'd scan, no explode/shuffle; values identical to
-    // simhashTable — asserted in DedupSpec). Oracled: the xxhash64
+    // (one codegen'd scan, no explode/shuffle; values identical to the
+    // HOF simhash64 — asserted in DedupSpec). Oracled: the xxhash64
     // token hash is replayed in DuckDB by generated mod-2^64 HUGEINT
     // arithmetic (plans.XxhSqlOracle), so "hash-defined" is now
     // value-checked end to end.
     "dedup_simhash" -> ((s, d) =>
-      simhashFused(s, t(s, d, "documents"), "text").orderBy("doc_id")),
+      simhashFused(t(s, d, "documents"), "text").orderBy("doc_id")),
 
     // SimHash near-dup pairs on adjacent ids via Hamming distance. With
     // the fused signature the recompute on the second join side is just
     // another map-only scan — no persist needed, no shuffle until the
     // narrow (id, sig) join itself.
     "dedup_simhash_pairs" -> ((s, d) => {
-      val sh = simhashFused(s, t(s, d, "documents"), "text")
+      val sh = simhashFused(t(s, d, "documents"), "text")
         .withColumnRenamed("simhash", "sh")
       val a = sh.select(col("doc_id"), col("sh").as("sha"))
       val b = sh.select((col("doc_id") - 1).as("doc_id"), col("sh").as("shb"))
@@ -1078,7 +1037,7 @@ object Dedup {
       // ReusedExchange), so without the persist the fused simhash scan
       // — the expensive pass over the corpus — would run twice inside
       // the edge materialization (measured ~1.3 s/pass at sf0.1).
-      Cut.scoped(simhashFused(s, docs, "text")
+      Cut.scoped(simhashFused(docs, "text")
           .withColumnRenamed("simhash", "sh")) { sh =>
         val lhs = sh.select(col("doc_id"), col("sh").as("sha"))
         val rhs = sh.select((col("doc_id") - 1).as("doc_id"),
@@ -1124,7 +1083,7 @@ object Dedup {
       // (same rationale as dedup_cc_incremental above); the closure is
       // EAGER inside connectedComponents (collect or eager cut), so the
       // release is safe right after
-      val stars = Cut.scoped(simhashFused(s, t(s, d, "documents"), "text")
+      val stars = Cut.scoped(simhashFused(t(s, d, "documents"), "text")
           .withColumnRenamed("simhash", "sh")) { sh =>
         val l = sh.select(col("doc_id"), col("sh").as("sha"))
         val r = sh.select((col("doc_id") - 1).as("doc_id"),
@@ -1229,8 +1188,7 @@ object Dedup {
     // more bits + a cosine threshold.
     "dedup_embedding_lsh" -> ((s, d) =>
       embeddingLshPairs(
-        t(s, d, "embeddings")
-          .repartition(s.sparkContext.defaultParallelism)
+        U.fan(t(s, d, "embeddings"))
           .select(col("vec_id"), col("embedding")))
         .limit(20)),
 

@@ -25,8 +25,6 @@ object VectorOps {
   /** Sequential-fold dot product. */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
-  def norm2(a: Column): Column = dot(a, a)
-
   def l2norm(a: Column): Column = call_function("vec_l2norm", a)
 
   /** Cosine similarity; 0-norm guarded to null. */

@@ -175,6 +175,52 @@ object Aggregates {
         "or approx_percentile (GK sketch, ε·N rank bound).")
   }
 
+  /** window_outlier_mad's body. The median fits are ROUTED: the groups
+    * are FACT-scaled (orders/5 rows each), so Spark's `percentile` —
+    * whose buffer is the whole group — is only taken while the memoized
+    * orders count stays at or under `routeCap`; above it both fits swap
+    * to the stitched [[exactQuantiles]], which is bit-parity-pinned to
+    * percentile (OperatorSemanticsSpec + the routed-parity test, which
+    * passes `routeCap = 0`), so the route moves COST, never values. An
+    * unconditional stitched spelling was measured first: 1.0 → 5.1 s
+    * at sf0.1 (two stitched fits + the med subplan re-planned per
+    * consumer) — a 5× toll on every test-scale run to pre-pay a wall
+    * that the route dodges for free. The chosen path lands in the
+    * attribution. */
+  private[graft] def outlierMad(s: SparkSession, d: String,
+      routeCap: Long = PctBoundCap): DataFrame = {
+    val nOrders = tableRows(s, d, "orders")
+    val routed = nOrders > routeCap
+    graft.Attrib.note("outlier_mad_fit",
+      if (routed) "stitched" else "percentile")
+    graft.Attrib.note("outlier_mad_bound_rows", nOrders)
+    def fit(df: DataFrame, valCol: String, scale: Long,
+        out: String): DataFrame =
+      if (routed)
+        exactQuantiles(df, "o_orderpriority", valCol, Seq(0.5), scale)
+          .select(col("fl"), round(col("q0"), 4).as(out))
+      else
+        df.groupBy("o_orderpriority")
+          .agg(round(expr(s"percentile($valCol, 0.5)"), 4).as(out))
+          .select(col("o_orderpriority").as("fl"), col(out))
+    val med = fit(t(s, d, "orders"), "o_totalprice", 100L, "med")
+      .withColumnRenamed("fl", "p1")
+    // deviation rounds to the 1e-4 grid BEFORE its median (both
+    // engines, both routes): |2-decimal − 4-decimal| is within an
+    // ulp of a 4-decimal value but not ON it, and the stitched route
+    // requires grid values at scale=10⁴
+    val withMed = t(s, d, "orders")
+      .join(broadcast(med), col("o_orderpriority") === col("p1"))
+      .withColumn("adev", round(abs(col("o_totalprice") - col("med")), 4))
+    val mad = fit(withMed, "adev", 10000L, "mad")
+      .withColumnRenamed("fl", "p2")
+    withMed.join(broadcast(mad), col("o_orderpriority") === col("p2"))
+      .filter(col("adev") > lit(2.0) * col("mad"))
+      .select(col("o_orderkey"), col("o_orderpriority"),
+        col("o_totalprice"), U.round6(col("adev") / col("mad")).as("score"))
+      .orderBy("o_orderkey")
+  }
+
   /** Typed custom aggregation (B.2 agg_typed_custom): exact money sum in
     * integer cents — associative, overflow-safe at test scale, and a
     * template for sparse-vector sums. Registered per the Aggregator API
@@ -789,53 +835,7 @@ object Aggregates {
     // synthetic price distribution is near-uniform (max |x−med|/MAD ≈
     // 2.07 — a uniform law has no 3-sigma tail); production robust
     // z-scores use k = 3·1.4826.
-    "window_outlier_mad" -> ((s, d) => {
-      // ROUTED median fits (VERDICT r13 item 4's "guard that routes to
-      // exactQuantiles above a cap"): the groups here are FACT-scaled
-      // (orders/5 rows each), so Spark's `percentile` — whose buffer
-      // is the whole group — is only taken while the memoized orders
-      // count stays under [[PctBoundCap]]; above it both fits swap to
-      // the stitched [[exactQuantiles]], which is bit-parity-pinned to
-      // percentile (OperatorSemanticsSpec + the routed-parity test),
-      // so the route moves COST, never values. An unconditional
-      // stitched spelling was measured first: 1.0 → 5.1 s at sf0.1
-      // (two stitched fits + the med subplan re-planned per consumer)
-      // — a 5× toll on every test-scale run to pre-pay a wall that the
-      // route dodges for free. Chosen path lands in the attribution.
-      // The conf override exists for the parity test, not for users.
-      val nOrders = tableRows(s, d, "orders")
-      val routeCap = s.conf.getOption("spark.graft.percentile.routeCap")
-        .map(_.toLong).getOrElse(PctBoundCap)
-      val routed = nOrders > routeCap
-      graft.Attrib.note("outlier_mad_fit",
-        if (routed) "stitched" else "percentile")
-      graft.Attrib.note("outlier_mad_bound_rows", nOrders)
-      def fit(df: DataFrame, valCol: String, scale: Long,
-          out: String): DataFrame =
-        if (routed)
-          exactQuantiles(df, "o_orderpriority", valCol, Seq(0.5), scale)
-            .select(col("fl"), round(col("q0"), 4).as(out))
-        else
-          df.groupBy("o_orderpriority")
-            .agg(round(expr(s"percentile($valCol, 0.5)"), 4).as(out))
-            .select(col("o_orderpriority").as("fl"), col(out))
-      val med = fit(t(s, d, "orders"), "o_totalprice", 100L, "med")
-        .withColumnRenamed("fl", "p1")
-      // deviation rounds to the 1e-4 grid BEFORE its median (both
-      // engines, both routes): |2-decimal − 4-decimal| is within an
-      // ulp of a 4-decimal value but not ON it, and the stitched route
-      // requires grid values at scale=10⁴
-      val withMed = t(s, d, "orders")
-        .join(broadcast(med), col("o_orderpriority") === col("p1"))
-        .withColumn("adev", round(abs(col("o_totalprice") - col("med")), 4))
-      val mad = fit(withMed, "adev", 10000L, "mad")
-        .withColumnRenamed("fl", "p2")
-      withMed.join(broadcast(mad), col("o_orderpriority") === col("p2"))
-        .filter(col("adev") > lit(2.0) * col("mad"))
-        .select(col("o_orderkey"), col("o_orderpriority"),
-          col("o_totalprice"), U.round6(col("adev") / col("mad")).as("score"))
-        .orderBy("o_orderkey")
-    }),
+    "window_outlier_mad" -> ((s, d) => outlierMad(s, d)),
 
     // Winsorized clipping — outlier taming before numeric features
     // enter training: exact per-group p05/p95 (the 3-row bounds table

@@ -560,8 +560,6 @@ object Joins {
       // (W+wa)(W+wb)/W ≈ +30%. NOTE: widening the key space alone
       // moved nothing (still 37 tasks) — the explicit repartition
       // below is the other half; together: 150.6 → 31.8 s at sf1.
-      // Same tuning note on spark.graft.rangeJoin.bucketWidth (the
-      // _auto variant's knob).
       val W = 10L
       val a = t(s, d, "part").select(
         col("p_partkey").as("a_id"),
@@ -598,15 +596,14 @@ object Joins {
     // (enabled via GraftExtensions) rewrites it into the bucketed
     // equi-join automatically; PlanSpec asserts no nested-loop remains.
     "join_interval_overlap_auto" -> ((s, d) => {
-      // NO width knob (VERDICT r13 item 3): the rule's default
-      // bucketWidth="auto" measures both sides at plan time (min/max
-      // bounds, mean/max interval length — two tiny aggregates,
-      // memoized) and minimizes its replication-vs-parallelism cost
-      // model. On this demo's [0, 540] domain with lengths 25/40 it
-      // derives W≈8 — the same regime the r13 hand-tune (W=10) landed
-      // on, without the cloned-session conf a 100× user would never
-      // know to set. History: 124 s at sf1 (fixed W=50, AQE-coalesced)
-      // → 55 s (pinned shuffle) → 33 s (pinned + hand W=10) → auto.
+      // NO width knob: the rule measures both sides at plan time
+      // (min/max bounds, mean/max interval length — two tiny
+      // aggregates, memoized) and minimizes its replication-vs-
+      // parallelism cost model. On this demo's [0, 540] domain with
+      // lengths 25/40 it derives W≈8 — the regime of the hand-tuned
+      // W=10 above. At sf1: 124 s with a fixed W=50 and an
+      // AQE-coalesced shuffle, 55 s with the shuffle pinned, 33 s
+      // pinned with W=10.
       // The chosen width lands in the bench attribution
       // (range_join_width / range_join_width_source).
       val a = t(s, d, "part").select(

@@ -51,7 +51,8 @@ object Iterate {
 
   /** Run `step` to a fixpoint.
     *
-    * @param initial   loop state; persisted by the harness.
+    * @param initial   loop state; persisted by the harness unless the
+    *                  caller already holds it persisted.
     * @param fanout    how many times `step`'s plan references its input
     *                  (2 for a self-join, ~8 for a star alternation) —
     *                  sets the lineage-truncation cadence.

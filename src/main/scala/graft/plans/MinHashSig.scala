@@ -16,11 +16,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * `hashInt(j, hashUTF8String(s, 42))` — so this expression hashes each
   * shingle's bytes ONCE and then applies K cheap integer mixes, where the
   * built-in form re-hashes the full string K times and evaluates
-  * interpreted (higher-order functions don't codegen). Compared to the
-  * explode+groupBy scale path in [[graft.dedup.Dedup.minhashSignatures]],
-  * this needs no explode and no shuffle at all: the signature materializes
-  * in the same whole-stage-codegen'd map task as the scan — the shape you
-  * want when sketching 100 TB of documents.
+  * interpreted (higher-order functions don't codegen). It needs no
+  * explode and no shuffle: the signature materializes in the same
+  * whole-stage-codegen'd map task as the scan — the shape you want when
+  * sketching 100 TB of documents.
   *
   * Empty/all-null arrays yield Long.MaxValue sentinels (no shingles → no
   * minimum), matching `array_min`'s null only in the sense that callers

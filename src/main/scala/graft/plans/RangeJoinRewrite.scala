@@ -1,6 +1,6 @@
 // Shim in the Spark namespace: classic.Dataset.ofRows is private[sql],
 // and executing a tiny stats aggregate over the join children at plan
-// time is how the adaptive bucket width avoids the hand-tune knob.
+// time is how the rule derives its bucket width from the data.
 package org.apache.spark.sql {
   object GraftPlanRun {
     def head(spark: SparkSession,
@@ -48,29 +48,26 @@ import scala.util.control.NonFatal
   * extra shuffle for dedup.
   *
   * Preconditions (documented contract, standard for range-join
-  * optimizers): intervals are well-formed (lo <= hi per row). Bucket
-  * width is DERIVED from data statistics at plan time by default
-  * (`spark.graft.rangeJoin.bucketWidth` = "auto": one tiny min/max/avg
-  * aggregate per side, then the [[deriveWidth]] cost model — VERDICT
-  * r13 item 3); an explicit numeric conf value overrides. A good width
+  * optimizers): intervals are well-formed (lo <= hi per row). The bucket
+  * width is DERIVED from the data at plan time: one tiny min/max/avg
+  * aggregate per side, then the [[deriveWidth]] cost model. A good width
   * respects BOTH the typical interval length (each interval should span
   * O(1) buckets — replication is 1 + length/W) AND the value DOMAIN
   * (key cardinality is domain/W; it must exceed the shuffle parallelism
   * or most cores idle — on a narrow domain, prefer the smallest W the
-  * replication budget allows).
+  * replication budget allows). When the stats are unavailable (an empty
+  * side, a child plan the aggregate cannot run) the width is 50.
   *
-  * The rewrite pins its shuffle with an EXPLICIT partition count
-  * (`spark.graft.rangeJoin.numPartitions`, default 2× the session's
-  * shuffle partitions): this join class has dimension-sized INPUT but
-  * pair-volume OUTPUT, and AQE sizes stages by shuffle-READ bytes — left
-  * to itself it coalesces the join to single digits of tasks and one
-  * task computes the entire pair explosion (measured at sf1: 37 tasks,
-  * 5-core average on a 150 s run; pinned: 31.8 s). The 2× multiple
-  * smooths hash collisions when domain/W is only a small multiple of
-  * the core count. Known trade: a user-specified repartition opts out
-  * of AQE skew-splitting — bucket skew is bounded by the uniform
-  * explode, and the canonical-bucket conjunct keeps per-bucket output
-  * proportional to per-bucket input.
+  * The rewrite pins its shuffle at 2× the session's shuffle partitions:
+  * this join class has dimension-sized INPUT but pair-volume OUTPUT, and
+  * AQE sizes stages by shuffle-READ bytes — left to itself it coalesces
+  * the join to single digits of tasks and one task computes the entire
+  * pair explosion (measured at sf1: 37 tasks, 5-core average on a 150 s
+  * run; pinned: 31.8 s). The 2× multiple smooths hash collisions when
+  * domain/W is only a small multiple of the core count. Known trade: a
+  * user-specified repartition opts out of AQE skew-splitting — bucket
+  * skew is bounded by the uniform explode, and the canonical-bucket
+  * conjunct keeps per-bucket output proportional to per-bucket input.
   *
   * Enabled via `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
@@ -78,31 +75,16 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   private val BucketAttrPrefix = "__graft_bucket_"
 
-  /** Explicit width override; "auto" (the default) derives the width
-    * from data statistics at plan time — see [[deriveWidth]]. The
-    * round-13 lesson behind the default: a fixed W=50 on the demo's
-    * [0, 540] domain yielded 11 join keys and an ≤11-task parallelism
-    * collapse at sf1 (126 s), and a 100× user with an unknown domain
-    * would re-create it; the width MUST respect both replication
-    * (1 + len/W per row) and parallelism (domain/W ≥ shuffle fan-out),
-    * which only the data can say. */
-  private def bucketWidthConf: String =
-    conf.getConfString("spark.graft.rangeJoin.bucketWidth", "auto").trim
+  /** Per-row span guard: an interval spanning more than this many
+    * buckets raises a descriptive error instead of exploding into a
+    * near-unbounded `sequence()` (array-size limit / OOM with a message
+    * that wouldn't mention this rule). A width derived from the stats
+    * never trips it: [[widthGrid]] starts at the width that keeps the
+    * longest interval under the cap. */
+  private val MaxSpanBuckets = 4096L
 
-  /** Runtime guard: an interval spanning more than this many buckets
-    * (relative to bucketWidth) raises a descriptive error instead of
-    * exploding into a near-unbounded `sequence()` (array-size limit / OOM
-    * with a message that wouldn't mention this rule). Raise the width or
-    * this cap for genuinely huge intervals. */
-  private def maxSpanBuckets: Long =
-    conf.getConfString("spark.graft.rangeJoin.maxSpanBuckets", "4096").toLong
-
-  /** Explicit partition count for the bucket shuffle (see class doc);
-    * 0 = derive as 2× the session's shuffle parallelism. */
-  private def numPartitions: Int = {
-    val n = conf.getConfString("spark.graft.rangeJoin.numPartitions", "0").toInt
-    if (n > 0) n else conf.numShufflePartitions * 2
-  }
+  /** Partition count of the bucket shuffle (see class doc). */
+  private def numPartitions: Int = conf.numShufflePartitions * 2
 
   /** Plan-time interval stats for one join side: (min lo, max hi,
     * mean length, max length). One tiny global aggregate executed at
@@ -116,7 +98,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
   private def sideStats(child: LogicalPlan, lo: Expression,
       hi: Expression): Option[(Long, Long, Double, Long)] = {
     // Keyed on the CANONICALIZED plan/expressions themselves, not their
-    // hashes (ADVICE r14): a hash collision would silently reuse another
+    // hashes: a hash collision would silently reuse another
     // plan's interval stats and derive a wrong width (perf-only, but the
     // whole point of measuring is not to guess). Canonicalized trees
     // compare structurally, and the 64-entry clear bounds retention.
@@ -158,7 +140,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * aggregate per side, every grid width as a column of the same row:
     * avg(hi divW − lo divW) + 1 under the exact IntegralDivide the
     * bucket Generate uses. Exists because the closed-form 1 + len/W
-    * is blind to LATTICE ALIGNMENT: the r14 sf1 A/B measured W=9 at
+    * is blind to LATTICE ALIGNMENT: an sf1 A/B measured W=9 at
     * 1.62× the task time of W=10 on the demo data — a_lo is a multiple
     * of 10, so W=10 spans exactly 3 buckets per interval where the
     * average-length model predicted 3.5 vs 3.78 (a 6% difference that
@@ -220,7 +202,7 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     *
     * Small W buys parallelism (more bucket keys) at extra replication
     * and candidate volume; large W cuts replication but starves the
-    * shuffle — the two-sided constraint the r13 hand-tune balanced.
+    * shuffle — the two-sided constraint a hand-tuned width balances.
     * With the measured replications this lands ON the hand-tuned
     * optimum for the demo (W=10: the lattice-aligned 3-bucket span
     * beats W=9's 3.78 despite fewer keys); the closed-form fallback
@@ -243,138 +225,123 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  /** Extract (aLo, aHi, bLo, bHi, others) where a* reference only `left`
-    * and b* only `right`. */
-  private def matchOverlap(cond: Expression, left: LogicalPlan,
-      right: LogicalPlan): Option[(Expression, Expression, Expression, Expression, Seq[Expression])] = {
-    val conjuncts = splitConjunctivePredicates(cond)
-    // No equi conjunct across sides — otherwise Spark already has a key.
-    val hasEqui = conjuncts.exists {
-      case EqualTo(l, r) =>
-        (l.references.subsetOf(left.outputSet) && r.references.subsetOf(right.outputSet)) ||
-          (l.references.subsetOf(right.outputSet) && r.references.subsetOf(left.outputSet))
-      case _ => false
-    }
-    if (hasEqui) return None
-
-    // Normalize each cross-side <= into (leftExpr, rightExpr) meaning
-    // leftExpr <= rightExpr.
-    def asLe(e: Expression): Option[(Expression, Expression)] = e match {
-      case LessThanOrEqual(l, r) => Some((l, r))
-      case GreaterThanOrEqual(l, r) => Some((r, l))
-      case _ => None
-    }
-    def fromLeft(e: Expression) =
-      e.references.nonEmpty && e.references.subsetOf(left.outputSet) && isIntegral(e)
-    def fromRight(e: Expression) =
-      e.references.nonEmpty && e.references.subsetOf(right.outputSet) && isIntegral(e)
-
-    val les = conjuncts.flatMap(asLe)
-    // a_lo <= b_hi : left-expr <= right-expr
-    val lr = les.filter { case (l, r) => fromLeft(l) && fromRight(r) }
-    // b_lo <= a_hi : right-expr <= left-expr
-    val rl = les.filter { case (l, r) => fromRight(l) && fromLeft(r) }
-    (lr, rl) match {
-      case (Seq((aLo, bHi)), Seq((bLo, aHi))) =>
-        val used: Set[Expression] = Set(
-          LessThanOrEqual(aLo, bHi), GreaterThanOrEqual(bHi, aLo),
-          LessThanOrEqual(bLo, aHi), GreaterThanOrEqual(aHi, bLo))
-        val others = conjuncts.filterNot(c => used.exists(_.semanticEquals(c)))
-        // `others` must not be the source of the matched predicates; keep
-        // any genuinely extra conjuncts as residuals.
-        Some((aLo, aHi, bLo, bHi, others.filterNot(c => asLe(c).exists(p =>
-          (p._1.semanticEquals(aLo) && p._2.semanticEquals(bHi)) ||
-            (p._1.semanticEquals(bLo) && p._2.semanticEquals(aHi))))))
-      case _ => None
-    }
+  /** The overlap bounds (aLo, aHi, bLo, bHi) of a join this rule
+    * rewrites: an inner join, not yet bucketed, whose condition holds
+    * `aLo <= bHi AND bLo <= aHi` with a* referencing only the left side
+    * and b* only the right, and no cross-side equi conjunct. */
+  private def overlap(j: Join)
+      : Option[(Expression, Expression, Expression, Expression)] = j match {
+    case Join(left, right, Inner, Some(cond), _)
+        if !j.output.exists(_.name.startsWith(BucketAttrPrefix)) =>
+      val conjuncts = splitConjunctivePredicates(cond)
+      // No equi conjunct across sides — otherwise Spark already has a key.
+      val hasEqui = conjuncts.exists {
+        case EqualTo(l, r) =>
+          (l.references.subsetOf(left.outputSet) && r.references.subsetOf(right.outputSet)) ||
+            (l.references.subsetOf(right.outputSet) && r.references.subsetOf(left.outputSet))
+        case _ => false
+      }
+      // Normalize each cross-side <= into (leftExpr, rightExpr) meaning
+      // leftExpr <= rightExpr.
+      def asLe(e: Expression): Option[(Expression, Expression)] = e match {
+        case LessThanOrEqual(l, r) => Some((l, r))
+        case GreaterThanOrEqual(l, r) => Some((r, l))
+        case _ => None
+      }
+      def fromLeft(e: Expression) =
+        e.references.nonEmpty && e.references.subsetOf(left.outputSet) && isIntegral(e)
+      def fromRight(e: Expression) =
+        e.references.nonEmpty && e.references.subsetOf(right.outputSet) && isIntegral(e)
+      val les = conjuncts.flatMap(asLe)
+      // a_lo <= b_hi : left-expr <= right-expr
+      val lr = les.filter { case (l, r) => fromLeft(l) && fromRight(r) }
+      // b_lo <= a_hi : right-expr <= left-expr
+      val rl = les.filter { case (l, r) => fromRight(l) && fromLeft(r) }
+      (lr, rl) match {
+        case (Seq((aLo, bHi)), Seq((bLo, aHi))) if !hasEqui =>
+          Some((aLo, aHi, bLo, bHi))
+        case _ => None
+      }
+    case _ => None
   }
 
   private def divW(e: Expression, w: Long): Expression =
     new IntegralDivide(Cast(e, LongType), Literal(w))
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), hint)
-        if !j.output.exists(_.name.startsWith(BucketAttrPrefix)) =>
-      matchOverlap(cond, left, right) match {
-        case Some((aLo, aHi, bLo, bHi, _)) =>
-          // Width resolution: explicit conf wins; "auto" (default)
-          // measures both sides and minimizes the cost model. The
-          // chosen width + source land in the bench attribution so a
-          // slow range join names its own tuning.
-          val w = bucketWidthConf match {
-            case "auto" =>
-              (sideStats(left, aLo, aHi), sideStats(right, bLo, bHi)) match {
-                case (Some((amn, amx, aav, aml)), Some((bmn, bmx, bav, bml))) =>
-                  val domain = math.max(amx, bmx) - math.min(amn, bmn) + 1
-                  val grid = widthGrid(domain, math.max(aml, bml),
-                    maxSpanBuckets)
-                  // measured replication where the job succeeds, the
-                  // closed-form 1 + meanLen/W where it doesn't
-                  val ra = replStats(left, aLo, aHi, grid)
-                  val rb = replStats(right, bLo, bHi, grid)
-                  def repl(m: Map[Long, Double], meanLen: Double)(
-                      wc: Long): Double =
-                    m.getOrElse(wc, 1.0 + meanLen / wc)
-                  val dw = deriveWidth(domain, grid,
-                    repl(ra, aav), repl(rb, bav), numPartitions)
-                  graft.Attrib.note("range_join_width", dw)
-                  graft.Attrib.note("range_join_width_source",
-                    if (ra.nonEmpty && rb.nonEmpty) "auto-measured"
-                    else "auto-closed-form")
-                  dw
-                case _ =>
-                  // stats unavailable (empty side, exotic child plan):
-                  // the historical fixed default
-                  graft.Attrib.note("range_join_width", 50L)
-                  graft.Attrib.note("range_join_width_source", "fallback")
-                  50L
-              }
-            case v =>
-              val dw = v.toLong
-              graft.Attrib.note("range_join_width", dw)
-              graft.Attrib.note("range_join_width_source", "conf")
-              dw
-          }
-          // sequence() over non-null integral bounds yields non-null
-          // elements; the attr nullability must match Explode's schema.
-          val bucketL = AttributeReference(BucketAttrPrefix + "l", LongType,
-            nullable = false)()
-          val bucketR = AttributeReference(BucketAttrPrefix + "r", LongType,
-            nullable = false)()
-          val maxSpan = maxSpanBuckets
-          def gen(child: LogicalPlan, lo: Expression, hi: Expression,
-              out: AttributeReference) = {
-            val loB = divW(lo, w)
-            val hiB = divW(hi, w)
-            // Post-analysis construction: TimeZoneAwareExpression needs
-            // an explicit timeZoneId to count as resolved.
-            val seq = Sequence(loB, hiB, None, Some(conf.sessionLocalTimeZone))
-            // Per-row span guard: fail with a message that names the rule
-            // and the tuning knobs rather than an opaque array-size error.
-            val guarded = If(
-              LessThanOrEqual(Subtract(hiB, loB), Literal(maxSpan)),
-              seq,
-              Cast(new RaiseError(Literal(
-                s"graft.plans.RangeJoinRewrite: interval spans more than " +
-                  s"$maxSpan buckets at bucketWidth=$w; raise " +
-                  "spark.graft.rangeJoin.bucketWidth or " +
-                  "spark.graft.rangeJoin.maxSpanBuckets")), seq.dataType))
-            Generate(Explode(guarded),
-              unrequiredChildIndex = Nil, outer = false, qualifier = None,
-              generatorOutput = Seq(out), child = child)
-          }
-          val n = numPartitions
-          val newLeft = RepartitionByExpression(
-            Seq(bucketL), gen(left, aLo, aHi, bucketL), Some(n))
-          val newRight = RepartitionByExpression(
-            Seq(bucketR), gen(right, bLo, bHi, bucketR), Some(n))
-          val canonical = EqualTo(bucketL,
-            Greatest(Seq(divW(aLo, w), divW(bLo, w))))
-          val newCond = And(And(EqualTo(bucketL, bucketR), cond), canonical)
-          Project(j.output,
-            Join(newLeft, newRight, Inner, Some(newCond), hint))
-        case None => j
-      }
+    case j: Join => overlap(j).fold[LogicalPlan](j)(o => rewrite(j, width(j, o)))
+  }
+
+  /** The bucket width for an overlap join: measure both sides and
+    * minimize the cost model. The chosen width and its source land in
+    * the bench attribution so a slow range join names its own tuning. */
+  private def width(j: Join,
+      o: (Expression, Expression, Expression, Expression)): Long = {
+    val (aLo, aHi, bLo, bHi) = o
+    (sideStats(j.left, aLo, aHi), sideStats(j.right, bLo, bHi)) match {
+      case (Some((amn, amx, aav, aml)), Some((bmn, bmx, bav, bml))) =>
+        val domain = math.max(amx, bmx) - math.min(amn, bmn) + 1
+        val grid = widthGrid(domain, math.max(aml, bml), MaxSpanBuckets)
+        // measured replication where the job succeeds, the closed-form
+        // 1 + meanLen/W where it doesn't
+        val ra = replStats(j.left, aLo, aHi, grid)
+        val rb = replStats(j.right, bLo, bHi, grid)
+        def repl(m: Map[Long, Double], meanLen: Double)(wc: Long): Double =
+          m.getOrElse(wc, 1.0 + meanLen / wc)
+        val dw = deriveWidth(domain, grid, repl(ra, aav), repl(rb, bav),
+          numPartitions)
+        graft.Attrib.note("range_join_width", dw)
+        graft.Attrib.note("range_join_width_source",
+          if (ra.nonEmpty && rb.nonEmpty) "auto-measured"
+          else "auto-closed-form")
+        dw
+      case _ =>
+        graft.Attrib.note("range_join_width", 50L)
+        graft.Attrib.note("range_join_width_source", "fallback")
+        50L
+    }
+  }
+
+  /** `j` as a bucketed equi-join at bucket width `w`; `j` must be an
+    * overlap join (see [[overlap]]). */
+  private[graft] def rewrite(j: Join, w: Long): LogicalPlan = {
+    val (aLo, aHi, bLo, bHi) = overlap(j).getOrElse(
+      throw new IllegalArgumentException(s"not an interval-overlap join: $j"))
+    // sequence() over non-null integral bounds yields non-null
+    // elements; the attr nullability must match Explode's schema.
+    val bucketL = AttributeReference(BucketAttrPrefix + "l", LongType,
+      nullable = false)()
+    val bucketR = AttributeReference(BucketAttrPrefix + "r", LongType,
+      nullable = false)()
+    def gen(child: LogicalPlan, lo: Expression, hi: Expression,
+        out: AttributeReference) = {
+      val loB = divW(lo, w)
+      val hiB = divW(hi, w)
+      // Post-analysis construction: TimeZoneAwareExpression needs
+      // an explicit timeZoneId to count as resolved.
+      val seq = Sequence(loB, hiB, None, Some(conf.sessionLocalTimeZone))
+      // Per-row span guard: fail with a message that names the rule
+      // rather than an opaque array-size error.
+      val guarded = If(
+        LessThanOrEqual(Subtract(hiB, loB), Literal(MaxSpanBuckets)),
+        seq,
+        Cast(new RaiseError(Literal(
+          s"graft.plans.RangeJoinRewrite: interval spans more than " +
+            s"$MaxSpanBuckets buckets at bucketWidth=$w")), seq.dataType))
+      Generate(Explode(guarded),
+        unrequiredChildIndex = Nil, outer = false, qualifier = None,
+        generatorOutput = Seq(out), child = child)
+    }
+    val n = numPartitions
+    val newLeft = RepartitionByExpression(
+      Seq(bucketL), gen(j.left, aLo, aHi, bucketL), Some(n))
+    val newRight = RepartitionByExpression(
+      Seq(bucketR), gen(j.right, bLo, bHi, bucketR), Some(n))
+    val canonical = EqualTo(bucketL,
+      Greatest(Seq(divW(aLo, w), divW(bLo, w))))
+    val newCond = And(And(EqualTo(bucketL, bucketR), j.condition.get),
+      canonical)
+    Project(j.output, Join(newLeft, newRight, Inner, Some(newCond), j.hint))
   }
 }
 

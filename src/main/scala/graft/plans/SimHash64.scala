@@ -10,19 +10,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * slot (SURVEY.md §4.3): the whole signature materializes in ONE
   * codegen'd pass inside the scan, no explode, no shuffle.
   *
-  * Semantics are bit-identical to the explode+aggregate formulation in
-  * [[graft.dedup.Dedup.simhashTable]]: per token, `xxhash64(token)` (the
+  * Semantics are bit-identical to the HOF formulation
+  * [[graft.dedup.Dedup.simhash64]]: per token, `xxhash64(token)` (the
   * Spark seed-42 chain); per bit b, the token votes +1 if bit b of its
   * hash is set else -1; signature bit b is 1 iff the vote sum is > 0.
   * Order-insensitive by construction (sum is commutative).
   *
-  * Why an Expression and not the explode path: simhashTable shuffles one
-  * row per (doc, token) — fine when you need the per-token relation
-  * anyway, but pure overhead for signatures. At 100 TB of documents this
-  * form is a map-only scan: hash each token once, 64 counter bumps, emit
+  * Why an Expression: the HOF form evaluates interpreted and re-hashes
+  * every token once per bit, and an explode+aggregate spelling shuffles
+  * one row per (doc, token). At 100 TB of documents this form is a
+  * map-only scan: hash each token once, 64 counter bumps, emit
   * one long per document. Null tokens vote with hash = 42 (the seed),
-  * because that is what `xxhash64(null)` evaluates to in both reference
-  * paths — a null column leaves the running hash at its seed.
+  * because that is what `xxhash64(null)` evaluates to in the HOF
+  * reference — a null column leaves the running hash at its seed.
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 

@@ -126,25 +126,6 @@ object Similarity {
     Tables.t(s, d, "embeddings").filter(col("vec_id") === id)
       .select(toDouble(col("embedding"))).head().getSeq[Double](0).toArray
 
-  /** Explicit doc_id↔vec_id crosswalk for cross-modal fusion. On the
-    * synthetic corpus the mapping is the identity (embeddings are keyed
-    * by their document id), but making it a first-class table means a
-    * corpus whose document and embedding ids live in different
-    * namespaces swaps in its real mapping — the fusion join is
-    * structurally correct either way, instead of silently fusing
-    * unrelated items on an id-equality convention.
-    *
-    * NOTE on composition at scale: `sim_hybrid_rrf` does NOT call this
-    * whole-table form — materializing the full mapping joins two
-    * data-scaled tables before the candidate filter. It applies the
-    * same two scans candidates-first (see the query) so each join
-    * broadcasts only the ≤k-row candidate list. This form exists for
-    * callers that genuinely need the full mapping (e.g. a backfill). */
-  def docVecMap(s: SparkSession, d: String): DataFrame =
-    Tables.t(s, d, "documents").select(col("doc_id"))
-      .join(Tables.t(s, d, "embeddings")
-        .select(col("vec_id")), col("doc_id") === col("vec_id"))
-
   def bruteForceTopK(s: SparkSession, d: String, queryId: Long, k: Int): DataFrame = {
     val q = typedlit(queryVector(s, d, queryId).toSeq)
     Tables.t(s, d, "embeddings")
@@ -1127,12 +1108,13 @@ object Similarity {
     // query contract, not the data), so the partition-less windows here
     // are not the banned raw-row global sort. Fusion happens in the
     // DOCUMENT namespace (the thing being retrieved): dense candidates
-    // cross from vector ids through the EXPLICIT doc_id↔vec_id
-    // crosswalk ([[docVecMap]]) rather than a naming convention, while
-    // lexical candidates are already document-keyed — so a document
-    // with no embedding can still surface lexically (it must not be
-    // dropped by the crosswalk), and a corpus whose document and
-    // embedding ids differ swaps in its real mapping table structurally.
+    // cross from vector ids through an EXPLICIT doc_id↔vec_id
+    // crosswalk join (`denseMapped` below) rather than a naming
+    // convention, while lexical candidates are already document-keyed —
+    // so a document with no embedding can still surface lexically (it
+    // must not be dropped by the crosswalk), and a corpus whose document
+    // and embedding ids differ swaps in its real mapping table
+    // structurally.
     "sim_hybrid_rrf" -> ((s, d) => {
       val W = org.apache.spark.sql.expressions.Window
       val dense = bruteForceTopK(s, d, queryId = 0L, k = 50)
@@ -1140,9 +1122,10 @@ object Similarity {
           W.orderBy(col("cos_sim").desc, col("vec_id"))))
         .select(col("vec_id"), col("rank_dense"))
       // The crosswalk applied CANDIDATES-FIRST: materializing the full
-      // doc_id↔vec_id mapping ([[docVecMap]]) and then filtering by the
-      // candidate list would join two data-scaled tables to map 50 rows
-      // — at 100 TB that shuffle dwarfs the whole query. Instead the
+      // doc_id↔vec_id mapping (documents ⋈ embeddings) and then
+      // filtering by the candidate list would join two data-scaled
+      // tables to map 50 rows — at 100 TB that shuffle dwarfs the
+      // whole query. Instead the
       // ≤50-row dense list broadcasts into the embedding-id scan, and
       // the ≤50 surviving mapped rows broadcast into the document-id
       // scan: two map-only probes, no shuffle at any scale. The mapping

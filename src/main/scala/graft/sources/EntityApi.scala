@@ -4,8 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Driver-side entity-API organ lookup — the per-dataset tissue fallback
   * the reference applies when no tissue argument is supplied
   * (`bin/concatenate.py:22-28`: GET `{entity}/dataset/{uuid}/organs/` →
@@ -131,16 +129,5 @@ object EntityApi {
           "but the organ dictionary has no such code"))
       ds -> stripLaterality(name)
     }.toMap
-  }
-
-  /** The resolved lookup as a broadcast-sized (dataset, tissue) dim for
-    * plan-side joins. The distinct-dataset list itself comes from the
-    * discovery layer ([[EsFetch.discover]] / [[EsResponse.pagedDatasets]]),
-    * which is already dim-sized by construction. */
-  def tissueDim(spark: SparkSession, entityEndpoint: String,
-      datasets: Seq[String], organDict: Map[String, String]): DataFrame = {
-    import spark.implicits._
-    resolveTissues(entityEndpoint, datasets, organDict).toSeq
-      .toDF("dataset", "tissue")
   }
 }

@@ -49,7 +49,7 @@ object PartitionedData {
     * of SHA-256 over the absolute path. Layouts for DIFFERENT source
     * dirs (sf0.001/0.01/0.1) coexist; only stale GENERATIONS of the
     * same source dir are swept. */
-  private def dirTag(d: String): String = {
+  private[graft] def dirTag(d: String): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     md.digest(java.nio.file.Paths.get(d).toAbsolutePath.toString
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -120,12 +120,6 @@ object PartitionedData {
         try {
           val it = s.iterator()
           val liveTmp = """.*\.tmp-(\d+)$""".r
-          // legacy (pre-SHA-256) tags were 32-bit hashCode hex, ≤ 8
-          // chars — a length the new 16-hex tag can never produce;
-          // sweeping them here keeps an upgraded machine from carrying
-          // an orphaned full copy of every layout forever
-          val legacy = ("^" + java.util.regex.Pattern.quote(kind)
-            + "_[0-9a-f]{1,8}_.*").r
           while (it.hasNext) {
             val p = it.next()
             val n = p.getFileName.toString
@@ -174,8 +168,7 @@ object PartitionedData {
                 }
               case _ => false
             }
-            if (!isLiveBuilder && n != name &&
-                (n.startsWith(prefix) || legacy.matches(n)))
+            if (!isLiveBuilder && n != name && n.startsWith(prefix))
               deleteRecursively(p)
           }
         } finally s.close()

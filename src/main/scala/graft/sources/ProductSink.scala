@@ -13,7 +13,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - TSV with an explicit schema, never inference (`bin/concatenate.py:
   *    121` reads TSV all-string; schema inference is a full extra scan at
   *    100 TB, so the engine requires a `StructType` at every text source);
-  *  - multiLine JSON documents (`bin/upload.py:26-28`);
   *  - the data product sink (`bin/concatenate.py:150-152` .h5mu + metadata
   *    JSON): modality/dataset-partitioned parquet + a one-line JSON
   *    sidecar carrying uuid/creation-time/counts/schema — partition columns give
@@ -37,10 +36,6 @@ object ProductSink {
     df.write.mode(SaveMode.Overwrite)
       .option("sep", "\t").option("header", "true")
       .csv(path)
-
-  /** multiLine JSON document source (scan_json_doc). */
-  def readJsonDoc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("multiLine", "true").json(path)
 
   /** ORC sink/source (sink_orc) — the second columnar format warehouses
     * standardize on (Hive ecosystems). Same partition-pruning and

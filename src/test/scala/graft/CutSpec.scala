@@ -1,6 +1,13 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.CacheManager
 import org.apache.spark.sql.functions._
 
 import graft.plans.{Iterate, RoundEval}
@@ -28,6 +35,25 @@ class CutSpec extends SparkSpec {
     when($"id" >= 0, raise_error(lit("planted failure")))
       .otherwise(lit("ab")).as("word"),
     lit(2L).as("freq"))
+
+  /** What the CacheManager logs while `body` runs. */
+  private def cacheManagerLog(body: => Any): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("cut-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger(classOf[CacheManager]).asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    seen.asScala.toSeq
+  }
 
   fromEmptyCache("scoped persists for the body and releases after it") {
     val n = Cut.scoped(spark.range(5).toDF("x")) { held =>
@@ -58,6 +84,24 @@ class CutSpec extends SparkSpec {
       g.current.agg(max($"x")).head().getLong(0)
     }
     assert(last === 5L)
+  }
+
+  fromEmptyCache("rounds adopts a scoped frame as its first generation " +
+    "instead of caching it twice") {
+    val log = cacheManagerLog {
+      Cut.scoped(spark.range(3).toDF("x")) { held =>
+        held.count()
+        Cut.rounds(held) { g =>
+          assert(g.current eq held)
+          g.advance(g.current.select(($"x" + 1).as("x")))(_.count())
+        }
+      }
+    }
+    assert(!log.exists(_.contains("already cached")), log)
+    // the capture does see a second cache of the same frame
+    val control = cacheManagerLog(
+      Cut.scoped(spark.range(3).toDF("x"))(Cut.retained(_)))
+    assert(control.exists(_.contains("already cached")), control)
   }
 
   fromEmptyCache("rounds releases both generations when a " +

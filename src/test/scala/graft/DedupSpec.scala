@@ -101,22 +101,12 @@ class DedupSpec extends SparkSpec {
     assert(grams.forall(_._1 == 1L))
   }
 
-  test("simhashTable (codegen path) matches HOF simhash64 exactly") {
+  test("fused SimHash64 expression matches the HOF simhash64") {
     val docs = Tables.t(spark, sfDir, "documents").limit(50)
     val viaHof = docs.select($"doc_id",
       Dedup.simhash64(split(lower($"text"), " ")).as("sh"))
       .as[(Long, Long)].collect().toMap
-    val viaTable = Dedup.simhashTable(docs, "text")
-      .as[(Long, Long)].collect().toMap
-    assert(viaTable === viaHof)
-  }
-
-  test("fused SimHash64 expression matches both other simhash paths") {
-    val docs = Tables.t(spark, sfDir, "documents").limit(50)
-    val viaHof = docs.select($"doc_id",
-      Dedup.simhash64(split(lower($"text"), " ")).as("sh"))
-      .as[(Long, Long)].collect().toMap
-    val viaFused = Dedup.simhashFused(spark, docs, "text")
+    val viaFused = Dedup.simhashFused(docs, "text")
       .as[(Long, Long)].collect().toMap
     assert(viaFused === viaHof)
     // interpreted eval agrees with the doGenCode path
@@ -126,7 +116,7 @@ class DedupSpec extends SparkSpec {
     val viaEval = graft.plans.SimHash64(
       Literal.create(tokens, ArrayType(StringType))).eval(null)
     val viaDf = Seq(1L -> tokens.mkString(" ")).toDF("doc_id", "text")
-    val expected = Dedup.simhashFused(spark, viaDf, "text")
+    val expected = Dedup.simhashFused(viaDf, "text")
       .as[(Long, Long)].collect().head._2
     assert(viaEval === expected)
   }
@@ -364,22 +354,12 @@ class DedupSpec extends SparkSpec {
     assert(fused === hof)
   }
 
-  test("minhashSignatures (codegen path) matches HOF minhashSignature exactly") {
+  test("fused MinHashSig expression matches the HOF minhashSignature") {
     val docs = Tables.t(spark, sfDir, "documents").limit(50)
     val viaHof = docs.select($"doc_id",
       Dedup.minhashSignature(Dedup.wordSet($"text"), 16).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
-    val viaTable = Dedup.minhashSignatures(docs, "text", 16)
-      .as[(Long, Seq[Long])].collect().toMap
-    assert(viaTable === viaHof)
-  }
-
-  test("fused MinHashSig expression matches both other signature paths") {
-    val docs = Tables.t(spark, sfDir, "documents").limit(50)
-    val viaHof = docs.select($"doc_id",
-      Dedup.minhashSignature(Dedup.wordSet($"text"), 16).as("sig"))
-      .as[(Long, Seq[Long])].collect().toMap
-    val viaFused = Dedup.minhashSignaturesFused(spark, docs, "text", 16)
+    val viaFused = Dedup.minhashSignaturesFused(docs, "text", 16)
       .as[(Long, Seq[Long])].collect().toMap
     assert(viaFused === viaHof)
   }

@@ -9,7 +9,7 @@ import graft.operators.CoreOps
   * source changes, separate entries for separate directories, `latest`,
   * and signatures over a non-local FileSystem. The layouts: the
   * stale-generation sweep must spare a CONCURRENT process's live
-  * .tmp-<pid> build and must drop legacy-tag generations; in-place
+  * .tmp-<pid> build and another source's layouts; in-place
   * (manifest-backed) builds are only READY once the post-build
   * completion marker exists, so a crash between manifest commits
   * rebuilds instead of serving the half-built table forever; a crashed
@@ -37,14 +37,16 @@ class DerivedLayoutSpec extends SparkSpec {
     p
   }
 
-  test("sweep: legacy-tag and dead-pid leftovers are dropped, a live " +
-    "builder's tmp dir survives") {
+  test("sweep: stale and dead-pid leftovers go, a live builder's tmp " +
+    "survives") {
     val d = freshSource()
-    // legacy 32-bit-hashCode-tag generation (tag 'ab' — a length the
-    // 16-hex SHA tag can never produce)
-    val legacy = mkdir("orders_merged_ab_stalegen")
+    val prefix = s"orders_merged_${sources.PartitionedData.dirTag(d)}_"
+    // a stale generation of the same source (another signature)
+    val stale = mkdir(s"${prefix}stalegen")
+    // another source's layout is not this build's to sweep
+    val other = mkdir("orders_merged_ab_othersource")
     // crashed builder's tmp (pid 999999999 does not exist)
-    val dead = mkdir("orders_merged_ab_x.tmp-999999999")
+    val dead = mkdir(s"${prefix}x.tmp-999999999")
     // concurrent builder's tmp, impersonated by a pid that is VISIBLE,
     // ALIVE, and OLDER than the tmp dir: our own parent (the sbt/test
     // JVM launcher). PID 1 (ADVICE r12) may be invisible under PID
@@ -54,14 +56,14 @@ class DerivedLayoutSpec extends SparkSpec {
     val parentPid = java.lang.ProcessHandle.current().parent()
       .map[java.lang.Long](p => java.lang.Long.valueOf(p.pid()))
     val live = parentPid.map[java.nio.file.Path](pp =>
-      mkdir(s"orders_merged_ab_y.tmp-$pp"))
+      mkdir(s"${prefix}y.tmp-$pp"))
     // a tmp claiming a live pid that STARTED AFTER the tmp's last write
     // cannot belong to that process (OS pid reuse): backdate an
     // impersonated tmp far before every live process's start. The
     // write-recency evidence is the newest mtime in the WHOLE tree
     // (ADVICE r13 — a deep part-file write must count as recent), so
     // the fixture backdates every entry, not just the dir.
-    val reused = mkdir("orders_merged_ab_z.tmp-" +
+    val reused = mkdir(s"${prefix}z.tmp-" +
       parentPid.orElse(java.lang.Long.valueOf(999999998L)))
     val backdate = java.nio.file.attribute.FileTime.fromMillis(1000L)
     java.nio.file.Files.setLastModifiedTime(reused.resolve("payload"),
@@ -71,8 +73,12 @@ class DerivedLayoutSpec extends SparkSpec {
     val out = java.nio.file.Paths.get(
       sources.PartitionedData.ordersMergedManifestTable(spark, d))
     assert(java.nio.file.Files.exists(out.resolve("_GRAFT_COMPLETE")))
-    assert(!java.nio.file.Files.exists(legacy),
-      "legacy-tag generation must be swept")
+    assert(!java.nio.file.Files.exists(stale),
+      "stale generation must be swept")
+    assert(java.nio.file.Files.exists(other),
+      "another source's layout must survive the sweep")
+    java.nio.file.Files.delete(other.resolve("payload"))
+    java.nio.file.Files.delete(other)
     assert(!java.nio.file.Files.exists(dead),
       "dead builder's tmp must be swept")
     assert(!java.nio.file.Files.exists(reused),

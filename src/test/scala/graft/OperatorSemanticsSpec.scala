@@ -820,18 +820,17 @@ class OperatorSemanticsSpec extends SparkSpec {
 
   test("window_outlier_mad routed fits: percentile and stitched paths " +
     "return identical rows (the route moves cost, never values)") {
-    val q = SparkEntry.queries("window_outlier_mad")
-    val base = q(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    // force the stitched exactQuantiles route on a cloned session
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.percentile.routeCap", "0")
-    val stitched = q(s2, sfDir).collect().map(_.toString).sorted.toSeq
-    assert(base.nonEmpty && stitched === base)
-    // and the attribution names the path that ran
+    val base = SparkEntry.queries("window_outlier_mad")(spark, sfDir)
+      .collect().map(_.toString).sorted.toSeq
+    // force the stitched exactQuantiles route through the cap
     Attrib.drain()
-    q(s2, sfDir).queryExecution // building the plan records the note
+    val forced = operators.Aggregates.outlierMad(spark, sfDir, routeCap = 0L)
+    // building the plan records the note: the attribution names the
+    // path that ran
     val notes = Attrib.drain().toMap
     assert(notes.get("outlier_mad_fit").contains("stitched"), notes)
+    val stitched = forced.collect().map(_.toString).sorted.toSeq
+    assert(base.nonEmpty && stitched === base)
   }
 
   test("pctBoundGuard: enforces + attributes the percentile boundedness " +

@@ -167,24 +167,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("RangeJoinRewrite span guard raises a descriptive error on huge intervals") {
-    // EXPLICIT width (the guard's audience): auto mode derives a width
-    // that keeps every interval under the span cap by construction —
-    // the guard exists for users who override the width and hand it an
-    // interval spanning millions of buckets.
-    val s = spark.newSession()
-    s.conf.set("spark.graft.rangeJoin.bucketWidth", "50")
-    import s.implicits._
-    // one interval spanning ~4M buckets at width 50 — far past the cap
+    // A FIXED width (the guard's audience): the derived width keeps
+    // every interval under the span cap by construction, so the guard
+    // only fires for a width that is too narrow for the data — here 50
+    // against an interval spanning ~4M buckets, far past the cap.
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import spark.implicits._
     val a = Seq((1L, 0L, 200000000L)).toDF("a_id", "a_lo", "a_hi")
     val b = Seq((2L, 5L, 10L)).toDF("b_id", "b_lo", "b_hi")
-    val joined = a.join(b,
+    val join = a.join(b,
       col("a_lo") <= col("b_hi") && col("b_lo") <= col("a_hi"))
+      .queryExecution.analyzed.asInstanceOf[Join]
     val e = intercept[Exception] {
-      joined.collect()
+      org.apache.spark.sql.GraftPlanRun.head(spark,
+        plans.RangeJoinRewrite.rewrite(join, 50))
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-    assert(messages(e).exists(_.contains("RangeJoinRewrite")),
+    assert(messages(e).exists(_.contains(
+      "RangeJoinRewrite: interval spans more than 4096 buckets")),
       s"error did not name the rule: ${messages(e).mkString(" | ")}")
   }
 

@@ -30,7 +30,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `StorageLevel.` anywhere else is a second storage policy and a
   *    hand-spelled release that a throw can skip — use `Cut.eager`,
   *    `Cut.scoped`, `Cut.rounds` or `Cut.retained` instead. The one
-  *    exception is [[Derived]]'s release of an entry it replaces. */
+  *    exception is [[Derived]]'s release of an entry it replaces.
+  *  - A round-robin fan-out goes through [[U.fan]]. A
+  *    `defaultParallelism` anywhere else sizes a fan by a second
+  *    measure of the session's parallelism.
+  *  - The engine takes no `spark.graft.*` session conf: each decision
+  *    has one path, chosen from the data, so no option exists that
+  *    only a test would set. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
 
@@ -132,5 +138,23 @@ class StoreLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "materialize and release intermediates through graft.Cut:\n", "\n", ""))
+  }
+
+  /** Offenders of `pattern` across every main source file. */
+  private def anywhere(pattern: scala.util.matching.Regex): List[String] =
+    sources.flatMap { case (f, code) =>
+      pattern.findAllIn(code).map(m => s"$f: $m").toList
+    }
+
+  test("fan-outs go through U.fan") {
+    val offenders = anywhere("""\bdefaultParallelism\b""".r)
+    assert(offenders.isEmpty, offenders.mkString(
+      "fan out through graft.U.fan:\n", "\n", ""))
+  }
+
+  test("no spark.graft.* session conf") {
+    val offenders = anywhere("""spark\.graft\.""".r)
+    assert(offenders.isEmpty, offenders.mkString(
+      "derive the decision from the data instead of a conf:\n", "\n", ""))
   }
 }
