@@ -21,7 +21,10 @@ import org.apache.spark.sql.SparkSession
   *  - nanosAsLong for TIMESTAMP(NANOS) parquet (see Tables.t);
   *  - NTZ inference off: untagged parquet timestamps are instants;
   *  - a low AQE coalesce floor so small-scale stages keep parallelism
-  *    (inert at production sizes — see DESIGN_SCALE.md).
+  *    (inert at production sizes — see DESIGN_SCALE.md);
+  *  - `file:` paths go through [[graft.sources.NioLocalFileSystem]], which
+  *    sets permissions with `java.nio` instead of forking `chmod` for
+  *    every file and directory a local write creates.
   *
   * On a cluster, call `configure(SparkSession.builder())` without
   * `master` and submit normally; the local knobs here are for the
@@ -61,6 +64,7 @@ object GraftSession {
     // NTZ and reject unix_micros at analysis time.
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+    .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
 
   /** Local harness session: `local[cpus]`, shuffle partitions = cores.
     *

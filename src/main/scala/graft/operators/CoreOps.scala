@@ -68,7 +68,7 @@ object CoreOps {
     // dataset) round-tripped under the oracle — a user×event_type
     // value matrix derived DECIMAL-exactly from `events`, written as
     // chunked+deflate HDF5 (graft.sources.MiniHdf5Writer), read back
-    // through `format("h5ad")` (the one h5ad reader, H5adRelation),
+    // through `format("h5ad")` (H5adRelation, over the one decoder),
     // and aggregated. The DuckDB oracle replays the matrix derivation
     // from the parquet original, so a single corrupted f64 bit, dropped
     // nonzero, or mis-ordered indptr in EITHER the writer or the reader

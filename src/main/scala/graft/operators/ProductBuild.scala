@@ -20,11 +20,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: modality tagging and union are map-only; the
   * intersection is one window over (dataset, cell_id), so each input is
-  * read once and the fact is shuffled and sorted once; the donor join
-  * broadcasts the dim; the write is partitioned by (modality, dataset)
-  * for downstream partition pruning. [[Pipeline.flagship]] intersects
-  * with a key-set semi-join instead: its key branch prunes parquet
-  * columns, while an h5ad scan decodes every array of its file.
+  * read once; the donor join broadcasts the dim; the write is
+  * partitioned by (modality, dataset) for downstream partition pruning.
+  * Over [[graft.sources.H5ad.scanModalities]] the inputs report that
+  * they are grouped by dataset, so the window runs in the task that
+  * decodes the dataset's files and the build has no exchange: each task
+  * writes one file per modality. Other inputs shuffle and sort the fact
+  * once on (dataset, cell_id). [[Pipeline.flagship]] intersects with a
+  * key-set semi-join instead: its key branch prunes parquet columns,
+  * while an h5ad scan decodes every array of its file.
   */
 object ProductBuild {
 
@@ -48,6 +52,8 @@ object ProductBuild {
     // file twice. A window groups null keys together, so a null-keyed
     // "cell" (unparseable barcode) survives when its group spans all
     // modalities: dropping it is a QC decision, not an intersect artifact.
+    // A cell counts as present in a modality when it has a stored entry
+    // there: one with an empty CSR row drops.
     val cell = Window.partitionBy("dataset", "cell_id")
     fact.withColumn("__nmod", size(collect_set(col("modality")).over(cell)))
       .filter(col("__nmod") === modalities.size)

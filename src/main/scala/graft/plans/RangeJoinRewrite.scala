@@ -1,12 +1,16 @@
-// Shim in the Spark namespace: classic.Dataset.ofRows is private[sql],
-// and executing a tiny stats aggregate over the join children at plan
-// time is how the rule derives its bucket width from the data.
+// Shim in the Spark namespace: classic.Dataset.ofRows is private[sql].
+// Executing a tiny stats aggregate over the join children at plan time
+// is how the rule derives its bucket width from the data, and
+// H5ad.scanModalities wraps its grouped scan plan in a DataFrame.
 package org.apache.spark.sql {
   object GraftPlanRun {
+    def frame(spark: SparkSession,
+        plan: catalyst.plans.logical.LogicalPlan): DataFrame =
+      classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
     def head(spark: SparkSession,
         plan: catalyst.plans.logical.LogicalPlan): Row =
-      classic.Dataset.ofRows(
-        spark.asInstanceOf[classic.SparkSession], plan).head()
+      frame(spark, plan).head()
   }
 }
 

@@ -1,9 +1,13 @@
 package graft.sources
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
+import org.apache.spark.sql.{classic, DataFrame, GraftPlanRun, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,14 +23,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * one row per nonzero, absent entry = 0, exactly AnnData sparse
   * semantics): (cell_id, dataset, feature_id, value, modality).
   *
-  * [[H5adRelation]] is the one reader: `spark.read.format("h5ad")`
-  * ([[H5adDataSource]]) and [[scanModalities]] both scan through it.
+  * [[rows]] is the one decoder and [[decode]] the one decode RDD:
+  * `spark.read.format("h5ad")` ([[H5adDataSource]], through
+  * [[H5adRelation]]) scans one file per task, and [[scanModalities]] one
+  * dataset per task.
   *
   * Scale shape: an HDF5 file is not splittable, so parallelism is one
-  * task PER FILE, which matches the reference's per-dataset file
-  * layout — 10k datasets = 10k-way parallel ingest. Convert once to
-  * parquet ([[ProductSink]]), query forever; the h5ad path is the ingest
-  * boundary, not the query path.
+  * task per file or per dataset, which matches the reference's
+  * per-dataset file layout — 10k datasets = 10k-way parallel ingest.
+  * Convert once to parquet ([[ProductSink]]), query forever; the h5ad
+  * path is the ingest boundary, not the query path.
   */
 object H5ad {
 
@@ -107,37 +113,64 @@ object H5ad {
     s"$group/$idx"
   }
 
+  /** One task per group, decoding the group's files in order to rows of
+    * `columns`. `parallelize` with one slice per element gives exactly
+    * one group per partition (contiguous slicing); a round-robin
+    * repartition could land two groups in one task and none in another. */
+  private[sources] def decode(sc: SparkContext, groups: Seq[Seq[H5adInput]],
+      columns: Seq[String]): RDD[InternalRow] =
+    sc.parallelize(groups, groups.size)
+      .flatMap(_.iterator.flatMap(rows(_, columns)))
+
   /** Ingest grouped by modality — the shape [[graft.operators
     * .ProductBuild.build]] consumes, without the `modality` column. Lazy:
-    * no job starts here; an action decodes each file in one task. */
+    * no job starts here.
+    *
+    * Each modality's scan has one input partition per dataset, over the
+    * same sorted list of every dataset in `files`: partition i holds
+    * dataset i's file(s) of that modality, and is empty where the
+    * modality has none. The scan reports `KeyGroupedPartitioning(dataset)`
+    * with the dataset ids as partition values, so the modalities' union
+    * stays grouped by dataset and an operator clustered on keys that
+    * include `dataset` (the intersect window) runs in the decode task,
+    * with no exchange. Scans over different dataset lists (one call per
+    * modality) report different partition values, so Spark shuffles a
+    * join or union of them as it would any other input. A task holds one
+    * dataset's files of one modality: at most modalities × the reader's
+    * 2 GiB per-file limit when an operator runs over the union. */
   def scanModalities(spark: SparkSession,
       files: Seq[H5adInput]): Map[String, DataFrame] = {
-    val schema = StructType(Schema.filterNot(_.name == "modality"))
+    val datasets = files.map(_.dataset).distinct.sorted
+    val keys = datasets.map(d => InternalRow(UTF8String.fromString(d)))
     files.groupBy(_.modality).map { case (m, fs) =>
-      m -> spark.baseRelationToDataFrame(H5adRelation(spark.sqlContext, fs, schema))
+      val output = DataTypeUtils.toAttributes(
+        StructType(Schema.filterNot(_.name == "modality")))
+      val byDataset = fs.groupBy(_.dataset)
+      val scan = LogicalRDD(output,
+        decode(spark.sparkContext, datasets.map(byDataset.getOrElse(_, Nil)),
+          output.map(_.name)),
+        KeyGroupedPartitioning(output.filter(_.name == "dataset"),
+          datasets.size, keys, keys))(spark.asInstanceOf[classic.SparkSession])
+      m -> GraftPlanRun.frame(spark, scan)
     }
   }
 }
 
-/** The one h5ad scan: one task per file, decoding it straight to rows
-  * of `schema` (a subset of [[H5ad.Schema]]). Each file must be at a
-  * local or shared POSIX path that every executor can open: the reader
-  * memory-maps a `java.nio` path, so `s3a://` URIs are not readable. */
+/** The `format("h5ad")` scan: one task per file, decoding it straight
+  * to rows of `schema` (a subset of [[H5ad.Schema]]). It reports no
+  * partitioning, so an operator clustered by dataset shuffles its
+  * output. Each file must be at a local or shared POSIX path that every
+  * executor can open: the reader memory-maps a `java.nio` path, so
+  * `s3a://` URIs are not readable. */
 case class H5adRelation(sqlContext: SQLContext, inputs: Seq[H5ad.H5adInput],
     schema: StructType) extends BaseRelation with TableScan {
   require(inputs.nonEmpty, "no h5ad inputs")
 
   override def needConversion: Boolean = false
 
-  // numSlices = nFiles gives EXACTLY one file per partition (contiguous
-  // slicing); a round-robin repartition can land two files in one task
-  // and zero in another, doubling stage wall.
-  override def buildScan(): RDD[Row] = {
-    val columns = schema.fieldNames.toSeq
-    sqlContext.sparkContext.parallelize(inputs, inputs.size)
-      .flatMap(H5ad.rows(_, columns))
+  override def buildScan(): RDD[Row] =
+    H5ad.decode(sqlContext.sparkContext, inputs.map(Seq(_)), schema.fieldNames.toSeq)
       .asInstanceOf[RDD[Row]] // InternalRows, as needConversion = false says
-  }
 
   // the scan node's name in plans
   override def toString: String =

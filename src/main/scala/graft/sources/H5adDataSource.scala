@@ -15,7 +15,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 /** `spark.read.format("h5ad").load(paths...)`: the engine long form
   * ([[H5ad.Schema]]) read through [[H5adRelation]], one task per file
   * (HDF5 is not splittable; the per-dataset file layout IS the
-  * parallelism).
+  * parallelism). The scan reports no partitioning, so a product build
+  * over it shuffles the fact on (dataset, cell_id); a build over
+  * [[H5ad.scanModalities]], one task per dataset, does not.
   *
   * Per-file identity follows the reference layout
   * (`<dataset-uuid>/cell_by_bin.h5ad`, `bin/concatenate.py:62`):

@@ -41,8 +41,8 @@ import java.nio.file.{Paths, StandardOpenOption}
   * `libver='earliest'` — or extend exactly one branch per feature below.
   *
   * Scale shape: HDF5 is not splittable — parallelism comes from MANY
-  * files, one task each (see [[H5adRelation]], the one caller), which
-  * matches the reference's per-dataset file layout.
+  * files, decoded one task per file or per dataset (see [[H5ad]], the
+  * one caller), which matches the reference's per-dataset file layout.
   */
 object MiniHdf5 {
 

@@ -253,8 +253,8 @@ object PartitionedData {
     * The driver-side collect is bounded by matrix SHAPE, not corpus
     * size: #users × 5 event types (7.5k nnz at sf0.1), and an HDF5
     * file is single-writer by format — at production scale this is the
-    * per-dataset ingest artifact ([[H5adRelation]] parallelizes across
-    * files, one task each), not a query-path step. Memoized per
+    * per-dataset ingest artifact ([[H5ad]] parallelizes across files),
+    * not a query-path step. Memoized per
     * (sfDir, events content) like every layout here. */
   def eventsH5adLanding(spark: SparkSession, d: String): String = {
     val dir = layout(spark, d, "events", "events_h5ad") { tmp =>

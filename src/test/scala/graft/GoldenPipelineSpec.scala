@@ -665,6 +665,40 @@ class GoldenPipelineSpec extends SparkSpec {
     assert(meta.select("raw_file_size_bytes").head().getLong(0) > 0L)
   }
 
+  test("local writes set permissions through java.nio, not a forked chmod") {
+    import java.nio.file.attribute.PosixFilePermissions
+    import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(new java.net.URI("file:///"), conf)
+    assert(fs.isInstanceOf[sources.NioLocalFileSystem], fs.getClass)
+    assert(fs.asInstanceOf[LocalFileSystem].getRaw.isInstanceOf[sources.NioRawLocalFileSystem])
+    def mode(p: java.nio.file.Path) =
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    // every mode lands exactly, whatever the file had before
+    val f = Files.createTempFile("graft-perm", ".bin")
+    for (octal <- Seq("750", "600", "000", "777", "644")) {
+      val want = new FsPermission(octal)
+      fs.setPermission(new Path(f.toUri), want)
+      assert(mode(f) === want.toString)
+    }
+    // the written product carries the requested (umasked default) modes
+    val fact = Seq(("d1-c1", "d1", "f1", 1.0, "m1"))
+      .toDF("cell_id", "dataset", "feature_id", "value", "modality")
+    ProductSink.writeProduct(fact, s"$tmp/product_perm")
+    val umask = FsPermission.getUMask(conf)
+    val written = {
+      val w = Files.walk(Paths.get(s"$tmp/product_perm/fact"))
+      try w.iterator().asScala.filter(_.getFileName.toString.startsWith("part-")).toList
+      finally w.close()
+    }
+    assert(written.nonEmpty)
+    written.foreach(p =>
+      assert(mode(p) === FsPermission.getFileDefault.applyUMask(umask).toString, p))
+    assert(mode(written.head.getParent) ===
+      FsPermission.getDirDefault.applyUMask(umask).toString)
+  }
+
   test("flagship query equals its de-sugared relational form (self-consistency)") {
     // The flagship plan (annotate→union→intersect→donor-join→stats) must
     // agree with an independently-written SQL formulation on real data.

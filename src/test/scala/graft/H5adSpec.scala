@@ -1,11 +1,11 @@
 package graft
 
-import graft.sources.{H5ad, H5adRelation, MiniHdf5, MiniHdf5Writer}
+import graft.sources.{H5ad, MiniHdf5, MiniHdf5Writer}
 import graft.sources.H5ad.H5adInput
 
 /** End-to-end h5ad ingestion: miniature CSR h5ad files written per the
   * public HDF5 spec (MiniHdf5Writer) → [[MiniHdf5]] reader →
-  * [[H5adRelation]] long form → `ProductBuild.build` — closing the loop
+  * `H5ad.rows` long form → `ProductBuild.build` — closing the loop
   * the reference's users start from (`bin/concatenate.py:62` reads a
   * cell_by_bin/cell_by_gene h5ad pair per dataset).
   */
@@ -36,6 +36,29 @@ class H5adSpec extends SparkSpec {
       H5adInput(s"$dir/A_gene.h5ad", "uuid-A", "cell_by_gene"),
       H5adInput(s"$dir/B_bin.h5ad", "uuid-B", "cell_by_bin"),
       H5adInput(s"$dir/B_gene.h5ad", "uuid-B", "cell_by_gene"))
+  }
+
+  // the fixture plus uuid-C, which has a cell_by_bin file only
+  private lazy val withC: Seq[H5adInput] = {
+    MiniHdf5Writer.writeH5ad(s"$dir/C_bin.h5ad",
+      obsNames = Seq("c1"), varNames = Seq("bin1"),
+      data = Array(2.5), indices = Array(0L), indptr = Array(0L, 1L))
+    files :+ H5adInput(s"$dir/C_bin.h5ad", "uuid-C", "cell_by_bin")
+  }
+
+  /** The same rows with no reported partitioning: a plain DataFrame. */
+  private def plain(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(df.rdd, df.schema)
+
+  /** Every node of an executed plan, through AQE's final plan. */
+  private def planNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+      case q: QueryStageExec => q +: planNodes(q.plan)
+      case other => other +: other.children.flatMap(planNodes)
+    }
   }
 
   /** One file's full long form, as plain tuples in file order. */
@@ -145,26 +168,132 @@ class H5adSpec extends SparkSpec {
   }
 
   test("intersect decodes each h5ad file once: one scan per modality, no join") {
-    import org.apache.spark.sql.execution.{RowDataSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.RDDScanExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val modalities = H5ad.scanModalities(spark, files)
     val out = operators.ProductBuild.unionIntersect(modalities)
     // materialize so AQE's final plan exists; A/c2 is bin-only → dropped
     assert(out.collect().length === 8)
-    def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-      case q: QueryStageExec => q +: flatten(q.plan)
-      case other => other +: other.children.flatMap(flatten)
-    }
-    val nodes = flatten(out.queryExecution.executedPlan)
-    // the h5ad decode is the relation's scan
+    val nodes = planNodes(out.queryExecution.executedPlan)
+    // the h5ad decode is a scan of the RDD that H5ad.scala creates
     assert(nodes.count {
-      case s: RowDataSourceScanExec => s.relation.isInstanceOf[H5adRelation]
+      case s: RDDScanExec => s.rdd.toDebugString.contains("H5ad.scala")
       case _ => false
     } === modalities.size, out.queryExecution.executedPlan.toString)
     assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
       out.queryExecution.executedPlan.toString)
+  }
+
+  test("intersect drops a cell whose CSR row is empty in one modality, via both doors") {
+    // uuid-E lists c1 and c2 in both modalities' obs, but c2's gene row
+    // stores nothing: the intersect is over stored entries, so c2 drops
+    val root = java.nio.file.Files.createTempDirectory("h5ad-empty-row")
+    java.nio.file.Files.createDirectories(root.resolve("uuid-E"))
+    MiniHdf5Writer.writeH5ad(s"$root/uuid-E/cell_by_bin.h5ad",
+      Seq("c1", "c2"), Seq("b1"), Array(1.0, 2.0), Array(0L, 0L), Array(0L, 1L, 2L))
+    MiniHdf5Writer.writeH5ad(s"$root/uuid-E/cell_by_gene.h5ad",
+      Seq("c1", "c2"), Seq("g1"), Array(3.0), Array(0L), Array(0L, 1L, 1L))
+    val inputs = Seq("cell_by_bin", "cell_by_gene")
+      .map(m => H5adInput(s"$root/uuid-E/$m.h5ad", "uuid-E", m))
+    val grouped = H5ad.scanModalities(spark, inputs)
+    val generic = inputs.map(f => f.modality ->
+      spark.read.format("h5ad").load(f.path).drop("modality")).toMap
+    for (mods <- Seq(grouped, generic)) {
+      val out = operators.ProductBuild.unionIntersect(mods)
+        .select("dataset", "cell_id", "modality", "feature_id", "value")
+        .as[(String, String, String, String, Double)].collect().toSet
+      assert(out === Set(("uuid-E", "c1", "cell_by_bin", "b1", 1.0),
+        ("uuid-E", "c1", "cell_by_gene", "g1", 3.0)))
+    }
+  }
+
+  test("ProductBuild over scanModalities: no shuffle, one file per (modality, dataset)") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val donors = Seq(("uuid-A", "40", "Male"), ("uuid-B", "55", "Female"),
+      ("uuid-C", "61", "Male")).toDF("uuid", "age", "sex")
+    val tmp = java.nio.file.Files.createTempDirectory("h5ad-grouped").toString
+    // the product, the write query's plan nodes, and the sidecar
+    def build(mods: Map[String, DataFrame], out: String) = {
+      val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val ql = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          if (qe.logical.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) writes.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(ql)
+      val product = try {
+        val p = operators.ProductBuild.build(mods, donors, out)
+        org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
+        p
+      } finally spark.listenerManager.unregister(ql)
+      assert(writes.size === 1)
+      val rows = product.collect().map(_.toString).sorted.toSeq
+      val meta = spark.read.json(s"$out/metadata")
+        .select("n_rows", "total_cell_count", "datasets").head()
+      (rows, planNodes(writes.peek().executedPlan), (meta.getLong(0), meta.getLong(1),
+        meta.getSeq[String](2)))
+    }
+    val (rows, nodes, meta) = build(H5ad.scanModalities(spark, withC), s"$tmp/grouped")
+    assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeLike]), nodes.head.toString)
+    assert(nodes.exists(_.isInstanceOf[BroadcastExchangeLike]), nodes.head.toString)
+    // uuid-C's bin-only cells drop; the rest is the end-to-end product,
+    // whose distinct cell ids are c1 and c3
+    assert(meta === ((8L, 2L, Seq("uuid-A", "uuid-B"))))
+    // one parquet file per (modality, dataset) directory
+    val fact = java.nio.file.Paths.get(s"$tmp/grouped/fact")
+    val parquet = {
+      val w = java.nio.file.Files.walk(fact)
+      try w.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally w.close()
+    }
+    assert(parquet.groupBy(_.getParent).map { case (d, fs) =>
+      fact.relativize(d).toString -> fs.size } === Map(
+      "modality=cell_by_bin/dataset=uuid-A" -> 1, "modality=cell_by_gene/dataset=uuid-A" -> 1,
+      "modality=cell_by_bin/dataset=uuid-B" -> 1, "modality=cell_by_gene/dataset=uuid-B" -> 1))
+    // the same inputs as plain DataFrames: the window's exchange, the same product
+    val (plainRows, plainNodes, plainMeta) = build(
+      H5ad.scanModalities(spark, withC).map { case (m, df) => m -> plain(df) }, s"$tmp/plain")
+    assert(plainNodes.exists(_.isInstanceOf[ShuffleExchangeLike]), plainNodes.head.toString)
+    assert(plainRows === rows)
+    assert(plainMeta === meta)
+  }
+
+  test("dataset-grouped scans keep joins exact: both frames, self, separate scans") {
+    import org.apache.spark.sql.DataFrame
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      val g = got.collect().map(_.toString).sorted.toSeq
+      assert(g.nonEmpty)
+      assert(g === want.collect().map(_.toString).sorted.toSeq,
+        got.queryExecution.executedPlan.toString)
+    }
+    val key = Seq("dataset", "cell_id")
+    val m = H5ad.scanModalities(spark, withC)
+    val (bin, gene) = (m("cell_by_bin"), m("cell_by_gene"))
+    same(bin.join(gene, key), plain(bin).join(plain(gene), key))
+    same(bin.join(gene, key, "full"), plain(bin).join(plain(gene), key, "full"))
+    val other = bin.select($"cell_id", $"dataset", $"value".as("v2"))
+    same(bin.join(other, key), plain(bin).join(plain(bin).select(
+      $"cell_id", $"dataset", $"value".as("v2")), key))
+    // one call per modality: the scans' dataset lists differ ([A, B, C]
+    // and [A, B]), and so may their lengths ([A, B] against [B, C])
+    def scan(fs: Seq[H5adInput]) = H5ad.scanModalities(spark, fs).values.head
+    val binAbc = scan(withC.filter(_.modality == "cell_by_bin"))
+    val geneAb = scan(withC.filter(_.modality == "cell_by_gene"))
+    val binAb = scan(files.filter(_.modality == "cell_by_bin"))
+    val geneBc = scan(withC.filter(f => f.dataset != "uuid-A")
+      .map(_.copy(modality = "cell_by_gene")))
+    for ((b, g) <- Seq(binAbc -> geneAb, binAb -> geneBc)) {
+      same(b.join(g, key), plain(b).join(plain(g), key))
+      same(b.join(g, "dataset"), plain(b).join(plain(g), "dataset"))
+      same(operators.ProductBuild.unionIntersect(Map("cell_by_bin" -> b, "cell_by_gene" -> g)),
+        operators.ProductBuild.unionIntersect(
+          Map("cell_by_bin" -> plain(b), "cell_by_gene" -> plain(g))))
+    }
   }
 
   test("DataSource V2: spark.read.format(\"h5ad\") with layout-derived identity") {
@@ -207,12 +336,11 @@ class H5adSpec extends SparkSpec {
     assert(flat.count() === 4)
   }
 
-  test("format(\"h5ad\") and scanModalities read through one relation: " +
-    "same rows, one decode task per file") {
+  test("format(\"h5ad\") and scanModalities: same rows, each file decoded once") {
     import scala.jdk.CollectionConverters._
     import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
     import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.lit
+    import org.apache.spark.sql.functions.{lit, spark_partition_id}
     // the fixture in the reference layout, from which format("h5ad")
     // derives the same (dataset, modality) identities
     val root = java.nio.file.Files.createTempDirectory("h5ad-doors")
@@ -230,28 +358,42 @@ class H5adSpec extends SparkSpec {
           e.stageInfo.numTasks))
     }
     val sc = spark.sparkContext
-    def read(df: DataFrame): (Set[(String, String, String, Double, String)], Seq[(Boolean, Int)]) = {
+    // (partition id, long-form row) in row order, and the read's stages
+    def read(df: DataFrame)
+        : (Seq[(Int, (String, String, String, Double, String))], Seq[(Boolean, Int)]) = {
       stages.clear()
       sc.addSparkListener(listener)
       val rows = try {
-        val r = df.select("cell_id", "dataset", "feature_id", "value", "modality").collect()
+        val r = df.select(spark_partition_id(), df("cell_id"), df("dataset"),
+          df("feature_id"), df("value"), df("modality")).collect()
         org.apache.spark.GraftBusDrain.drain(sc)
         r
       } finally sc.removeSparkListener(listener)
-      (rows.map(r => (r.getString(0), r.getString(1), r.getString(2), r.getDouble(3),
-        r.getString(4))).toSet, stages.asScala.toSeq)
+      (rows.map(r => (r.getInt(0), (r.getString(1), r.getString(2), r.getString(3),
+        r.getDouble(4), r.getString(5)))).toSeq, stages.asScala.toSeq)
     }
     val (viaFormat, formatStages) = read(spark.read.format("h5ad").load(root.toString))
     val (viaModalities, modalityStages) = read(H5ad.scanModalities(spark, laidOut)
       .map { case (m, df) => df.withColumn("modality", lit(m)) }
       .reduce(_ unionByName _))
-    assert(viaFormat === files.flatMap(longForm).toSet)
-    assert(viaModalities === viaFormat)
-    // both doors decode in stages whose RDDs the reader created, one
-    // task per file
-    for (st <- Seq(formatStages, modalityStages)) {
+    // each file's rows exactly once: a file decoded twice would repeat them
+    val want = files.flatMap(longForm).sorted
+    assert(viaFormat.map(_._2).sorted === want)
+    assert(viaModalities.map(_._2).sorted === want)
+    // ... each in one task: format("h5ad") one per file, scanModalities
+    // one per dataset, holding both of its modalities
+    def tasksOf(rows: Seq[(Int, (String, String, String, Double, String))],
+        key: ((String, String, String, Double, String)) => Any) =
+      rows.groupBy(r => key(r._2)).values.map(_.map(_._1).distinct.size).toSet
+    assert(tasksOf(viaFormat, r => (r._2, r._5)) === Set(1))
+    assert(tasksOf(viaModalities, _._2) === Set(1))
+    assert(viaModalities.groupBy(_._1).values.map(_.map(_._2._2).distinct.size).toSet === Set(1))
+    // both doors decode in stages whose RDDs the reader created, with one
+    // task per file or per dataset
+    val datasets = files.map(_.dataset).distinct.size
+    for ((st, tasks) <- Seq(formatStages -> files.size, modalityStages -> datasets)) {
       assert(st.exists(_._1), st)
-      assert(st.filter(_._1).map(_._2).sum === files.size, st)
+      assert(st.filter(_._1).map(_._2).sum === tasks, st)
     }
   }
 

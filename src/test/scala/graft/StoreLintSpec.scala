@@ -18,8 +18,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    `Bounded.collect` instead.
   *  - h5ad files are decoded in [[graft.sources.H5ad]]. A
   *    `new MiniHdf5.Reader` anywhere else is a second h5ad reader (CSR
-  *    checks, identity columns, one task per file) — read through
+  *    checks, identity columns, task layout) — read through
   *    `format("h5ad")` or `H5ad.scanModalities` instead.
+  *  - A scan that reports its own partitioning is built in
+  *    [[graft.sources.H5ad]]. A `KeyGroupedPartitioning(` or
+  *    `LogicalRDD(` anywhere else is a second claim about where rows
+  *    sit, which Spark trusts without checking: a wrong one skips a
+  *    needed exchange and silently splits groups.
   *  - Native functions reach a session through
   *    [[graft.plans.GraftExtensions]]. A `registerFunction` call or a
   *    `FunctionIdentifier(` anywhere else writes the shared session's
@@ -108,6 +113,17 @@ class StoreLintSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString(
       "decode h5ad files through graft.sources.H5ad:\n", "\n", ""))
+  }
+
+  private val reportedPartitioning = """\bKeyGroupedPartitioning\(|\bLogicalRDD\(""".r
+
+  test("scans that report their partitioning are built in one place") {
+    val offenders = sources.flatMap { case (f, code) =>
+      if (f.getFileName.toString == "H5ad.scala") Nil
+      else reportedPartitioning.findAllIn(code).map(m => s"$f: $m").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "report a scan's partitioning only in graft.sources.H5ad:\n", "\n", ""))
   }
 
   private val functionRegistration = """\bregisterFunction\b|\bFunctionIdentifier\(""".r
