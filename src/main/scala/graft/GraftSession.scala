@@ -66,19 +66,8 @@ object GraftSession {
     .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     .config("spark.hadoop.fs.file.impl", classOf[graft.sources.NioLocalFileSystem].getName)
 
-  /** Local harness session: `local[cpus]`, shuffle partitions = cores.
-    *
-    * Scan/shuffle sizing stays at Spark defaults. Three mid-round-9
-    * "small-SF tuning" overrides (maxPartitionBytes=1m,
-    * advisoryPartitionSizeInBytes=2m, bloom threshold=0) were each
-    * measured WORSE in single-knob A/B on the sf0.1 suite and
-    * reverted: the testdata parquet is ONE row group per file, so a
-    * small maxPartitionBytes only adds empty splits (a row group is
-    * the atomic scan unit — nothing parallelizes); the 2 MB advisory
-    * target over-fragments post-shuffle stages (join_sort_merge 1.37 s
-    * → 0.97 s at 64 MB); and a zero bloom threshold taxes every
-    * eligible join with a bloom-build aggregate (the capability query
-    * scopes it to a cloned session instead — Pruning.bloomJoin).
+  /** Local harness session: `local[cpus]`, shuffle partitions = cores;
+    * scan and shuffle sizing are Spark's defaults.
     *
     * `uiEnabled = true` attaches the live UI and keeps Spark's own
     * status-store retention and live-update defaults, so the UI shows
@@ -87,10 +76,6 @@ object GraftSession {
     val b = configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "128m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-      .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "10GB")
       // Harness-only (cluster path `configure` is untouched): shuffle
       // cleanup runs SYNCHRONOUSLY on the ContextCleaner thread instead
       // of fire-and-forget. The round-11 bench forensics pinned async

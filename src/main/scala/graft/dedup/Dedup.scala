@@ -171,21 +171,20 @@ object Dedup {
     * fixpoint isn't reached within maxIters — partially-resolved roots
     * must never masquerade as canonical ids.
     *
-    * Lifecycle, lineage truncation (the self-join doubles the logical
-    * plan per round), and the adaptive small-table fast path all live in
-    * [[graft.plans.Iterate.fixpoint]] — fanout 2, so the harness
-    * truncates every 5th round. The result is a [[graft.Cut.eager]] cut.
+    * Lifecycle and lineage truncation (the self-join doubles the logical
+    * plan per round) live in [[graft.plans.Iterate.fixpoint]] — fanout
+    * 2, so the harness truncates every 5th round. The result is a
+    * [[graft.Cut.eager]] cut.
     */
   def canonicalResolve(pointers: DataFrame, maxIters: Int = 30,
       driverRowCap: Long = Bounded.DriverEdgeCap): DataFrame = {
     // Same guarded driver fast path as [[connectedComponents]]: one
-    // bounded probe of the persisted pointer set (the sizing count that
-    // fixpoint consumes runs only on the distributed path), and under
-    // the cap the whole log-depth doubling loop collapses to a memoized
-    // pointer chase (path-compressed, cycle-budgeted so a planted cycle
-    // still fails loudly). Identical output contract: one (id, root)
-    // row per input row, dangling parents are roots; parity pinned
-    // both-sides in DedupSpec.
+    // bounded probe of the persisted pointer set, and under the cap the
+    // whole log-depth doubling loop collapses to a memoized pointer
+    // chase (path-compressed, cycle-budgeted so a planted cycle still
+    // fails loudly). Identical output contract: one (id, root) row per
+    // input row, dangling parents are roots; parity pinned both-sides
+    // in DedupSpec.
     val spark = pointers.sparkSession
     Cut.scoped(pointers.select(col("id"), col("parent").as("root"))) { pts =>
       Bounded.path("resolve") {
@@ -223,12 +222,10 @@ object Dedup {
           spark.createDataset(resolved.toSeq)
             .select(col("_1").cast(idT).as("id"), col("_2").cast(rtT).as("root"))
         case None =>
-          val nRows = pts.count()
+          var nRows = -1L
           val (out, iters) = graft.plans.Iterate.fixpoint(
             pts,
             fanout = 2, maxIters = maxIters,
-            // the sizing count already materialized the persisted pointer set
-            init = Some(_ => nRows),
             // the round output carries old_root for the convergence check;
             // the loop state (and result) is the narrow (id, root) projection
             narrow = _.select(col("id"), col("root"))) { cur =>
@@ -248,7 +245,10 @@ object Dedup {
             // round-trips for one pass of work.
             val cnts = step.agg(count(lit(1)),
               count(when(col("root") =!= col("old_root"), lit(1)))).head()
-            graft.plans.RoundEval(cnts.getLong(0), cnts.getLong(1) == 0L)
+            // round 1's total is the pointer count (the left join keeps
+            // every row)
+            if (nRows < 0) nRows = cnts.getLong(0)
+            cnts.getLong(1) == 0L
           } { n =>
             s"canonicalResolve did not converge in $n rounds " +
               "(cycle, forward pointer, or raise maxIters)"
@@ -277,8 +277,7 @@ object Dedup {
     *
     * Both rounds are shuffle-on-node-id aggregations + joins; the edge
     * set provably shrinks toward a star forest in O(log² n) rounds.
-    * Lifecycle, lineage truncation, and the adaptive small-graph fast
-    * path (measured 3.05 → 1.60 s at sf0.1) live in
+    * Lifecycle and lineage truncation live in
     * [[graft.plans.Iterate.fixpoint]] — one ls+ss alternation references
     * its input ~8× (sym twice, mins from sym, ss from ls twice, …), so
     * fanout 8 makes the harness truncate lineage EVERY round (a periodic
@@ -361,15 +360,14 @@ object Dedup {
           spark.createDataset(stars)
             .select(col("_1").cast(aT).as("a"), col("_2").cast(bT).as("b"))
         case None =>
-          val initSig = fingerprint(ce) // materializes every cached partition
-          var curSig: (Long, java.math.BigDecimal) = null
+          // materializes every cached partition and seeds round 1's
+          // convergence check; the fixpoint's first generation is the
+          // already-persisted `ce` (no second cache entry), released as
+          // round 1 lands
+          val initSig = fingerprint(ce)
+          var curSig = initSig
           val (out, iters) = graft.plans.Iterate.fixpoint(
-            ce, fanout = 8, maxIters = maxIters,
-            // the sizing/convergence fingerprint already ran on the persisted
-            // initial state above — reuse it; the fixpoint's first
-            // generation is the already-persisted `ce` (no second cache
-            // entry), released as round 1 lands
-            init = Some { _ => curSig = initSig; curSig._1 }) { cur =>
+            ce, fanout = 8, maxIters = maxIters) { cur =>
             // one alternation: large-star over the symmetric view, then
             // small-star over the (hi=a → lo=b) orientation canon provides.
             // Exactly ONE alternation per materialization: batching two to
@@ -380,12 +378,6 @@ object Dedup {
             // reuse below an exchange, and the duplicated-subtree plan also
             // bloats Catalyst. The persist-per-round discipline is not
             // overhead to amortize away; it IS what makes each round linear.
-            // The batch re-measured in SMALL MODE too (where the
-            // recompute is only a few thousand rows): still worse — rounds
-            // went 0.5-2 s → 2-3.7 s each (dedup_cc_incremental 6.4 → 17 s)
-            // because analyzing + codegen-compiling the 8×-duplicated plan
-            // costs more driver time than the saved materializations. The
-            // one-alternation-per-persist shape is optimal at BOTH widths.
             val sym = cur.select(col("a").as("u"), col("b").as("n"))
               .unionByName(cur.select(col("b").as("u"), col("a").as("n")))
             val mins = sym.groupBy("u").agg(min(col("n")).as("mn"))
@@ -398,13 +390,12 @@ object Dedup {
               .unionByName(mins2.select(col("a").as("x"), col("m").as("y")))
             canon(ss.select(col("x").as("a"), col("y").as("b")))
           } { (next, prev) =>
-            if (curSig == null) curSig = fingerprint(prev)
             val nextSig = fingerprint(next)
             // candidate (hash match) → confirm exactly: same cardinality and
             // no row of next outside prev (both sides are post-distinct)
             val done = nextSig == curSig && next.exceptAll(prev).isEmpty
             curSig = nextSig
-            graft.plans.RoundEval(nextSig._1, done)
+            done
           } { n =>
             s"connectedComponents did not converge in $n rounds"
           }

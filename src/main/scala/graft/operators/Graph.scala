@@ -411,7 +411,7 @@ object Graph {
     var last = -1L
     var done = 0
     val (core, _) = graft.plans.Iterate.fixpoint(
-      initial = edges, fanout = 3, maxIters = rounds + 1)(
+      start = edges, fanout = 3, maxIters = rounds + 1)(
       step = { e =>
         val deg = e.select(col("a").as("n0"))
           .unionByName(e.select(col("b").as("n0")))
@@ -426,7 +426,7 @@ object Graph {
         done += 1
         val stop = done >= rounds || rows == last
         last = rows
-        graft.plans.RoundEval(rows, stop)
+        stop
       })(
       onFail = i => s"k-core peel did not settle in $i rounds")
     core.select(col("a").as("vec_id"))
@@ -721,13 +721,13 @@ object Graph {
     // review). Each round drops every node with degree < k and
     // restricts the edge set to survivors; the loop runs on the
     // [[graft.plans.Iterate]] fixpoint harness (persist lifecycle,
-    // fanout-derived lineage truncation, small-state fast path) and
-    // stops early when a round removes nothing — from which point
-    // further peels are no-ops, which is exactly why the bounded
-    // contract ("the 4-round 3-core approximant") stays oracle-equal
-    // whether or not the peel converged: the oracle unrolls all 4
-    // rounds unconditionally. Per round: one degree aggregate + two
-    // semi-joins, all keyed on node ids — shuffles scale with |E|.
+    // fanout-derived lineage truncation) and stops early when a round
+    // removes nothing — from which point further peels are no-ops,
+    // which is exactly why the bounded contract ("the 4-round 3-core
+    // approximant") stays oracle-equal whether or not the peel
+    // converged: the oracle unrolls all 4 rounds unconditionally. Per
+    // round: one degree aggregate + two semi-joins, all keyed on node
+    // ids — shuffles scale with |E|.
     "graph_kcore" -> ((s, d) =>
       kcorePeel(lshEdges(s, d), k = 3, rounds = 4).orderBy("vec_id")),
 

@@ -16,19 +16,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SqlSurface {
 
   private def withViews(s: SparkSession, d: String)(sql: String): DataFrame = {
-    // Register the catalog views once per (session, dir) — re-reading 10
-    // parquet schemas on every sql_* query would tax the bench numbers.
-    // The skip requires BOTH the dir tag and a sentinel view to be
-    // present: external Tables.registerViews calls for another dir leave
-    // the tag stale, so any doubt re-registers (registration is cheap,
-    // wrong views are not).
-    val tag = "graft.views.dir"
-    val cached = s.conf.getOption(tag).contains(d) &&
-      s.catalog.tableExists("lineitem")
-    if (!cached) {
-      Tables.registerViews(s, d)
-      s.conf.set(tag, d)
-    }
+    Tables.registerViews(s, d)
     s.sql(sql)
   }
 

@@ -165,43 +165,40 @@ object ManifestTable {
     (df, kept.size, entries.size)
   }
 
-  /** JSON string literal; a null value (e.g. min/max of an all-null
-    * stats column in some file) becomes JSON null — readers treat it
-    * as "stats unknown, keep the file". */
-  private def esc(s: String): String = if (s == null) "null" else "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** Stage + attempt to claim `version`. Returns false when another
     * writer committed that version first — the staged tmp is cleaned
     * up and nothing in the log changed. Package-visible so the spec
-    * can drive a deterministic two-writer conflict. */
+    * can drive a deterministic two-writer conflict. A null min/max
+    * (e.g. an all-null stats column in some file) is written as JSON
+    * null — readers treat it as "stats unknown, keep the file". */
   private[graft] def tryCommitManifest(table: String, version: Int,
       entries: Seq[FileEntry], statsCols: Seq[String],
       types: Map[String, String]): Boolean = {
     val f = fs(table)
     f.mkdirs(manifestDir(table))
-    val typesJson = types.toSeq.sortBy(_._1)
-      .map { case (c, t) => s"${esc(c)}: ${esc(t)}" }
-      .mkString("{", ", ", "}")
-    val json = entries.map { e =>
-      val stats = statsCols.map { c =>
-        s"${esc(c)}: {\"min\": ${esc(e.mins(c))}, \"max\": ${esc(e.maxs(c))}}"
-      }.mkString("{", ", ", "}")
-      val blooms = e.blooms.toSeq.sortBy(_._1)
-        .map { case (c, b) => s"${esc(c)}: ${esc(b)}" }
-        .mkString("{", ", ", "}")
-      s"""{"path": ${esc(e.path)}, "rows": ${e.rows}, "stats": $stats, "blooms": $blooms}"""
-    }.mkString(s"{\"types\": $typesJson, \"files\": [\n", ",\n", "\n]}")
+    val root = mapper.createObjectNode()
+    val typesNode = root.putObject("types")
+    types.toSeq.sortBy(_._1).foreach { case (c, t) => typesNode.put(c, t) }
+    val files = root.putArray("files")
+    entries.foreach { e =>
+      val file = files.addObject()
+      file.put("path", e.path)
+      file.put("rows", e.rows)
+      val stats = file.putObject("stats")
+      statsCols.foreach { c =>
+        stats.putObject(c).put("min", e.mins(c)).put("max", e.maxs(c))
+      }
+      val blooms = file.putObject("blooms")
+      e.blooms.toSeq.sortBy(_._1).foreach { case (c, b) => blooms.put(c, b) }
+    }
+    val json = mapper.writeValueAsBytes(root)
     val tmp = new Path(manifestDir(table),
       f"v$version%05d.json.${java.util.UUID.randomUUID}%s.tmp")
     val dst = new Path(manifestDir(table), f"v$version%05d.json")
     val out = f.create(tmp, true)
-    out.write(json.getBytes("UTF-8"))
+    out.write(json)
     out.close()
     // Version claim: rename-without-overwrite. On HDFS
     // FileSystem.rename fails atomically when dst exists (one namenode
@@ -230,8 +227,7 @@ object ManifestTable {
     val f = fs(table)
     val in = f.open(p)
     val bytes = try in.readAllBytes() finally in.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(new String(bytes, "UTF-8"))
+    val node = mapper.readTree(bytes)
     val typesNode = node.get("types")
     var types = Map.empty[String, String]
     if (typesNode != null) {

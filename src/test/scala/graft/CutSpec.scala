@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.CacheManager
 import org.apache.spark.sql.functions._
 
-import graft.plans.{Iterate, RoundEval}
+import graft.plans.Iterate
 
 /** The materialization helper releases what it persisted on every path,
   * the failure path included: a query that throws leaves the session's
@@ -131,7 +131,7 @@ class CutSpec extends SparkSpec {
         round += 1
         if (round == 2) throw new IllegalStateException("planted")
         cur.select(($"id" + 1).as("id"))
-      } { (next, _) => RoundEval(next.count(), done = false) } {
+      } { (next, _) => next.count(); false } {
         n => s"no fixpoint in $n rounds"
       })
     assert(e.getMessage === "planted")

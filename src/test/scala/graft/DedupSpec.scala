@@ -308,6 +308,24 @@ class DedupSpec extends SparkSpec {
     assert(fast.sorted.toSeq === resolved.sorted.toSeq)
   }
 
+  test("distributed loops (cap 0) return frames of the caller's session, " +
+    "so a plan built on the result keeps the caller's AQE and width") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (1L, 4L)).toDF("a", "b")
+    val pointers = (1L to 64L).map(i => (i, i - 1)).toDF("id", "parent")
+    // k=2 peels the pendant in round 1 and settles in round 2, so the
+    // peel runs more than one round
+    val outs = Seq(
+      Dedup.connectedComponents(edges, driverEdgeCap = 0L),
+      Dedup.canonicalResolve(pointers, driverRowCap = 0L),
+      operators.Graph.kcorePeel(edges, k = 2, rounds = 4, driverCap = 0L))
+    outs.foreach { out =>
+      assert(out.sparkSession eq spark)
+      val downstream = out.groupBy(out.columns.head).count()
+      assert(downstream.queryExecution.executedPlan.isInstanceOf[
+        org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+    }
+  }
+
   test("keeperPointers block stitch equals the single-block (global) linkage") {
     // Word-order permutations: distinct texts (different md5 → separate
     // keepers) with identical word SETS (jaccard 1.0 → chain links).

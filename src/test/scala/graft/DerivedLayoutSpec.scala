@@ -202,6 +202,25 @@ class DerivedLayoutSpec extends SparkSpec {
     assert(Derived.latest[String]("test_twin", 2) === None)
   }
 
+  test("views: a sql query reads a table rewritten since its last run, " +
+    "and the views of unchanged tables are kept") {
+    val d = java.nio.file.Files.createTempDirectory("dviews").toString
+    Tables.names.foreach(n => spark.read.parquet(s"$sfDir/$n.parquet")
+      .write.parquet(s"$d/$n.parquet"))
+    val q1 = operators.SqlSurface.queries("sql_q1_pricing")
+    def nRows(): Long = q1(spark, d).agg(
+      org.apache.spark.sql.functions.sum("n_rows")).head().getLong(0)
+    val small = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      .filter("l_quantity < 10")
+    assert(nRows() > small.count())
+    def ordersView = spark.sessionState.catalog.getRawTempView("orders")
+      .flatMap(_.plan).get
+    val orders = ordersView
+    small.write.mode("overwrite").parquet(s"$d/lineitem.parquet")
+    assert(nRows() === small.count())
+    assert(ordersView eq orders)
+  }
+
   test("store: signatures list through the session's Hadoop FileSystem " +
     "— rewriting an object-store file recomputes the entry") {
     val s3 = new MiniS3.Server

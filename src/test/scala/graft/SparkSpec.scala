@@ -15,8 +15,9 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      // mirror GraftSession.local's harness-only bloom gate so the
-      // runtime-filter plan shape is assertable at test SF
+      // lower the runtime bloom-filter gate (Spark's default is 10 GB of
+      // application-side scan) so the runtime-filter plan shape is
+      // assertable at test SF
       .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()

@@ -41,7 +41,13 @@ import org.scalatest.funsuite.AnyFunSuite
   *    measure of the session's parallelism.
   *  - The engine takes no `spark.graft.*` session conf: each decision
   *    has one path, chosen from the data, so no option exists that
-  *    only a test would set. */
+  *    only a test would set.
+  *  - A session's conf is written only on a cloned session in
+  *    [[graft.operators.Pruning]]: `bloomJoin` is the capability query
+  *    that needs its own bloom-filter gate. A `newSession(` or
+  *    `.conf.set(` anywhere else is a second execution mode (a frame
+  *    of a clone carries the clone's conf into every plan built on it)
+  *    or a runtime write to the shared session's conf. */
 class StoreLintSpec extends AnyFunSuite {
   private val root = java.nio.file.Paths.get("src", "main", "scala")
 
@@ -166,6 +172,19 @@ class StoreLintSpec extends AnyFunSuite {
     val offenders = anywhere("""\bdefaultParallelism\b""".r)
     assert(offenders.isEmpty, offenders.mkString(
       "fan out through graft.U.fan:\n", "\n", ""))
+  }
+
+  private val sessionConfWrite = """\bnewSession\(|\.conf\.set\(""".r
+
+  test("session conf is written only by the cloned-session capability " +
+    "query") {
+    val offenders = sources.flatMap { case (f, code) =>
+      if (f.getFileName.toString == "Pruning.scala") Nil
+      else sessionConfWrite.findAllIn(code).map(m => s"$f: $m").toList
+    }
+    assert(offenders.isEmpty, offenders.mkString(
+      "derive the decision from the data in the caller's session:\n",
+      "\n", ""))
   }
 
   test("no spark.graft.* session conf") {
